@@ -38,6 +38,16 @@ from grappolo_spark.plans.iteration import (
     promote_result,
     read_observation,
 )
+from grappolo_spark.plans.tiers import (
+    DRIVER_EDGE_ROWS,
+    Facts,
+    Tier,
+    aqe_off,
+    collect_probe,
+    driver_holds,
+    exact_sums,
+    plan,
+)
 
 _MEX = """
 aggregate(
@@ -356,12 +366,6 @@ def _class_best_moves(counter, state0, cinfo_cand, const: float):
     )
 
 
-# state rows at or below this bound run the colored sweep with driver-held
-# community state (numpy) — the gather/argmax stays in Spark, only the O(V)
-# sides cross the boundary per class
-_SMALL_STATE_MAX = 100_000
-
-
 def _xxh64_long_np(x, seed: int):
     """Vectorized XXH64 of an 8-byte little-endian value (Spark's
     ``xxhash64`` over one LongType column) — bit-exact mirror of
@@ -491,27 +495,12 @@ def _multihash_colors_np(ids, s_idx, d_idx, nhash=2, nrounds=4, seed=999):
     return color
 
 
-# edge-row bound for holding a (src, dst, weight) copy on the driver in
-# small-state mode: ~4M rows ≈ 100 MB of numpy — the per-iteration
-# modularity e_xx then reduces in numpy instead of one full-scan Spark job
-# per iteration (the class jobs, the heavy side, stay in Spark)
-_SMALL_EDGES_MAX = 4_000_000
-
-# test hook: force the Spark class-job route even when the driver edge
-# copy would allow the exact numpy class sweep
-_NP_CLASS_SWEEP = True
-
-# state-row bound for the mid-regime BROADCAST class-gather layout in the
-# distributed colored loop (the plain kernel's broadcast_max_vertices
-# analogue): above it a billion-row state must shuffle, never broadcast
-_BCAST_STATE_MAX = 5_000_000
-
-
 def _colored_small_state(
-    spark, edges, pdf, classes, const, two_m, thresh, lower, max_iters,
-    edges_np=None, eidx=None,
+    spark, edges, pdf, classes, const, facts, thresh, lower, max_iters,
+    np_sweep, eidx=None,
 ):
-    """Colored Gauss-Seidel sweeps with driver-held community state.
+    """Colored Gauss-Seidel sweeps with driver-held community state (the
+    local and driver_state tiers).
 
     Same per-class semantics as the distributed loop below — the gather
     (edges ⋈ movers ⋈ assignment → groupBy(v, cand)) and the winner/gain
@@ -537,17 +526,18 @@ def _colored_small_state(
     pos = {int(v): i for i, v in enumerate(vs)}
 
     # driver-held e_xx: map edge endpoints to state positions once; any
-    # endpoint outside the state (a vertex the coloring missed) falls back
-    # to the Spark scan — silent misindexing is never an option. ``eidx``
-    # lets the numpy-coloring caller hand over the positions it already
-    # computed (its pdf rows ARE the sorted id array), skipping the two
-    # full-width searchsorted passes.
+    # endpoint outside the state (a vertex an injected coloring missed)
+    # falls back to the Spark scan and the Spark class jobs — silent
+    # misindexing is never an option. ``eidx`` lets the numpy-coloring
+    # caller hand over the positions it already computed (its pdf rows ARE
+    # the sorted id array), skipping the two full-width searchsorted passes.
     si = di = ew = None
-    if eidx is not None and edges_np is not None:
+    arrays = facts.arrays
+    if eidx is not None:
         si, di = eidx
-        ew = edges_np[2]
-    elif edges_np is not None and len(vs):
-        es, ed, ew_ = edges_np
+        ew = arrays[2]
+    elif arrays is not None and len(vs):
+        es, ed, ew_ = arrays[:3]
         order = np.argsort(vs)
         svs = vs[order]
         is_ = np.searchsorted(svs, es).clip(max=len(svs) - 1)
@@ -555,19 +545,14 @@ def _colored_small_state(
         if bool((svs[is_] == es).all()) and bool((svs[id_] == ed).all()):
             si, di, ew = order[is_], order[id_], ew_
 
-    # full-numpy class sweep: with a valid driver edge copy AND
-    # integer-valued weights every sum below (wsum per (v, cand), cdeg,
-    # e_xx) is exact regardless of aggregation order, so the numpy replay
-    # of the class job is bit-identical to the Spark plan — the same
-    # exactness argument as the plain kernel's driver tail, now covering
-    # the gather/argmax too. Real-valued weights keep the Spark class jobs
-    # (their sums are order-sensitive, and the Spark plan is the contract).
-    np_sweep = (
-        _NP_CLASS_SWEEP
-        and si is not None
-        and float(np.abs(ew).sum()) < float(2**53)
-        and bool((ew == np.rint(ew)).all())
-    )
+    # full-numpy class sweep (the local tier, which the planner admits only
+    # on the integer_weights fact): with a valid driver edge copy every
+    # sum below (wsum per (v, cand), cdeg, e_xx) is exact regardless of
+    # aggregation order, so the numpy replay of the class job is
+    # bit-identical to the Spark plan. Real-valued weights keep the Spark
+    # class jobs (their sums are order-sensitive, and the Spark plan is the
+    # contract).
+    np_sweep = np_sweep and si is not None
     from grappolo_spark.operators.louvain import _first_group_starts
 
     class_edges = None
@@ -741,7 +726,8 @@ def _colored_small_state(
         assignment=out,
         modularity=prev_mod,
         iterations=num_itrs,
-        two_m=two_m,
+        facts=facts,
+        tier=Tier.LOCAL if np_sweep else Tier.DRIVER_STATE,
         # exact driver mirror (only when the whole sweep ran in numpy over
         # a complete driver edge copy): lets the multiphase driver finish
         # renumber/coarsen/tail/fold without another Spark job
@@ -758,24 +744,28 @@ def louvain_one_phase_colored(
     coloring_algo: str = "auto",
     colors: DataFrame | None = None,
     run_dir: str | None = None,
-    nv_hint: int | None = None,
-    edges_np_hint: tuple | None = None,
+    tier: Tier | str | None = None,
+    facts: Facts | None = None,
 ) -> LouvainPhaseResult:
     """One Louvain level, sweeping color classes sequentially.
-
-    ``nv_hint`` (the caller's vertex count, free from the coloring gate in
-    the multiphase driver) picks the edge layout upfront: at or below
-    ``_SMALL_STATE_MAX`` the sweep will take the driver-held-state path
-    whose gather broadcasts both O(V) sides, so the layout that matters is
-    the AGGREGATION key ``src`` (zero exchange per class job) and a few
-    fat partitions beat ``spark.sql.shuffle.partitions`` near-empty tasks
-    — the same reasoning as the plain kernel's broadcast gather. Without a
-    hint, or above the bound, the distributed loop's shuffle-join key
-    ``dst`` is kept.
 
     Same gain/tie-break/swap math as the plain kernel; community info is
     refreshed after each color class, so vertices in later classes see
     earlier classes' moves within the same iteration (Gauss-Seidel).
+
+    The tier (:mod:`grappolo_spark.plans.tiers`) picks the sweep:
+
+    - **local** (<= 4M edge rows, |V| <= 100k, integer-valued weights):
+      coloring and class sweeps replayed in numpy over the probe's driver
+      edge copy — exact, so bit-identical to the Spark class jobs.
+    - **driver_state** (|V| <= 100k): community state in numpy, one Spark
+      class job per color class over the src-partitioned edge cache.
+    - **broadcast** (|V| <= 5M): the distributed loop with both O(V) sides
+      broadcast into a src-keyed class gather (zero exchanges per class).
+    - **shuffle**: the distributed loop co-partitioned on ``dst``.
+
+    ``tier`` forces one; ``facts`` carries what the caller already knows
+    (the multiphase driver hands over its probe and coarse |V|).
 
     ``coloring_algo="multihash"`` bounds the palette a priori (the
     Jones-Plassmann variant emits at most ``2*nhash*nrounds + 1`` colors
@@ -799,22 +789,36 @@ def louvain_one_phase_colored(
     # overflow merge below). With an injected coloring the sweep order is
     # fully deterministic and SQL-expressible, which is how the driver
     # value-oracles one colored Gauss-Seidel iteration.
-    small_hint = nv_hint is not None and nv_hint <= _SMALL_STATE_MAX
-    # mid regime (100k < |V| <= 5M): the state is too big to hold on the
-    # driver but fine to BROADCAST per class job — the same src-keyed
-    # broadcast-gather layout the plain kernel and LPA run (r5), so the
-    # per-class counter aggregates in place with zero exchanges instead of
-    # shuffling O(E_class) gathered rows every sub-sweep
-    bcast_hint = (
-        nv_hint is not None and not small_hint and nv_hint <= _BCAST_STATE_MAX
-    )
-    gather_key = "src" if (small_hint or bcast_hint) else "dst"
-    if small_hint:
-        # partition count follows the INPUT's layout, not a constant:
-        # small state does not imply small edges (a 16k-vertex phase-1
-        # graph can carry millions of rows — 4 fat partitions left most
-        # cores idle in every sequential class job), while a tiny coarse
-        # parquet stays at its few file splits
+    facts = facts or Facts.of(g)
+    forced = Tier(tier) if tier is not None else None
+    # the bounded probe, straight off the CALLER's table: a driver edge
+    # copy feeds the numpy coloring, the state build, the numpy class
+    # sweep and the per-iteration e_xx reduction, and 2m comes from it —
+    # so the stats agg job disappears. Skipped when the caller's |V|
+    # already rules out the driver-held tiers.
+    if (
+        facts.arrays is None
+        and forced not in (Tier.BROADCAST, Tier.SHUFFLE)
+        and (facts.nv is None or driver_holds(facts.nv) or forced is not None)
+    ):
+        probed = collect_probe(g, DRIVER_EDGE_ROWS)
+        if probed is not None:
+            facts = probed if probed.nv is not None else probed.update(nv=facts.nv)
+    vdeg = g.degrees().select("v", "deg").persist()
+    if facts.nv is None:
+        # explicit vertices or an edge table above the probe bound: |V|
+        # from the degree table the sweep persists anyway
+        facts = facts.update(nv=vdeg.count())
+    tier = plan(facts, "louvain_colored", tier=tier)
+    driver_tier = tier in (Tier.LOCAL, Tier.DRIVER_STATE)
+    if driver_tier:
+        # the class jobs broadcast both O(V) sides, so the layout that
+        # matters is the AGGREGATION key ``src`` (zero exchange per class
+        # job); the partition count follows the INPUT's layout: small
+        # state does not imply small edges (a 16k-vertex phase-1 graph can
+        # carry millions of rows — 4 fat partitions left most cores idle in
+        # every sequential class job), while a tiny coarse parquet stays at
+        # its few file splits
         npart = max(
             4,
             min(
@@ -822,80 +826,42 @@ def louvain_one_phase_colored(
                 g.edges.rdd.getNumPartitions(),
             ),
         )
-        edges = g.edges.repartition(npart, gather_key).persist()
+        edges = g.edges.repartition(npart, "src").persist()
     else:
-        edges = g.edges.repartition(gather_key).persist()
-    vdeg = g.degrees().select("v", "deg").persist()
-    # driver-held edge copy for small graphs, probe-collected straight off
-    # the CALLER's table (limit caps the transfer): reused by the coloring
-    # (numpy multihash), the state build, the numpy class sweep and the
-    # per-iteration e_xx reduction — and under the bound 2m and the row
-    # count come from it too, so the dedicated stats agg job disappears
-    # (2m via numpy sum: exact for the engine's integer-valued weights,
-    # the same argument as the rest of the small-state path). The gather
-    # cache above stays LAZY: on the full-numpy route (numpy coloring +
-    # exact numpy class sweep) no action ever touches it, so the
-    # repartition+persist never runs at all.
-    edges_np = None
-    row0 = None
-    hint_ids = None
-    if small_hint and edges_np_hint is not None:
-        # the multiphase driver already probe-collected this exact table
-        # for its coloring gate (and derived nv from it) — reuse the
-        # arrays (and the sorted endpoint ids, if carried) instead of a
-        # second full transfer
-        edges_np = edges_np_hint[:3]
-        hint_ids = edges_np_hint[3] if len(edges_np_hint) > 3 else None
-        two_m = float(edges_np[2].sum())
-        n_edge_rows = len(edges_np[0])
-    elif small_hint:
-        import numpy as np
-
-        epdf = (
-            g.edges.select("src", "dst", "weight")
-            .limit(_SMALL_EDGES_MAX + 1)
-            .toPandas()
-        )
-        if len(epdf) <= _SMALL_EDGES_MAX:
-            edges_np = (
-                epdf["src"].to_numpy(np.int64),
-                epdf["dst"].to_numpy(np.int64),
-                epdf["weight"].to_numpy(np.float64),
-            )
-            two_m = float(edges_np[2].sum())
-            n_edge_rows = len(epdf)
-        del epdf
-    if edges_np is None:
+        edges = g.edges.repartition(
+            "dst" if tier is Tier.SHUFFLE else "src"
+        ).persist()
+    # the gather cache stays LAZY: on the local tier (numpy coloring + exact
+    # numpy class sweep) no action ever touches it, so the
+    # repartition+persist never runs at all
+    if facts.arrays is None:
         row0 = edges.agg(
-            F.sum("weight").alias("tw"), F.count(F.lit(1)).alias("ne")
+            F.sum("weight").alias("tw"),
+            F.sum(F.abs("weight")).alias("abs_w"),
+            F.min((F.col("weight") == F.rint("weight")).cast("int")).alias("int_w"),
         ).collect()[0]
-        two_m = row0["tw"] or 0.0
-        n_edge_rows = row0["ne"] or 0
+        facts = facts.update(
+            two_m=row0["tw"] or 0.0,
+            integer_weights=facts.unweighted
+            or exact_sums(row0["abs_w"], row0["int_w"] != 0),
+        )
+    two_m = facts.two_m
     if two_m == 0.0:
+        edges.unpersist()
+        vdeg.unpersist()
         empty = spark.createDataFrame([], "v long, comm long")
-        return LouvainPhaseResult(empty, 0.0, 0)
+        return LouvainPhaseResult(empty, 0.0, 0, facts=facts, tier=tier)
     const = 1.0 / two_m
 
     colors_np = None  # (ids array, int32 colors) when colored in numpy
-    ids = None
-    if colors is None and edges_np is not None and g.vertices is None:
+    if colors is None and driver_tier and facts.arrays is not None and g.vertices is None:
         # numpy coloring path: zero Spark jobs for the whole palette —
         # the multihash hash is the bit-exact Spark xxhash64 replay
         # (pinned by test_multihash_numpy_matches_spark), so the colors,
         # the class list and every later move are identical
         import numpy as np
 
-        es, ed, _ = edges_np
-        ids = (
-            hint_ids
-            if hint_ids is not None
-            else np.unique(np.concatenate([es, ed]))
-        )
-        if len(ids) > _SMALL_STATE_MAX:
-            # nv_hint undersold the vertex count (public caller): fall
-            # back to the probed Spark path rather than trust the hint
-            ids = None
-    if colors is None and edges_np is not None and g.vertices is None and ids is not None:
+        es, ed, _, ids = facts.arrays
         s_idx = np.searchsorted(ids, es)
         d_idx = np.searchsorted(ids, ed)
         nonself = s_idx != d_idx
@@ -940,8 +906,6 @@ def louvain_one_phase_colored(
         # exactly the plain kernel's semantics); every vertex stays eligible
         overflow_from = all_colors[num_colors_cap - 1]
         if colors_np is not None:
-            import numpy as np
-
             cvals = colors_np[1].copy()
             cvals[cvals >= overflow_from] = overflow_from
             colors_np = (colors_np[0], cvals)
@@ -963,17 +927,18 @@ def louvain_one_phase_colored(
         .agg(F.sum("weight").alias("selfloop"))
     )
 
+    eidx = None
     if colors_np is not None:
-        # state built driver-side from the one edge collect: degrees and
+        # state built driver-side from the probe's edge copy: degrees and
         # self-loop weights via bincount (exact for integer-valued
         # weights; real weights may differ from the Spark sum order in
         # the last ulp — the documented small-path caveat), colors
-        # attached positionally. No probe, no state join jobs.
+        # attached positionally. No state join jobs.
         import numpy as np
         import pandas as pd
 
-        es, ed, ew = edges_np
-        ids, cvals = colors_np
+        es, ed, ew, ids = facts.arrays
+        cvals = colors_np[1]
         # s_idx/d_idx survive from the coloring block above (same ids)
         deg_np = np.bincount(s_idx, weights=ew, minlength=len(ids))
         sl_mask = es == ed
@@ -989,20 +954,7 @@ def louvain_one_phase_colored(
                 "color": cvals,
             }
         )
-        vdeg.unpersist()
-        # the small-state sweep's class jobs are exchange-free (src-
-        # partitioned cache + broadcast LocalRelations), so adaptive
-        # re-planning is pure per-job driver latency here — same gate as
-        # multiphase._aqe_off_for_small, keyed on the actual state size
-        from grappolo_spark.operators.multiphase import _aqe_off_for_small
-
-        with _aqe_off_for_small(spark, len(probe), threshold=_SMALL_STATE_MAX):
-            res = _colored_small_state(
-                spark, edges, probe, classes, const, two_m, thresh, lower,
-                max_iters, edges_np=edges_np, eidx=(s_idx, d_idx),
-            )
-        edges.unpersist()
-        return res
+        eidx = (s_idx, d_idx)
 
     # one combined per-vertex state table: (v, comm, deg, selfloop, color)
     state = (
@@ -1015,37 +967,23 @@ def louvain_one_phase_colored(
             F.coalesce("selfloop", F.lit(0.0)).alias("selfloop"),
             "color",
         )
+        if colors_np is None
+        else None
     )
-    # bounded probe: at or below _SMALL_STATE_MAX rows the whole sweep runs
-    # with driver-held state (per-class parquet cuts replaced by lean
-    # winner collects — see _colored_small_state); the limit stops the
-    # scan early on big graphs, so the probe costs one truncated read
-    probe = state.limit(_SMALL_STATE_MAX + 1).toPandas()
-    if len(probe) <= _SMALL_STATE_MAX:
+    if driver_tier:
+        # driver-held state: per-class parquet cuts replaced by lean
+        # winner collects (see _colored_small_state)
+        if colors_np is None:
+            probe = state.toPandas()
         vdeg.unpersist()
-        if edges_np is None and n_edge_rows <= _SMALL_EDGES_MAX:
-            import numpy as np
-
-            epdf = edges.select("src", "dst", "weight").toPandas()
-            edges_np = (
-                epdf["src"].to_numpy(np.int64),
-                epdf["dst"].to_numpy(np.int64),
-                epdf["weight"].to_numpy(np.float64),
-            )
-        # the small-state sweep's class jobs are exchange-free (src-
-        # partitioned cache + broadcast LocalRelations), so adaptive
-        # re-planning is pure per-job driver latency here — same gate as
-        # multiphase._aqe_off_for_small, keyed on the actual state size
-        from grappolo_spark.operators.multiphase import _aqe_off_for_small
-
-        with _aqe_off_for_small(spark, len(probe), threshold=_SMALL_STATE_MAX):
+        with aqe_off(spark, tier):
             res = _colored_small_state(
-                spark, edges, probe, classes, const, two_m, thresh, lower,
-                max_iters, edges_np=edges_np,
+                spark, edges, probe, classes, const, facts, thresh, lower,
+                max_iters, np_sweep=tier is Tier.LOCAL, eidx=eidx,
             )
         edges.unpersist()
         return res
-    # distributed branch (>100k state rows): bucket the per-class state
+    # distributed tiers: bucket the per-class state
     # cuts by v, so the gather's a_dst join and the winner-application
     # join read the O(V) state pre-partitioned each sub-sweep (same trade
     # as the plain kernel's bucketed commits; one exchange at write time)
@@ -1063,8 +1001,8 @@ def louvain_one_phase_colored(
                 F.sum("deg").alias("cdeg"), F.count(F.lit(1)).alias("csize")
             )
             movers = state.filter(F.col("color") == cls)
-            if bcast_hint:
-                # src-keyed broadcast gather (mid regime): both O(V) sides
+            if tier is Tier.BROADCAST:
+                # src-keyed broadcast gather: both O(V) sides
                 # broadcast pre-enriched — the SAME counter/agg shape as
                 # the small-state class job (whose bit parity vs this
                 # loop's shuffle shape is already pinned), so the
@@ -1193,7 +1131,8 @@ def louvain_one_phase_colored(
         assignment=prev_assign.select("v", "comm"),
         modularity=prev_mod,
         iterations=num_itrs,
-        two_m=two_m,
+        facts=facts,
+        tier=tier,
     )
 
 

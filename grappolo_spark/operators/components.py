@@ -24,6 +24,15 @@ from grappolo_spark.plans.iteration import (
     cut_lineage,
     read_observation,
 )
+from grappolo_spark.plans.tiers import (
+    LOCAL_EDGE_ROWS,
+    Facts,
+    Tier,
+    collect_probe,
+    local_tier_allowed,
+    plan,
+    wants_probe,
+)
 
 def _checksum_aggs():
     # built lazily — Column construction needs an active SparkContext
@@ -95,29 +104,25 @@ def _leaf_singles(pairs: DataFrame) -> DataFrame:
     )
 
 
-def _local_union_find(spark, pdf) -> DataFrame:
-    """Driver-local path for small graphs: one Arrow collect (done by the
-    caller — ``pdf`` has columns u, v and may contain self-loops and
-    duplicates, both harmless to the min-reduction), then fully
-    VECTORIZED min-label propagation with pointer jumping — labels = min
-    id per component, the same labels the star rounds converge to,
-    without ~6 rounds of fixed distributed-job overhead. Self-loop-only
-    vertices register in ``ids`` and keep their own label, so the output
-    covers every edge endpoint.
+def _local_union_find(spark, arrays) -> DataFrame:
+    """Local tier: vectorized min-label propagation with pointer jumping
+    over the probe's collected ``(src, dst, _, ids)`` arrays (self-loops
+    and duplicates are harmless to the min-reduction) — labels = min id per
+    component, the same labels the star rounds converge to, without ~6
+    rounds of fixed distributed-job overhead. Self-loop-only vertices are
+    in ``ids`` and keep their own label, so the output covers every edge
+    endpoint.
 
     Vectorized (sort once, then ``minimum.reduceat`` per round + pointer
     doubling, O(log n) rounds) instead of a per-edge Python union-find
-    loop: at the 2M-row gate a Python loop costs tens of seconds on this
-    box's throttled single core; array passes stay milliseconds.
-    Callers gate on edge-row count."""
+    loop: at the 2M-row bound a Python loop costs tens of seconds on a
+    throttled single core; array passes stay milliseconds."""
     import numpy as np
     import pandas as pd
 
-    if not len(pdf):
+    u, v, _, ids = arrays
+    if not len(u):
         return spark.createDataFrame([], "v long, component long")
-    u = pdf["u"].to_numpy(dtype=np.int64)
-    v = pdf["v"].to_numpy(dtype=np.int64)
-    ids = np.unique(np.concatenate([u, v]))
     ui = np.searchsorted(ids, u)
     vi = np.searchsorted(ids, v)
     n = len(ids)
@@ -155,25 +160,21 @@ def connected_components(
     g: Graph,
     method: str = "star",
     max_iters: int = 50,
-    check_every: int = 1,
-    local_threshold: int = 2_000_000,
+    local_threshold: int = LOCAL_EDGE_ROWS,
     freeze: bool = True,
-    ids32: bool | None = None,
+    tier: Tier | str | None = None,
     run_dir: str | None = None,
 ) -> DataFrame:
     """Return assignments ``(v, component)``; isolated vertices get their own id.
 
-    ``check_every`` chains that many large+small-star rounds between
-    lineage cuts / convergence checksums. Default 1: unlike PageRank's
-    linear chain, a star round references its input several times (the
-    symmetrized union feeds both the min-aggregate and the join), so
-    chaining uncut rounds multiplies re-evaluation — measured slower.
-    Forced to 1 when ``run_dir`` is set so every superstep commits durably.
-
-    ``local_threshold``: below that many distinct edge rows the labels come
-    from a driver-local union-find (identical min-id labels, one collect)
-    — the star supersteps on a small graph are pure fixed job overhead.
-    0 disables; ``run_dir`` (durable superstep state) forces distributed.
+    Tiers (:mod:`grappolo_spark.plans.tiers`): **local** — up to 2M edge
+    rows the labels come from a driver-local union-find over the probe's
+    collected arrays (identical min-id labels; the star supersteps on a
+    small graph are pure fixed job overhead); **shuffle** — the star (or
+    ``method="label_prop"``) supersteps, one lineage cut / convergence
+    checksum per round. ``run_dir`` (durable superstep state) and
+    ``method="label_prop"`` exclude the local tier, as does
+    ``local_threshold=0``; ``tier`` forces one.
 
     ``freeze`` contracts converged leaves out of each round's input (the
     geometric work reduction — see the in-code note); works on scratch
@@ -181,12 +182,39 @@ def connected_components(
     resume rederives every frozen batch deterministically from the step
     parquets the runner already keeps.
 
-    ``ids32`` (None = auto on the star path): 32-bit ids through the star
-    rounds when the verified id bound fits int32 — component ids are
-    min vertex ids, so BOTH columns of every per-round pair shuffle
-    narrow; the returned ``(v, component)`` stays long. The id bounds
-    ride the same one-pass stats action as the local-path row count.
+    The star rounds carry 32-bit ids whenever the id-bound fact fits int32
+    — component ids are min vertex ids, so BOTH columns of every per-round
+    pair shuffle narrow; the returned ``(v, component)`` stays long.
     """
+    if method not in ("star", "label_prop"):
+        raise ValueError(f"unknown method {method!r}")
+    variant = set()
+    if method == "label_prop":
+        variant.add("min_label")
+    if not local_tier_allowed(local_threshold):
+        variant.add("no_local")
+    facts = Facts.of(g)
+    if wants_probe(facts, "components", run_dir, variant, tier):
+        # probe-and-collect in ONE evaluation of the (unpersisted) edge
+        # pipeline: under the bound the probe IS the collect. The bound is
+        # RAW edge rows (>= distinct pairs), a conservative shift: graphs
+        # between the two counts take the star path, whose labels are
+        # identical.
+        facts = collect_probe(g, LOCAL_EDGE_ROWS, weights=False) or facts
+    tier = plan(facts, "components", run_dir, variant, tier)
+    spark = g.edges.sparkSession
+    if tier is Tier.LOCAL:
+        labels = _local_union_find(spark, facts.arrays)
+        if g.vertices is None:
+            # every vertex id is an edge endpoint (self-loop-only
+            # included): the LocalRelation already covers the full vertex
+            # set — no join, no result cut
+            return labels
+        out = g.vertex_ids().join(labels, "v", "left").select(
+            "v", F.coalesce("component", F.col("v")).alias("component")
+        )
+        return cut_lineage(out, tag="result", keep_last=64)
+
     pairs = g.edges.filter(F.col("src") != F.col("dst")).select(
         F.col("src").alias("u"), F.col("dst").alias("v")
     )
@@ -194,46 +222,17 @@ def connected_components(
         # raw Graph(edges=...) construction may carry duplicate pairs;
         # canonical graphs skip this exchange (rows unique by construction)
         pairs = pairs.distinct()
-    runner = SuperstepRunner(g.edges.sparkSession, run_dir)
-    if run_dir is not None:
-        check_every = 1
+    runner = SuperstepRunner(spark, run_dir)
     pairs_all = None  # star path's one-evaluation pair cut (see below)
-
+    ids32 = False
     if method == "star":
-        if run_dir is None and local_threshold > 0:
-            # probe-and-collect in ONE evaluation of the (unpersisted) edge
-            # pipeline: limit caps the driver transfer, and under the bound
-            # the probe IS the collect — the old flow evaluated the
-            # pipeline up to four times (the distinct-pair stats gate, the
-            # union-find collect, and vertex_ids' two-scan union). The gate
-            # is now RAW edge rows (>= distinct pairs), a conservative
-            # shift: graphs between the two counts take the distributed
-            # star path, whose labels are identical.
-            probe = (
-                g.edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-                .limit(local_threshold + 1)
-                .toPandas()
-            )
-            if len(probe) <= local_threshold:
-                labels = _local_union_find(g.edges.sparkSession, probe)
-                if g.vertices is None:
-                    # every vertex id is an edge endpoint (self-loop-only
-                    # included): the LocalRelation already covers the full
-                    # vertex set — no join, no result cut
-                    return labels
-                all_v = g.vertex_ids()
-                out = all_v.join(labels, "v", "left").select(
-                    "v", F.coalesce("component", F.col("v")).alias("component")
-                )
-                return cut_lineage(out, tag="result", keep_last=64)
-        # distributed path, ONE evaluation of the (possibly heavy,
-        # unpersisted) edge pipeline: the deduped pair table is cut FIRST —
-        # KEEPING self-loop rows so it doubles as the vertex universe — and
-        # every later consumer (the id-bound stats, the star rounds'
-        # non-self input, the final vertex attach) reads the small parquet.
-        # The old flow evaluated the pipeline three times (stats, cut,
-        # vertex_ids); durable runs keep the old shape (resume must not
-        # depend on a scratch-rotation table).
+        # ONE evaluation of the (possibly heavy, unpersisted) edge
+        # pipeline: the deduped pair table is cut FIRST — KEEPING self-loop
+        # rows so it doubles as the vertex universe — and every later
+        # consumer (the id-bound stats, the star rounds' non-self input,
+        # the final vertex attach) reads the small parquet. Durable runs
+        # keep the old shape (resume must not depend on a scratch-rotation
+        # table).
         if run_dir is None:
             pa = g.edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
             if not g.deduped:
@@ -249,17 +248,10 @@ def connected_components(
                 F.max(F.greatest("src", "dst")).alias("max_id"),
             )
         pstats = pstats_src.collect()[0]
-        if ids32 is None:
-            ids32 = True
-        min_id = pstats["min_id"] if pstats["min_id"] is not None else 0
-        max_id = pstats["max_id"] if pstats["max_id"] is not None else 0
-        ids32 = bool(
-            ids32 and -(1 << 31) <= min_id and max_id < (1 << 31) - 1
-        )
+        facts = facts.update(id_lo=pstats["min_id"], id_hi=pstats["max_id"])
+        ids32 = facts.fits_int32()
         if pairs_all is not None:
             pairs = pairs_all.filter(F.col("u") != F.col("v"))
-    else:
-        ids32 = False
 
     if method == "star":
         start, resumed = runner.resume()
@@ -282,7 +274,6 @@ def connected_components(
                 # separately — with their own crash windows — rederive
                 # them lazily from the per-step state parquets the runner
                 # already keeps, and re-split the resumed state itself.
-                spark = g.edges.sparkSession
                 for s in range(start):
                     st_path = os.path.join(run_dir, f"step={s:06d}", "state")
                     if os.path.isdir(st_path):
@@ -308,15 +299,13 @@ def connected_components(
         # pure extra write+read job
         prev = _checksum(pairs)  # once, against the cut parquet — cheap
         # NOTE (r6): an AQE-off gate for tiny round loops was tried here
-        # (the multiphase._aqe_off_for_small pattern) and measured ~2x
+        # (the tiers.aqe_off pattern) and measured ~2x
         # SLOWER (warm rounds 4.3-4.7s vs 2.2-2.7s at 7k pairs): unlike
         # the exchange-free louvain sweeps, a star round is all exchanges
         # over a shrinking input, and AQE's empty-relation propagation +
         # partition coalescing pay for their re-planning. AQE stays ON.
         for step in range(start, max_iters):
             pairs = _small_star(_large_star(pairs, dedup=False))
-            if (step + 1) % max(1, check_every) != 0:
-                continue
             # convergence checksum rides the round's single
             # materializing action as observed metrics (CollectMetrics
             # on the state plan). Scratch rounds localCheckpoint —
@@ -410,8 +399,6 @@ def connected_components(
             labels = new
             if changed == 0:
                 break
-    else:
-        raise ValueError(f"unknown method {method!r}")
 
     # attach isolated vertices (their own component)
     if pairs_all is not None:

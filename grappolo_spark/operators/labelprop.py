@@ -19,30 +19,35 @@ from grappolo_spark.plans.iteration import (
     cut_lineage,
     promote_result,
 )
+from grappolo_spark.plans.tiers import (
+    LOCAL_EDGE_ROWS,
+    Facts,
+    Tier,
+    collect_probe,
+    local_tier_allowed,
+    plan,
+    wants_probe,
+)
 
 
-def _local_lpa(g: Graph, max_iters: int, stop_on_converge: bool, pdf) -> DataFrame:
-    """Driver-local replay of the identical iteration for small graphs:
-    same gather (sum weight per neighbor label), same (weight desc, label
-    asc) argmax, same Jacobi update and convergence stop. Exact for
+def _local_lpa(spark, max_iters: int, stop_on_converge: bool, arrays) -> DataFrame:
+    """Local tier: driver-local replay of the identical iteration — same
+    gather (sum weight per neighbor label), same (weight desc, label asc)
+    argmax, same Jacobi update and convergence stop. Exact for
     integer-valued weights (the engine's count-weighted graphs); real
     weights may differ in the last ulp of summed ties.
 
-    ``pdf`` is the caller's ONE collected edge pass (src, dst, weight),
-    UNFILTERED: self-loop rows are dropped here in numpy, but their
-    endpoints still register in ``ids`` (a vertex with only self-loops has
-    no gather rows and keeps its own label) — so the output covers every
-    edge endpoint and the caller needs no separate vertex_ids() pass."""
+    ``arrays`` is the probe's ONE collected edge pass ``(src, dst, weight,
+    ids)``, UNFILTERED: self-loop rows are dropped here, but their
+    endpoints are in ``ids`` (a vertex with only self-loops has no gather
+    rows and keeps its own label) — so the output covers every edge
+    endpoint and the caller needs no separate vertex_ids() pass."""
     import numpy as np
     import pandas as pd
 
-    spark = g.edges.sparkSession
-    if not len(pdf):
+    src, dst, w, ids = arrays
+    if not len(src):
         return spark.createDataFrame([], "v long, label long")
-    src = pdf["src"].to_numpy(dtype=np.int64)
-    dst = pdf["dst"].to_numpy(dtype=np.int64)
-    w = pdf["weight"].to_numpy(dtype=np.float64)
-    ids = np.unique(np.concatenate([src, dst]))
     m = src != dst
     s = np.searchsorted(ids, src[m])
     d = np.searchsorted(ids, dst[m])
@@ -74,54 +79,40 @@ def label_propagation(
     g: Graph,
     max_iters: int = 10,
     stop_on_converge: bool = True,
-    local_threshold: int = 2_000_000,
-    broadcast_labels: bool | None = None,
-    broadcast_max_vertices: int = 5_000_000,
-    ids32: bool | None = None,
+    local_threshold: int = LOCAL_EDGE_ROWS,
+    tier: Tier | str | None = None,
     run_dir: str | None = None,
 ) -> DataFrame:
     """Return ``(v, label)``; isolated vertices keep their own id.
 
-    Below ``local_threshold`` edge rows the identical iteration replays
-    driver-locally (one Arrow collect — distributed supersteps over a
-    small graph are fixed job overhead); ``run_dir`` (durable superstep
-    state for resume) forces the distributed path. 0 disables.
-
-    ``broadcast_labels`` (auto when |V| <= ``broadcast_max_vertices``):
-    the src-keyed broadcast-gather layout proven on the louvain kernel —
-    pairs are hash-partitioned ONCE on ``src`` (the aggregation key), the
-    O(V) label table broadcasts into the join, and the whole
-    freq→argmax chain runs with zero per-superstep exchanges; before,
-    every superstep shuffled O(E) frequency rows from the dst-join
-    layout to the src aggregation. Beyond the threshold the dst-
-    co-partitioned shuffle plan is kept. ``ids32`` (None = auto with the
-    broadcast path): 32-bit ids through the hot chain when the id bound
-    fits — labels are vertex ids, so the label column narrows too;
-    winners are identical (integer counts, same tie-break ordering).
+    Tiers (:mod:`grappolo_spark.plans.tiers`): **local** — up to 2M edge
+    rows the identical iteration replays driver-locally over the probe's
+    one Arrow collect (excluded by ``run_dir`` and ``local_threshold=0``);
+    **broadcast** (|V| <= 5M) — pairs are hash-partitioned ONCE on ``src``
+    (the aggregation key), the O(V) label table broadcasts into the join,
+    and the freq→argmax chain runs with zero per-superstep exchanges, with
+    32-bit ids through the hot chain when the id bound fits (labels are
+    vertex ids, so the label column narrows too; winners are identical);
+    **shuffle** — the dst-co-partitioned plan. ``tier`` forces one.
     """
     spark = g.edges.sparkSession
-    if run_dir is None and local_threshold > 0:
+    variant = set() if local_tier_allowed(local_threshold) else {"no_local"}
+    facts = Facts.of(g)
+    if wants_probe(facts, "labelprop", run_dir, variant, tier):
         # probe-and-collect in ONE evaluation of the (unpersisted) edge
-        # pipeline: limit(threshold+1) caps the driver transfer, and when
-        # the graph is under the bound the probe IS the collect — the old
-        # flow evaluated the pipeline up to four times (count gate, the
-        # filtered collect, and vertex_ids' two-scan union)
-        probe = (
-            g.edges.select("src", "dst", "weight")
-            .limit(local_threshold + 1)
-            .toPandas()
+        # pipeline: under the bound the probe IS the collect
+        facts = collect_probe(g, LOCAL_EDGE_ROWS) or facts
+    if plan(facts, "labelprop", run_dir, variant, tier) is Tier.LOCAL:
+        labels = _local_lpa(spark, max_iters, stop_on_converge, facts.arrays)
+        if g.vertices is None:
+            # every vertex id is an edge endpoint (self-loop-only
+            # vertices included — see _local_lpa): the LocalRelation
+            # already covers the full vertex set, no join, no cut
+            return labels
+        out = g.vertex_ids().join(labels, "v", "left").select(
+            "v", F.coalesce("label", F.col("v")).alias("label")
         )
-        if len(probe) <= local_threshold:
-            labels = _local_lpa(g, max_iters, stop_on_converge, probe)
-            if g.vertices is None:
-                # every vertex id is an edge endpoint (self-loop-only
-                # vertices included — see _local_lpa): the LocalRelation
-                # already covers the full vertex set, no join, no cut
-                return labels
-            out = g.vertex_ids().join(labels, "v", "left").select(
-                "v", F.coalesce("label", F.col("v")).alias("label")
-            )
-            return cut_lineage(out, tag="result", keep_last=64)
+        return cut_lineage(out, tag="result", keep_last=64)
 
     # ONE evaluation of the (possibly heavy, unpersisted) edge pipeline for
     # the O(V) side: the vertex table is cut first, then the stats agg and
@@ -138,27 +129,20 @@ def label_propagation(
         F.min("v").alias("min_id"),
         F.max("v").alias("max_id"),
     ).collect()[0]
-    nv = vstats["nv"] or 0
-    if broadcast_labels is None:
-        broadcast_labels = nv <= broadcast_max_vertices
-    if ids32 is None:
-        ids32 = bool(broadcast_labels)
-    min_id = vstats["min_id"] if vstats["min_id"] is not None else 0
-    max_id = vstats["max_id"] if vstats["max_id"] is not None else 0
+    facts = facts.update(
+        nv=vstats["nv"] or 0, id_lo=vstats["min_id"], id_hi=vstats["max_id"]
+    )
+    tier = plan(facts, "labelprop", run_dir, variant, tier)
+    broadcast_labels = tier is Tier.BROADCAST
     # strict lower bound: the tie-break negates the int32 label inside the
     # max_by struct, and -INT32_MIN wraps under non-ANSI Spark — a vertex id
     # of exactly -2^31 must keep the long path
-    ids32 = bool(
-        ids32
-        and broadcast_labels
-        and -(1 << 31) < min_id
-        and max_id < (1 << 31) - 1
-    )
+    ids32 = broadcast_labels and facts.fits_int32(strict_low=True)
 
     # weight ≡ 1.0 invariant (Graph.unweighted): persist only (src, dst)
     # and count rows per label instead of summing doubles — identical
     # winners (integer counts are exact doubles, same tie-break struct)
-    unweighted = bool(getattr(g, "unweighted", False))
+    unweighted = facts.unweighted
     if ids32:
         pair_cols = [
             F.col("src").cast("int").alias("src"),

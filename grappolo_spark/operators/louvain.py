@@ -55,6 +55,15 @@ from grappolo_spark.plans.iteration import (
     promote_result,
     read_observation,
 )
+from grappolo_spark.plans.tiers import (
+    Facts,
+    Tier,
+    aqe_off,
+    driver_holds,
+    exact_sums,
+    from_arrays,
+    plan,
+)
 
 
 def modularity(
@@ -142,13 +151,10 @@ class LouvainPhaseResult:
     assignment: DataFrame  # (v, comm)
     modularity: float  # prevMod, as returned by the reference kernel
     iterations: int
-    # total edge weight (2m), conserved by coarsening — multiphase feeds it
-    # back to later phases as two_m_hint so they skip the stats action
-    two_m: float = 0.0
-    # |V| as seen by the kernel (from the stats action or the caller's
-    # nv_hint) — lets multiphase skip its own distinct-count job for the
-    # phase-1 renumber size hint. None when the kernel never counted.
-    num_vertices: int | None = None
+    # what the phase knew about its graph (2m, |V|, integer weights...) —
+    # the multiphase driver derives the next coarse phase's facts from it
+    facts: Facts | None = None
+    tier: Tier | None = None  # the tier the phase ran in
     # driver-held mirror of the phase, set ONLY by exact driver-side
     # kernels over a complete driver edge copy: (ids sorted, comm over
     # ids, src_pos, dst_pos, weight). Lets the multiphase driver continue
@@ -244,13 +250,16 @@ def louvain_one_phase_local(
     """
     import numpy as np
 
-    src, dst, w = _collect_edges_np(g)
+    # one Arrow transfer (collect() walks py4j row objects — ~10x slower)
+    pdf = g.edges.select("src", "dst", "weight").toPandas()
+    src, dst, w, ids = from_arrays(
+        g, *(pdf[c].to_numpy() for c in ("src", "dst", "weight"))
+    ).arrays
     spark = g.edges.sparkSession
     if len(src) == 0:
         return LouvainPhaseResult(
             spark.createDataFrame([], "v long, comm long"), 0.0, 0
         )
-    ids = np.unique(np.concatenate([src, dst]))
     s = np.searchsorted(ids, src)
     d = np.searchsorted(ids, dst)
     prev_comm, prev_mod, num_itrs = _local_kernel(
@@ -267,19 +276,6 @@ def louvain_one_phase_local(
         pd.DataFrame({"v": ids, "comm": ids[prev_comm]}), "v long, comm long"
     )
     return LouvainPhaseResult(out, prev_mod, num_itrs)
-
-
-def _collect_edges_np(g: Graph):
-    """Edge table -> numpy columns via one Arrow transfer (collect() walks
-    py4j row objects — ~10x slower at a million rows)."""
-    import numpy as np
-
-    pdf = g.edges.select("src", "dst", "weight").toPandas()
-    return (
-        pdf["src"].to_numpy(dtype=np.int64),
-        pdf["dst"].to_numpy(dtype=np.int64),
-        pdf["weight"].to_numpy(dtype=np.float64),
-    )
 
 
 def _first_group_starts(sorted_arr):
@@ -428,6 +424,7 @@ def _local_kernel(s, d, w, nv, directed, thresh, lower, max_iters,
 
 def louvain_local_tail(
     g: Graph,
+    arrays: tuple,
     threshold: float = 1e-6,
     curr_mod: float = -1.0,
     phase_start: int = 1,
@@ -436,8 +433,9 @@ def louvain_local_tail(
     max_total_iters: int = 100_000,
     smart_init: bool = False,
 ):
-    """Run ALL remaining multiphase phases driver-locally: one collect, one
-    createDataFrame, zero intermediate Spark jobs.
+    """Run ALL remaining multiphase phases driver-locally over the probe's
+    collected ``(src, dst, weight, ids)`` arrays: one createDataFrame,
+    zero intermediate Spark jobs — the multiphase driver's local tier.
 
     Exact mirror of the distributed multiphase loop (kernel → min-member
     renumber → C_orig fold → coarsen with zero-weight self-loop
@@ -446,14 +444,10 @@ def louvain_local_tail(
     community labels, prev_mod, num_clusters, phase, tot_itr, history).
     """
     import numpy as np
+    import pandas as pd
 
     spark = g.edges.sparkSession
-    src, dst, ww = _collect_edges_np(g)
-    ids = (
-        np.unique(np.concatenate([src, dst]))
-        if len(src)
-        else np.array([], dtype=np.int64)
-    )
+    src, dst, ww, ids = arrays
     s = np.searchsorted(ids, src)
     d = np.searchsorted(ids, dst)
     nv0 = len(ids)
@@ -463,8 +457,6 @@ def louvain_local_tail(
         tot_itr_start, max_phases, max_total_iters, smart_init,
     )
 
-    import pandas as pd
-
     if nv0:
         out = spark.createDataFrame(
             pd.DataFrame({"v": ids, "comm": c_orig}), "v long, comm long"
@@ -472,6 +464,25 @@ def louvain_local_tail(
     else:
         out = spark.createDataFrame([], "v long, comm long")
     return out, prev_mod, num_clusters, phase, tot_itr, history
+
+
+def _coarsen_np(assign, s, d, w, k):
+    """Numpy mirror of ``multiphase.coarsen``: fold edges through
+    ``assign`` (k clusters) summing weights, and guarantee a self-loop row
+    per cluster (weight 0 placeholders, `buildNextPhase.cpp:120-127`) —
+    the same aggregated multiset (integer-exact sums)."""
+    import numpy as np
+
+    ns, nd = assign[s], assign[d]
+    uk, inv = np.unique(ns * np.int64(k) + nd, return_inverse=True)
+    nw = np.bincount(inv, weights=w)
+    ns, nd = (uk // k).astype(np.int64), (uk % k).astype(np.int64)
+    missing = np.setdiff1d(np.arange(k, dtype=np.int64), ns[ns == nd])
+    return (
+        np.concatenate([ns, missing]),
+        np.concatenate([nd, missing]),
+        np.concatenate([nw, np.zeros(len(missing))]),
+    )
 
 
 def _local_tail_np(
@@ -524,46 +535,21 @@ def _local_tail_np(
                 "iterations": iters,
                 "vertices": cur_n,
                 "colored": False,
-                "local": True,
+                "tier": Tier.LOCAL.value,
             }
         )
         if phase > max_phases or tot_itr > max_total_iters:
             break
         if (curr_mod - prev_mod) > threshold:
-            # coarsen: fold edges through assign; guarantee a self-loop row
-            # per cluster (weight 0 placeholders, `buildNextPhase.cpp:120-127`)
-            k = num_clusters
-            ns, nd = assign[cur_s], assign[cur_d]
-            key = ns * k + nd
-            uk, inv = np.unique(key, return_inverse=True)
-            nw = np.bincount(inv, weights=cur_w)
-            ns, nd = (uk // k).astype(np.int64), (uk % k).astype(np.int64)
-            missing = np.setdiff1d(
-                np.arange(k, dtype=np.int64), ns[ns == nd], assume_unique=False
+            cur_s, cur_d, cur_w = _coarsen_np(
+                assign, cur_s, cur_d, cur_w, num_clusters
             )
-            cur_s = np.concatenate([ns, missing])
-            cur_d = np.concatenate([nd, missing])
-            cur_w = np.concatenate([nw, np.zeros(len(missing))])
-            cur_n = k
+            cur_n = num_clusters
             phase += 1
         else:
             break
 
     return c_orig, prev_mod, num_clusters, phase, tot_itr, history
-
-
-# state rows at or below this bound run the plain Jacobi sweep with
-# driver-held community state: the gather/argmax stays in Spark over the
-# persisted edge cache (the O(E) side never moves), but the O(V) state
-# crosses the boundary as broadcast LocalRelations in and one O(V) winner
-# collect out — replacing the per-iteration parquet commit, the
-# cinfo/state Spark joins and the observation machinery, which at small
-# |V| are pure driver plan-compile and job-latency floor (the same
-# structure as coloring._colored_small_state, which the round-5 A/Bs
-# proved out). Identical results: integer-valued weights make every
-# aggregate exact, and the score/gain/tie-break expressions are the same
-# column expressions the distributed loop compiles.
-_SMALL_STATE_MAX = 100_000
 
 
 def _small_state_phase(
@@ -573,8 +559,7 @@ def _small_state_phase(
     vdeg,
     selfw,
     const: float,
-    two_m: float,
-    nv_seen: int,
+    facts: Facts,
     thresh: float,
     lower: float,
     max_iters: int,
@@ -583,14 +568,21 @@ def _small_state_phase(
     ids32: bool,
     unweighted: bool,
 ):
-    """Driver-held-state Jacobi kernel (see _SMALL_STATE_MAX note).
+    """Driver-held-state Jacobi kernel (the driver_state tier).
 
-    One Spark action per iteration: the fused gather→argmax job over the
+    The gather/argmax stays in Spark over the persisted edge cache (the
+    O(E) side never moves), but the O(V) state crosses the boundary as
+    broadcast LocalRelations in and one O(V) winner collect out —
+    replacing the per-iteration parquet commit, the cinfo/state Spark
+    joins and the observation machinery, which at small |V| are pure
+    driver plan-compile and job-latency floor. One Spark action per
+    iteration: the fused gather→argmax job over the
     persisted edge cache, collecting O(V) winner rows. Community
     aggregates (cdeg/csize), the gain formula and the move/termination
     logic run in numpy with the exact expressions and lag structure of
-    the distributed loop (and of ``_local_kernel``), so results are
-    bit-identical on integer-valued weights.
+    the distributed loop (and of ``_local_kernel``). The planner admits
+    this tier only on the ``integer_weights`` fact: every aggregate is then
+    exact, so results are bit-identical to the distributed loop.
     """
     import numpy as np
     import pandas as pd
@@ -609,7 +601,7 @@ def _small_state_phase(
     if nv == 0:
         return LouvainPhaseResult(
             spark.createDataFrame([], "v long, comm long"), 0.0, 0,
-            two_m=two_m, num_vertices=nv_seen,
+            facts=facts, tier=Tier.DRIVER_STATE,
         )
 
     if init_assign is not None:
@@ -745,8 +737,8 @@ def _small_state_phase(
         assignment=out,
         modularity=prev_mod,
         iterations=num_itrs,
-        two_m=two_m,
-        num_vertices=nv_seen,
+        facts=facts,
+        tier=Tier.DRIVER_STATE,
     )
 
 
@@ -761,28 +753,30 @@ def louvain_one_phase(
     sample_hash: str = "xxh64",
     early_terminate: bool = False,
     ftr_phase: int | None = None,
-    lineage_cut_every: int = 1,
     salt_threshold: int = 1_000_000,
     smart_init: bool = False,
-    broadcast_assign: bool | None = None,
-    broadcast_max_vertices: int = 5_000_000,
-    two_m_hint: float | None = None,
-    nv_hint: int | None = None,
-    ids32: bool | None = None,
-    _dense_ids: bool = False,
+    tier: Tier | str | None = None,
+    facts: Facts | None = None,
     run_dir: str | None = None,
 ) -> LouvainPhaseResult:
     """Run one modularity-optimization level to its convergence threshold.
 
-    ``broadcast_assign`` picks the physical gather strategy, mirroring
-    :func:`grappolo_spark.operators.pagerank.pagerank`: when the assignment
-    table is small (auto below ``broadcast_max_vertices``) it broadcasts
-    into the ``edges JOIN assign(dst)`` gather, so the persisted edge table
-    is only SCANNED per superstep — no exchange and, crucially, no
-    per-superstep sort-merge sort of the O(E) side; the single per-
-    iteration edge-width shuffle left is the gather's own partial-
-    aggregated groupBy. Beyond the threshold (a billion-vertex assignment
-    must not broadcast) the shuffle plan co-partitioned on ``dst`` is kept.
+    The tier (:mod:`grappolo_spark.plans.tiers`) picks the physical plan:
+
+    - **driver_state** (|V| <= 100k, integer-valued weights, plain
+      variant, no ``run_dir``): community state held in numpy, one fused
+      gather→argmax Spark job per iteration (:func:`_small_state_phase`).
+    - **broadcast** (|V| <= 5M): the assignment broadcasts into the
+      ``edges JOIN assign(dst)`` gather, so the src-partitioned edge cache
+      is only SCANNED per superstep — no exchange and no per-superstep
+      sort of the O(E) side.
+    - **shuffle** (beyond — a billion-vertex assignment must not
+      broadcast): the plan co-partitioned on ``dst``, state commits
+      bucketed by ``v``.
+
+    ``tier`` forces one. ``facts`` carries what the caller already knows
+    (the multiphase driver's coarse phases: |V|, 2m, dense ids, integer
+    weights); without it the phase's one stats action fills them.
 
     ``init_assign`` gives warm starts (reference
     `parallelLouvainMethodInitialized.cpp:106-112`). ``sample_fraction``
@@ -803,47 +797,33 @@ def louvain_one_phase(
     symmetrized): vdeg becomes the out-degree and the constant 1/sum(w) is
     doubled to 1/m as in `parallelDirectedLouvainMethod.cpp:103-105`.
 
-    ``ids32`` (None = auto): store vertex ids as 32-bit ints in the hot
-    gather chain — the persisted edge cache, the gather join/aggregation
-    and the argmax — halving the id bytes through the stage the round-5
-    profile measured as 73% of kernel CPU (width-bound, zero shuffle).
-    Auto enables it on the broadcast-gather path when the id bound is
-    KNOWN to fit int32: verified via min/max ids in the start-of-phase
-    stats action, or, on the multiphase hints path, implied by the dense
-    contiguous renumbering contract (ids in [0, nv_hint)). Community ids
-    are a subset of vertex ids, so the gather's candidate column narrows
-    too. The state table, commits, and the returned assignment stay
-    ``long`` — casts happen once per O(V) row at the chain boundaries.
-    The shuffle-gather path never narrows (its co-partitioned joins and
-    bucketed state cuts key on the canonical long columns).
+    On the broadcast tier the hot gather chain — the persisted edge cache,
+    the gather join/aggregation and the argmax — carries 32-bit ids when
+    the id-bound fact fits int32 (1.2-1.3x at 134M edges: the stage is
+    width-bound). Community ids are a subset of vertex ids, so the
+    candidate column narrows too. The state table, commits, and the
+    returned assignment stay ``long``.
     """
     spark = g.edges.sparkSession
-    # weight ≡ 1.0 invariant (see Graph.unweighted): lets the hot gather
-    # drop the weight column and count instead of sum — exactly equal
-    unweighted = bool(getattr(g, "unweighted", False))
-    vdeg_full = g.degrees().persist()
-    vdeg = vdeg_full.select("v", "deg")
+    given = facts is not None
+    facts = facts if given else Facts.of(g)
     # one action yields 2m AND the max degree (hub detection for salting)
-    # AND |V| (broadcast-plan selection): sum of per-vertex degrees ==
-    # total edge-row weight. Multiphase callers pass hints for coarse
-    # phases instead — 2m is conserved by coarsening and |V| equals the
-    # previous phase's cluster count, so when nv_hint is also under the
-    # salting threshold (max degree <= nv-1) the whole action is skipped.
-    hints_path = False
-    if (
-        two_m_hint is not None
-        and nv_hint is not None
-        and nv_hint <= salt_threshold
-    ):
-        hints_path = True
-        two_m = two_m_hint
+    # AND |V| and the id bounds AND the integer-weight check: sum of
+    # per-vertex degrees == total edge-row weight. The multiphase driver
+    # passes facts for coarse phases instead — 2m is conserved by
+    # coarsening and |V| equals the previous phase's cluster count, so when
+    # |V| is also under the salting threshold (max degree <= nv-1) the
+    # whole action is skipped.
+    skip_stats = (
+        given
+        and facts.two_m is not None
+        and facts.nv is not None
+        and facts.nv <= salt_threshold
+    )
+    vdeg_full = g.degrees(weight_checks=not skip_stats).persist()
+    vdeg = vdeg_full.select("v", "deg")
+    if skip_stats:
         use_salting = False
-        nv_seen = nv_hint
-        # hints path (multiphase coarse phases): ids are dense-renumbered
-        # [0, nv) by contract, so nv bounds the id range
-        min_id, max_id = 0, nv_hint - 1
-        if broadcast_assign is None:
-            broadcast_assign = nv_hint <= broadcast_max_vertices
     else:
         stats0 = vdeg_full.agg(
             F.sum("deg").alias("tw"),
@@ -851,44 +831,43 @@ def louvain_one_phase(
             F.count(F.lit(1)).alias("nv"),
             F.min("v").alias("min_id"),
             F.max("v").alias("max_id"),
+            F.sum("abs_w").alias("abs_w"),
+            F.min("int_w").alias("int_w"),
         ).collect()[0]
-        two_m = stats0["tw"] or 0.0
-        use_salting = (stats0["maxdeg"] or 0) > salt_threshold
-        nv_seen = stats0["nv"] or 0
-        min_id = stats0["min_id"] if stats0["min_id"] is not None else 0
-        max_id = stats0["max_id"] if stats0["max_id"] is not None else 0
-        if broadcast_assign is None:
-            broadcast_assign = nv_seen <= broadcast_max_vertices
-    if ids32 is None:
-        # hint-derived bounds are UNVERIFIED: auto-enable the int32 chain
-        # from them only when the caller vouches for the dense-renumbering
-        # contract (_dense_ids — the multiphase driver does; it produced
-        # the renumbering). A public caller passing nv_hint over sparse or
-        # >int32 ids must not get silent non-ANSI wrapping casts.
-        ids32 = bool(broadcast_assign and (not hints_path or _dense_ids))
-    elif ids32 and hints_path and not _dense_ids:
-        # explicit ids32=True on unverified hints: one cheap bounds scan
-        # replaces the trust — wrong communities are never an option
-        row = g.edges.agg(
-            F.min(F.least("src", "dst")).alias("lo"),
-            F.max(F.greatest("src", "dst")).alias("hi"),
-        ).collect()[0]
-        min_id = row["lo"] if row["lo"] is not None else 0
-        max_id = row["hi"] if row["hi"] is not None else 0
-    ids32 = bool(
-        ids32
-        and broadcast_assign
-        and -(1 << 31) <= min_id
-        and max_id < (1 << 31) - 1
-    )
+        facts = facts.update(
+            two_m=stats0["tw"] or 0.0,
+            max_degree=stats0["maxdeg"] or 0,
+            nv=stats0["nv"] or 0,
+            id_lo=stats0["min_id"],
+            id_hi=stats0["max_id"],
+            integer_weights=facts.unweighted
+            or exact_sums(stats0["abs_w"], stats0["int_w"] != 0),
+        )
+        use_salting = facts.max_degree > salt_threshold
+    two_m = facts.two_m
     # hub skew (use_salting above): the gather routes through a two-stage
     # salted aggregation when any vertex's neighbor list exceeds the
     # threshold (the DataFrame analogue of the reference's per-thread
     # partial maps, `parallelLouvainMethodScale.cpp:86-90`); below it,
     # Spark's map-side partial agg absorbs the skew for free
     if two_m == 0.0:
+        vdeg_full.unpersist()
         empty = spark.createDataFrame([], "v long, comm long")
-        return LouvainPhaseResult(empty, 0.0, 0)
+        return LouvainPhaseResult(empty, 0.0, 0, facts=facts)
+    variant = {
+        name
+        for name, on in (
+            ("sampling", sample_fraction is not None),
+            ("early_terminate", early_terminate),
+            ("ftr", ftr_phase is not None),
+            ("salting", use_salting),
+        )
+        if on
+    }
+    tier = plan(facts, "louvain_phase", run_dir, variant, tier)
+    broadcast_assign = tier is not Tier.SHUFFLE
+    ids32 = broadcast_assign and facts.fits_int32()
+    unweighted = facts.unweighted
     const = 1.0 / two_m
     if g.directed:
         # directed modularity: constant = 1/m (reference doubles the
@@ -898,16 +877,16 @@ def louvain_one_phase(
     # hash-partition the edge table ONCE on the key the supersteps reuse;
     # every iteration then scans the persisted layout in place. The key
     # depends on the gather strategy:
-    #   - broadcast gather (assignment small): the join side is broadcast,
-    #     so the layout that matters is the AGGREGATION key — the gather's
-    #     groupBy(v=src, cand) and the argmax's groupBy(v). src-partitioned
-    #     edges satisfy both (partitioning on a subset of the grouping keys
-    #     co-locates the groups), so the whole gather→counter→argmax chain
-    #     runs with ZERO exchanges per superstep (plan-asserted; dst layout
-    #     paid two O(E)-width shuffles per iteration here).
-    #   - shuffle gather (assignment too big to broadcast): co-partition on
-    #     the JOIN key dst so the O(E) side never moves per iteration; the
-    #     downstream aggs then shuffle on v as before.
+    #   - broadcast gather (driver_state/broadcast tiers): the join side is
+    #     broadcast, so the layout that matters is the AGGREGATION key —
+    #     the gather's groupBy(v=src, cand) and the argmax's groupBy(v).
+    #     src-partitioned edges satisfy both (partitioning on a subset of
+    #     the grouping keys co-locates the groups), so the whole
+    #     gather→counter→argmax chain runs with ZERO exchanges per
+    #     superstep (plan-asserted; dst layout paid two O(E)-width shuffles
+    #     per iteration here).
+    #   - shuffle gather: co-partition on the JOIN key dst so the O(E) side
+    #     never moves per iteration; the downstream aggs then shuffle on v.
     # Tiny coarse phases pin a narrow partition count — the default
     # spark.sql.shuffle.partitions would fan a ~1k-vertex graph back out to
     # dozens of near-empty tasks per stage, and task scheduling (not data)
@@ -931,7 +910,7 @@ def louvain_one_phase(
         if not unweighted:
             cols.append(F.col("weight"))
         e_base = e_base.select(*cols)
-    if nv_hint is not None and nv_hint <= 100_000:
+    if given and driver_holds(facts.nv):
         # follow the input's partitioning, bounded by the session's
         # shuffle parallelism: small |V| does not imply small |E|, and a
         # constant 4 starves the sequential superstep jobs of cores when
@@ -966,31 +945,13 @@ def louvain_one_phase(
         .agg(F.sum("weight").alias("selfloop"))
     )
 
-    # small-state fast path (see _SMALL_STATE_MAX): plain-variant phases
-    # with a driver-holdable O(V) state run the same supersteps with the
-    # state held in numpy — the gather/argmax stays in Spark over the
-    # persisted cache; one collect replaces commit+observe per iteration.
-    # Variants whose semantics live outside the plain sweep (sampling,
-    # early-terminate, FTR, durable run_dir, forced salting) keep the
-    # distributed loop, as does any state too big to hold.
-    if (
-        nv_seen is not None
-        and 0 < nv_seen <= _SMALL_STATE_MAX
-        and broadcast_assign
-        and not use_salting
-        and sample_fraction is None
-        and not early_terminate
-        and ftr_phase is None
-        and run_dir is None
-    ):
-        # the small-state supersteps are exchange-free (src-partitioned
+    if tier is Tier.DRIVER_STATE:
+        # the driver_state supersteps are exchange-free (src-partitioned
         # cache + broadcast LocalRelations), so adaptive re-planning is
-        # pure per-job driver latency — skip it for the sweep's jobs
-        from grappolo_spark.operators.multiphase import _aqe_off_for_small
-
-        with _aqe_off_for_small(spark, nv_seen, threshold=_SMALL_STATE_MAX):
+        # pure per-job driver latency — aqe_off skips it for their jobs
+        with aqe_off(spark, tier):
             res = _small_state_phase(
-                spark, edges, e_cold, vdeg, selfw, const, two_m, nv_seen,
+                spark, edges, e_cold, vdeg, selfw, const, facts,
                 thresh, lower, max_iters, init_assign, smart_init, ids32,
                 unweighted,
             )
@@ -1031,12 +992,12 @@ def louvain_one_phase(
         # kernel's iterations measured ~3x slower under it (198.6s vs
         # 72.2s whole-run A/B on an idle box) — the parquet round-trip's
         # fixed cost is the cheaper lineage truncation for multi-consumer
-        # state on this build. Tiny coarse phases (nv_hint below the
-        # broadcast bound) skip the cut ACTION entirely: only iteration 1
+        # state on this build. Coarse phases on the broadcast tier (facts
+        # from the multiphase driver) skip the cut ACTION entirely: only iteration 1
         # consumes the init plan (4-6 subplan copies over an
         # already-parquet-backed coarse graph inside ONE job), which costs
         # less than a dedicated write+read job at that size.
-        if not (nv_hint is not None and nv_hint <= broadcast_max_vertices):
+        if not (given and tier is Tier.BROADCAST):
             assign = cut_lineage(
                 assign, tag="louvain_assign",
                 bucket_by=runner.bucket_by, n_buckets=runner.n_buckets,
@@ -1060,17 +1021,9 @@ def louvain_one_phase(
     # Variants whose stop inputs live outside cinfo/cur (early-terminate's
     # edge-scan e_xx, FTR's Q_AFG exit) and durable runs (run_dir: the
     # _METRICS.json sidecar must hold final numbers at write time) keep
-    # the two-action flow. Chained cuts (lineage_cut_every > 1) compose
-    # with fusion: non-cut iterations localCheckpoint the new assignment
-    # (firing the observations) — no parquet round-trip — and every Nth
-    # iteration commits through the runner to keep the plan tree bounded.
-    # Chaining is NOT the default here: A/B at sf0.1 measured the
-    # localCheckpoint path ~3x slower than per-iteration parquet commits
-    # on this build (the non-adaptive df.rdd compile path), so
-    # lineage_cut_every=1 stays the default; the branch is kept because
-    # the economics differ per deployment (a real cluster with slow DFS
-    # favors chaining) and its output equivalence is pinned by
-    # tests/test_round2_fixes.py::test_lineage_cut_cadence_invariant.
+    # the two-action flow. Every iteration commits a parquet cut: chaining
+    # iterations through localCheckpoint measured ~3x slower at sf0.1 (the
+    # non-adaptive df.rdd compile path), so that option was removed.
     fuse_stats = run_dir is None and not early_terminate and ftr_phase is None
     for step in range(start, max_iters):
         num_itrs = step + 1
@@ -1367,31 +1320,12 @@ def louvain_one_phase(
         if fuse_stats:
             # materialize FIRST — the single action of the iteration; it
             # fires the observed metrics — then read them and decide the
-            # stop. Cut iterations commit through the runner (parquet,
-            # bounded plan tree); chained iterations persist + count (no
-            # parquet round-trip — the dominant per-iteration cost on the
-            # forced-distributed path).
-            do_cut = (
-                lineage_cut_every <= 1 or (step + 1) % lineage_cut_every == 0
-            )
-            if do_cut:
-                committed = runner.commit(step, new_assign, {"op": "louvain"})
-                for df_ in retired:
-                    df_.unpersist()
-                retired = pending + [cinfo, bestinfo]
-                pending = []
-            else:
-                # localCheckpoint: materializes the iteration (firing the
-                # observed metrics) and truncates the plan to a LogicalRDD
-                # leaf — no parquet round-trip, and no cache whose later
-                # unpersist would recompile dependents. The blocks are
-                # executor-local scratch; every Nth iteration still commits
-                # via the runner so converged state is parquet-backed.
-                committed = new_assign.localCheckpoint(eager=True)
-                runner.history.append({"op": "louvain", "step": step})
-                # cinfo/bestinfo stay persisted until the next commit
-                # retires them — the fallback stats recompute reads them
-                pending.extend([cinfo, bestinfo])
+            # stop
+            committed = runner.commit(step, new_assign, {"op": "louvain"})
+            for df_ in retired:
+                df_.unpersist()
+            retired = pending + [cinfo, bestinfo]
+            pending = []
             m_cur = read_observation(obs_cur)
             m_cinfo = read_observation(obs_cinfo)
             if m_cur is not None and m_cinfo is not None:
@@ -1438,38 +1372,16 @@ def louvain_one_phase(
         prev_assign = assign
         hist2 = hist1
         hist1 = assign
-        # chain a few supersteps between parquet cuts (the plan is a short
-        # linear chain over persisted temporaries) — halves the per-
-        # iteration job count; with a run_dir every superstep still commits
-        # durably so resume finds per-superstep state
-        do_cut = (
-            run_dir is not None
-            or lineage_cut_every <= 1
-            or (step + 1) % lineage_cut_every == 0
-        )
-        if do_cut:
-            assign = runner.commit(
-                step, new_assign, dict(metrics, prev_mod=prev_mod)
-            )
-            # one-commit lag: items retired at the PREVIOUS commit are now
-            # certainly out of every live plan (assign is parquet-backed)
-            for df_ in retired:
-                df_.unpersist()
-            retired = pending
-            pending = []
-        else:
-            runner.history.append(dict(metrics, prev_mod=prev_mod, step=step))
-            # localCheckpoint, not persist: materializes once (the next
-            # iteration's plan consumes this assignment 4-6 times) AND
-            # truncates the plan to a leaf — persist-chaining nests
-            # InMemoryRelations whose plans grow multiplicatively and whose
-            # unpersist recompiles dependents (measured OOM/storms)
-            assign = new_assign.localCheckpoint(eager=True)
-        pending.extend([cinfo, bestinfo])
+        assign = runner.commit(step, new_assign, dict(metrics, prev_mod=prev_mod))
+        # one-commit lag: items retired at the PREVIOUS commit are now
+        # certainly out of every live plan (assign is parquet-backed)
+        for df_ in retired:
+            df_.unpersist()
+        retired = pending
+        pending = [cinfo, bestinfo]
 
     # NO final result cut: prev_assign is already a truncated leaf — the
-    # init cut, an iteration's runner.commit parquet, or a chained
-    # localCheckpoint — so re-writing it was a pure extra job per phase
+    # init cut or an iteration's runner.commit parquet — so re-writing it was a pure extra job per phase
     # (measured ~1s x phases on the forced-distributed multiphase). The
     # only uncut case is a tiny coarse phase's skipped init cut, whose
     # plan is a cheap projection over the coarse-edge parquet.
@@ -1491,6 +1403,6 @@ def louvain_one_phase(
         assignment=prev_assign.select("v", "comm"),
         modularity=prev_mod,
         iterations=num_itrs,
-        two_m=two_m,
-        num_vertices=nv_seen,
+        facts=facts,
+        tier=tier,
     )

@@ -29,7 +29,6 @@ the Spark analogue of the reference keeping later phases cheap in cache.
 from __future__ import annotations
 
 import time
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -39,42 +38,18 @@ from grappolo_spark.graph import Graph
 from grappolo_spark.operators.louvain import louvain_one_phase
 from grappolo_spark.plans.iteration import cut_lineage
 from grappolo_spark.plans.ranking import dense_rank_ids
-
-
-RENUMBER_SMALL_THRESHOLD = 100_000
-
-
-@contextmanager
-def _aqe_off_for_small(spark, nv: int | None, threshold: int = 100_000):
-    """Disable adaptive execution around a SMALL phase's jobs.
-
-    AQE's per-stage re-planning is pure overhead once a coarse graph is
-    tiny — there is no skew to split and no partitions worth coalescing
-    at <100k rows, but every query stage still pays the adaptive
-    round-trip. Measured on the forced-distributed multiphase (warm,
-    alternated A/B): sf0.001 15.5-19.5s with AQE vs 13.4-14.3s without;
-    at sf0.1 the gate is load-noise-neutral (31-36s both ways, Q
-    bit-identical) — the win is the micro-phase tail. Callers gate only
-    coarse phases (phase 1's input can be dense at small nv and keeps
-    AQE's skew handling). The conf is restored even on error; results
-    materialized inside (parquet commits) are unaffected by the
-    restore.
-
-    The toggle is SESSION-GLOBAL: a concurrent query on the same
-    SparkSession during a gated window would also run without AQE.
-    Acceptable for the single-threaded bench/driver this repo targets;
-    scope via a cloned session (``spark.newSession()``) if concurrent
-    use ever arrives."""
-    if nv is None or nv > threshold:
-        yield
-        return
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
+from grappolo_spark.plans.tiers import (
+    DRIVER_EDGE_ROWS,
+    LOCAL_EDGE_ROWS,
+    Facts,
+    Tier,
+    aqe_off,
+    collect_probe,
+    driver_holds,
+    local_tier_allowed,
+    plan,
+    wants_probe,
+)
 
 
 def _renumber_np(vs, cs):
@@ -96,9 +71,7 @@ def _renumber_np(vs, cs):
 
 
 def renumber_contiguously(
-    assign: DataFrame,
-    size_hint: int | None = None,
-    small_threshold: int = RENUMBER_SMALL_THRESHOLD,
+    assign: DataFrame, size_hint: int | None = None
 ) -> tuple[DataFrame, int]:
     """Renumber communities to dense 0..k-1.
 
@@ -110,7 +83,7 @@ def renumber_contiguously(
 
     ``size_hint`` (an upper bound on the ROW count of ``assign`` —
     multiphase passes the phase's vertex count) selects a driver-side fast
-    path below ``small_threshold``: collect the assignment, renumber in
+    path when it fits the driver_state bound: collect the assignment, renumber in
     Python, and return a **LocalRelation** (``createDataFrame``). One
     simple-scan action, and — the real win for the coarse phases, where
     ~2s/job of plan-compile dominates — the result carries its data in
@@ -120,7 +93,7 @@ def renumber_contiguously(
     distributed path runs (a billion-community phase 1 must never collect).
     """
     spark = assign.sparkSession
-    if size_hint is not None and size_hint <= small_threshold:
+    if driver_holds(size_hint):
         import numpy as np
         import pandas as pd
 
@@ -182,6 +155,27 @@ def coarsen(g: Graph, assign: DataFrame) -> Graph:
     return Graph(edges=coarse, directed=g.directed, deduped=True)
 
 
+def coarsen_cut(g: Graph, assign: DataFrame, num_clusters: int) -> Graph:
+    """:func:`coarsen` plus the lineage cut the multiphase loop reads the
+    next phase from. The rebuilt graph keeps the coarse graph's flags
+    (``deduped`` spares coarse colored phases the pair ``distinct``)."""
+    coarse = coarsen(g, assign)
+    edges = coarse.edges
+    if driver_holds(num_clusters):
+        # small coarse graphs: collapse to a few partitions before the
+        # cut. Leaving the parent's partition count (e.g. 32) makes every
+        # downstream stage schedule 32 near-empty tasks; at ~1k coarse
+        # vertices the task-scheduling overhead, not the data, is the
+        # phase cost.
+        edges = edges.coalesce(4)
+    return Graph(
+        edges=cut_lineage(edges, tag="coarse_edges", keep_last=2),
+        directed=coarse.directed,
+        unweighted=coarse.unweighted,
+        deduped=coarse.deduped,
+    )
+
+
 @dataclass
 class LouvainResult:
     assignment: DataFrame  # (v, comm) over ORIGINAL vertex ids
@@ -202,16 +196,15 @@ def louvain(
     coloring: bool = False,
     num_colors_cap: int = 1024,
     coloring_algo: str = "auto",
-    local_threshold: int = 2_000_000,
+    local_threshold: int = LOCAL_EDGE_ROWS,
     vertex_following: bool = False,
     sample_fraction: float | None = None,
     seed: int = 12345,
     early_terminate: bool = False,
     fast_track_resistance: bool = False,
     smart_init: bool = False,
-    lineage_cut_every: int = 1,
     sample_hash: str = "xxh64",
-    ids32: bool | None = None,
+    tier: Tier | str | None = None,
     run_dir: str | None = None,
 ) -> LouvainResult:
     """Full multi-phase Louvain (flagship query — reference entry point
@@ -228,20 +221,26 @@ def louvain(
     ``smart_init=True`` warm-starts each plain phase with the one-pass
     all-singleton sweep (``initCommAssOpt``,
     `Utility/utilityClusteringFunctions.cpp:108-169`).
-    ``local_threshold``: coarse phases whose EDGE-ROW count drops below it
-    run the IDENTICAL kernel driver-locally in numpy
-    (:func:`louvain_local_tail`) — distributed supersteps over a
-    small coarse graph are pure fixed job overhead, the Spark analogue of
-    the reference keeping later phases in cache. 0 disables. Variant flags
-    (sampling / early-terminate / FTR / coloring / run_dir resumability)
-    always take the distributed path; ``smart_init`` is honored on BOTH
-    paths (the local kernel replays the same warm start in numpy).
-    Directed graphs (``Graph(directed=True)``) run the directed kernel
-    (constant 2/m) and coarsen without symmetrizing — the
+
+    Tiers (:mod:`grappolo_spark.plans.tiers`): once a plain phase's graph
+    has at most 2M edge rows, the **local** tier runs ALL remaining phases
+    driver-locally in numpy (:func:`louvain_local_tail`) over the one
+    probe collect — distributed supersteps over a small coarse graph are
+    pure fixed job overhead, the Spark analogue of the reference keeping
+    later phases in cache. Sampling, early-terminate, FTR, ``run_dir``,
+    explicit isolated vertices and ``local_threshold=0`` exclude it; every
+    other phase plans its own tier from the facts this driver hands over.
+    ``tier`` forces one tier for every phase. Directed graphs
+    (``Graph(directed=True)``) run the directed kernel (constant 2/m) and
+    coarsen without symmetrizing — the
     `runDirectedMultiPhaseBasic.cpp:52-170` driver.
     """
     from grappolo_spark.operators.coloring import louvain_one_phase_colored
-    from grappolo_spark.operators.louvain import louvain_local_tail
+    from grappolo_spark.operators.louvain import (
+        _coarsen_np,
+        _local_tail_np,
+        louvain_local_tail,
+    )
     from grappolo_spark.operators.vertex_following import (
         apply_vertex_following,
         vertex_following_map,
@@ -254,6 +253,16 @@ def louvain(
             "coloring / vertex_following assume a symmetrized edge table; "
             "not supported with directed=True"
         )
+    variant = {
+        name
+        for name, on in (
+            ("sampling", sample_fraction is not None),
+            ("early_terminate", early_terminate),
+            ("ftr", fast_track_resistance),
+            ("no_local", not local_tier_allowed(local_threshold)),
+        )
+        if on
+    }
 
     vf_map = None
     if vertex_following:
@@ -275,75 +284,40 @@ def louvain(
     history = []
     phase_maps = []  # deferred C_orig folds: one composed join at the end
     cur_g = g
-    prev_k = None  # phase p+1's vertex count == phase p's cluster count
-    two_m_seen = None  # 2m from phase 1's kernel — conserved by coarsening
+    # facts this driver knows about the next (coarse) phase: |V| is the
+    # previous phase's cluster count, ids are its dense renumbering, and
+    # 2m and integer-valued weights are conserved by coarsening
+    coarse_facts = None
 
     while True:
         phase_t0 = time.time()
-        # phase 1's |V| is a distinct-count job over the full edge table;
-        # the plain path only needs it AFTER the phase (renumber size
-        # hint), and the kernel's own stats action counts vdeg rows anyway
-        # (res.num_vertices) — so the upfront count runs only when the
-        # coloring gate needs nv BEFORE the phase. Coarse phases get it
-        # free from the previous phase's cluster count.
-        edges_np_hint = None
-        if prev_k is not None:
-            nv = prev_k
-        elif coloring:
+        facts = coarse_facts or Facts.of(cur_g)
+        if coarse_facts is None and coloring:
+            # the coloring gate needs |V| BEFORE phase 1: it rides the
+            # bounded edge probe (whose arrays the colored kernel then
+            # reuses instead of its own transfer); above the bound, or with
+            # explicit vertices, a distinct-count job
             if cur_g.vertices is None:
-                # the gate's |V| can ride a bounded edge probe instead of
-                # a distinct-count job, and the probe-collected arrays are
-                # handed to the colored kernel so it skips its own
-                # transfer; above the bound (or with explicit vertices)
-                # the count job runs as before
-                import numpy as np
-
-                from grappolo_spark.operators.coloring import (
-                    _SMALL_EDGES_MAX,
-                )
-
-                epdf = (
-                    cur_g.edges.select("src", "dst", "weight")
-                    .limit(_SMALL_EDGES_MAX + 1)
-                    .toPandas()
-                )
-                if len(epdf) <= _SMALL_EDGES_MAX:
-                    es = epdf["src"].to_numpy(np.int64)
-                    ed = epdf["dst"].to_numpy(np.int64)
-                    ew = epdf["weight"].to_numpy(np.float64)
-                    ids = np.unique(np.concatenate([es, ed]))
-                    edges_np_hint = (es, ed, ew, ids)
-                    nv = len(ids)
-                else:
-                    nv = cur_g.num_vertices()
-                del epdf
-            else:
-                nv = cur_g.num_vertices()
-        else:
-            nv = None
+                facts = collect_probe(cur_g, DRIVER_EDGE_ROWS) or facts
+            if facts.nv is None:
+                facts = facts.update(nv=cur_g.num_vertices())
+        nv = facts.nv
         use_coloring = coloring and nv is not None and nv > min_graph_size
-        use_local = (
-            not use_coloring
-            and local_threshold > 0
-            and cur_g.vertices is None  # explicit isolated vertices need
-            # the degrees()-based distributed init
-            and sample_fraction is None
-            and not early_terminate
-            and not fast_track_resistance
-            and run_dir is None
-            # edge rows, not vertices: the collect and the numpy sorts
-            # scale with rows (one cheap count against the cut parquet)
-            and cur_g.edges.count() <= local_threshold
-        )
+        use_local = False
+        if not use_coloring and wants_probe(facts, "louvain", run_dir, variant, tier):
+            if facts.arrays is None:
+                # probe-and-collect: under the bound the probe IS the
+                # local tail's input
+                facts = collect_probe(cur_g, LOCAL_EDGE_ROWS) or facts
+            use_local = plan(facts, "louvain", run_dir, variant, tier) is Tier.LOCAL
         if use_local:
             # all remaining phases in one driver-local numpy loop: one
-            # collect in, one DataFrame out — the coarse graphs are a few
-            # thousand rows and distributed supersteps would be pure
-            # fixed job overhead
+            # collect in, one DataFrame out
             (
                 tail_assign, prev_mod, num_clusters, phase, tot_itr, tail_hist
             ) = louvain_local_tail(
                 cur_g,
+                facts.arrays,
                 threshold=threshold,
                 curr_mod=curr_mod,
                 phase_start=phase,
@@ -376,22 +350,19 @@ def louvain(
 
         phase_thresh = c_threshold if use_coloring else threshold
         prev_mod = curr_mod
-        # gate only COARSE phases: their edge count is bounded by the
-        # previous phase's cluster pairs, so nv small => the whole phase
-        # is small. Phase 1's input can be dense (small nv, huge edge
-        # table) and keeps AQE's skew handling.
-        with _aqe_off_for_small(spark, nv if phase > 1 else None):
+        # coarse phases whose state fits the driver run their jobs without
+        # AQE (see tiers.aqe_off). Phase 1's input can be dense (small nv,
+        # huge edge table) and keeps AQE's skew handling.
+        small = Tier.DRIVER_STATE if phase > 1 and driver_holds(nv) else None
+        with aqe_off(spark, small):
             if use_coloring:
                 res = louvain_one_phase_colored(
                     cur_g, thresh=phase_thresh, lower=curr_mod,
                     num_colors_cap=num_colors_cap,
                     coloring_algo=coloring_algo,
                     run_dir=f"{run_dir}/phase{phase}" if run_dir else None,
-                    # nv is known here (the coloring gate counted it):
-                    # lets the kernel pick the src-keyed narrow layout for
-                    # the small-state broadcast gather upfront
-                    nv_hint=nv,
-                    edges_np_hint=edges_np_hint,
+                    tier=tier,
+                    facts=facts,
                 )
             else:
                 res = louvain_one_phase(
@@ -402,33 +373,16 @@ def louvain(
                     sample_hash=sample_hash,
                     early_terminate=early_terminate,
                     ftr_phase=phase if fast_track_resistance else None,
-                    # coarse phases skip the stats action: 2m is conserved
-                    # by coarsening and |V| == the previous phase's
-                    # cluster count
-                    two_m_hint=two_m_seen,
-                    nv_hint=prev_k,
-                    # this driver produced the dense renumbering the hints
-                    # describe, so the hint-derived id bound is verified
-                    _dense_ids=True,
-                    # default 1: parquet-cut EVERY iteration. Chaining via
-                    # localCheckpoint (>1) measured ~3x SLOWER at sf0.1 —
-                    # the checkpoint materializes through the non-adaptive
-                    # df.rdd path; the assignment is consumed 4-6x per
-                    # iteration so some truncation is mandatory, and the
-                    # parquet cut wins
-                    lineage_cut_every=lineage_cut_every,
-                    # None = the kernel's auto gate (int32 hot chain when
-                    # the verified/dense id bound fits — see its docstring)
-                    ids32=ids32,
+                    # coarse phases skip the stats action (see coarse_facts)
+                    facts=coarse_facts,
+                    tier=tier,
                     run_dir=f"{run_dir}/phase{phase}" if run_dir else None,
                 )
-            if res.two_m:
-                two_m_seen = res.two_m
             curr_mod = res.modularity
             tot_itr += res.iterations
-
             if nv is None:
-                nv = res.num_vertices  # counted by the kernel's stats action
+                nv = res.facts.nv  # counted by the kernel's stats action
+
             # driver-side continuation: a phase that ran entirely in numpy
             # over a complete driver edge copy hands back its arrays
             # (res.local_np) — renumber/coarsen/tail/fold then finish on
@@ -438,19 +392,13 @@ def louvain(
             # after its collect, the coarsen produces the same aggregated
             # multiset as coarsen() (integer-exact sums + zero-weight
             # self-loop placeholders), and the tail is the same
-            # _local_tail_np the use_local branch runs. Gated to the
-            # shapes the fold
-            # below would reduce to exactly this composition.
+            # _local_tail_np the local tier runs. Gated to the shapes the
+            # fold below would reduce to exactly this composition.
             np_cont = (
                 res.local_np is not None
                 and not phase_maps
                 and vf_map is None
-                and g.vertices is None
-                and run_dir is None
-                and sample_fraction is None
-                and not early_terminate
-                and not fast_track_resistance
-                and local_threshold > 0
+                and wants_probe(Facts.of(g), "louvain", run_dir, variant, tier)
             )
             if np_cont:
                 ids_np, comm_raw, e_si, e_di, e_w = res.local_np
@@ -462,23 +410,20 @@ def louvain(
                 assign, num_clusters = renumber_contiguously(
                     res.assignment, size_hint=nv
                 )
+        entry = {
+            "phase": phase,
+            "modularity": curr_mod,
+            "clusters": num_clusters,
+            "iterations": res.iterations,
+            "vertices": nv,
+            "colored": use_coloring,
+            "tier": res.tier.value if res.tier else None,
+            "seconds": round(time.time() - phase_t0, 3),
+        }
         if np_cont:
-            import numpy as np
             import pandas as pd
 
-            from grappolo_spark.operators.louvain import _local_tail_np
-
-            history.append(
-                {
-                    "phase": phase,
-                    "modularity": curr_mod,
-                    "clusters": num_clusters,
-                    "iterations": res.iterations,
-                    "vertices": nv,
-                    "colored": use_coloring,
-                    "seconds": round(time.time() - phase_t0, 3),
-                }
-            )
+            history.append(entry)
             done = (
                 phase > max_phases
                 or tot_itr > max_total_iters
@@ -499,23 +444,13 @@ def louvain(
                     total_iterations=tot_itr,
                     phase_history=history,
                 )
-            # numpy coarsen — same aggregated multiset as coarsen():
-            # summed (csrc, cdst) pairs plus a zero-weight self-loop
-            # placeholder for every cluster without one
             k = num_clusters
-            ns, nd = assign_np[e_si], assign_np[e_di]
-            key = ns * np.int64(k) + nd
-            uk, uinv = np.unique(key, return_inverse=True)
-            nw = np.bincount(uinv, weights=e_w)
-            cs_, cd_ = (uk // k).astype(np.int64), (uk % k).astype(np.int64)
-            missing = np.setdiff1d(
-                np.arange(k, dtype=np.int64), cs_[cs_ == cd_]
-            )
-            ts = np.concatenate([cs_, missing])
-            td = np.concatenate([cd_, missing])
-            tw = np.concatenate([nw, np.zeros(len(missing))])
+            ts, td, tw = _coarsen_np(assign_np, e_si, e_di, e_w, k)
             next_colored = coloring and k > min_graph_size
-            if not next_colored and len(ts) <= local_threshold:
+            tail_facts = Facts(edge_rows=len(ts), arrays=(ts, td, tw, None))
+            if not next_colored and (
+                plan(tail_facts, "louvain", run_dir, variant, tier) is Tier.LOCAL
+            ):
                 phase += 1
                 (
                     tail_c, t_mod, t_k, t_phase, t_itr, t_hist
@@ -537,14 +472,14 @@ def louvain(
                     phase_history=history,
                 )
             # remaining phases need the distributed machinery (next phase
-            # colored, or coarse edges above local_threshold): hand the
+            # colored, or coarse edges above the local bound): hand the
             # phase map back as a LocalRelation and rejoin the normal flow
             history.pop()  # the normal flow re-appends this phase's entry
             assign = spark.createDataFrame(
                 pd.DataFrame({"v": ids_np, "comm": assign_np}),
                 "v long, comm long",
             )
-        if nv is None or nv > RENUMBER_SMALL_THRESHOLD:
+        if not driver_holds(nv):
             # distributed renumber → parquet-cut the assignment. keep_last
             # must outlive the whole run: the end-of-run fold reads every
             # phase's assignment parquet. (A persist would be cheaper on
@@ -554,7 +489,6 @@ def louvain(
             # independent.) The driver path needs no cut at all: its
             # LocalRelation carries the rows in the plan.
             assign = cut_lineage(assign, tag="phase_assign", keep_last=256)
-        prev_k = num_clusters
 
         # defer C_orig[i] = C[C_orig[i]] (`runMultiPhaseBasic.cpp:105-112`):
         # each phase map is a small cut table, so the whole chain composes
@@ -562,39 +496,21 @@ def louvain(
         phase_maps.append(
             assign.select(F.col("v").alias("comm"), F.col("comm").alias("next_comm"))
         )
-
-        history.append(
-            {
-                "phase": phase,
-                "modularity": curr_mod,
-                "clusters": num_clusters,
-                "iterations": res.iterations,
-                "vertices": nv,
-                "colored": use_coloring,
-                "seconds": round(time.time() - phase_t0, 3),
-            }
-        )
+        history.append(entry)
 
         if phase > max_phases or tot_itr > max_total_iters:
             break
         if (curr_mod - prev_mod) > threshold:
-            with _aqe_off_for_small(spark, nv if phase > 1 else None):
-                cur_g = coarsen(cur_g, assign)
-                coarse_edges = cur_g.edges
-                if num_clusters <= 100_000:
-                    # small coarse graphs: collapse to a few partitions
-                    # before the cut. Leaving the parent's partition count
-                    # (e.g. 32) makes every downstream stage schedule 32
-                    # near-empty tasks; at ~1k coarse vertices the
-                    # task-scheduling overhead, not the data, is the
-                    # phase cost.
-                    coarse_edges = coarse_edges.coalesce(4)
-                cur_g = Graph(
-                    edges=cut_lineage(
-                        coarse_edges, tag="coarse_edges", keep_last=2
-                    ),
-                    directed=cur_g.directed,
-                )
+            with aqe_off(spark, small):
+                cur_g = coarsen_cut(cur_g, assign, num_clusters)
+            coarse_facts = Facts.of(
+                cur_g,
+                nv=num_clusters,
+                id_lo=0,
+                id_hi=num_clusters - 1,
+                two_m=res.facts.two_m or (coarse_facts and coarse_facts.two_m),
+                integer_weights=res.facts.integer_weights,
+            )
             phase += 1
         else:
             break

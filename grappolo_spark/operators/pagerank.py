@@ -26,153 +26,94 @@ from grappolo_spark.plans.iteration import (
     cut_lineage,
     promote_result,
 )
-
-# test hook: force the committed-state distributed loop even when the
-# driver-held-rank fast path would apply
-_NP_RANK_LOOP = True
-
+from grappolo_spark.plans.tiers import Facts, Tier, plan
 
 def pagerank(
     g: Graph,
     alpha: float = 0.85,
     max_iters: int = 20,
     tol: float | None = None,
-    lineage_cut_every: int = 3,
-    broadcast_ranks: bool | None = None,
-    broadcast_max_vertices: int = 5_000_000,
-    ids32: bool | None = None,
+    tier: Tier | str | None = None,
     run_dir: str | None = None,
 ) -> DataFrame:
     """Return ``(v, rank)``. Deterministic given (graph, alpha, max_iters).
 
-    ``broadcast_ranks`` picks the physical strategy for the per-superstep
-    ``edges JOIN ranks``:
+    The tier (see :mod:`grappolo_spark.plans.tiers`) picks the physical
+    strategy for the per-superstep ``edges JOIN ranks``:
 
-    - **True** (auto when |V| <= ``broadcast_max_vertices``): the rank
-      table broadcasts, the edge table is hash-partitioned by ``dst``
-      once, and the contribution groupBy(dst) reuses that layout — the
-      superstep moves ZERO edge rows over the network/shuffle disk.
-    - **False** (auto beyond the threshold — a billion-vertex rank table
-      must not be broadcast): the shuffle-join plan, edges co-partitioned
-      on the join key once and reused.
+    - **driver_state** (|V| <= 100k, no ``tol``, no ``run_dir``, no
+      dangling vertex): the gather runs in Spark over the dst-partitioned
+      edge cache, the rank vector lives in numpy.
+    - **broadcast** (|V| <= 5M): the rank table broadcasts, the edge table
+      is hash-partitioned by ``dst`` once, and the contribution
+      groupBy(dst) reuses that layout — the superstep moves ZERO edge rows.
+    - **shuffle** (beyond — a billion-vertex rank table must not be
+      broadcast): the shuffle-join plan, rank state committed bucketed by
+      ``v``.
 
-    ``ids32`` (default OFF, explicit opt-in): the louvain int32 hot-chain
-    treatment applied here — edge cache and in-loop rank state carry
-    32-bit ids (bound verified via min/max riding the |V| action), the
-    returned ``(v, rank)`` cast back to long. Unlike louvain (measured
-    1.2-1.3x), pagerank showed NO consistent win on the sandbox:
-    alternated 32-core pairs at 33.5M edges split +1.49x/+1.28x/-1.10x
-    after fixing the build-side partitioning, and the long plan's best
-    runs (18.1-19.7s) beat the int plan's best (21.7s) — the superstep
-    here is dominated by the per-iteration rank broadcast and the O(V)
-    base⋈contribs sort-merge join, not the edge-cache scan that makes
-    the louvain gather width-bound. Kept as an experiment flag; ranks
-    may differ from the long plan at the ~1e-15 summation-order level.
-    The shuffle path (bucketed long state cuts) never narrows.
+    ``tier`` forces one of these. Distributed loops commit the rank state
+    every third superstep (every superstep with ``run_dir`` or ``tol``).
     """
     spark = g.edges.sparkSession
     wout = g.edges.groupBy(F.col("src").alias("v")).agg(F.sum("weight").alias("wout"))
     # a symmetrized table with no explicit vertices lists every vertex as
     # src, so the wout aggregation's key set IS the vertex set: base = wout
-    # directly, persisted first so the id-stats agg rides the cache
-    # materialization — removes the two-scan union + distinct + O(V) left
-    # join the generic path pays (guide §2.4: drop redundant exchanges)
-    sym_complete = not g.directed and g.vertices is None
-    if sym_complete:
+    # directly — removes the two-scan union + distinct + O(V) left join the
+    # generic path pays (guide §2.4: drop redundant exchanges)
+    if not g.directed and g.vertices is None:
         base = wout.persist()
-        vstats_src = base
     else:
-        verts = g.vertex_ids()
-        vstats_src = verts
-    vstats = vstats_src.agg(
+        base = g.vertex_ids().join(wout, "v", "left").select(
+            "v", F.coalesce("wout", F.lit(0.0)).alias("wout")
+        ).persist()
+    # the probe: one stats action that also materializes the base cache
+    vstats = base.agg(
         F.count(F.lit(1)).alias("n"),
-        F.min("v").alias("min_id"),
-        F.max("v").alias("max_id"),
+        F.sum((F.col("wout") == 0.0).cast("long")).alias("dangling"),
     ).collect()[0]
     n = vstats["n"]
     if n == 0:
-        if sym_complete:
-            base.unpersist()
+        base.unpersist()
         return spark.createDataFrame([], "v long, rank double")
-    if broadcast_ranks is None:
-        broadcast_ranks = n <= broadcast_max_vertices
-    if ids32 is None:
-        ids32 = False  # measured neutral-to-slower here; see docstring
-    min_id = vstats["min_id"] if vstats["min_id"] is not None else 0
-    max_id = vstats["max_id"] if vstats["max_id"] is not None else 0
-    ids32 = bool(
-        ids32
-        and broadcast_ranks
-        and -(1 << 31) <= min_id
-        and max_id < (1 << 31) - 1
+    facts = Facts.of(g, nv=n, dangling=bool(vstats["dangling"]))
+    tier = plan(
+        facts, "pagerank", run_dir, {"tol"} if tol is not None else (), tier
     )
-
-    if ids32:
-        # cast BOTH build inputs before the join, not the join output: the
-        # persisted base then carries hashpartitioning on the int v
-        # attribute itself, which the per-superstep base⋈contribs join
-        # reuses (contribs inherits the edge cache's int dst layout). A
-        # post-join cast would make v a derived attribute, void the cached
-        # partitioning, and re-exchange base every superstep — measured
-        # 1.4x SLOWER than the long plan before this ordering fix.
-        wout = wout.select(F.col("v").cast("int").alias("v"), "wout")
-        if sym_complete:
-            # rare explicit-opt-in rebuild: the cast must sit below the
-            # persist so the cache carries the int attribute
-            base.unpersist()
-            base = wout.persist()
-    if not sym_complete:
-        verts_b = (
-            verts.select(F.col("v").cast("int").alias("v")) if ids32 else verts
-        )
-        base = verts_b.join(wout, "v", "left").select(
-            "v", F.coalesce("wout", F.lit(0.0)).alias("wout")
-        ).persist()
     # weight ≡ 1.0 invariant (Graph.unweighted): the superstep cache keeps
     # only (src, dst) — one third less cached/scanned width per superstep —
     # and the contribution skips the weight multiply (x·1.0 ≡ x, so the
     # ranks are bit-identical to the weighted plan on the same graph)
-    unweighted = bool(getattr(g, "unweighted", False))
-    e_cols = (
-        [F.col("src").cast("int").alias("src"), F.col("dst").cast("int").alias("dst")]
-        if ids32
-        else [F.col("src"), F.col("dst")]
+    unweighted = facts.unweighted
+    e_loop = g.edges.select("src", "dst") if unweighted else g.edges
+    contrib_c = (
+        (F.col("rank") / F.col("wout"))
+        if unweighted
+        else (F.col("rank") * F.col("weight") / F.col("wout"))
     )
-    if not unweighted:
-        e_cols.append(F.col("weight"))
-    e_loop = g.edges.select(*e_cols) if (ids32 or unweighted) else g.edges
-    if broadcast_ranks:
-        # partition on the AGGREGATION key: with the join side broadcast,
-        # groupBy(dst) then needs no exchange at all
-        edges = e_loop.repartition("dst").persist()
-    else:
+    if tier is Tier.SHUFFLE:
         # persist as-is: callers co-locate via Graph.partition_by_src (the
         # join key; a projection preserves that partitioning), and an
         # already-partitioned cache is reused shuffle-free
         edges = e_loop.persist()
+    else:
+        # partition on the AGGREGATION key: with the join side broadcast,
+        # groupBy(dst) then needs no exchange at all
+        edges = e_loop.repartition("dst").persist()
 
-    # driver-held-rank loop (same structure as the louvain small-state
-    # kernels): the per-superstep gather — edges ⋈ broadcast(ranks) →
-    # groupBy(dst) → sum — runs IN SPARK over the dst-partitioned cache
-    # exactly as below (single-stage agg, no exchange, so the per-dst sums
-    # are the same deterministic per-partition reductions), but the O(V)
-    # rank state lives in numpy: one LocalRelation in and one O(V) collect
-    # out per superstep replaces the dangling-scan job, the O(V)
-    # base⋈contribs join and the every-3rd-superstep parquet commit. The
-    # rank update is the identical scalar expression, so ranks are
-    # bit-identical (pinned by test_pagerank_driver_ranks_matches).
-    # Excluded: dangling graphs (their rank-mass reduction would move a
-    # float sum across the boundary), tol (delta is a distributed agg),
-    # run_dir (resume state must stay durable), ids32, and state above
-    # 100k rows — a billion-vertex rank table must never collect.
-    if (
-        _NP_RANK_LOOP
-        and broadcast_ranks
-        and not ids32
-        and run_dir is None
-        and tol is None
-        and n <= 100_000
-    ):
+    if tier is Tier.DRIVER_STATE:
+        # driver-held-rank loop (same structure as the louvain driver_state
+        # kernel): the per-superstep gather — edges ⋈ broadcast(ranks) →
+        # groupBy(dst) → sum — runs IN SPARK over the dst-partitioned cache
+        # exactly as below (single-stage agg, no exchange, so the per-dst
+        # sums are the same deterministic per-partition reductions), but
+        # the O(V) rank state lives in numpy: one LocalRelation in and one
+        # O(V) collect out per superstep replaces the O(V) base⋈contribs
+        # join and the every-3rd-superstep parquet commit. The rank update
+        # is the identical scalar expression, so ranks are bit-identical
+        # (pinned by test_pagerank_driver_ranks_matches). The planner
+        # excludes dangling graphs (their rank-mass reduction would move a
+        # float sum across the boundary), tol (delta is a distributed agg)
+        # and run_dir (resume state must stay durable).
         import numpy as np
         import pandas as pd
 
@@ -181,46 +122,31 @@ def pagerank(
         wout_np = bp["wout"].to_numpy(np.float64)
         order = np.argsort(vs_np, kind="stable")
         vs_np, wout_np = vs_np[order], wout_np[order]
-        if not bool((wout_np == 0.0).any()):
-            rank_np = np.full(n, 1.0 / n, dtype=np.float64)
-            dangling = 0.0
-            contrib_c = (
-                (F.col("rank") / F.col("wout"))
-                if unweighted
-                else (F.col("rank") * F.col("weight") / F.col("wout"))
+        rank_np = np.full(n, 1.0 / n, dtype=np.float64)
+        dangling = 0.0
+        for _ in range(max_iters):
+            rank_lr = spark.createDataFrame(
+                pd.DataFrame({"v": vs_np, "rank": rank_np, "wout": wout_np}),
+                "v long, rank double, wout double",
             )
-            for _ in range(max_iters):
-                rank_lr = spark.createDataFrame(
-                    pd.DataFrame(
-                        {"v": vs_np, "rank": rank_np, "wout": wout_np}
-                    ),
-                    "v long, rank double, wout double",
-                )
-                cp = (
-                    edges.join(
-                        F.broadcast(rank_lr), edges.src == rank_lr.v
-                    )
-                    .select(F.col("dst").alias("v"), contrib_c.alias("c"))
-                    .groupBy("v")
-                    .agg(F.sum("c").alias("in_contrib"))
-                    .toPandas()
-                )
-                in_c = np.zeros(n, dtype=np.float64)
-                if len(cp):
-                    idx = np.searchsorted(
-                        vs_np, cp["v"].to_numpy(np.int64)
-                    )
-                    in_c[idx] = cp["in_contrib"].to_numpy(np.float64)
-                rank_np = (1.0 - alpha) / n + alpha * (
-                    in_c + dangling / n
-                )
-            out = spark.createDataFrame(
-                pd.DataFrame({"v": vs_np, "rank": rank_np}),
-                "v long, rank double",
+            cp = (
+                edges.join(F.broadcast(rank_lr), edges.src == rank_lr.v)
+                .select(F.col("dst").alias("v"), contrib_c.alias("c"))
+                .groupBy("v")
+                .agg(F.sum("c").alias("in_contrib"))
+                .toPandas()
             )
-            base.unpersist()
-            edges.unpersist()
-            return out
+            in_c = np.zeros(n, dtype=np.float64)
+            if len(cp):
+                idx = np.searchsorted(vs_np, cp["v"].to_numpy(np.int64))
+                in_c[idx] = cp["in_contrib"].to_numpy(np.float64)
+            rank_np = (1.0 - alpha) / n + alpha * (in_c + dangling / n)
+        out = spark.createDataFrame(
+            pd.DataFrame({"v": vs_np, "rank": rank_np}), "v long, rank double"
+        )
+        base.unpersist()
+        edges.unpersist()
+        return out
 
     # shuffle config (rank table too big to broadcast): commit the rank
     # state BUCKETED by v so the per-superstep edges(src)⋈ranks(v) join
@@ -228,7 +154,7 @@ def pagerank(
     # write replaces one per superstep (see cut_lineage's bucket_by)
     runner = SuperstepRunner(
         spark, run_dir,
-        bucket_by=None if broadcast_ranks else "v",
+        bucket_by="v" if tier is Tier.SHUFFLE else None,
         n_buckets=int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
     start, resumed = runner.resume()
@@ -242,9 +168,9 @@ def pagerank(
         bucket_by=runner.bucket_by, n_buckets=runner.n_buckets,
     )
 
-    # symmetrized graphs have no dangling vertices: check once, not per
-    # superstep (saves one Spark job per iteration)
-    has_dangling = base.filter(F.col("wout") == 0.0).limit(1).count() > 0
+    # symmetrized graphs have no dangling vertices: the probe counted them
+    # once, so only dangling graphs pay the per-superstep mass reduction
+    has_dangling = facts.dangling
 
     for step in range(start, max_iters):
         dangling = 0.0
@@ -253,12 +179,7 @@ def pagerank(
                 ranks.filter(F.col("wout") == 0.0).agg(F.sum("rank")).collect()[0][0]
                 or 0.0
             )
-        rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
-        contrib_c = (
-            (F.col("rank") / F.col("wout"))
-            if unweighted
-            else (F.col("rank") * F.col("weight") / F.col("wout"))
-        )
+        rank_side = ranks if tier is Tier.SHUFFLE else F.broadcast(ranks)
         contribs = (
             edges.join(rank_side, edges.src == ranks.v)
             .select(F.col("dst").alias("v"), contrib_c.alias("c"))
@@ -281,12 +202,12 @@ def pagerank(
                 .agg(F.sum(F.abs(F.col("n.rank") - F.col("o.rank"))))
                 .collect()[0][0]
             )
-        # chaining a few supersteps before each cut is safe (the plan is a
-        # linear chain) and amortizes the per-superstep state write
+        # chaining three supersteps before each cut is safe (the plan is a
+        # linear chain) and amortizes the per-superstep state write; 3 vs 5
+        # measured within noise, so the cadence is fixed
         if (
             run_dir is not None  # per-superstep durable state for resume
-            or lineage_cut_every <= 1
-            or (step + 1) % lineage_cut_every == 0
+            or (step + 1) % 3 == 0
             or step == max_iters - 1
             or tol is not None
         ):
@@ -303,9 +224,7 @@ def pagerank(
     # other kernels: if a future refactor (or max_iters=0 with an uncut
     # init) hands a derived plan here, it degrades to an explicit result
     # cut instead of a rotation-lifetime FAILED_READ_FILE.
-    out = promote_result(ranks, fallback_cut=True).select(
-        F.col("v").cast("long").alias("v"), "rank"
-    )
+    out = promote_result(ranks, fallback_cut=True).select("v", "rank")
     base.unpersist()
     edges.unpersist()
     return out

@@ -1,4 +1,5 @@
-"""Execution-plan utilities: lineage control, superstep checkpoints, skew salting."""
+"""Execution-plan utilities: execution tiers, lineage control, superstep
+checkpoints, skew salting."""
 
 from grappolo_spark.plans.iteration import SuperstepRunner, cut_lineage
 from grappolo_spark.plans.salting import salted_sum

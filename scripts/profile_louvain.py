@@ -6,10 +6,11 @@ Spark REST UI's per-job durations for the LAST run grouped by job group
 (one group per phase, set here) so the dominant stage is measured, not
 guessed.
 
-Usage: python scripts/profile_louvain.py [runs]
+Usage: python scripts/profile_louvain.py [runs] [--tier TIER]
 """
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -25,7 +26,17 @@ def rest(url):
 
 
 def main():
-    runs = int(sys.argv[1]) if len(sys.argv) > 1 else 3
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("runs", type=int, nargs="?", default=3)
+    ap.add_argument(
+        "--tier",
+        choices=["driver_state", "broadcast", "shuffle"],
+        default=None,
+        help="force every phase's tier (default: planned per phase, with "
+        "the local tier excluded as in bench.py's louvain_distributed)",
+    )
+    args = ap.parse_args()
+    runs = args.runs
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -46,7 +57,10 @@ def main():
     results = []
     for i in range(runs):
         t0 = time.time()
-        res = louvain(cs, max_phases=3, smart_init=True, local_threshold=0)
+        res = louvain(
+            cs, max_phases=3, smart_init=True, local_threshold=0,
+            tier=args.tier,
+        )
         n = res.assignment.count()
         wall = time.time() - t0
         results.append(

@@ -43,16 +43,12 @@ def main() -> int:
         "the Graph.unweighted narrow-gather fast path)",
     )
     ap.add_argument(
-        "--lpa-shuffle-gather",
-        action="store_true",
-        help="force the dst-co-partitioned shuffle plan in the lpa "
-        "workload (A/B control for the src-keyed broadcast layout)",
-    )
-    ap.add_argument(
-        "--no-ids32",
-        action="store_true",
-        help="force long vertex ids in the louvain hot chain (A/B "
-        "control for the int32 id representation)",
+        "--tier",
+        choices=["local", "driver_state", "broadcast", "shuffle"],
+        default=None,
+        help="force the execution tier of the pagerank/lpa/louvain "
+        "workload (default: planned; e.g. 'shuffle' is the A/B control "
+        "for the src-keyed broadcast layout)",
     )
     ap.add_argument("--ann-rows", type=int, default=6000)
     ap.add_argument("--ann-dim", type=int, default=128)
@@ -220,7 +216,7 @@ def main() -> int:
         # label-propagation superstep: the same gather shape as louvain's
         # (edge scan + label join + (src,label) agg + argmax); A/B the
         # src-keyed broadcast layout vs the dst-co-partitioned shuffle
-        # plan via --lpa-shuffle-gather, and ids32 via --no-ids32
+        # plan via --tier shuffle
         from grappolo_spark.operators.labelprop import label_propagation
 
         t0 = time.time()
@@ -229,8 +225,7 @@ def main() -> int:
             max_iters=args.iters,
             stop_on_converge=False,
             local_threshold=0,
-            broadcast_labels=False if args.lpa_shuffle_gather else None,
-            ids32=False if args.no_ids32 else None,
+            tier=args.tier,
         )
         out.count()
         dt = time.time() - t0
@@ -265,7 +260,7 @@ def main() -> int:
             g,
             max_iters=args.iters,
             thresh=-1e9,
-            ids32=False if args.no_ids32 else None,
+            tier=args.tier,
         )
         res.assignment.count()
         dt = time.time() - t0
@@ -289,12 +284,7 @@ def main() -> int:
         os._exit(0)
 
     t0 = time.time()
-    pr = pagerank(
-        g,
-        max_iters=args.iters,
-        lineage_cut_every=3,
-        ids32=False if args.no_ids32 else None,
-    )
+    pr = pagerank(g, max_iters=args.iters, tier=args.tier)
     n_ranks = pr.count()
     dt = time.time() - t0
 

@@ -1,11 +1,12 @@
-"""int32 hot-chain equivalence (louvain_one_phase ids32).
+"""int32 hot-chain equivalence, driven by the inputs' id bound.
 
 The 32-bit id representation lives strictly inside the gather chain
-(edge cache → gather join/agg → argmax); these tests pin that the
-narrow chain produces EXACTLY the wide chain's results — same
+(edge cache → gather join/agg → argmax); it engages whenever the id-bound
+fact fits int32. These tests run each fixture twice — as generated, and
+with every id shifted past the int32 bound, which forces the long chain —
+and pin that both produce EXACTLY the same results (shifted back): same
 assignment, same modularity (==, no tolerance), same iteration count —
-across the weighted, unweighted, and early-terminate paths, and that
-auto-gating turns it off when ids exceed int32.
+across the weighted, unweighted, and early-terminate paths.
 """
 
 from __future__ import annotations
@@ -14,6 +15,9 @@ from pyspark.sql import functions as F
 
 from grappolo_spark.graph import Graph
 from grappolo_spark.operators.louvain import louvain_one_phase
+
+# first offset that pushes every fixture id past the int32 bound
+PAST_INT32 = 1 << 31
 
 
 def _rand_graph(spark, seed=11, n=600, verts=90, weighted=False):
@@ -31,49 +35,69 @@ def _rand_graph(spark, seed=11, n=600, verts=90, weighted=False):
     return Graph.from_edgelist(pairs)
 
 
-def _run(g, **kw):
+def _shifted(g, off=PAST_INT32):
+    """The same graph with every vertex id moved by ``off``."""
+    return Graph(
+        edges=g.edges.select(
+            (F.col("src") + off).alias("src"),
+            (F.col("dst") + off).alias("dst"),
+            "weight",
+        ),
+        unweighted=g.unweighted,
+        deduped=g.deduped,
+    )
+
+
+def _run(g, off=0, **kw):
     res = louvain_one_phase(g, max_iters=3, thresh=-1e9, **kw)
     return (
         res.iterations,
         res.modularity,
-        {r["v"]: r["comm"] for r in res.assignment.collect()},
+        {r["v"] - off: r["comm"] - off for r in res.assignment.collect()},
     )
+
+
+def _narrow_vs_long(g, **kw):
+    return _run(g, **kw), _run(_shifted(g), off=PAST_INT32, **kw)
 
 
 def test_ids32_exact_equivalence_weighted(spark):
     g = _rand_graph(spark, weighted=True)
-    assert _run(g, ids32=True) == _run(g, ids32=False)
+    narrow, wide = _narrow_vs_long(g, tier="broadcast")
+    assert narrow == wide
 
 
 def test_ids32_exact_equivalence_unweighted(spark):
     g = _rand_graph(spark, weighted=False)
     assert g.unweighted is True
-    assert _run(g, ids32=True) == _run(g, ids32=False)
+    narrow, wide = _narrow_vs_long(g, tier="broadcast")
+    assert narrow == wide
 
 
 def test_ids32_exact_equivalence_early_terminate(spark):
     g = _rand_graph(spark, seed=23)
-    a = _run(g, ids32=True, early_terminate=True)
-    b = _run(g, ids32=False, early_terminate=True)
-    assert a == b
+    narrow, wide = _narrow_vs_long(g, early_terminate=True)
+    assert narrow == wide
 
 
 def test_ids32_output_schema_stays_long(spark):
     g = _rand_graph(spark)
-    res = louvain_one_phase(g, max_iters=2, thresh=-1e9, ids32=True)
+    res = louvain_one_phase(g, max_iters=2, thresh=-1e9, tier="broadcast")
     schema = {f.name: f.dataType.simpleString() for f in res.assignment.schema}
     assert schema["v"] == "bigint" and schema["comm"] == "bigint"
 
 
 def test_pagerank_ids32_matches_long_path(spark):
-    # summation order inside the contribution groupBy may differ between
-    # the int and long hash layouts, so ranks agree to float accumulation
-    # error, not bit-for-bit (documented in the pagerank docstring)
+    # pagerank has no int32 chain (measured no win); shifted ids must not
+    # change the ranks beyond float accumulation order
     from grappolo_spark.operators.pagerank import pagerank
 
     g = _rand_graph(spark, seed=31, weighted=True)
-    a = {r["v"]: r["rank"] for r in pagerank(g, max_iters=6, ids32=True).collect()}
-    b = {r["v"]: r["rank"] for r in pagerank(g, max_iters=6, ids32=False).collect()}
+    a = {r["v"]: r["rank"] for r in pagerank(g, max_iters=6).collect()}
+    b = {
+        r["v"] - PAST_INT32: r["rank"]
+        for r in pagerank(_shifted(g), max_iters=6).collect()
+    }
     assert a.keys() == b.keys()
     assert all(abs(a[v] - b[v]) < 1e-12 for v in a)
 
@@ -82,7 +106,7 @@ def test_pagerank_ids32_output_schema_stays_long(spark):
     from grappolo_spark.operators.pagerank import pagerank
 
     g = _rand_graph(spark, seed=37)
-    out = pagerank(g, max_iters=2, ids32=True)
+    out = pagerank(g, max_iters=2, tier="shuffle")
     assert {f.name: f.dataType.simpleString() for f in out.schema} == {
         "v": "bigint",
         "rank": "double",
@@ -92,27 +116,27 @@ def test_pagerank_ids32_output_schema_stays_long(spark):
 def test_lpa_broadcast_ids32_matches_shuffle_long(spark):
     # the src-keyed broadcast gather + int chain vs the dst-co-partitioned
     # long shuffle plan: identical labels (exact — integer counts, same
-    # tie-break ordering), across both toggles independently
+    # tie-break ordering). The shift to exactly -2^31 keeps the broadcast
+    # plan on the long chain (LPA's strict lower bound).
     from grappolo_spark.operators.labelprop import label_propagation
 
     g = _rand_graph(spark, seed=41)
 
-    def run(**kw):
+    def run(graph, off=0, **kw):
         return {
-            r["v"]: r["label"]
+            r["v"] - off: r["label"] - off
             for r in label_propagation(
-                g,
-                max_iters=3,
-                stop_on_converge=False,
-                local_threshold=0,
-                **kw,
+                graph, max_iters=3, stop_on_converge=False, **kw
             ).collect()
         }
 
-    ref = run(broadcast_labels=False, ids32=False)
-    assert run(broadcast_labels=True, ids32=False) == ref
-    assert run(broadcast_labels=True, ids32=True) == ref
-    assert run() == ref  # auto
+    ref = run(g, tier="shuffle")
+    assert run(g, tier="broadcast") == ref
+    lo = -(1 << 31)
+    min_id = g.edges.agg(F.min("src")).collect()[0][0]
+    at_min = _shifted(g, off=lo - min_id)
+    assert run(at_min, off=lo - min_id, tier="broadcast") == ref
+    assert run(_shifted(g), off=PAST_INT32, tier="broadcast") == ref
 
 
 def test_cc_star_ids32_matches_long(spark):
@@ -120,29 +144,27 @@ def test_cc_star_ids32_matches_long(spark):
 
     g = _rand_graph(spark, seed=53, n=900, verts=300)
 
-    def run(**kw):
+    def run(graph, off=0, **kw):
         return {
-            r["v"]: r["component"]
-            for r in connected_components(
-                g, local_threshold=0, **kw
-            ).collect()
+            r["v"] - off: r["component"] - off
+            for r in connected_components(graph, tier="shuffle", **kw).collect()
         }
 
-    ref = run(ids32=False)
-    assert run(ids32=True) == ref
-    assert run() == ref  # auto
+    ref = run(_shifted(g), off=PAST_INT32)  # long star rounds
+    assert run(g) == ref  # int32 star rounds
     # freeze off exercises the no-contract path too
-    assert run(ids32=True, freeze=False) == ref
+    assert run(g, freeze=False) == ref
+    assert run(_shifted(g), off=PAST_INT32, freeze=False) == ref
 
 
 def test_ids32_auto_disables_beyond_int32(spark):
     # ids beyond 2^31: the auto gate must fall back to the long chain and
-    # still produce the long-path result
+    # still produce the narrow-chain result of the same graph shifted down
     big = 1 << 40
     pairs = [(big + 1, big + 2), (big + 2, big + 3), (big + 1, big + 3),
              (big + 4, big + 5)]
     g = Graph.from_pairs(spark, pairs)
     a = _run(g)  # auto: must detect the id bound and disable
-    b = _run(g, ids32=False)
+    b = _run(_shifted(g, off=-big), off=-big)
     assert a == b
     assert set(a[2]) == {big + 1, big + 2, big + 3, big + 4, big + 5}

@@ -33,7 +33,7 @@ def test_cc_star_matches_local_and_oracle_random(spark, seed):
     g, edges = _random_graph(spark, seed)
     star = {
         r.v: r.component
-        for r in connected_components(g, local_threshold=0).collect()
+        for r in connected_components(g, tier="shuffle").collect()
     }
     local = {
         r.v: r.component for r in connected_components(g).collect()
@@ -70,7 +70,7 @@ def test_lpa_local_matches_distributed_random(spark, seed):
     dist = {
         r.v: r.label
         for r in label_propagation(
-            g, max_iters=3, stop_on_converge=False, local_threshold=0
+            g, max_iters=3, stop_on_converge=False, tier="broadcast"
         ).collect()
     }
     loc = {
@@ -88,7 +88,7 @@ def test_multiphase_local_matches_distributed_weighted(spark):
     from grappolo_spark.operators.multiphase import louvain
 
     g, _ = _random_graph(spark, seed=101, n=50, p=0.15, wmax=3)
-    dist = louvain(g, max_phases=3, smart_init=True, local_threshold=0)
+    dist = louvain(g, max_phases=3, smart_init=True, tier="driver_state")
     loc = louvain(g, max_phases=3, smart_init=True)
     a = {r.v: r.comm for r in dist.assignment.collect()}
     b = {r.v: r.comm for r in loc.assignment.collect()}

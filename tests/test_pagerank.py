@@ -45,8 +45,8 @@ def test_pagerank_broadcast_plan_matches_shuffle_plan(spark):
     from grappolo_spark.sources import fixtures
 
     g = fixtures.karate(spark)
-    a = {r.v: r.rank for r in pagerank(g, max_iters=8, broadcast_ranks=True).collect()}
-    b = {r.v: r.rank for r in pagerank(g, max_iters=8, broadcast_ranks=False).collect()}
+    a = {r.v: r.rank for r in pagerank(g, max_iters=8, tier="broadcast").collect()}
+    b = {r.v: r.rank for r in pagerank(g, max_iters=8, tier="shuffle").collect()}
     assert set(a) == set(b)
     for v in a:
         assert abs(a[v] - b[v]) < 1e-12

@@ -34,9 +34,15 @@ def test_superstep_metrics_sidecar(spark, tmp_path):
 
 def test_cc_star_resume_long_state_through_ids32(spark, tmp_path):
     """An OLD run_dir whose committed star state is LONG ids must resume
-    correctly through the NEW ids32 star rounds together with
-    frozen-batch rederivation (the cast above the lineage cut covers
-    resumed state; VERDICT r5 item 3)."""
+    correctly through the ids32 star rounds together with frozen-batch
+    rederivation (the cast above the lineage cut covers resumed state;
+    VERDICT r5 item 3). The old run is simulated by rewriting the
+    committed step states as long."""
+    import glob
+    import shutil
+
+    from pyspark.sql import functions as F
+
     from grappolo_spark.graph import Graph
     from grappolo_spark.operators.components import connected_components
 
@@ -46,19 +52,22 @@ def test_cc_star_resume_long_state_through_ids32(spark, tmp_path):
     g = Graph.from_pairs(spark, pairs)
     full = {
         r.v: r.component
-        for r in connected_components(g, local_threshold=0).collect()
+        for r in connected_components(g, tier="shuffle").collect()
     }
 
     run_dir = str(tmp_path / "cc_run")
-    connected_components(
-        g, local_threshold=0, max_iters=2, run_dir=run_dir, ids32=False
-    )
+    connected_components(g, tier="shuffle", max_iters=2, run_dir=run_dir)
     assert os.path.isdir(os.path.join(run_dir, "step=000001"))
+    for state in glob.glob(os.path.join(run_dir, "step=*", "state")):
+        spark.read.parquet(state).select(
+            F.col("u").cast("long").alias("u"), F.col("v").cast("long").alias("v")
+        ).write.parquet(state + "_long")
+        shutil.rmtree(state)
+        os.rename(state + "_long", state)
+        assert dict(spark.read.parquet(state).dtypes)["u"] == "bigint"
     resumed = {
         r.v: r.component
-        for r in connected_components(
-            g, local_threshold=0, run_dir=run_dir
-        ).collect()
+        for r in connected_components(g, tier="shuffle", run_dir=run_dir).collect()
     }
     assert resumed == full
 
@@ -72,11 +81,11 @@ def test_pagerank_bucketed_resume_different_partitions(spark, tmp_path):
     g = fixtures.karate(spark)
     full = {
         r.v: r.rank
-        for r in pagerank(g, max_iters=8, broadcast_ranks=False).collect()
+        for r in pagerank(g, max_iters=8, tier="shuffle").collect()
     }
 
     run_dir = str(tmp_path / "pr_bucketed")
-    pagerank(g, max_iters=3, run_dir=run_dir, broadcast_ranks=False)
+    pagerank(g, max_iters=3, run_dir=run_dir, tier="shuffle")
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     spark.conf.set(key, str(max(2, int(prev) // 2 + 1)))
@@ -84,7 +93,7 @@ def test_pagerank_bucketed_resume_different_partitions(spark, tmp_path):
         resumed = {
             r.v: r.rank
             for r in pagerank(
-                g, max_iters=8, run_dir=run_dir, broadcast_ranks=False
+                g, max_iters=8, run_dir=run_dir, tier="shuffle"
             ).collect()
         }
     finally:

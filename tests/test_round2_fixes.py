@@ -174,17 +174,6 @@ def test_salted_gather_identical_results(spark):
     assert a == b
 
 
-def test_lineage_cut_cadence_invariant(spark):
-    g = fixtures.karate(spark)
-    r1 = louvain_one_phase(g, lineage_cut_every=1)
-    r3 = louvain_one_phase(g, lineage_cut_every=3)
-    assert r1.modularity == r3.modularity
-    assert r1.iterations == r3.iterations
-    a = {(r.v, r.comm) for r in r1.assignment.collect()}
-    b = {(r.v, r.comm) for r in r3.assignment.collect()}
-    assert a == b
-
-
 def test_local_kernel_bit_parity_karate(spark):
     from grappolo_spark.operators.louvain import louvain_one_phase_local
 
@@ -205,8 +194,8 @@ def test_multiphase_local_tail_equivalent(spark):
         lambda: fixtures.planted_partition(spark, blocks=4, block_size=12)[0],
     ):
         g = gfn()
-        dist = louvain(g, local_threshold=0)       # force distributed
-        loc = louvain(g, local_threshold=10**9)    # force local tail
+        dist = louvain(g, tier="driver_state")  # per-phase kernel
+        loc = louvain(g, tier="local")           # numpy tail
         assert loc.modularity == dist.modularity
         assert loc.num_clusters == dist.num_clusters
         a = {r.v: r.comm for r in dist.assignment.collect()}
@@ -223,8 +212,8 @@ def test_multiphase_local_tail_directed(spark):
         [(u, v, 1.0) for u, v in pairs], "src long, dst long, weight double"
     )
     g = Graph.from_edgelist(e, directed=True)
-    dist = louvain(g, threshold=1e-9, local_threshold=0)
-    loc = louvain(g, threshold=1e-9, local_threshold=10**9)
+    dist = louvain(g, threshold=1e-9, tier="driver_state")
+    loc = louvain(g, threshold=1e-9, tier="local")
     assert loc.modularity == dist.modularity
     a = {r.v: r.comm for r in dist.assignment.collect()}
     b = {r.v: r.comm for r in loc.assignment.collect()}
@@ -261,7 +250,7 @@ def test_cc_local_union_find_matches_star(spark):
     g = Graph.from_edgelist(e, vertices=verts)
     star = {
         r.v: r.component
-        for r in connected_components(g, local_threshold=0).collect()
+        for r in connected_components(g, tier="shuffle").collect()
     }
     local = {
         r.v: r.component for r in connected_components(g).collect()
@@ -280,7 +269,7 @@ def test_lpa_local_matches_distributed(spark):
     ):
         dist = {
             r.v: r.label
-            for r in label_propagation(g, local_threshold=0, **kwargs).collect()
+            for r in label_propagation(g, tier="broadcast", **kwargs).collect()
         }
         loc = {
             r.v: r.label for r in label_propagation(g, **kwargs).collect()

@@ -86,7 +86,7 @@ def test_multiphase_smart_init_local_vs_distributed(spark):
     g = fixtures.karate(spark)
     # local tail everywhere vs forced-distributed, both with smart_init
     loc = louvain(g, max_phases=3, smart_init=True)
-    dist = louvain(g, max_phases=3, smart_init=True, local_threshold=0)
+    dist = louvain(g, max_phases=3, smart_init=True, tier="driver_state")
     assert loc.modularity == pytest.approx(dist.modularity, abs=1e-9)
     assert loc.num_clusters == dist.num_clusters
     a = {r.v: r.comm for r in loc.assignment.collect()}

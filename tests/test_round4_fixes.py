@@ -121,19 +121,19 @@ def test_cc_star_freeze_durable_resume(spark, tmp_path):
 
     plain = {
         r.v: r.component
-        for r in connected_components(g, local_threshold=0, freeze=False).collect()
+        for r in connected_components(g, tier="shuffle", freeze=False).collect()
     }
     assert plain == oracle
 
     run_dir = str(tmp_path / "cc_run")
     connected_components(
-        g, local_threshold=0, freeze=True, max_iters=2, run_dir=run_dir
+        g, tier="shuffle", freeze=True, max_iters=2, run_dir=run_dir
     )  # "crashes" after 2 committed rounds
     assert os.path.isdir(os.path.join(run_dir, "step=000001"))
     resumed = {
         r.v: r.component
         for r in connected_components(
-            g, local_threshold=0, freeze=True, run_dir=run_dir
+            g, tier="shuffle", freeze=True, run_dir=run_dir
         ).collect()
     }
     assert resumed == oracle
@@ -183,7 +183,7 @@ def test_bipartite_mtx_sink_guard(spark, tmp_path):
     assert body[1] == "2 2 2" and body[2] == "1 1 1"
 
 
-def test_colored_small_state_matches_distributed(spark, monkeypatch):
+def test_colored_small_state_matches_distributed(spark):
     # the small-state colored sweep (driver-held comm, per-class winner
     # collects) must be bit-identical to the distributed per-class loop:
     # same gather/argmax expressions, integer-exact community aggregates
@@ -192,8 +192,9 @@ def test_colored_small_state_matches_distributed(spark, monkeypatch):
 
     g = fixtures.karate(spark)
     res_small = C.louvain_one_phase_colored(g, thresh=1e-6, max_iters=5)
-    monkeypatch.setattr(C, "_SMALL_STATE_MAX", 0)  # force distributed
-    res_dist = C.louvain_one_phase_colored(g, thresh=1e-6, max_iters=5)
+    res_dist = C.louvain_one_phase_colored(
+        g, thresh=1e-6, max_iters=5, tier="shuffle"
+    )
     assert res_small.modularity == res_dist.modularity
     assert res_small.iterations == res_dist.iterations
     a = {r["v"]: r["comm"] for r in res_small.assignment.collect()}
@@ -216,7 +217,7 @@ def test_kernel_result_survives_later_runs(spark):
     g = fixtures.karate(spark)
     louv = louvain_one_phase(g)
     lpa = label_propagation(g, max_iters=3, stop_on_converge=False,
-                            local_threshold=0)
+                            tier="broadcast")
     pr = pagerank(g, max_iters=3)
     # churn every short rotation well past its keep_last window, exactly
     # what subsequent kernel runs do

@@ -59,7 +59,7 @@ def test_louvain_forced_distributed_matches_local(spark):
     from grappolo_spark.operators.multiphase import louvain
 
     g = grid3d(spark, 6, 6, 4)
-    dist = louvain(g, max_phases=2, smart_init=True, local_threshold=0)
+    dist = louvain(g, max_phases=2, smart_init=True, tier="driver_state")
     loc = louvain(g, max_phases=2, smart_init=True)
     assert abs(dist.modularity - loc.modularity) < 1e-9
     a = {r["v"]: r["comm"] for r in dist.assignment.collect()}
@@ -181,14 +181,14 @@ def test_bucketed_state_rotation_drops_tables(spark):
 
 
 def test_louvain_bucketed_shuffle_path_matches_broadcast(spark):
-    """Forced shuffle-gather (broadcast_assign=False => bucketed state
-    commits) must be bit-identical to the broadcast path."""
+    """The shuffle tier (bucketed state commits) must be bit-identical to
+    the broadcast tier."""
     from grappolo_spark.operators.louvain import louvain_one_phase
     from grappolo_spark.sources.fixtures import karate
 
     g = karate(spark)
-    a = louvain_one_phase(g)
-    b = louvain_one_phase(g, broadcast_assign=False)
+    a = louvain_one_phase(g, tier="broadcast")
+    b = louvain_one_phase(g, tier="shuffle")
     assert a.modularity == b.modularity
     assert a.iterations == b.iterations
     ra = {(r.v, r.comm) for r in a.assignment.collect()}

@@ -9,8 +9,8 @@
    under non-ANSI Spark and corrupts the tie ordering for that label.
 3. On the louvain hints path, ids32 auto-enabled from the UNVERIFIED
    nv_hint dense-renumbering contract; sparse or >int32 ids then wrapped
-   through silent non-ANSI casts. Hints are now trusted only when the
-   multiphase driver vouches for its own renumbering (``_dense_ids``).
+   through silent non-ANSI casts. Caller-supplied ``facts`` now narrow
+   ids only when they state an int32 id bound.
 """
 
 from __future__ import annotations
@@ -57,13 +57,13 @@ def test_lpa_ids32_gate_excludes_int32_min(spark):
 
     g = Graph.from_pairs(spark, [(0, INT32_MIN), (0, 5)])
     out = label_propagation(
-        g, max_iters=1, stop_on_converge=False, local_threshold=0
+        g, max_iters=1, stop_on_converge=False, tier="broadcast"
     )
     got = {r["v"]: r["label"] for r in out.collect()}
     assert got[0] == INT32_MIN
     # and the forced-distributed path matches the local replay exactly
     local = label_propagation(
-        g, max_iters=1, stop_on_converge=False, local_threshold=10**9
+        g, max_iters=1, stop_on_converge=False, tier="local"
     )
     assert sorted(map(tuple, out.collect())) == sorted(
         map(tuple, local.collect())
@@ -75,10 +75,11 @@ def _louvain_rows(res):
 
 
 def test_louvain_hints_do_not_auto_narrow_unverified_ids(spark):
-    """Public caller passes hints over ids far beyond int32: the hint-derived
-    bound (0..nv_hint-1) is wrong, so ids32 must NOT auto-engage — the run
-    must match the no-hints (stats-verified) run exactly."""
+    """Public caller passes facts (|V|, 2m) over ids far beyond int32 but
+    states no id bound, so ids32 must NOT engage — the run must match the
+    no-facts (stats-verified) run exactly."""
     from grappolo_spark.operators.louvain import louvain_one_phase
+    from grappolo_spark.plans.tiers import Facts
 
     big = 1 << 31  # first id outside int32
     pairs = [(big + 1, big + 2), (big + 2, big + 3), (big + 1, big + 3),
@@ -87,24 +88,7 @@ def test_louvain_hints_do_not_auto_narrow_unverified_ids(spark):
     two_m = g.edges.agg(F.sum("weight")).collect()[0][0]
     ref = louvain_one_phase(g, max_iters=2)
     hinted = louvain_one_phase(
-        g, max_iters=2, two_m_hint=two_m, nv_hint=5
-    )
-    assert _louvain_rows(hinted) == _louvain_rows(ref)
-
-
-def test_louvain_explicit_ids32_with_bad_hints_falls_back(spark):
-    """Explicit ids32=True with unverified hints triggers the one-time
-    bounds scan, which sees the >int32 ids and keeps the long path —
-    results still match the reference run."""
-    from grappolo_spark.operators.louvain import louvain_one_phase
-
-    big = 1 << 31
-    pairs = [(big + 1, big + 2), (big + 2, big + 3), (big + 1, big + 3)]
-    g = Graph.from_pairs(spark, pairs)
-    two_m = g.edges.agg(F.sum("weight")).collect()[0][0]
-    ref = louvain_one_phase(g, max_iters=2)
-    hinted = louvain_one_phase(
-        g, max_iters=2, two_m_hint=two_m, nv_hint=4, ids32=True
+        g, max_iters=2, facts=Facts.of(g, two_m=two_m, nv=5)
     )
     assert _louvain_rows(hinted) == _louvain_rows(ref)
 
@@ -117,11 +101,13 @@ def _phase_tuple(res):
     )
 
 
-def test_louvain_small_state_matches_distributed(spark, monkeypatch):
-    """The driver-held-state fast path must be bit-identical to the
-    distributed superstep loop (integer-valued weights => every aggregate
-    exact), including smart_init and a weighted graph."""
+def test_louvain_small_state_matches_distributed(spark):
+    """The driver_state tier must be bit-identical to the distributed
+    superstep loop, including smart_init and a weighted graph. It plans
+    only on integer-valued weights (every aggregate exact); the
+    fractional-weight graph plans to broadcast."""
     from grappolo_spark.operators import louvain as L
+    from grappolo_spark.plans.tiers import Tier
     from grappolo_spark.sources.fixtures import grid3d, karate
 
     weighted = Graph.from_pairs(
@@ -129,55 +115,57 @@ def test_louvain_small_state_matches_distributed(spark, monkeypatch):
         [(0, 1, 3.0), (1, 2, 2.0), (2, 0, 1.0), (3, 4, 5.0), (4, 5, 4.0),
          (5, 3, 1.0), (2, 3, 1.0), (6, 6, 2.0), (7, 7, 1.0)],
     )
-    for g in (karate(spark), grid3d(spark, 3, 3, 3), weighted):
+    fractional = Graph.from_pairs(
+        spark,
+        [(0, 1, 0.5), (1, 2, 0.3), (2, 0, 1.5), (3, 4, 2.5), (4, 5, 0.7),
+         (5, 3, 1.0), (2, 3, 0.1), (6, 6, 0.2)],
+    )
+    cases = [
+        (karate(spark), Tier.DRIVER_STATE),
+        (grid3d(spark, 3, 3, 3), Tier.DRIVER_STATE),
+        (weighted, Tier.DRIVER_STATE),
+        (fractional, Tier.BROADCAST),
+    ]
+    for g, planned in cases:
         for si in (False, True):
-            small = L.louvain_one_phase(g, max_iters=4, smart_init=si)
-            t_small = _phase_tuple(small)
-            monkeypatch.setattr(L, "_SMALL_STATE_MAX", 0)
-            dist = L.louvain_one_phase(g, max_iters=4, smart_init=si)
-            monkeypatch.undo()
-            assert t_small == _phase_tuple(dist), (si, g)
+            auto = L.louvain_one_phase(g, max_iters=4, smart_init=si)
+            assert auto.tier is planned, (si, g)
+            dist = L.louvain_one_phase(
+                g, max_iters=4, smart_init=si, tier="broadcast"
+            )
+            assert _phase_tuple(auto) == _phase_tuple(dist), (si, g)
 
 
-def test_louvain_small_state_init_assign_matches(spark, monkeypatch):
+def test_louvain_small_state_init_assign_matches(spark):
     from grappolo_spark.operators import louvain as L
     from grappolo_spark.sources.fixtures import karate
 
     g = karate(spark)
     init = g.vertex_ids().select("v", (F.col("v") % 5).alias("comm"))
     small = L.louvain_one_phase(g, max_iters=3, init_assign=init)
-    t_small = _phase_tuple(small)
-    monkeypatch.setattr(L, "_SMALL_STATE_MAX", 0)
-    dist = L.louvain_one_phase(g, max_iters=3, init_assign=init)
-    monkeypatch.undo()
-    assert t_small == _phase_tuple(dist)
+    dist = L.louvain_one_phase(
+        g, max_iters=3, init_assign=init, tier="broadcast"
+    )
+    assert _phase_tuple(small) == _phase_tuple(dist)
 
 
-def test_multiphase_distributed_small_state_matches(spark, monkeypatch):
+def test_multiphase_distributed_small_state_matches(spark):
     """End-to-end forced-distributed multiphase (the bench diagnostic
-    line) with and without the small-state fast path."""
-    from grappolo_spark.operators import louvain as L
+    line) on the driver_state and broadcast phase tiers."""
     from grappolo_spark.operators.multiphase import louvain
     from grappolo_spark.sources.fixtures import karate
 
+    def run(**kw):
+        r = louvain(g, max_phases=3, smart_init=True, **kw)
+        return (
+            r.modularity,
+            r.num_clusters,
+            r.total_iterations,
+            sorted((x["v"], x["comm"]) for x in r.assignment.collect()),
+        )
+
     g = karate(spark)
-    r_small = louvain(g, max_phases=3, smart_init=True, local_threshold=0)
-    t_small = (
-        r_small.modularity,
-        r_small.num_clusters,
-        r_small.total_iterations,
-        sorted((r["v"], r["comm"]) for r in r_small.assignment.collect()),
-    )
-    monkeypatch.setattr(L, "_SMALL_STATE_MAX", 0)
-    r_dist = louvain(g, max_phases=3, smart_init=True, local_threshold=0)
-    monkeypatch.undo()
-    t_dist = (
-        r_dist.modularity,
-        r_dist.num_clusters,
-        r_dist.total_iterations,
-        sorted((r["v"], r["comm"]) for r in r_dist.assignment.collect()),
-    )
-    assert t_small == t_dist
+    assert run(tier="driver_state") == run(tier="broadcast")
 
 
 def test_multihash_numpy_matches_spark(spark):
@@ -204,44 +192,43 @@ def test_multihash_numpy_matches_spark(spark):
         assert {int(v): int(c) for v, c in zip(ids, got)} == want
 
 
-def test_colored_phase_numpy_coloring_matches_spark_route(spark, monkeypatch):
+def _with_explicit_vertices(g):
+    """The same graph with its vertex set listed explicitly: the numpy
+    coloring and the driver-side state build need the edge endpoints to
+    BE the vertex set, so this routes the colored phase through the Spark
+    coloring, the |V| count job and the Spark state build."""
+    return Graph(
+        edges=g.edges, vertices=g.vertex_ids(), unweighted=g.unweighted,
+        deduped=g.deduped,
+    )
+
+
+def test_colored_phase_numpy_coloring_matches_spark_route(spark):
     """louvain_one_phase_colored via the numpy coloring + driver state
-    build must equal the Spark coloring + probed state route."""
+    build must equal the Spark coloring + Spark state build route."""
     from grappolo_spark.operators import coloring as C
     from grappolo_spark.sources.fixtures import karate
 
     g = karate(spark)
     for cap in (8, 3):
-        res_np = C.louvain_one_phase_colored(
-            g, thresh=1e-6, max_iters=4, num_colors_cap=cap,
-            coloring_algo="multihash", nv_hint=34,
+        kw = dict(
+            thresh=1e-6, max_iters=4, num_colors_cap=cap,
+            coloring_algo="multihash",
         )
-        t_np = (
-            res_np.modularity,
-            res_np.iterations,
-            sorted((r["v"], r["comm"]) for r in res_np.assignment.collect()),
-        )
-        monkeypatch.setattr(C, "_SMALL_EDGES_MAX", 0)  # force Spark route
-        res_sp = C.louvain_one_phase_colored(
-            g, thresh=1e-6, max_iters=4, num_colors_cap=cap,
-            coloring_algo="multihash", nv_hint=34,
-        )
-        monkeypatch.undo()
-        t_sp = (
-            res_sp.modularity,
-            res_sp.iterations,
-            sorted((r["v"], r["comm"]) for r in res_sp.assignment.collect()),
-        )
-        assert t_np == t_sp, cap
+        res_np = C.louvain_one_phase_colored(g, **kw)
+        res_sp = C.louvain_one_phase_colored(_with_explicit_vertices(g), **kw)
+        assert res_np.tier is res_sp.tier
+        assert _phase_tuple(res_np) == _phase_tuple(res_sp), cap
 
 
-def test_colored_class_sweep_numpy_matches_spark(spark, monkeypatch):
-    """The full-numpy class sweep (driver edge copy + integer-valued
-    weights => exact sums) must be bit-identical to the Spark class jobs
-    it replays, across palettes incl. the overflow (Jacobi) class. The
-    fractional-weight graph exercises the gate: its sums are order-
-    sensitive, so both runs take the Spark route and stay equal."""
+def test_colored_class_sweep_numpy_matches_spark(spark):
+    """The full-numpy class sweep (local tier: driver edge copy +
+    integer-valued weights => exact sums) must be bit-identical to the
+    Spark class jobs it replays (driver_state tier), across palettes incl.
+    the overflow (Jacobi) class. The fractional-weight graph exercises the
+    gate: it plans to driver_state, so both runs take the Spark route."""
     from grappolo_spark.operators import coloring as C
+    from grappolo_spark.plans.tiers import Tier
     from grappolo_spark.sources.fixtures import grid3d, karate
 
     weighted = Graph.from_pairs(
@@ -255,78 +242,90 @@ def test_colored_class_sweep_numpy_matches_spark(spark, monkeypatch):
          (5, 3, 1.0), (2, 3, 0.125)],
     )
     cases = [
-        (karate(spark), 34, 8),
-        (karate(spark), 34, 3),
-        (grid3d(spark, 3, 3, 3), 27, 8),
-        (weighted, 8, 8),
-        (fractional, 6, 8),
+        (karate(spark), 8, Tier.LOCAL),
+        (karate(spark), 3, Tier.LOCAL),
+        (grid3d(spark, 3, 3, 3), 8, Tier.LOCAL),
+        (weighted, 8, Tier.LOCAL),
+        (fractional, 8, Tier.DRIVER_STATE),
     ]
-    for g, nv, cap in cases:
+    for g, cap, planned in cases:
         res_np = C.louvain_one_phase_colored(
             g, thresh=1e-6, max_iters=4, num_colors_cap=cap,
-            coloring_algo="multihash", nv_hint=nv,
+            coloring_algo="multihash",
         )
-        t_np = _phase_tuple(res_np)
-        monkeypatch.setattr(C, "_NP_CLASS_SWEEP", False)
+        assert res_np.tier is planned
         res_sp = C.louvain_one_phase_colored(
             g, thresh=1e-6, max_iters=4, num_colors_cap=cap,
-            coloring_algo="multihash", nv_hint=nv,
+            coloring_algo="multihash", tier="driver_state",
         )
-        monkeypatch.undo()
-        assert t_np == _phase_tuple(res_sp), (nv, cap)
+        assert _phase_tuple(res_np) == _phase_tuple(res_sp), cap
 
 
-def test_multiphase_colored_np_continuation_matches(spark, monkeypatch):
+def _multiphase_tuple(r):
+    return (
+        r.modularity,
+        r.num_clusters,
+        r.phases,
+        r.total_iterations,
+        [
+            (h["phase"], h["modularity"], h["clusters"], h["iterations"],
+             h.get("vertices"), h["colored"])
+            for h in r.phase_history
+        ],
+        sorted((x["v"], x["comm"]) for x in r.assignment.collect()),
+    )
+
+
+def test_multiphase_colored_np_continuation_matches(spark):
     """The driver-side continuation (numpy renumber/coarsen/tail/fold after
-    a numpy colored phase) must reproduce the Spark-route multiphase run
-    exactly: assignment, modularity, clusters, phases, iterations, history.
-    min_graph_size=5 exercises the local-tail composition; =1 keeps
-    coloring on for later phases (the continuation's fallback to the
-    normal distributed flow)."""
-    from grappolo_spark.operators import coloring as C
+    a local-tier colored phase) must reproduce the Spark-route multiphase
+    run exactly: assignment, modularity, clusters, phases, iterations,
+    history. min_graph_size=5 exercises the local-tail composition; =1
+    keeps coloring on for later phases (the continuation's fallback to the
+    normal distributed flow). The fractional-weight graph (dyadic weights,
+    so every route's sums are exact and comparable) plans its colored
+    phase to driver_state, never continues in numpy, and plans its
+    distributed plain phases to broadcast."""
     from grappolo_spark.operators.multiphase import louvain
     from grappolo_spark.sources.fixtures import grid3d, karate
 
-    def run(g, mgs):
-        r = louvain(
+    fractional = Graph.from_pairs(
+        spark,
+        [(0, 1, 0.5), (1, 2, 0.25), (2, 0, 1.5), (3, 4, 2.5), (4, 5, 0.75),
+         (5, 3, 1.0), (2, 3, 0.125), (5, 6, 0.375), (6, 7, 1.25),
+         (7, 5, 0.625)],
+    )
+
+    def run(g, mgs, **kw):
+        return louvain(
             g, max_phases=3, coloring=True, min_graph_size=mgs,
-            num_colors_cap=8, coloring_algo="multihash",
-        )
-        return (
-            r.modularity,
-            r.num_clusters,
-            r.phases,
-            r.total_iterations,
-            [
-                (h["phase"], h["modularity"], h["clusters"], h["iterations"],
-                 h.get("vertices"), h["colored"])
-                for h in r.phase_history
-            ],
-            sorted((x["v"], x["comm"]) for x in r.assignment.collect()),
+            num_colors_cap=8, coloring_algo="multihash", **kw,
         )
 
     for g in (karate(spark), grid3d(spark, 3, 3, 3)):
         for mgs in (5, 1):
-            t_np = run(g, mgs)
-            monkeypatch.setattr(C, "_NP_CLASS_SWEEP", False)
-            t_sp = run(g, mgs)
-            monkeypatch.undo()
-            assert t_np == t_sp, mgs
+            auto = run(g, mgs)
+            assert auto.phase_history[0]["tier"] == "local"
+            forced = run(g, mgs, tier="driver_state")
+            assert forced.phase_history[0]["tier"] == "driver_state"
+            assert _multiphase_tuple(auto) == _multiphase_tuple(forced), mgs
+    auto = run(fractional, 5)
+    tiers = [h["tier"] for h in auto.phase_history]
+    assert tiers[0] == "driver_state" and set(tiers[1:]) == {"local"}
+    distributed = run(fractional, 5, local_threshold=0)
+    tiers = [h["tier"] for h in distributed.phase_history]
+    assert tiers[0] == "driver_state" and set(tiers[1:]) == {"broadcast"}
+    assert _multiphase_tuple(auto) == _multiphase_tuple(distributed)
 
 
-def test_pagerank_driver_ranks_matches(spark, monkeypatch):
+def test_pagerank_driver_ranks_matches(spark):
     """The driver-held-rank pagerank loop must be bit-identical to the
     committed-state distributed loop: the gather job is the same plan
     over the same cache, and the rank update is the same scalar
     expression. Covers weighted, unweighted and a graph with an
     explicit-vertex side (non-sym_complete base build)."""
-    import importlib
-
+    from grappolo_spark.operators.pagerank import pagerank
     from grappolo_spark.sources.fixtures import grid3d, karate
-
-    # the operators package re-exports the pagerank FUNCTION under the
-    # module's name; resolve the module itself for monkeypatching
-    P = importlib.import_module("grappolo_spark.operators.pagerank")
 
     weighted = Graph.from_pairs(
         spark,
@@ -335,31 +334,28 @@ def test_pagerank_driver_ranks_matches(spark, monkeypatch):
     )
     for g in (karate(spark), grid3d(spark, 3, 3, 3), weighted):
         fast = sorted(
-            (r["v"], r["rank"])
-            for r in P.pagerank(g, max_iters=5).collect()
+            (r["v"], r["rank"]) for r in pagerank(g, max_iters=5).collect()
         )
-        monkeypatch.setattr(P, "_NP_RANK_LOOP", False)
         slow = sorted(
             (r["v"], r["rank"])
-            for r in P.pagerank(g, max_iters=5).collect()
+            for r in pagerank(g, max_iters=5, tier="broadcast").collect()
         )
-        monkeypatch.undo()
         assert fast == slow
 
 
-def test_multiphase_colored_big_edge_fallback_matches(spark, monkeypatch):
-    """Above the probe bound the multiphase coloring gate must fall back
-    to the distinct-count job and the kernel to its distributed state
-    build — same results as the driver-held route (the sf>>0.1 regime)."""
-    from grappolo_spark.operators import coloring as C
+def test_multiphase_colored_big_edge_fallback_matches(spark):
+    """Without the probe's numpy coloring (explicit vertices here; above
+    the probe bound at scale) the multiphase coloring gate falls back to
+    the distinct-count job and the kernel to its Spark coloring and state
+    build — same results as the driver-held route."""
     from grappolo_spark.operators.multiphase import louvain
     from grappolo_spark.sources.fixtures import karate
 
     g = karate(spark)
 
-    def run():
+    def run(graph):
         r = louvain(
-            g, max_phases=3, coloring=True, min_graph_size=5,
+            graph, max_phases=3, coloring=True, min_graph_size=5,
             num_colors_cap=8, coloring_algo="multihash",
         )
         return (
@@ -367,35 +363,24 @@ def test_multiphase_colored_big_edge_fallback_matches(spark, monkeypatch):
             sorted((x["v"], x["comm"]) for x in r.assignment.collect()),
         )
 
-    t_small = run()
-    monkeypatch.setattr(C, "_SMALL_EDGES_MAX", 0)
-    t_big = run()
-    monkeypatch.undo()
-    assert t_small == t_big
+    assert run(g) == run(_with_explicit_vertices(g))
 
 
-def test_colored_distributed_broadcast_layout_matches(spark, monkeypatch):
-    """The mid-regime src-keyed broadcast class gather (state broadcast
-    pre-enriched, zero per-class exchanges) must match the dst-shuffle
-    layout of the distributed colored loop exactly."""
+def test_colored_distributed_broadcast_layout_matches(spark):
+    """The broadcast tier's src-keyed class gather (state broadcast
+    pre-enriched, zero per-class exchanges) must match the shuffle tier's
+    dst layout of the distributed colored loop exactly."""
     from grappolo_spark.operators import coloring as C
     from grappolo_spark.sources.fixtures import grid3d, karate
 
-    for g, nv in ((karate(spark), 34), (grid3d(spark, 3, 3, 3), 27)):
-        monkeypatch.setattr(C, "_SMALL_STATE_MAX", 0)
-        monkeypatch.setattr(C, "_SMALL_EDGES_MAX", 0)
-        res_b = C.louvain_one_phase_colored(
-            g, thresh=1e-6, max_iters=3, num_colors_cap=8,
-            coloring_algo="multihash", nv_hint=nv,
+    for g in (karate(spark), grid3d(spark, 3, 3, 3)):
+        kw = dict(
+            thresh=1e-6, max_iters=3, num_colors_cap=8,
+            coloring_algo="multihash",
         )
-        t_b = _phase_tuple(res_b)
-        monkeypatch.setattr(C, "_BCAST_STATE_MAX", 0)
-        res_s = C.louvain_one_phase_colored(
-            g, thresh=1e-6, max_iters=3, num_colors_cap=8,
-            coloring_algo="multihash", nv_hint=nv,
-        )
-        monkeypatch.undo()
-        assert t_b == _phase_tuple(res_s), nv
+        res_b = C.louvain_one_phase_colored(g, tier="broadcast", **kw)
+        res_s = C.louvain_one_phase_colored(g, tier="shuffle", **kw)
+        assert _phase_tuple(res_b) == _phase_tuple(res_s)
 
 
 def test_deduped_graph_skips_pair_distinct(spark):
@@ -419,7 +404,7 @@ def test_deduped_graph_skips_pair_distinct(spark):
     assert coarsen(g, assign).deduped
 
     for fn in (
-        lambda x: connected_components(x, local_threshold=0),
+        lambda x: connected_components(x, tier="shuffle"),
         distance_one_coloring,
         multihash_coloring,
     ):

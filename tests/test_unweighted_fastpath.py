@@ -89,13 +89,13 @@ def test_lpa_count_path_exact(spark):
     a = {
         r["v"]: r["label"]
         for r in label_propagation(
-            g_narrow, max_iters=3, stop_on_converge=False, local_threshold=0
+            g_narrow, max_iters=3, stop_on_converge=False, tier="broadcast"
         ).collect()
     }
     b = {
         r["v"]: r["label"]
         for r in label_propagation(
-            g_wide, max_iters=3, stop_on_converge=False, local_threshold=0
+            g_wide, max_iters=3, stop_on_converge=False, tier="broadcast"
         ).collect()
     }
     assert a == b
@@ -108,8 +108,8 @@ def test_multiphase_carries_flag_phase1(spark):
     from grappolo_spark.operators.multiphase import louvain
 
     g_narrow, g_wide = _graph_pair(spark)
-    rn = louvain(g_narrow, max_phases=2, local_threshold=0)
-    rw = louvain(g_wide, max_phases=2, local_threshold=0)
+    rn = louvain(g_narrow, max_phases=2, tier="driver_state")
+    rw = louvain(g_wide, max_phases=2, tier="driver_state")
     assert rn.modularity == rw.modularity
     a = {r["v"]: r["comm"] for r in rn.assignment.collect()}
     b = {r["v"]: r["comm"] for r in rw.assignment.collect()}
