@@ -199,19 +199,20 @@ class Graph:
             vs = vs.union(self.vertices.select(F.col("v").cast("long")))
         return vs.distinct()
 
-    def degrees(self, weight_checks: bool = False) -> DataFrame:
+    def degrees(self) -> DataFrame:
         """(v, deg) weighted degree incl. self-loop once — reference
         ``sumVertexDegree`` (`Utility/utilityClusteringFunctions.cpp:70-87`).
-        Isolated vertices get deg 0. ``weight_checks`` adds per-vertex
-        ``abs_w`` (sum of |weight|) and ``int_w`` (1 when every weight is
-        integer-valued) — the inputs of the ``integer_weights`` fact."""
-        aggs = [F.sum("weight").alias("deg"), F.count(F.lit(1)).alias("out_degree")]
-        if weight_checks:
-            aggs += [
-                F.sum(F.abs("weight")).alias("abs_w"),
-                F.min((F.col("weight") == F.rint("weight")).cast("int")).alias("int_w"),
-            ]
-        d = self.edges.groupBy(F.col("src").alias("v")).agg(*aggs)
+        Isolated vertices get deg 0."""
+        return self._degrees()
+
+    def _degrees(self, **extra) -> DataFrame:
+        """:meth:`degrees` plus the named per-src aggregates ``extra``,
+        null for vertices with no out-edges."""
+        d = self.edges.groupBy(F.col("src").alias("v")).agg(
+            F.sum("weight").alias("deg"),
+            F.count(F.lit(1)).alias("out_degree"),
+            *(agg.alias(name) for name, agg in extra.items()),
+        )
         # symmetrized graphs list every non-isolated vertex as src; directed
         # graphs have pure sinks (in-edges only) that groupBy(src) misses —
         # without this they'd silently drop out of Louvain/PageRank state
@@ -223,8 +224,7 @@ class Graph:
                     "v",
                     F.coalesce("deg", F.lit(0.0)).alias("deg"),
                     F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
-                    # null for isolated vertices: ignored by sum/min
-                    *(["abs_w", "int_w"] if weight_checks else []),
+                    *extra,
                 )
             )
         return d

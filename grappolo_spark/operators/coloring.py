@@ -795,15 +795,14 @@ def louvain_one_phase_colored(
     # copy feeds the numpy coloring, the state build, the numpy class
     # sweep and the per-iteration e_xx reduction, and 2m comes from it —
     # so the stats agg job disappears. Skipped when the caller's |V|
-    # already rules out the driver-held tiers.
+    # already rules out the driver-held tiers, and (inside collect_probe)
+    # when the caller's edge-row bound already rules out the collect.
     if (
         facts.arrays is None
         and forced not in (Tier.BROADCAST, Tier.SHUFFLE)
         and (facts.nv is None or driver_holds(facts.nv) or forced is not None)
     ):
-        probed = collect_probe(g, DRIVER_EDGE_ROWS)
-        if probed is not None:
-            facts = probed if probed.nv is not None else probed.update(nv=facts.nv)
+        facts = collect_probe(g, DRIVER_EDGE_ROWS, facts)
     vdeg = g.degrees().select("v", "deg").persist()
     if facts.nv is None:
         # explicit vertices or an edge table above the probe bound: |V|
@@ -976,7 +975,7 @@ def louvain_one_phase_colored(
         if colors_np is None:
             probe = state.toPandas()
         vdeg.unpersist()
-        with aqe_off(spark, tier):
+        with aqe_off(spark, tier is Tier.DRIVER_STATE):
             res = _colored_small_state(
                 spark, edges, probe, classes, const, facts, thresh, lower,
                 max_iters, np_sweep=tier is Tier.LOCAL, eidx=eidx,

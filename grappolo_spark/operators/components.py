@@ -200,7 +200,7 @@ def connected_components(
         # RAW edge rows (>= distinct pairs), a conservative shift: graphs
         # between the two counts take the star path, whose labels are
         # identical.
-        facts = collect_probe(g, LOCAL_EDGE_ROWS, weights=False) or facts
+        facts = collect_probe(g, LOCAL_EDGE_ROWS, facts, weights=False)
     tier = plan(facts, "components", run_dir, variant, tier)
     spark = g.edges.sparkSession
     if tier is Tier.LOCAL:

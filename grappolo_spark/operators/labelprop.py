@@ -101,7 +101,7 @@ def label_propagation(
     if wants_probe(facts, "labelprop", run_dir, variant, tier):
         # probe-and-collect in ONE evaluation of the (unpersisted) edge
         # pipeline: under the bound the probe IS the collect
-        facts = collect_probe(g, LOCAL_EDGE_ROWS) or facts
+        facts = collect_probe(g, LOCAL_EDGE_ROWS, facts)
     if plan(facts, "labelprop", run_dir, variant, tier) is Tier.LOCAL:
         labels = _local_lpa(spark, max_iters, stop_on_converge, facts.arrays)
         if g.vertices is None:

@@ -820,7 +820,13 @@ def louvain_one_phase(
         and facts.nv is not None
         and facts.nv <= salt_threshold
     )
-    vdeg_full = g.degrees(weight_checks=not skip_stats).persist()
+    # per-vertex sum(|w|) and integer-weight flag: the integer_weights
+    # fact rides the same stats action
+    weight_checks = {} if skip_stats else dict(
+        abs_w=F.sum(F.abs("weight")),
+        int_w=F.min((F.col("weight") == F.rint("weight")).cast("int")),
+    )
+    vdeg_full = g._degrees(**weight_checks).persist()
     vdeg = vdeg_full.select("v", "deg")
     if skip_stats:
         use_salting = False
@@ -836,14 +842,13 @@ def louvain_one_phase(
         ).collect()[0]
         facts = facts.update(
             two_m=stats0["tw"] or 0.0,
-            max_degree=stats0["maxdeg"] or 0,
             nv=stats0["nv"] or 0,
             id_lo=stats0["min_id"],
             id_hi=stats0["max_id"],
             integer_weights=facts.unweighted
             or exact_sums(stats0["abs_w"], stats0["int_w"] != 0),
         )
-        use_salting = facts.max_degree > salt_threshold
+        use_salting = (stats0["maxdeg"] or 0) > salt_threshold
     two_m = facts.two_m
     # hub skew (use_salting above): the gather routes through a two-stage
     # salted aggregation when any vertex's neighbor list exceeds the
@@ -949,7 +954,7 @@ def louvain_one_phase(
         # the driver_state supersteps are exchange-free (src-partitioned
         # cache + broadcast LocalRelations), so adaptive re-planning is
         # pure per-job driver latency — aqe_off skips it for their jobs
-        with aqe_off(spark, tier):
+        with aqe_off(spark):
             res = _small_state_phase(
                 spark, edges, e_cold, vdeg, selfw, const, facts,
                 thresh, lower, max_iters, init_assign, smart_init, ids32,

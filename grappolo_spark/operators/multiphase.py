@@ -295,10 +295,11 @@ def louvain(
         if coarse_facts is None and coloring:
             # the coloring gate needs |V| BEFORE phase 1: it rides the
             # bounded edge probe (whose arrays the colored kernel then
-            # reuses instead of its own transfer); above the bound, or with
-            # explicit vertices, a distinct-count job
+            # reuses instead of its own transfer; above the bound the
+            # edge-row record spares every later probe of this graph); with
+            # explicit vertices, or above the bound, a distinct-count job
             if cur_g.vertices is None:
-                facts = collect_probe(cur_g, DRIVER_EDGE_ROWS) or facts
+                facts = collect_probe(cur_g, DRIVER_EDGE_ROWS, facts)
             if facts.nv is None:
                 facts = facts.update(nv=cur_g.num_vertices())
         nv = facts.nv
@@ -307,8 +308,9 @@ def louvain(
         if not use_coloring and wants_probe(facts, "louvain", run_dir, variant, tier):
             if facts.arrays is None:
                 # probe-and-collect: under the bound the probe IS the
-                # local tail's input
-                facts = collect_probe(cur_g, LOCAL_EDGE_ROWS) or facts
+                # local tail's input (skipped when the edge-row lower
+                # bound already exceeds it)
+                facts = collect_probe(cur_g, LOCAL_EDGE_ROWS, facts)
             use_local = plan(facts, "louvain", run_dir, variant, tier) is Tier.LOCAL
         if use_local:
             # all remaining phases in one driver-local numpy loop: one
@@ -353,7 +355,7 @@ def louvain(
         # coarse phases whose state fits the driver run their jobs without
         # AQE (see tiers.aqe_off). Phase 1's input can be dense (small nv,
         # huge edge table) and keeps AQE's skew handling.
-        small = Tier.DRIVER_STATE if phase > 1 and driver_holds(nv) else None
+        small = phase > 1 and driver_holds(nv)
         with aqe_off(spark, small):
             if use_coloring:
                 res = louvain_one_phase_colored(
@@ -506,6 +508,8 @@ def louvain(
             coarse_facts = Facts.of(
                 cur_g,
                 nv=num_clusters,
+                # a lower bound: coarsen keeps a self-loop row per cluster
+                edge_rows=num_clusters,
                 id_lo=0,
                 id_hi=num_clusters - 1,
                 two_m=res.facts.two_m or (coarse_facts and coarse_facts.two_m),

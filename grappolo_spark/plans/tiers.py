@@ -87,7 +87,11 @@ class Facts:
     ``arrays`` is ``(src, dst, weight, ids)`` — int64/float64 numpy columns
     of the whole edge table plus its sorted endpoint ids — and is set only
     when the probe came back under its bound; ``weight`` is ``None`` when
-    the probe skipped that column."""
+    the probe skipped that column. ``edge_rows`` is exact when ``arrays``
+    is set and otherwise a lower bound: ``bound + 1`` after a probe came
+    back over its bound, or a coarse graph's cluster count (coarsening
+    keeps a self-loop row per cluster). :func:`collect_probe` reads it to
+    skip a collect that must fail."""
 
     edge_rows: int | None = None
     nv: int | None = None
@@ -97,11 +101,8 @@ class Facts:
     # sum is exact and any aggregation order gives the same doubles
     integer_weights: bool = False
     two_m: float | None = None
-    max_degree: int | None = None
     dangling: bool = False  # some vertex has zero out-weight (pagerank)
-    deduped: bool = False
     unweighted: bool = False
-    directed: bool = False
     explicit_vertices: bool = False
     arrays: tuple | None = None
 
@@ -109,9 +110,7 @@ class Facts:
     def of(cls, g, **known) -> "Facts":
         """The graph's own flags plus whatever the caller already knows."""
         flags = dict(
-            deduped=bool(g.deduped),
             unweighted=bool(g.unweighted),
-            directed=bool(g.directed),
             explicit_vertices=g.vertices is not None,
         )
         if g.unweighted:
@@ -159,20 +158,26 @@ def from_arrays(g, src, dst, w) -> Facts:
     return Facts.of(g, **known)
 
 
-def collect_probe(g, bound: int, weights: bool = True) -> Facts | None:
+def collect_probe(g, bound: int, facts: Facts, weights: bool = True) -> Facts:
     """The bounded probe: collect at most ``bound + 1`` edge rows in ONE
     evaluation of the edge pipeline. Under the bound the probe IS the
-    collect and the facts carry the arrays; over it, ``None``."""
+    collect and the returned facts carry the arrays (plus the caller's
+    |V| when the arrays cannot give it); over it, ``facts`` with
+    ``edge_rows = bound + 1``. No action at all when ``facts.edge_rows``
+    already exceeds the bound."""
     import numpy as np
 
+    if facts.edge_rows is not None and facts.edge_rows > bound:
+        return facts
     cols = ["src", "dst"] + (["weight"] if weights else [])
     pdf = g.edges.select(*cols).limit(bound + 1).toPandas()
     if len(pdf) > bound:
-        return None
+        return facts.update(edge_rows=bound + 1)
     w = pdf["weight"].to_numpy(np.float64) if weights else None
-    return from_arrays(
+    probed = from_arrays(
         g, pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64), w
     )
+    return probed if probed.nv is not None else probed.update(nv=facts.nv)
 
 
 def driver_holds(nv: int | None) -> bool:
@@ -275,14 +280,15 @@ def local_tier_allowed(local_threshold: int) -> bool:
 
 
 @contextmanager
-def aqe_off(spark, tier: Tier | None):
-    """Disable adaptive execution around a driver_state sweep's jobs: they
-    are exchange-free, so AQE's per-stage re-planning is pure latency
-    (forced-distributed multiphase, warm, alternated: sf0.001 15.5-19.5s
-    with AQE vs 13.4-14.3s without; neutral at sf0.1). Exchange-heavy loops
-    (CC star rounds) measured ~2x slower without AQE and keep it; the local
-    tier runs no Spark job. The conf is SESSION-GLOBAL, restored on error."""
-    if tier is not Tier.DRIVER_STATE:
+def aqe_off(spark, on: bool = True):
+    """Disable adaptive execution around a driver_state sweep's jobs when
+    ``on``: they are exchange-free, so AQE's per-stage re-planning is pure
+    latency (forced-distributed multiphase, warm, alternated: sf0.001
+    15.5-19.5s with AQE vs 13.4-14.3s without; neutral at sf0.1).
+    Exchange-heavy loops (CC star rounds) measured ~2x slower without AQE
+    and keep it; the local tier runs no Spark job and needs no toggle. The
+    conf is SESSION-GLOBAL, restored on error."""
+    if not on:
         yield
         return
     key = "spark.sql.adaptive.enabled"

@@ -205,11 +205,16 @@ def _with_explicit_vertices(g):
 
 def test_colored_phase_numpy_coloring_matches_spark_route(spark):
     """louvain_one_phase_colored via the numpy coloring + driver state
-    build must equal the Spark coloring + Spark state build route."""
+    build must equal the Spark coloring + Spark state build route, with
+    the probe's driver edge copy (explicit vertices) and without one: a
+    caller that already saw more than DRIVER_EDGE_ROWS edge rows (the
+    dense phase-1 case) skips the probe, and e_xx is the Spark scan."""
     from grappolo_spark.operators import coloring as C
+    from grappolo_spark.plans import tiers as T
     from grappolo_spark.sources.fixtures import karate
 
     g = karate(spark)
+    over_bound = T.Facts.of(g, nv=34, edge_rows=T.DRIVER_EDGE_ROWS + 1)
     for cap in (8, 3):
         kw = dict(
             thresh=1e-6, max_iters=4, num_colors_cap=cap,
@@ -217,8 +222,12 @@ def test_colored_phase_numpy_coloring_matches_spark_route(spark):
         )
         res_np = C.louvain_one_phase_colored(g, **kw)
         res_sp = C.louvain_one_phase_colored(_with_explicit_vertices(g), **kw)
-        assert res_np.tier is res_sp.tier
+        res_big = C.louvain_one_phase_colored(g, facts=over_bound, **kw)
+        assert res_np.tier is res_sp.tier is T.Tier.LOCAL
+        assert res_big.tier is T.Tier.DRIVER_STATE
+        assert res_big.facts.arrays is None
         assert _phase_tuple(res_np) == _phase_tuple(res_sp), cap
+        assert _phase_tuple(res_np) == _phase_tuple(res_big), cap
 
 
 def test_colored_class_sweep_numpy_matches_spark(spark):
@@ -343,27 +352,46 @@ def test_pagerank_driver_ranks_matches(spark):
         assert fast == slow
 
 
-def test_multiphase_colored_big_edge_fallback_matches(spark):
-    """Without the probe's numpy coloring (explicit vertices here; above
-    the probe bound at scale) the multiphase coloring gate falls back to
-    the distinct-count job and the kernel to its Spark coloring and state
-    build — same results as the driver-held route."""
-    from grappolo_spark.operators.multiphase import louvain
+def test_multiphase_colored_big_edge_fallback_matches(spark, monkeypatch):
+    """Without the probe's driver edge copy the multiphase coloring gate
+    falls back to the distinct-count job and the kernel to its Spark
+    coloring and state build — same results as the driver-held route.
+    Two ways in: explicit vertices, and a phase-1 graph above the probe
+    bound (simulated: its probe reports DRIVER_EDGE_ROWS + 1 rows). The
+    driver hands that record to the kernel, which must not probe again,
+    so phase 1 runs driver_state with the Spark e_xx scan."""
+    from grappolo_spark.operators import multiphase as M
+    from grappolo_spark.plans import tiers as T
     from grappolo_spark.sources.fixtures import karate
 
     g = karate(spark)
 
     def run(graph):
-        r = louvain(
+        r = M.louvain(
             graph, max_phases=3, coloring=True, min_graph_size=5,
             num_colors_cap=8, coloring_algo="multihash",
         )
-        return (
+        return r, (
             r.modularity, r.num_clusters, r.phases, r.total_iterations,
             sorted((x["v"], x["comm"]) for x in r.assignment.collect()),
         )
 
-    assert run(g) == run(_with_explicit_vertices(g))
+    probes = []
+
+    def probe_over_bound_at_phase1(graph, bound, facts, weights=True):
+        probes.append(bound)
+        if graph is g:
+            return facts.update(edge_rows=bound + 1)
+        return T.collect_probe(graph, bound, facts, weights)
+
+    r_small, want = run(g)
+    assert r_small.phase_history[0]["tier"] == "local"
+    assert run(_with_explicit_vertices(g))[1] == want
+    monkeypatch.setattr(M, "collect_probe", probe_over_bound_at_phase1)
+    r_big, got = run(g)
+    assert probes[0] == T.DRIVER_EDGE_ROWS
+    assert r_big.phase_history[0]["tier"] == "driver_state"
+    assert got == want
 
 
 def test_colored_distributed_broadcast_layout_matches(spark):

@@ -156,6 +156,56 @@ def test_integer_weight_fact():
     assert not T.exact_sums(3.0, False)
 
 
+class _StubEdges:
+    """Just enough of a DataFrame for collect_probe: records each limit."""
+
+    def __init__(self, pdf):
+        self.pdf, self.limits = pdf, []
+
+    def select(self, *cols):
+        self.cols = list(cols)
+        return self
+
+    def limit(self, n):
+        self.limits.append(n)
+        return self
+
+    def toPandas(self):
+        return self.pdf[self.cols].head(self.limits[-1])
+
+
+class _StubGraph:
+    vertices = None
+    unweighted = False
+
+    def __init__(self, rows):
+        import pandas as pd
+
+        self.edges = _StubEdges(pd.DataFrame(
+            rows, columns=["src", "dst", "weight"]
+        ))
+
+
+def test_collect_probe_records_its_outcome():
+    """Under the bound the probe returns the arrays; over it, the record
+    ``edge_rows = bound + 1``; and a caller whose edge-row lower bound
+    already exceeds the bound pays no collect at all."""
+    g = _StubGraph([(0, 1, 1.0), (1, 0, 1.0), (1, 2, 2.0), (2, 1, 2.0)])
+    under = T.collect_probe(g, 4, Facts.of(g))
+    assert under.edge_rows == 4 and under.nv == 3 and under.arrays is not None
+    assert under.integer_weights and under.two_m == 6.0
+    assert g.edges.limits == [5]
+
+    over = T.collect_probe(g, 3, Facts.of(g, nv=3))
+    assert over.edge_rows == 4 and over.arrays is None and over.nv == 3
+    assert plan(over, "louvain_colored") is D
+    assert g.edges.limits == [5, 4]
+
+    for known in (over, Facts.of(g, edge_rows=4)):  # failed probe, coarse |V|
+        assert T.collect_probe(g, 3, known) is known
+    assert g.edges.limits == [5, 4]
+
+
 _BOUND_VALUES = {ER, DE, DS, BR}
 _OPERATORS = pathlib.Path(T.__file__).resolve().parents[1] / "operators"
 
