@@ -47,19 +47,25 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 
 
 def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """(id, shingle): distinct word n-grams of the normalized text."""
+    """(id, shingle): distinct word n-grams of the normalized text. A
+    document with fewer than ``n`` tokens has no shingle."""
+    # tokenize once per row: the n-gram lambda slices the bound array
+    # (the regexp inside the lambda would re-run per n-gram, quadratic in
+    # the token count)
     toks = F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)")
     sh = F.expr(
         f"""
         array_distinct(transform(
-          sequence(1, greatest(size(regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)) - {n - 1}, 0)),
-          i -> concat_ws(' ', slice(regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0), i, {n}))
+          sequence(1, size(toks) - {n - 1}),
+          i -> concat_ws(' ', slice(toks, i, {n}))
         ))
         """
     )
     return (
-        df.select(F.col(id_col).alias("id"), sh.alias("sh"))
-        .select("id", F.explode("sh").alias("shingle"))
+        df.select(F.col(id_col).alias("id"), toks.alias("toks"))
+        # null (no rows from explode) below n tokens, where sequence()
+        # would count down to a zero slice start
+        .select("id", F.explode(F.when(F.size("toks") >= n, sh)).alias("shingle"))
     )
 
 

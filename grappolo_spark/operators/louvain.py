@@ -538,7 +538,8 @@ def _local_tail_np(
                 "tier": Tier.LOCAL.value,
             }
         )
-        if phase > max_phases or tot_itr > max_total_iters:
+        if phase >= max_phases or tot_itr > max_total_iters:
+            prev_mod = curr_mod  # a cap stop reports the returned Q
             break
         if (curr_mod - prev_mod) > threshold:
             cur_s, cur_d, cur_w = _coarsen_np(

@@ -218,6 +218,10 @@ def louvain(
     (`runMultiPhaseColoring.cpp:110-126`).
     ``vertex_following=True`` collapses degree-0/1 vertices first
     (`Utility/vertexFollowing.cpp:46-86`).
+    A run stops when a phase gains at most ``threshold`` and reports the
+    Q before that phase, as the reference does; a run stopped by
+    ``max_phases`` (at most that many phases) or ``max_total_iters``
+    reports the Q of the assignment it returns.
     ``smart_init=True`` warm-starts each plain phase with the one-pass
     all-singleton sweep (``initCommAssOpt``,
     `Utility/utilityClusteringFunctions.cpp:108-169`).
@@ -426,12 +430,8 @@ def louvain(
             import pandas as pd
 
             history.append(entry)
-            done = (
-                phase > max_phases
-                or tot_itr > max_total_iters
-                or (curr_mod - prev_mod) <= threshold
-            )
-            if done:
+            capped = phase >= max_phases or tot_itr > max_total_iters
+            if capped or (curr_mod - prev_mod) <= threshold:
                 # no further phase: the end-of-run fold reduces to the one
                 # renumbered phase map over the full vertex set
                 out = spark.createDataFrame(
@@ -440,7 +440,7 @@ def louvain(
                 )
                 return LouvainResult(
                     assignment=out,
-                    modularity=prev_mod,
+                    modularity=curr_mod if capped else prev_mod,
                     num_clusters=num_clusters,
                     phases=phase,
                     total_iterations=tot_itr,
@@ -500,7 +500,10 @@ def louvain(
         )
         history.append(entry)
 
-        if phase > max_phases or tot_itr > max_total_iters:
+        if phase >= max_phases or tot_itr > max_total_iters:
+            # a cap stop returns this phase's assignment: report its Q
+            # (the threshold stop keeps the reference's prevMod)
+            prev_mod = curr_mod
             break
         if (curr_mod - prev_mod) > threshold:
             with aqe_off(spark, small):

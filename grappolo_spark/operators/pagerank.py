@@ -26,7 +26,68 @@ from grappolo_spark.plans.iteration import (
     cut_lineage,
     promote_result,
 )
-from grappolo_spark.plans.tiers import Facts, Tier, plan
+from grappolo_spark.plans.tiers import (
+    LOCAL_EDGE_ROWS,
+    Facts,
+    Tier,
+    collect_probe,
+    plan,
+    wants_probe,
+)
+
+
+def _slots(vs, ids):
+    """Positions of ``ids`` in the sorted vertex array ``vs``. An id that
+    ``vs`` does not hold raises ``ValueError`` (``searchsorted`` alone
+    would land it silently on a neighbour's slot)."""
+    import numpy as np
+
+    idx = np.searchsorted(vs, ids)
+    held = vs[np.minimum(idx, len(vs) - 1)] == ids
+    if not held.all():
+        stray = np.unique(ids[~held])
+        raise ValueError(
+            f"pagerank: edge endpoints {stray[:10].tolist()} "
+            f"({len(stray)} ids) are not in the vertex table"
+        )
+    return idx
+
+
+def _local_pagerank(spark, arrays, alpha: float, max_iters: int, tol):
+    """Local tier: the whole power iteration in driver numpy over the
+    probe's ``(src, dst, weight, ids)`` arrays, one LocalRelation out.
+
+    Every sum runs in one canonical order: the edges are sorted by
+    (dst, src, weight) once, and ``wout``, the per-dst contributions
+    (``bincount`` adds in input order), the dangling mass and the ``tol``
+    delta are computed from that order and the sorted ids. The ranks
+    therefore do not depend on the input's row order or partitioning.
+    The update is the distributed loop's expression, so they match the
+    broadcast/shuffle tiers up to summation order."""
+    import numpy as np
+    import pandas as pd
+
+    src, dst, w, ids = arrays
+    n = len(ids)
+    if n == 0:
+        return spark.createDataFrame([], "v long, rank double")
+    order = np.lexsort((w, src, dst))
+    s, d, w = _slots(ids, src[order]), _slots(ids, dst[order]), w[order]
+    wout = np.bincount(s, weights=w, minlength=n)
+    dangling_v = wout == 0.0
+    rank = np.full(n, 1.0 / n, dtype=np.float64)
+    for _ in range(max_iters):
+        dangling = rank[dangling_v].sum()
+        in_c = np.bincount(d, weights=rank[s] * w / wout[s], minlength=n)
+        new = (1.0 - alpha) / n + alpha * (in_c + dangling / n)
+        done = tol is not None and np.abs(new - rank).sum() < tol
+        rank = new
+        if done:
+            break
+    return spark.createDataFrame(
+        pd.DataFrame({"v": ids, "rank": rank}), "v long, rank double"
+    )
+
 
 def pagerank(
     g: Graph,
@@ -39,8 +100,13 @@ def pagerank(
     """Return ``(v, rank)``. Deterministic given (graph, alpha, max_iters).
 
     The tier (see :mod:`grappolo_spark.plans.tiers`) picks the physical
-    strategy for the per-superstep ``edges JOIN ranks``:
+    strategy:
 
+    - **local** (<= 2M edge rows, no ``run_dir``, no explicit vertex
+      table): the bounded probe collects the edge table and the whole
+      power iteration, dangling mass and ``tol`` test included, runs in
+      driver numpy in one canonical summation order — one Spark action
+      per call, ranks independent of row order and partitioning.
     - **driver_state** (|V| <= 100k, no ``tol``, no ``run_dir``, no
       dangling vertex): the gather runs in Spark over the dst-partitioned
       edge cache, the rank vector lives in numpy.
@@ -55,6 +121,14 @@ def pagerank(
     every third superstep (every superstep with ``run_dir`` or ``tol``).
     """
     spark = g.edges.sparkSession
+    variant = {"tol"} if tol is not None else set()
+    facts = Facts.of(g)
+    if wants_probe(facts, "pagerank", run_dir, variant, tier):
+        # probe-and-collect in ONE evaluation of the edge pipeline: under
+        # the bound the probe IS the local tier's input
+        facts = collect_probe(g, LOCAL_EDGE_ROWS, facts)
+        if plan(facts, "pagerank", run_dir, variant, tier) is Tier.LOCAL:
+            return _local_pagerank(spark, facts.arrays, alpha, max_iters, tol)
     wout = g.edges.groupBy(F.col("src").alias("v")).agg(F.sum("weight").alias("wout"))
     # a symmetrized table with no explicit vertices lists every vertex as
     # src, so the wout aggregation's key set IS the vertex set: base = wout
@@ -75,10 +149,8 @@ def pagerank(
     if n == 0:
         base.unpersist()
         return spark.createDataFrame([], "v long, rank double")
-    facts = Facts.of(g, nv=n, dangling=bool(vstats["dangling"]))
-    tier = plan(
-        facts, "pagerank", run_dir, {"tol"} if tol is not None else (), tier
-    )
+    facts = facts.update(nv=n, dangling=bool(vstats["dangling"]))
+    tier = plan(facts, "pagerank", run_dir, variant, tier)
     # weight ≡ 1.0 invariant (Graph.unweighted): the superstep cache keeps
     # only (src, dst) — one third less cached/scanned width per superstep —
     # and the contribution skips the weight multiply (x·1.0 ≡ x, so the
@@ -138,7 +210,7 @@ def pagerank(
             )
             in_c = np.zeros(n, dtype=np.float64)
             if len(cp):
-                idx = np.searchsorted(vs_np, cp["v"].to_numpy(np.int64))
+                idx = _slots(vs_np, cp["v"].to_numpy(np.int64))
                 in_c[idx] = cp["in_contrib"].to_numpy(np.float64)
             rank_np = (1.0 - alpha) / n + alpha * (in_c + dangling / n)
         out = spark.createDataFrame(

@@ -49,7 +49,7 @@ class Tier(str, Enum):
 # the tiers each operator implements, cheapest first; "louvain" is the
 # multiphase driver (its local tier is the numpy tail over all phases)
 OP_TIERS = {
-    "pagerank": (Tier.DRIVER_STATE, Tier.BROADCAST, Tier.SHUFFLE),
+    "pagerank": tuple(Tier),
     "components": (Tier.LOCAL, Tier.SHUFFLE),
     "labelprop": (Tier.LOCAL, Tier.BROADCAST, Tier.SHUFFLE),
     "louvain": tuple(Tier),
@@ -63,7 +63,7 @@ VARIANTS = frozenset({
     "early_terminate",  # louvain: active-set gather
     "ftr",              # louvain: Fast-Track-Resistance exit
     "salting",          # louvain: hub gather routed through salted sums
-    "tol",              # pagerank: distributed L1 convergence test
+    "tol",              # pagerank: L1 convergence test
     "min_label",        # components: method="label_prop"
     "no_local",         # local_threshold=0: the caller excludes the local tier
 })
@@ -192,8 +192,9 @@ def _eligible(t: Tier, facts: Facts, op: str, run_dir, variant) -> bool:
     if t is Tier.LOCAL:
         if facts.arrays is None or run_dir is not None or "no_local" in variant:
             return False
-        if op == "louvain":
-            # explicit isolated vertices need the degrees()-based init
+        if op in ("louvain", "pagerank"):
+            # explicit isolated vertices are not in the arrays (louvain's
+            # degrees()-based init, pagerank's |V|)
             return not facts.explicit_vertices
         if op == "louvain_colored":
             return facts.integer_weights

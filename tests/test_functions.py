@@ -6,6 +6,7 @@ from grappolo_spark.functions.dedup import (
     minhash_lsh_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
+    shingles,
     simhash_buckets,
 )
 from grappolo_spark.functions.multimodal import (
@@ -201,6 +202,28 @@ def _py_shingles(text, n=3):
 
     toks = _re.findall("[A-Za-z0-9_]+", text.lower())
     return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+
+def test_shingles_short_and_repeated_texts(spark):
+    """Shingles match the pure-python reference on texts of 0, 1, 2, 3
+    and 5 tokens, mixed case and repeated n-grams; a text shorter than n
+    tokens has none (it used to fail with a zero slice start), and the
+    pair functions run over such documents."""
+    texts = [
+        "", "x", "alpha beta", "Alpha BETA gamma", "a b a b a",
+        "The the THE the the", "  ", "one, two; three four five",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    for n in (1, 2, 3):
+        got = {}
+        for r in shingles(df, "doc_id", "text", n).collect():
+            got.setdefault(r.id, set()).add(r.shingle)
+        want = {i: _py_shingles(t, n) for i, t in enumerate(texts)}
+        assert got == {i: sh for i, sh in want.items() if sh}, n
+    # docs 4 and 5 each have shingles; the short ones pair with nobody
+    jac = {(r.id_a, r.id_b) for r in ngram_jaccard_pairs(df, threshold=0.0).collect()}
+    assert all(a >= 3 and b >= 3 for a, b in jac)
+    assert minhash_lsh_pairs(df, threshold=1.0).collect() == []
 
 
 def test_minhash_signatures_value_oracle(spark):

@@ -82,3 +82,26 @@ def test_swap_protection_two_singletons(spark):
     res = louvain(g)
     assign = {r.v: r.comm for r in res.assignment.collect()}
     assert assign[0] == assign[1] == 0
+
+
+def test_capped_louvain_reports_the_returned_q(spark):
+    """A run stopped by ``max_phases`` or ``max_total_iters`` reports the
+    Q of the assignment it returns (not the phase before it), and a
+    binding ``max_phases=k`` runs k phases — on the local tail, the
+    distributed loop and the colored numpy continuation."""
+    g = fixtures.karate(spark)
+    edges = [(r.src, r.dst, r.weight) for r in g.edges.collect()]
+    assert louvain(g).phases >= 3  # so max_phases=2 binds
+    routes = (
+        {},
+        {"tier": "broadcast"},
+        {"coloring": True, "min_graph_size": 10, "coloring_algo": "multihash"},
+    )
+    caps = (({"max_phases": 1}, 1), ({"max_phases": 2}, 2),
+            ({"max_total_iters": 1}, 1))
+    for route in routes:
+        for cap, phases in caps:
+            res = louvain(g, **cap, **route)
+            assert (res.phases, len(res.phase_history)) == (phases, phases)
+            assign = {r.v: r.comm for r in res.assignment.collect()}
+            assert abs(res.modularity - py_modularity(edges, assign)) < 1e-12

@@ -1,4 +1,5 @@
 import numpy as np
+import pytest
 
 from grappolo_spark.graph import Graph
 from grappolo_spark.operators.pagerank import pagerank
@@ -50,3 +51,99 @@ def test_pagerank_broadcast_plan_matches_shuffle_plan(spark):
     assert set(a) == set(b)
     for v in a:
         assert abs(a[v] - b[v]) < 1e-12
+
+
+def _ranks(g, **kw):
+    return {r.v: r.rank for r in pagerank(g, **kw).collect()}
+
+
+def test_pagerank_local_tier_matches_distributed_tiers(spark):
+    """The local tier agrees with the broadcast and shuffle tiers within
+    1e-12 relative on an unweighted, a fractionally weighted (with a
+    self-loop) and a directed dangling graph, and under ``tol``. A
+    ``tol`` run that stopped one superstep early or late would differ by
+    far more than 1e-12 (checked against the numpy reference)."""
+    karate = fixtures.karate(spark)
+    weighted = Graph.from_pairs(
+        spark,
+        [(0, 1, 0.3), (1, 2, 1.7), (2, 0, 2.5), (2, 3, 0.25), (3, 4, 5.0),
+         (4, 5, 1.1), (5, 3, 0.6), (6, 6, 2.0), (6, 1, 0.9)],
+    )
+    dangling = Graph.from_edgelist(
+        spark.createDataFrame(
+            [(0, 1, 1.0), (1, 2, 2.0), (0, 3, 0.5), (3, 1, 1.5), (4, 0, 1.0),
+             (3, 5, 1.0)],
+            "src long, dst long, weight double",
+        ),
+        directed=True,
+    )  # 2 and 5 are dangling
+    runs = [
+        ("karate", karate, {"max_iters": 5}),
+        ("weighted_selfloop", weighted, {"max_iters": 5}),
+        ("directed_dangling", dangling, {"max_iters": 5}),
+        ("karate_tol", karate, {"max_iters": 100, "tol": 1e-3}),
+    ]
+    for name, g, kw in runs:
+        local = _ranks(g, tier="local", **kw)
+        assert abs(sum(local.values()) - 1.0) < 1e-12, name
+        for tier in ("broadcast", "shuffle"):
+            other = _ranks(g, tier=tier, **kw)
+            assert other.keys() == local.keys(), (name, tier)
+            for v, r in local.items():
+                assert abs(r - other[v]) <= 1e-12 * other[v], (name, tier, v)
+
+    # the tol run's superstep count: the numpy reference's stopping step
+    edges = _collect_edges(karate)
+    vs = sorted({u for u, _, _ in edges})
+    tol_ranks = _ranks(karate, tier="local", max_iters=100, tol=1e-3)
+    prev = numpy_pagerank(edges, vs, iters=0)
+    for k in range(1, 100):
+        cur = numpy_pagerank(edges, vs, iters=k)
+        if sum(abs(cur[v] - prev[v]) for v in vs) < 1e-3:
+            break
+        prev = cur
+    assert all(abs(tol_ranks[v] - cur[v]) < 1e-12 for v in vs)
+    assert max(abs(tol_ranks[v] - prev[v]) for v in vs) > 1e-9
+
+
+def test_pagerank_local_tier_ignores_row_order(spark):
+    """The local tier sums in one canonical order, so the same edge rows
+    in shuffled order or repartitioned give bit-identical ranks (real
+    weights and duplicate pairs make the summation order visible)."""
+    rng = np.random.default_rng(5)
+    rows = [
+        (int(u), int(v), float(w))
+        for u, v, w in zip(
+            rng.integers(0, 150, 600), rng.integers(0, 150, 600),
+            rng.random(600) * 3.0 + 0.01,
+        )
+    ]
+    rows += [(u, v, w * 0.5) for u, v, w in rows[:40]]  # duplicate pairs
+    schema = "src long, dst long, weight double"
+
+    def ranks(rs, parts=None):
+        df = spark.createDataFrame(rs, schema)
+        if parts:
+            df = df.repartition(parts)
+        out = pagerank(Graph(edges=df, directed=True), max_iters=15, tier="local")
+        return {r.v: r.rank for r in out.collect()}
+
+    base = ranks(rows)
+    shuffled = [rows[i] for i in rng.permutation(len(rows))]
+    assert ranks(shuffled) == base
+    assert ranks(rows, parts=7) == base
+
+
+def test_pagerank_driver_state_rejects_stray_ids(spark):
+    """A gathered destination id outside the vertex table must raise, not
+    land on a neighbour's rank slot. The explicit vertex table cannot
+    drop an endpoint (``vertex_ids()`` unions the edge endpoints in), so
+    the stray comes from an edge table flagged undirected that is not
+    symmetrized: id 2 is only a destination, and ``base`` keys on src."""
+    df = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 3, 1.0), (3, 0, 1.0), (1, 2, 1.0)],
+        "src long, dst long, weight double",
+    )
+    g = Graph(edges=df)
+    with pytest.raises(ValueError, match=r"endpoints \[2\]"):
+        pagerank(g, max_iters=2, tier="driver_state").collect()

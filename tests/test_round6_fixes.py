@@ -343,7 +343,8 @@ def test_pagerank_driver_ranks_matches(spark):
     )
     for g in (karate(spark), grid3d(spark, 3, 3, 3), weighted):
         fast = sorted(
-            (r["v"], r["rank"]) for r in pagerank(g, max_iters=5).collect()
+            (r["v"], r["rank"])
+            for r in pagerank(g, max_iters=5, tier="driver_state").collect()
         )
         slow = sorted(
             (r["v"], r["rank"])

@@ -99,6 +99,14 @@ CASES = [
     ("louvain", _probed(ER, nv=BR + 1), None, {"early_terminate"}, S),
     ("louvain", _probed(ER, nv=BR + 1), None, {"ftr"}, S),
     ("louvain", _probed(ER, nv=BR + 1), None, {"no_local"}, S),
+    # pagerank's local tier: <= 2M edge rows, dangling and tol included
+    ("pagerank", _probed(ER), None, (), L),
+    ("pagerank", _probed(ER + 1, nv=DS), None, (), D),
+    ("pagerank", Facts(edge_rows=ER + 1, nv=DS), None, (), D),
+    ("pagerank", _probed(ER), "rd", (), B),
+    ("pagerank", _probed(ER, explicit_vertices=True), None, (), D),
+    ("pagerank", _probed(ER, dangling=True), None, (), L),
+    ("pagerank", _probed(ER), None, {"tol"}, L),
 ]
 
 
@@ -118,7 +126,9 @@ def test_forced_tier_must_be_supported():
     with pytest.raises(ValueError):
         plan(small, "labelprop", run_dir="rd", tier="local")
     with pytest.raises(ValueError):
-        plan(small, "pagerank", tier="local")  # pagerank has no local tier
+        plan(small, "louvain_phase", tier="local")  # a phase has no local tier
+    with pytest.raises(ValueError):
+        plan(Facts(nv=10), "pagerank", tier="local")  # nothing collected
     with pytest.raises(ValueError):
         plan(Facts(nv=10), "components", tier="local")  # nothing collected
     with pytest.raises(ValueError):
@@ -131,6 +141,15 @@ def test_forced_tier_must_be_supported():
         plan(small, "pagerank", variant={"typo"})
     with pytest.raises(ValueError):
         plan(small, "pagerank", tier="fast")
+
+
+def test_pagerank_probes_only_when_local_is_possible():
+    # run_dir (the durable route) and explicit vertices run no probe
+    assert T.wants_probe(Facts(), "pagerank")
+    assert T.wants_probe(Facts(), "pagerank", variant={"tol"})
+    assert not T.wants_probe(Facts(), "pagerank", run_dir="rd")
+    assert not T.wants_probe(Facts(explicit_vertices=True), "pagerank")
+    assert not T.wants_probe(Facts(), "pagerank", tier="driver_state")
 
 
 def test_local_threshold_accepts_default_or_zero():
