@@ -120,6 +120,12 @@ class Graph:
     ``vertices`` optionally carries isolated vertices (degree 0) that have no
     edge rows — the reference keeps them with community sentinel -1
     (`BasicCommunitiesDetection/parallelLouvainMethod.cpp:219-221`).
+
+    Operators memoize the planner's facts on the graph (``_facts``, see
+    ``plans.tiers.graph_facts``), so they share one bounded probe: rebuild
+    the Graph if its source changes. The memo keeps up to 4M rows of
+    read-only driver arrays for the graph's lifetime; :meth:`unpersist`
+    drops it.
     """
 
     edges: DataFrame
@@ -143,6 +149,7 @@ class Graph:
     # Conservative default: False for raw Graph(edges=...) construction.
     deduped: bool = False
     _cached: list = field(default_factory=list, repr=False)
+    _facts: dict = field(default_factory=dict, repr=False, compare=False)
 
     # -- constructors -------------------------------------------------
     @classmethod
@@ -330,3 +337,4 @@ class Graph:
             except Exception:
                 pass
         self._cached.clear()
+        self._facts.clear()

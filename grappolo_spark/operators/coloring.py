@@ -40,13 +40,13 @@ from grappolo_spark.plans.iteration import (
 )
 from grappolo_spark.plans.tiers import (
     DRIVER_EDGE_ROWS,
-    Facts,
     Tier,
     aqe_off,
-    collect_probe,
     driver_holds,
     exact_sums,
+    graph_facts,
     plan,
+    remember,
 )
 
 _MEX = """
@@ -496,7 +496,7 @@ def _multihash_colors_np(ids, s_idx, d_idx, nhash=2, nrounds=4, seed=999):
 
 
 def _colored_small_state(
-    spark, edges, pdf, classes, const, facts, thresh, lower, max_iters,
+    spark, edges, pdf, classes, const, arrays, thresh, lower, max_iters,
     np_sweep, eidx=None,
 ):
     """Colored Gauss-Seidel sweeps with driver-held community state (the
@@ -532,7 +532,6 @@ def _colored_small_state(
     # caller hand over the positions it already computed (its pdf rows ARE
     # the sorted id array), skipping the two full-width searchsorted passes.
     si = di = ew = None
-    arrays = facts.arrays
     if eidx is not None:
         si, di = eidx
         ew = arrays[2]
@@ -726,7 +725,6 @@ def _colored_small_state(
         assignment=out,
         modularity=prev_mod,
         iterations=num_itrs,
-        facts=facts,
         tier=Tier.LOCAL if np_sweep else Tier.DRIVER_STATE,
         # exact driver mirror (only when the whole sweep ran in numpy over
         # a complete driver edge copy): lets the multiphase driver finish
@@ -745,7 +743,6 @@ def louvain_one_phase_colored(
     colors: DataFrame | None = None,
     run_dir: str | None = None,
     tier: Tier | str | None = None,
-    facts: Facts | None = None,
 ) -> LouvainPhaseResult:
     """One Louvain level, sweeping color classes sequentially.
 
@@ -764,8 +761,8 @@ def louvain_one_phase_colored(
       broadcast into a src-keyed class gather (zero exchanges per class).
     - **shuffle**: the distributed loop co-partitioned on ``dst``.
 
-    ``tier`` forces one; ``facts`` carries what the caller already knows
-    (the multiphase driver hands over its probe and coarse |V|).
+    ``tier`` forces one. It plans from the graph's facts (``graph_facts``:
+    the probe's driver edge copy, |V|, 2m) and memoizes what it counts.
 
     ``coloring_algo="multihash"`` bounds the palette a priori (the
     Jones-Plassmann variant emits at most ``2*nhash*nrounds + 1`` colors
@@ -789,25 +786,24 @@ def louvain_one_phase_colored(
     # overflow merge below). With an injected coloring the sweep order is
     # fully deterministic and SQL-expressible, which is how the driver
     # value-oracles one colored Gauss-Seidel iteration.
-    facts = facts or Facts.of(g)
+    facts = graph_facts(g)
     forced = Tier(tier) if tier is not None else None
-    # the bounded probe, straight off the CALLER's table: a driver edge
-    # copy feeds the numpy coloring, the state build, the numpy class
-    # sweep and the per-iteration e_xx reduction, and 2m comes from it —
-    # so the stats agg job disappears. Skipped when the caller's |V|
-    # already rules out the driver-held tiers, and (inside collect_probe)
-    # when the caller's edge-row bound already rules out the collect.
+    # the bounded probe: a driver edge copy feeds the numpy coloring, the
+    # state build, the numpy class sweep and the per-iteration e_xx
+    # reduction, and 2m comes from it — so the stats agg job disappears.
+    # Skipped when the graph's |V| or edge-row bound rules it out.
     if (
         facts.arrays is None
         and forced not in (Tier.BROADCAST, Tier.SHUFFLE)
         and (facts.nv is None or driver_holds(facts.nv) or forced is not None)
     ):
-        facts = collect_probe(g, DRIVER_EDGE_ROWS, facts)
+        facts = graph_facts(g, DRIVER_EDGE_ROWS)
     vdeg = g.degrees().select("v", "deg").persist()
     if facts.nv is None:
         # explicit vertices or an edge table above the probe bound: |V|
         # from the degree table the sweep persists anyway
         facts = facts.update(nv=vdeg.count())
+        remember(g, nv=facts.nv)
     tier = plan(facts, "louvain_colored", tier=tier)
     driver_tier = tier in (Tier.LOCAL, Tier.DRIVER_STATE)
     if driver_tier:
@@ -844,12 +840,13 @@ def louvain_one_phase_colored(
             integer_weights=facts.unweighted
             or exact_sums(row0["abs_w"], row0["int_w"] != 0),
         )
+        remember(g, two_m=facts.two_m, integer_weights=facts.integer_weights)
     two_m = facts.two_m
     if two_m == 0.0:
         edges.unpersist()
         vdeg.unpersist()
         empty = spark.createDataFrame([], "v long, comm long")
-        return LouvainPhaseResult(empty, 0.0, 0, facts=facts, tier=tier)
+        return LouvainPhaseResult(empty, 0.0, 0, tier=tier)
     const = 1.0 / two_m
 
     colors_np = None  # (ids array, int32 colors) when colored in numpy
@@ -977,7 +974,7 @@ def louvain_one_phase_colored(
         vdeg.unpersist()
         with aqe_off(spark, tier is Tier.DRIVER_STATE):
             res = _colored_small_state(
-                spark, edges, probe, classes, const, facts, thresh, lower,
+                spark, edges, probe, classes, const, facts.arrays, thresh, lower,
                 max_iters, np_sweep=tier is Tier.LOCAL, eidx=eidx,
             )
         edges.unpersist()
@@ -1130,7 +1127,6 @@ def louvain_one_phase_colored(
         assignment=prev_assign.select("v", "comm"),
         modularity=prev_mod,
         iterations=num_itrs,
-        facts=facts,
         tier=tier,
     )
 

@@ -136,33 +136,3 @@ def consensus_histogram(
         .orderBy("bin")
     )
 
-
-def consensus_protocol(
-    g,
-    runs: int = 10,
-    percentages: tuple = (100, 90, 80, 70),
-    seed: int = 42,
-    bins: int = 11,
-):
-    """The run1.sh stability protocol (`driverForGraphClusteringApprox.cpp:
-    125-240`): repeated seeded sampled-Louvain runs per sampling percentage,
-    then the per-edge co-clustering histogram across each percentage's runs.
-
-    Returns {percentage: histogram DataFrame}. Expensive (runs x |ps| full
-    multi-phase clusterings) — a protocol driver, not a per-query operator.
-    """
-    from grappolo_spark.operators.multiphase import louvain
-
-    out = {}
-    for p in percentages:
-        assigns = []
-        for r in range(runs):
-            res = louvain(
-                g,
-                sample_fraction=None if p >= 100 else p / 100.0,
-                seed=seed + 1000 * r,
-                max_phases=3,
-            )
-            assigns.append(res.assignment)
-        out[p] = consensus_histogram(g.edges, assigns, bins=bins)
-    return out

@@ -26,12 +26,10 @@ from grappolo_spark.plans.iteration import (
 )
 from grappolo_spark.plans.tiers import (
     LOCAL_EDGE_ROWS,
-    Facts,
     Tier,
-    collect_probe,
+    facts_for,
     local_tier_allowed,
     plan,
-    wants_probe,
 )
 
 def _checksum_aggs():
@@ -193,14 +191,9 @@ def connected_components(
         variant.add("min_label")
     if not local_tier_allowed(local_threshold):
         variant.add("no_local")
-    facts = Facts.of(g)
-    if wants_probe(facts, "components", run_dir, variant, tier):
-        # probe-and-collect in ONE evaluation of the (unpersisted) edge
-        # pipeline: under the bound the probe IS the collect. The bound is
-        # RAW edge rows (>= distinct pairs), a conservative shift: graphs
-        # between the two counts take the star path, whose labels are
-        # identical.
-        facts = collect_probe(g, LOCAL_EDGE_ROWS, facts, weights=False)
+    # the bound is RAW edge rows (>= distinct pairs): graphs between the
+    # two counts take the star path, whose labels are identical
+    facts = facts_for(g, "components", run_dir, variant, tier)
     tier = plan(facts, "components", run_dir, variant, tier)
     spark = g.edges.sparkSession
     if tier is Tier.LOCAL:

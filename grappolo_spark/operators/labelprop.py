@@ -21,12 +21,10 @@ from grappolo_spark.plans.iteration import (
 )
 from grappolo_spark.plans.tiers import (
     LOCAL_EDGE_ROWS,
-    Facts,
     Tier,
-    collect_probe,
+    facts_for,
     local_tier_allowed,
     plan,
-    wants_probe,
 )
 
 
@@ -97,11 +95,7 @@ def label_propagation(
     """
     spark = g.edges.sparkSession
     variant = set() if local_tier_allowed(local_threshold) else {"no_local"}
-    facts = Facts.of(g)
-    if wants_probe(facts, "labelprop", run_dir, variant, tier):
-        # probe-and-collect in ONE evaluation of the (unpersisted) edge
-        # pipeline: under the bound the probe IS the collect
-        facts = collect_probe(g, LOCAL_EDGE_ROWS, facts)
+    facts = facts_for(g, "labelprop", run_dir, variant, tier)
     if plan(facts, "labelprop", run_dir, variant, tier) is Tier.LOCAL:
         labels = _local_lpa(spark, max_iters, stop_on_converge, facts.arrays)
         if g.vertices is None:

@@ -56,13 +56,14 @@ from grappolo_spark.plans.iteration import (
     read_observation,
 )
 from grappolo_spark.plans.tiers import (
-    Facts,
     Tier,
     aqe_off,
     driver_holds,
     exact_sums,
     from_arrays,
+    graph_facts,
     plan,
+    remember,
 )
 
 
@@ -151,9 +152,6 @@ class LouvainPhaseResult:
     assignment: DataFrame  # (v, comm)
     modularity: float  # prevMod, as returned by the reference kernel
     iterations: int
-    # what the phase knew about its graph (2m, |V|, integer weights...) —
-    # the multiphase driver derives the next coarse phase's facts from it
-    facts: Facts | None = None
     tier: Tier | None = None  # the tier the phase ran in
     # driver-held mirror of the phase, set ONLY by exact driver-side
     # kernels over a complete driver edge copy: (ids sorted, comm over
@@ -560,7 +558,6 @@ def _small_state_phase(
     vdeg,
     selfw,
     const: float,
-    facts: Facts,
     thresh: float,
     lower: float,
     max_iters: int,
@@ -602,7 +599,7 @@ def _small_state_phase(
     if nv == 0:
         return LouvainPhaseResult(
             spark.createDataFrame([], "v long, comm long"), 0.0, 0,
-            facts=facts, tier=Tier.DRIVER_STATE,
+            tier=Tier.DRIVER_STATE,
         )
 
     if init_assign is not None:
@@ -738,7 +735,6 @@ def _small_state_phase(
         assignment=out,
         modularity=prev_mod,
         iterations=num_itrs,
-        facts=facts,
         tier=Tier.DRIVER_STATE,
     )
 
@@ -757,7 +753,6 @@ def louvain_one_phase(
     salt_threshold: int = 1_000_000,
     smart_init: bool = False,
     tier: Tier | str | None = None,
-    facts: Facts | None = None,
     run_dir: str | None = None,
 ) -> LouvainPhaseResult:
     """Run one modularity-optimization level to its convergence threshold.
@@ -775,9 +770,9 @@ def louvain_one_phase(
       broadcast): the plan co-partitioned on ``dst``, state commits
       bucketed by ``v``.
 
-    ``tier`` forces one. ``facts`` carries what the caller already knows
-    (the multiphase driver's coarse phases: |V|, 2m, dense ids, integer
-    weights); without it the phase's one stats action fills them.
+    ``tier`` forces one. It plans from the graph's facts (``graph_facts``:
+    |V|, 2m, id bounds, integer weights); the phase's one stats action
+    memoizes them on the graph and is skipped when they are already there.
 
     ``init_assign`` gives warm starts (reference
     `parallelLouvainMethodInitialized.cpp:106-112`). ``sample_fraction``
@@ -806,20 +801,18 @@ def louvain_one_phase(
     returned assignment stay ``long``.
     """
     spark = g.edges.sparkSession
-    given = facts is not None
-    facts = facts if given else Facts.of(g)
+    facts = graph_facts(g)
     # one action yields 2m AND the max degree (hub detection for salting)
     # AND |V| and the id bounds AND the integer-weight check: sum of
-    # per-vertex degrees == total edge-row weight. The multiphase driver
-    # passes facts for coarse phases instead — 2m is conserved by
-    # coarsening and |V| equals the previous phase's cluster count, so when
-    # |V| is also under the salting threshold (max degree <= nv-1) the
-    # whole action is skipped.
-    skip_stats = (
-        given
-        and facts.two_m is not None
-        and facts.nv is not None
-        and facts.nv <= salt_threshold
+    # per-vertex degrees == total edge-row weight. It is skipped when the
+    # graph knows 2m and |V| (coarse graphs do) and its max degree is known
+    # or bounded: unique (src, dst) rows give max degree <= |V|. A probe's
+    # numpy 2m equals the Spark sum only over integer weights (exact).
+    known = facts.two_m is not None and facts.nv is not None and (
+        facts.integer_weights or facts.arrays is None
+    )
+    skip_stats = known and (
+        facts.max_degree is not None or (g.deduped and facts.nv <= salt_threshold)
     )
     # per-vertex sum(|w|) and integer-weight flag: the integer_weights
     # fact rides the same stats action
@@ -830,7 +823,7 @@ def louvain_one_phase(
     vdeg_full = g._degrees(**weight_checks).persist()
     vdeg = vdeg_full.select("v", "deg")
     if skip_stats:
-        use_salting = False
+        use_salting = (facts.max_degree or 0) > salt_threshold
     else:
         stats0 = vdeg_full.agg(
             F.sum("deg").alias("tw"),
@@ -841,15 +834,15 @@ def louvain_one_phase(
             F.sum("abs_w").alias("abs_w"),
             F.min("int_w").alias("int_w"),
         ).collect()[0]
-        facts = facts.update(
-            two_m=stats0["tw"] or 0.0,
-            nv=stats0["nv"] or 0,
-            id_lo=stats0["min_id"],
-            id_hi=stats0["max_id"],
+        remember(
+            g, two_m=stats0["tw"] or 0.0, nv=stats0["nv"] or 0,
+            id_lo=stats0["min_id"], id_hi=stats0["max_id"],
+            max_degree=stats0["maxdeg"] or 0,
             integer_weights=facts.unweighted
             or exact_sums(stats0["abs_w"], stats0["int_w"] != 0),
         )
-        use_salting = (stats0["maxdeg"] or 0) > salt_threshold
+        facts = graph_facts(g)
+        use_salting = facts.max_degree > salt_threshold
     two_m = facts.two_m
     # hub skew (use_salting above): the gather routes through a two-stage
     # salted aggregation when any vertex's neighbor list exceeds the
@@ -859,7 +852,7 @@ def louvain_one_phase(
     if two_m == 0.0:
         vdeg_full.unpersist()
         empty = spark.createDataFrame([], "v long, comm long")
-        return LouvainPhaseResult(empty, 0.0, 0, facts=facts)
+        return LouvainPhaseResult(empty, 0.0, 0)
     variant = {
         name
         for name, on in (
@@ -916,7 +909,7 @@ def louvain_one_phase(
         if not unweighted:
             cols.append(F.col("weight"))
         e_base = e_base.select(*cols)
-    if given and driver_holds(facts.nv):
+    if known and driver_holds(facts.nv):
         # follow the input's partitioning, bounded by the session's
         # shuffle parallelism: small |V| does not imply small |E|, and a
         # constant 4 starves the sequential superstep jobs of cores when
@@ -957,7 +950,7 @@ def louvain_one_phase(
         # pure per-job driver latency — aqe_off skips it for their jobs
         with aqe_off(spark):
             res = _small_state_phase(
-                spark, edges, e_cold, vdeg, selfw, const, facts,
+                spark, edges, e_cold, vdeg, selfw, const,
                 thresh, lower, max_iters, init_assign, smart_init, ids32,
                 unweighted,
             )
@@ -999,11 +992,11 @@ def louvain_one_phase(
         # 72.2s whole-run A/B on an idle box) — the parquet round-trip's
         # fixed cost is the cheaper lineage truncation for multi-consumer
         # state on this build. Coarse phases on the broadcast tier (facts
-        # from the multiphase driver) skip the cut ACTION entirely: only iteration 1
+        # already on the graph) skip the cut ACTION entirely: only iteration 1
         # consumes the init plan (4-6 subplan copies over an
         # already-parquet-backed coarse graph inside ONE job), which costs
         # less than a dedicated write+read job at that size.
-        if not (given and tier is Tier.BROADCAST):
+        if not (known and tier is Tier.BROADCAST):
             assign = cut_lineage(
                 assign, tag="louvain_assign",
                 bucket_by=runner.bucket_by, n_buckets=runner.n_buckets,
@@ -1409,6 +1402,5 @@ def louvain_one_phase(
         assignment=prev_assign.select("v", "comm"),
         modularity=prev_mod,
         iterations=num_itrs,
-        facts=facts,
         tier=tier,
     )

@@ -44,10 +44,12 @@ from grappolo_spark.plans.tiers import (
     Facts,
     Tier,
     aqe_off,
-    collect_probe,
     driver_holds,
+    facts_for,
+    graph_facts,
     local_tier_allowed,
     plan,
+    remember,
     wants_probe,
 )
 
@@ -158,7 +160,9 @@ def coarsen(g: Graph, assign: DataFrame) -> Graph:
 def coarsen_cut(g: Graph, assign: DataFrame, num_clusters: int) -> Graph:
     """:func:`coarsen` plus the lineage cut the multiphase loop reads the
     next phase from. The rebuilt graph keeps the coarse graph's flags
-    (``deduped`` spares coarse colored phases the pair ``distinct``)."""
+    (``deduped`` spares coarse colored phases the pair ``distinct``) and
+    its facts: ids ``0..k-1``, a self-loop row per cluster (an edge-row
+    lower bound), and ``g``'s 2m and integer weights (conserved)."""
     coarse = coarsen(g, assign)
     edges = coarse.edges
     if driver_holds(num_clusters):
@@ -168,12 +172,17 @@ def coarsen_cut(g: Graph, assign: DataFrame, num_clusters: int) -> Graph:
         # vertices the task-scheduling overhead, not the data, is the
         # phase cost.
         edges = edges.coalesce(4)
-    return Graph(
+    out = Graph(
         edges=cut_lineage(edges, tag="coarse_edges", keep_last=2),
         directed=coarse.directed,
         unweighted=coarse.unweighted,
         deduped=coarse.deduped,
     )
+    fine = graph_facts(g)
+    k = num_clusters
+    remember(out, nv=k, edge_rows=k, id_lo=0, id_hi=k - 1,
+             two_m=fine.two_m, integer_weights=fine.integer_weights)
+    return out
 
 
 @dataclass
@@ -233,7 +242,8 @@ def louvain(
     pure fixed job overhead, the Spark analogue of the reference keeping
     later phases in cache. Sampling, early-terminate, FTR, ``run_dir``,
     explicit isolated vertices and ``local_threshold=0`` exclude it; every
-    other phase plans its own tier from the facts this driver hands over.
+    other phase plans its own tier from its graph's facts (a coarse graph
+    carries them from :func:`coarsen_cut`).
     ``tier`` forces one tier for every phase. Directed graphs
     (``Graph(directed=True)``) run the directed kernel (constant 2/m) and
     coarsen without symmetrizing — the
@@ -288,33 +298,22 @@ def louvain(
     history = []
     phase_maps = []  # deferred C_orig folds: one composed join at the end
     cur_g = g
-    # facts this driver knows about the next (coarse) phase: |V| is the
-    # previous phase's cluster count, ids are its dense renumbering, and
-    # 2m and integer-valued weights are conserved by coarsening
-    coarse_facts = None
 
     while True:
         phase_t0 = time.time()
-        facts = coarse_facts or Facts.of(cur_g)
-        if coarse_facts is None and coloring:
-            # the coloring gate needs |V| BEFORE phase 1: it rides the
-            # bounded edge probe (whose arrays the colored kernel then
-            # reuses instead of its own transfer; above the bound the
-            # edge-row record spares every later probe of this graph); with
-            # explicit vertices, or above the bound, a distinct-count job
+        facts = graph_facts(cur_g)
+        if coloring and facts.nv is None:
+            # phase 1's |V| for the coloring gate rides the bounded probe
+            # (whose arrays the colored kernel reuses), else a count job
             if cur_g.vertices is None:
-                facts = collect_probe(cur_g, DRIVER_EDGE_ROWS, facts)
+                facts = graph_facts(cur_g, DRIVER_EDGE_ROWS)
             if facts.nv is None:
-                facts = facts.update(nv=cur_g.num_vertices())
-        nv = facts.nv
+                remember(cur_g, nv=cur_g.num_vertices())
+        nv = graph_facts(cur_g).nv
         use_coloring = coloring and nv is not None and nv > min_graph_size
         use_local = False
-        if not use_coloring and wants_probe(facts, "louvain", run_dir, variant, tier):
-            if facts.arrays is None:
-                # probe-and-collect: under the bound the probe IS the
-                # local tail's input (skipped when the edge-row lower
-                # bound already exceeds it)
-                facts = collect_probe(cur_g, LOCAL_EDGE_ROWS, facts)
+        if not use_coloring:
+            facts = facts_for(cur_g, "louvain", run_dir, variant, tier)
             use_local = plan(facts, "louvain", run_dir, variant, tier) is Tier.LOCAL
         if use_local:
             # all remaining phases in one driver-local numpy loop: one
@@ -368,7 +367,6 @@ def louvain(
                     coloring_algo=coloring_algo,
                     run_dir=f"{run_dir}/phase{phase}" if run_dir else None,
                     tier=tier,
-                    facts=facts,
                 )
             else:
                 res = louvain_one_phase(
@@ -379,15 +377,13 @@ def louvain(
                     sample_hash=sample_hash,
                     early_terminate=early_terminate,
                     ftr_phase=phase if fast_track_resistance else None,
-                    # coarse phases skip the stats action (see coarse_facts)
-                    facts=coarse_facts,
                     tier=tier,
                     run_dir=f"{run_dir}/phase{phase}" if run_dir else None,
                 )
             curr_mod = res.modularity
             tot_itr += res.iterations
             if nv is None:
-                nv = res.facts.nv  # counted by the kernel's stats action
+                nv = graph_facts(cur_g).nv  # the kernel's stats action
 
             # driver-side continuation: a phase that ran entirely in numpy
             # over a complete driver edge copy hands back its arrays
@@ -508,16 +504,6 @@ def louvain(
         if (curr_mod - prev_mod) > threshold:
             with aqe_off(spark, small):
                 cur_g = coarsen_cut(cur_g, assign, num_clusters)
-            coarse_facts = Facts.of(
-                cur_g,
-                nv=num_clusters,
-                # a lower bound: coarsen keeps a self-loop row per cluster
-                edge_rows=num_clusters,
-                id_lo=0,
-                id_hi=num_clusters - 1,
-                two_m=res.facts.two_m or (coarse_facts and coarse_facts.two_m),
-                integer_weights=res.facts.integer_weights,
-            )
             phase += 1
         else:
             break

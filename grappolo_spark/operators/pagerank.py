@@ -26,14 +26,7 @@ from grappolo_spark.plans.iteration import (
     cut_lineage,
     promote_result,
 )
-from grappolo_spark.plans.tiers import (
-    LOCAL_EDGE_ROWS,
-    Facts,
-    Tier,
-    collect_probe,
-    plan,
-    wants_probe,
-)
+from grappolo_spark.plans.tiers import Tier, facts_for, plan
 
 
 def _slots(vs, ids):
@@ -122,13 +115,9 @@ def pagerank(
     """
     spark = g.edges.sparkSession
     variant = {"tol"} if tol is not None else set()
-    facts = Facts.of(g)
-    if wants_probe(facts, "pagerank", run_dir, variant, tier):
-        # probe-and-collect in ONE evaluation of the edge pipeline: under
-        # the bound the probe IS the local tier's input
-        facts = collect_probe(g, LOCAL_EDGE_ROWS, facts)
-        if plan(facts, "pagerank", run_dir, variant, tier) is Tier.LOCAL:
-            return _local_pagerank(spark, facts.arrays, alpha, max_iters, tol)
+    facts = facts_for(g, "pagerank", run_dir, variant, tier)
+    if plan(facts, "pagerank", run_dir, variant, tier) is Tier.LOCAL:
+        return _local_pagerank(spark, facts.arrays, alpha, max_iters, tol)
     wout = g.edges.groupBy(F.col("src").alias("v")).agg(F.sum("weight").alias("wout"))
     # a symmetrized table with no explicit vertices lists every vertex as
     # src, so the wout aggregation's key set IS the vertex set: base = wout

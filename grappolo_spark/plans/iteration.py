@@ -75,23 +75,6 @@ def _scratch_root(spark: SparkSession) -> str:
     return key
 
 
-def truncate_plan(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` and truncate its plan to a LogicalRDD leaf via an
-    eager ``localCheckpoint`` — the scratch-state variant of
-    :func:`cut_lineage` for bounded superstep loops.
-
-    No parquet round-trip (the dominant fixed cost of per-iteration cuts on
-    small state), no cache: persist-chaining nests InMemoryRelations whose
-    plans grow multiplicatively and whose unpersist recompiles dependents
-    (measured OOM/storms on this build). ``Observation`` metrics attached to
-    the plan fire during the checkpoint's materializing job. Blocks are
-    executor-local and die with the process — use :func:`cut_lineage` (or a
-    ``SuperstepRunner`` commit) for state that must survive, and interleave
-    a durable cut in very long loops to bound scratch-block accumulation.
-    """
-    return df.localCheckpoint(eager=True)
-
-
 def _gc_step(spark: SparkSession, st: dict, path: str) -> None:
     """Delete one rotated-out step: drop its catalog table (bucketed cuts
     register one) and remove the files."""

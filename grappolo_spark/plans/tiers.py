@@ -13,11 +13,11 @@ scale-safe:
                    the gather join (the edge cache is only scanned)
 - ``shuffle``      the O(V) state is shuffled; nothing is broadcast
 
-The operators fill a :class:`Facts` record from at most one probe — the
-``limit(bound + 1)`` collect of :func:`collect_probe` below its bound, else
-the operator's one stats aggregate — and call :func:`plan`, which owns the
-four bounds. A ``tier=`` argument on each operator forces one regime;
-forcing a tier the facts cannot support raises ``ValueError``.
+The operators read a :class:`Facts` record off the graph
+(:func:`graph_facts`: its flags plus a memo of the one bounded probe and of
+their own stats actions) and call :func:`plan`, which owns the four bounds.
+A ``tier=`` argument on each operator forces one regime; forcing a tier
+the facts cannot support raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -84,14 +84,14 @@ class Facts:
     """What an operator knows about its input graph before it runs.
 
     Unknown values stay ``None``/``False`` (the conservative reading).
-    ``arrays`` is ``(src, dst, weight, ids)`` — int64/float64 numpy columns
-    of the whole edge table plus its sorted endpoint ids — and is set only
-    when the probe came back under its bound; ``weight`` is ``None`` when
-    the probe skipped that column. ``edge_rows`` is exact when ``arrays``
-    is set and otherwise a lower bound: ``bound + 1`` after a probe came
-    back over its bound, or a coarse graph's cluster count (coarsening
-    keeps a self-loop row per cluster). :func:`collect_probe` reads it to
-    skip a collect that must fail."""
+    ``arrays`` is ``(src, dst, weight, ids)`` — read-only int64/float64
+    numpy columns of the whole edge table plus its sorted endpoint ids —
+    and is set only when the probe came back under its bound.
+    ``edge_rows`` is exact when ``arrays`` is set and otherwise a lower
+    bound: ``bound + 1`` after a probe came back over its bound, or a
+    coarse graph's cluster count (coarsening keeps a self-loop row per
+    cluster). :func:`collect_probe` reads it to skip a collect that must
+    fail."""
 
     edge_rows: int | None = None
     nv: int | None = None
@@ -102,6 +102,7 @@ class Facts:
     integer_weights: bool = False
     two_m: float | None = None
     dangling: bool = False  # some vertex has zero out-weight (pagerank)
+    max_degree: int | None = None  # most edge rows with one src (salting)
     unweighted: bool = False
     explicit_vertices: bool = False
     arrays: tuple | None = None
@@ -139,45 +140,85 @@ def from_arrays(g, src, dst, w) -> Facts:
     """Facts of a graph whose edge table was collected whole."""
     import numpy as np
 
-    ids = (
-        np.unique(np.concatenate([src, dst]))
-        if len(src)
-        else np.empty(0, dtype=np.int64)
+    ids = np.unique(np.concatenate([src, dst]))
+    known = dict(
+        edge_rows=len(src), arrays=(src, dst, w, ids), two_m=float(w.sum())
     )
-    known = dict(edge_rows=len(src), arrays=(src, dst, w, ids))
-    if len(ids):
-        known.update(id_lo=int(ids[0]), id_hi=int(ids[-1]))
-    if g.vertices is None:
+    if g.vertices is None:  # else the endpoints bound neither
         known["nv"] = len(ids)
-    if w is not None:
-        known["two_m"] = float(w.sum())
-        if not g.unweighted:
-            known["integer_weights"] = exact_sums(
-                np.abs(w).sum(), (w == np.rint(w)).all()
-            )
+        if len(ids):
+            known.update(id_lo=int(ids[0]), id_hi=int(ids[-1]))
+    if not g.unweighted:
+        known["integer_weights"] = exact_sums(
+            np.abs(w).sum(), (w == np.rint(w)).all()
+        )
     return Facts.of(g, **known)
 
 
-def collect_probe(g, bound: int, facts: Facts, weights: bool = True) -> Facts:
+def collect_probe(g, bound: int, facts: Facts) -> Facts:
     """The bounded probe: collect at most ``bound + 1`` edge rows in ONE
     evaluation of the edge pipeline. Under the bound the probe IS the
-    collect and the returned facts carry the arrays (plus the caller's
-    |V| when the arrays cannot give it); over it, ``facts`` with
-    ``edge_rows = bound + 1``. No action at all when ``facts.edge_rows``
-    already exceeds the bound."""
+    collect and the returned facts carry the arrays, read-only; over it,
+    ``facts`` with ``edge_rows = bound + 1``. No action at all when
+    ``facts.edge_rows`` already exceeds the bound."""
     import numpy as np
 
     if facts.edge_rows is not None and facts.edge_rows > bound:
         return facts
-    cols = ["src", "dst"] + (["weight"] if weights else [])
-    pdf = g.edges.select(*cols).limit(bound + 1).toPandas()
+    pdf = g.edges.select("src", "dst", "weight").limit(bound + 1).toPandas()
     if len(pdf) > bound:
         return facts.update(edge_rows=bound + 1)
-    w = pdf["weight"].to_numpy(np.float64) if weights else None
     probed = from_arrays(
-        g, pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64), w
+        g,
+        pdf["src"].to_numpy(np.int64),
+        pdf["dst"].to_numpy(np.int64),
+        pdf["weight"].to_numpy(np.float64),
     )
-    return probed if probed.nv is not None else probed.update(nv=facts.nv)
+    for a in probed.arrays:
+        a.flags.writeable = False
+    return probed
+
+
+# what a Graph memoizes: facts of its edge table, then |V| and the id
+# bounds, which cover its vertex table too and so hold only for the vertex
+# table they were learned with
+_EDGE_FACTS = ("edge_rows", "arrays", "two_m", "integer_weights", "max_degree")
+_MEMO = _EDGE_FACTS + ("nv", "id_lo", "id_hi")
+
+
+def _memo(g) -> dict:
+    if g._facts.get("vertices", g.vertices) is not g.vertices:
+        g._facts = {k: g._facts[k] for k in _EDGE_FACTS if k in g._facts}
+    g._facts["vertices"] = g.vertices
+    return g._facts
+
+
+def graph_facts(g, bound: int | None = None) -> Facts:
+    """What is known about ``g``: its flags, read from its fields on every
+    call, merged with its memo. With ``bound`` and no arrays in the memo
+    the bounded probe runs and its outcome is memoized: at most one
+    collect per graph and bound, none once the memo's edge-row lower bound
+    exceeds ``bound``. The memo's lifetime: see ``Graph``."""
+    facts = Facts.of(g, **{k: v for k, v in _memo(g).items() if k in _MEMO})
+    if bound is not None and facts.arrays is None:
+        probed = collect_probe(g, bound, facts)
+        remember(g, **{k: getattr(probed, k) for k in _MEMO})
+        facts = graph_facts(g)
+    return facts
+
+
+def facts_for(g, op, run_dir=None, variant=frozenset(), tier=None) -> Facts:
+    """``g``'s facts for ``op``, probed under :data:`LOCAL_EDGE_ROWS` while
+    the local tier is in play: under the bound the probe IS its input."""
+    facts = graph_facts(g)
+    if wants_probe(facts, op, run_dir, variant, tier):
+        facts = graph_facts(g, LOCAL_EDGE_ROWS)
+    return facts
+
+
+def remember(g, **known) -> None:
+    """Record in ``g``'s memo what an action learned (``None``: unknown)."""
+    _memo(g).update((k, v) for k, v in known.items() if v is not None)
 
 
 def driver_holds(nv: int | None) -> bool:

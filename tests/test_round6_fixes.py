@@ -75,11 +75,11 @@ def _louvain_rows(res):
 
 
 def test_louvain_hints_do_not_auto_narrow_unverified_ids(spark):
-    """Public caller passes facts (|V|, 2m) over ids far beyond int32 but
-    states no id bound, so ids32 must NOT engage — the run must match the
-    no-facts (stats-verified) run exactly."""
+    """A graph whose facts hold |V| and 2m over ids far beyond int32 but
+    no id bound skips the stats action, and ids32 must NOT engage — the
+    run must match the stats-verified run exactly."""
     from grappolo_spark.operators.louvain import louvain_one_phase
-    from grappolo_spark.plans.tiers import Facts
+    from grappolo_spark.plans.tiers import graph_facts, remember
 
     big = 1 << 31  # first id outside int32
     pairs = [(big + 1, big + 2), (big + 2, big + 3), (big + 1, big + 3),
@@ -87,9 +87,10 @@ def test_louvain_hints_do_not_auto_narrow_unverified_ids(spark):
     g = Graph.from_pairs(spark, pairs)
     two_m = g.edges.agg(F.sum("weight")).collect()[0][0]
     ref = louvain_one_phase(g, max_iters=2)
-    hinted = louvain_one_phase(
-        g, max_iters=2, facts=Facts.of(g, two_m=two_m, nv=5)
-    )
+    hinted_g = Graph.from_pairs(spark, pairs)
+    remember(hinted_g, two_m=two_m, nv=5)
+    hinted = louvain_one_phase(hinted_g, max_iters=2)
+    assert graph_facts(hinted_g).id_lo is None  # the stats action was skipped
     assert _louvain_rows(hinted) == _louvain_rows(ref)
 
 
@@ -207,14 +208,15 @@ def test_colored_phase_numpy_coloring_matches_spark_route(spark):
     """louvain_one_phase_colored via the numpy coloring + driver state
     build must equal the Spark coloring + Spark state build route, with
     the probe's driver edge copy (explicit vertices) and without one: a
-    caller that already saw more than DRIVER_EDGE_ROWS edge rows (the
+    graph already known to hold more than DRIVER_EDGE_ROWS edge rows (the
     dense phase-1 case) skips the probe, and e_xx is the Spark scan."""
     from grappolo_spark.operators import coloring as C
     from grappolo_spark.plans import tiers as T
     from grappolo_spark.sources.fixtures import karate
 
     g = karate(spark)
-    over_bound = T.Facts.of(g, nv=34, edge_rows=T.DRIVER_EDGE_ROWS + 1)
+    big = karate(spark)
+    T.remember(big, nv=34, edge_rows=T.DRIVER_EDGE_ROWS + 1)
     for cap in (8, 3):
         kw = dict(
             thresh=1e-6, max_iters=4, num_colors_cap=cap,
@@ -222,10 +224,10 @@ def test_colored_phase_numpy_coloring_matches_spark_route(spark):
         )
         res_np = C.louvain_one_phase_colored(g, **kw)
         res_sp = C.louvain_one_phase_colored(_with_explicit_vertices(g), **kw)
-        res_big = C.louvain_one_phase_colored(g, facts=over_bound, **kw)
+        res_big = C.louvain_one_phase_colored(big, **kw)
         assert res_np.tier is res_sp.tier is T.Tier.LOCAL
         assert res_big.tier is T.Tier.DRIVER_STATE
-        assert res_big.facts.arrays is None
+        assert T.graph_facts(big).arrays is None
         assert _phase_tuple(res_np) == _phase_tuple(res_sp), cap
         assert _phase_tuple(res_np) == _phase_tuple(res_big), cap
 
@@ -358,14 +360,16 @@ def test_multiphase_colored_big_edge_fallback_matches(spark, monkeypatch):
     falls back to the distinct-count job and the kernel to its Spark
     coloring and state build — same results as the driver-held route.
     Two ways in: explicit vertices, and a phase-1 graph above the probe
-    bound (simulated: its probe reports DRIVER_EDGE_ROWS + 1 rows). The
-    driver hands that record to the kernel, which must not probe again,
-    so phase 1 runs driver_state with the Spark e_xx scan."""
+    bound (simulated: its facts record DRIVER_EDGE_ROWS + 1 rows). Neither
+    the driver nor the kernel may then run the probe's collect, so phase 1
+    runs driver_state with the Spark e_xx scan."""
     from grappolo_spark.operators import multiphase as M
     from grappolo_spark.plans import tiers as T
     from grappolo_spark.sources.fixtures import karate
 
     g = karate(spark)
+    big = karate(spark)
+    T.remember(big, edge_rows=T.DRIVER_EDGE_ROWS + 1)
 
     def run(graph):
         r = M.louvain(
@@ -377,20 +381,20 @@ def test_multiphase_colored_big_edge_fallback_matches(spark, monkeypatch):
             sorted((x["v"], x["comm"]) for x in r.assignment.collect()),
         )
 
-    probes = []
+    collects = []
+    probe = T.collect_probe
 
-    def probe_over_bound_at_phase1(graph, bound, facts, weights=True):
-        probes.append(bound)
-        if graph is g:
-            return facts.update(edge_rows=bound + 1)
-        return T.collect_probe(graph, bound, facts, weights)
+    def counting_probe(graph, bound, facts):
+        if graph is big and not (facts.edge_rows or 0) > bound:
+            collects.append(bound)
+        return probe(graph, bound, facts)
 
     r_small, want = run(g)
     assert r_small.phase_history[0]["tier"] == "local"
     assert run(_with_explicit_vertices(g))[1] == want
-    monkeypatch.setattr(M, "collect_probe", probe_over_bound_at_phase1)
-    r_big, got = run(g)
-    assert probes[0] == T.DRIVER_EDGE_ROWS
+    monkeypatch.setattr(T, "collect_probe", counting_probe)
+    r_big, got = run(big)
+    assert collects == []
     assert r_big.phase_history[0]["tier"] == "driver_state"
     assert got == want
 

@@ -276,3 +276,20 @@ def test_no_gate_constants_or_probes_in_operators():
         if (v := _gate_violations(path.read_text()))
     }
     assert found == {}, found
+
+
+def test_no_probe_calls_in_operators():
+    """Operators read their facts through ``graph_facts``/``facts_for``,
+    which own the bounded probe: none calls ``collect_probe`` directly."""
+    found = {
+        path.name: node.lineno
+        for path in sorted(_OPERATORS.glob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if (isinstance(node, ast.Name) and node.id == "collect_probe")
+        or (isinstance(node, ast.Attribute) and node.attr == "collect_probe")
+        or (
+            isinstance(node, ast.alias)
+            and node.name.split(".")[-1] == "collect_probe"
+        )
+    }
+    assert found == {}, found
