@@ -495,12 +495,223 @@ def _multihash_colors_np(ids, s_idx, d_idx, nhash=2, nrounds=4, seed=999):
     return color
 
 
+def _distance_one_colors_np(ids, s_idx, d_idx, seed=12345, max_rounds=100):
+    """Numpy replay of :func:`distance_one_coloring` with its default
+    xxhash tie-break: identical colors (first-fit against neighbors
+    finalized in earlier rounds; the smaller ``(xxhash64(v, seed), v)``
+    ``src`` end of an equal-proposal edge loses). Arguments as in
+    :func:`_multihash_colors_np`. A vertex still pending after
+    ``max_rounds`` keeps -1 (Spark: null) and is in no color class."""
+    import numpy as np
+
+    from grappolo_spark.operators.louvain import _first_group_starts
+
+    assert 0 <= seed < (1 << 31), "numpy path needs an int literal"
+    n = len(ids)
+    h = _xxh64_int_lit_np(seed, _xxh64_long_np(ids, 42)).view(np.int64)
+    color = np.full(n, -1, dtype=np.int64)
+    for _ in range(max_rounds):
+        pending = color < 0
+        if not pending.any():
+            break
+        # distinct (v, neighbor color) pairs, sorted: in each v's run the
+        # colors 0, 1, 2, ... that sit at their own rank form the prefix
+        # whose length is the MEX
+        m = pending[s_idx] & ~pending[d_idx]
+        span = np.int64(max(int(color.max()) + 1, 1))
+        vc = np.unique(s_idx[m] * span + color[d_idx[m]])
+        v, c = vc // span, vc % span
+        starts = _first_group_starts(v)
+        rank = np.arange(len(v)) - np.repeat(starts, np.diff(np.append(starts, len(v))))
+        prop = np.where(pending, np.bincount(v[c == rank], minlength=n), -1)
+        clash = pending[s_idx] & pending[d_idx] & (prop[s_idx] == prop[d_idx])
+        cs, cd = s_idx[clash], d_idx[clash]
+        lose = (h[cs] < h[cd]) | ((h[cs] == h[cd]) & (ids[cs] < ids[cd]))
+        win = pending.copy()
+        win[cs[lose]] = False
+        color[win] = prop[win]
+    return color
+
+
+def _palette(all_colors, num_colors_cap):
+    """(color classes in sweep order, the color every later color merges
+    into or ``None``) from the sorted distinct colors. Past the cap (the
+    reference bounds colors by MaxDegree, `runMultiPhaseColoring.cpp:68-87`)
+    the overflow merges into ONE final class whose sub-sweep is Jacobi, so
+    every vertex stays eligible."""
+    if len(all_colors) <= num_colors_cap:
+        return list(all_colors), None
+    overflow_from = all_colors[num_colors_cap - 1]
+    return list(all_colors[: num_colors_cap - 1]) + [overflow_from], overflow_from
+
+
+def _colors_np(coloring_algo, ids, s_idx, d_idx, num_colors_cap):
+    """(colors over the sorted ``ids``, color classes) in numpy, identical
+    to the Spark route; ``auto`` resolves from the max non-self out-degree
+    as :func:`select_coloring_algo` does. ``s_idx``/``d_idx``: every edge
+    row's endpoint positions in ``ids``."""
+    import numpy as np
+
+    nonself = s_idx != d_idx
+    s, d = s_idx[nonself], d_idx[nonself]
+    if coloring_algo == "auto":
+        maxdeg = int(np.bincount(s).max()) if len(s) else 0
+        coloring_algo = "multihash" if maxdeg + 1 > num_colors_cap else "distance_one"
+    multihash = coloring_algo == "multihash"
+    colors = (_multihash_colors_np if multihash else _distance_one_colors_np)(ids, s, d)
+    classes, overflow_from = _palette(
+        [int(c) for c in np.unique(colors[colors >= 0])], num_colors_cap
+    )
+    if overflow_from is not None:
+        colors = np.where(colors >= overflow_from, overflow_from, colors)
+    return colors, classes
+
+
+def _colored_kernel_np(s, d, w, nv, colors, classes, thresh, lower, max_iters):
+    """Colored twin of ``louvain._local_kernel`` (ids 0..nv-1, in the
+    order of the vertex ids they stand for); same return. Each class step
+    replays the Spark class job (edges ⋈ class state ⋈ dst state →
+    groupBy(v, cand) → :func:`_class_best_moves`) with identical
+    expressions; under integer weights (the local tier's gate) every sum
+    is exact, so it is bit-identical to the Spark plan (pinned by
+    test_colored_class_sweep_numpy_matches_spark)."""
+    import numpy as np
+
+    from grappolo_spark.operators.louvain import _first_group_starts
+
+    two_m = float(w.sum())
+    if two_m == 0.0:
+        return None, 0.0, 0
+    const = 1.0 / two_m
+    deg = np.bincount(s, weights=w, minlength=nv)
+    sl = s == d
+    selfloop = np.bincount(s[sl], weights=w[sl], minlength=nv)
+    comm = np.arange(nv, dtype=np.int64)
+
+    # pre-partition the edge arrays by the src's color ONCE (colors are
+    # static through the sweep): each class gather then touches only its
+    # own slice instead of paying four full-width masked gathers per
+    # class per iteration
+    csrc = colors[s]
+    csort = np.argsort(csrc, kind="stable")
+    csrc_sorted = csrc[csort]
+    class_edges = {}
+    for cls in classes:
+        lo = np.searchsorted(csrc_sorted, cls, side="left")
+        hi = np.searchsorted(csrc_sorted, cls, side="right")
+        idx = csort[lo:hi]
+        class_edges[int(cls)] = (s[idx], d[idx], w[idx])
+
+    prev_mod = -1.0
+    prev_comm = comm.copy()
+    num_itrs = 0
+    for it in range(max_iters):
+        num_itrs = it + 1
+        for cls in classes:
+            # a class with no out-edges gathers nothing (the Spark inner
+            # join would be empty) and is skipped outright
+            vg_e, di_c, ew_c = class_edges[int(cls)]
+            if not len(vg_e):
+                continue
+            cu, inv = np.unique(comm, return_inverse=True)
+            cdeg = np.bincount(inv, weights=deg)
+            csize = np.bincount(inv).astype(np.int64)
+            ci_e = inv[di_c]
+            key = vg_e * np.int64(len(cu)) + ci_e
+            uk, uinv = np.unique(key, return_inverse=True)
+            wsum = np.bincount(uinv, weights=ew_c)
+            vg = uk // len(cu)
+            ci = uk % len(cu)
+            cand = cu[ci]
+            ay = cdeg[ci]
+            comm_v = comm[vg]
+            is_own = cand == comm_v
+            # score/ns replicate the min_by key: own community sinks
+            # to +inf, ties on the score break to the SMALLER cand
+            score = wsum - deg[vg] * ay * const
+            ns = np.where(is_own, np.inf, -score)
+            order = np.lexsort((cand, ns, vg))
+            win = order[_first_group_starts(vg[order])]
+            w_own = np.zeros(nv, dtype=np.float64)
+            own_rows = np.flatnonzero(is_own)
+            w_own[vg[own_rows]] = wsum[own_rows]
+            wv = vg[win]
+            keep = cand[win] != comm[wv]
+            win = win[keep]
+            wv = wv[keep]
+            eix = w_own[wv] - selfloop[wv]
+            ax = cdeg[inv[wv]] - deg[wv]
+            gain = (
+                2.0 * (wsum[win] - eix)
+                - 2.0 * deg[wv] * (ay[win] - ax) * const
+            )
+            blocked = (
+                (csize[ci[win]] == 1)
+                & (csize[inv[wv]] == 1)
+                & (cand[win] > comm[wv])
+            )
+            apply_m = (gain > 0) & ~blocked
+            comm[wv[apply_m]] = cand[win][apply_m]
+
+        # full-scan modularity after the sweep
+        # (`parallelLouvainWithColoring.cpp:230-246`): e_xx as one mask-sum
+        # and a2_x over the community degrees, both exact
+        e_xx = float(w[comm[s] == comm[d]].sum())
+        cu, inv = np.unique(comm, return_inverse=True)
+        cdeg = np.bincount(inv, weights=deg)
+        a2_x = float((cdeg * cdeg).sum())
+        curr_mod = e_xx * const - a2_x * const * const
+        if (curr_mod - prev_mod) < thresh:
+            break
+        prev_mod = curr_mod if curr_mod > lower else lower
+        prev_comm = comm.copy()
+    return prev_comm, prev_mod, num_itrs
+
+
+def _edge_positions(vs, es, ed):
+    """Positions of the endpoints ``es``/``ed`` in the id array ``vs``, or
+    ``None`` when one is missing (a vertex an injected coloring missed)."""
+    import numpy as np
+
+    if not len(vs):
+        return None
+    order = np.argsort(vs)
+    svs = vs[order]
+    is_ = np.searchsorted(svs, es).clip(max=len(svs) - 1)
+    id_ = np.searchsorted(svs, ed).clip(max=len(svs) - 1)
+    if bool((svs[is_] == es).all()) and bool((svs[id_] == ed).all()):
+        return order[is_], order[id_]
+    return None
+
+
+def _class_moves(edges, state_src, dst_enr, const: float):
+    """One color class's moves (driver_state and broadcast tiers): the
+    pre-enriched class state and dst info join the src-partitioned edge
+    cache as broadcasts, so the per-(v, cand) aggregation runs in place
+    and lifts every per-v and per-cand constant via first()."""
+    counter = (
+        edges.join(F.broadcast(state_src), "src")
+        .join(F.broadcast(dst_enr), "dst")
+        .groupBy(F.col("src").alias("v"), F.col("cand"))
+        .agg(
+            F.sum("weight").alias("wsum"),
+            F.first("ay").alias("ay"),
+            F.first("csize_cand").alias("csize_cand"),
+            F.first("comm").alias("comm"),
+            F.first("deg").alias("deg"),
+            F.first("selfloop").alias("selfloop"),
+            F.first("cdeg_cur").alias("cdeg_cur"),
+            F.first("csize_cur").alias("csize_cur"),
+        )
+    )
+    return _class_best_moves(counter, None, None, const)
+
+
 def _colored_small_state(
     spark, edges, pdf, classes, const, arrays, thresh, lower, max_iters,
-    np_sweep, eidx=None,
 ):
     """Colored Gauss-Seidel sweeps with driver-held community state (the
-    local and driver_state tiers).
+    driver_state tier).
 
     Same per-class semantics as the distributed loop below — the gather
     (edges ⋈ movers ⋈ assignment → groupBy(v, cand)) and the winner/gain
@@ -526,49 +737,9 @@ def _colored_small_state(
     pos = {int(v): i for i, v in enumerate(vs)}
 
     # driver-held e_xx: map edge endpoints to state positions once; any
-    # endpoint outside the state (a vertex an injected coloring missed)
-    # falls back to the Spark scan and the Spark class jobs — silent
-    # misindexing is never an option. ``eidx`` lets the numpy-coloring
-    # caller hand over the positions it already computed (its pdf rows ARE
-    # the sorted id array), skipping the two full-width searchsorted passes.
-    si = di = ew = None
-    if eidx is not None:
-        si, di = eidx
-        ew = arrays[2]
-    elif arrays is not None and len(vs):
-        es, ed, ew_ = arrays[:3]
-        order = np.argsort(vs)
-        svs = vs[order]
-        is_ = np.searchsorted(svs, es).clip(max=len(svs) - 1)
-        id_ = np.searchsorted(svs, ed).clip(max=len(svs) - 1)
-        if bool((svs[is_] == es).all()) and bool((svs[id_] == ed).all()):
-            si, di, ew = order[is_], order[id_], ew_
-
-    # full-numpy class sweep (the local tier, which the planner admits only
-    # on the integer_weights fact): with a valid driver edge copy every
-    # sum below (wsum per (v, cand), cdeg, e_xx) is exact regardless of
-    # aggregation order, so the numpy replay of the class job is
-    # bit-identical to the Spark plan. Real-valued weights keep the Spark
-    # class jobs (their sums are order-sensitive, and the Spark plan is the
-    # contract).
-    np_sweep = np_sweep and si is not None
-    from grappolo_spark.operators.louvain import _first_group_starts
-
-    class_edges = None
-    if np_sweep:
-        # pre-partition the edge arrays by the src's color ONCE (colors
-        # are static through the sweep): each class gather then touches
-        # only its own slice instead of paying four full-width masked
-        # gathers per class per iteration
-        csrc = color[si]
-        csort = np.argsort(csrc, kind="stable")
-        csrc_sorted = csrc[csort]
-        class_edges = {}
-        for cls in classes:
-            lo = np.searchsorted(csrc_sorted, cls, side="left")
-            hi = np.searchsorted(csrc_sorted, cls, side="right")
-            idx = csort[lo:hi]
-            class_edges[int(cls)] = (si[idx], di[idx], ew[idx])
+    # endpoint outside the state falls back to the Spark scan
+    ew = arrays[2] if arrays is not None else None
+    pos_e = _edge_positions(vs, *arrays[:2]) if arrays is not None else None
 
     prev_mod = -1.0
     prev_comm = comm.copy()
@@ -576,72 +747,16 @@ def _colored_small_state(
     for it in range(max_iters):
         num_itrs = it + 1
         for cls in classes:
-            if np_sweep:
-                # numpy replay of the class job (edges ⋈ class state ⋈
-                # dst state → groupBy(v, cand) → _class_best_moves):
-                # identical expressions, snapshot-at-class-start info,
-                # moves applied after the class, exactly like the collect
-                # loop below. Pinned vs the Spark route by
-                # test_colored_class_sweep_numpy_matches_spark. A class
-                # with no out-edges gathers nothing (the Spark inner join
-                # would be empty) and is skipped outright.
-                vg_e, di_c, ew_c = class_edges[int(cls)]
-                if not len(vg_e):
-                    continue
-                cu, inv = np.unique(comm, return_inverse=True)
-                cdeg = np.bincount(inv, weights=deg)
-                csize = np.bincount(inv).astype(np.int64)
-                ci_e = inv[di_c]
-                key = vg_e * np.int64(len(cu)) + ci_e
-                uk, uinv = np.unique(key, return_inverse=True)
-                wsum = np.bincount(uinv, weights=ew_c)
-                vg = uk // len(cu)
-                ci = uk % len(cu)
-                cand = cu[ci]
-                ay = cdeg[ci]
-                comm_v = comm[vg]
-                is_own = cand == comm_v
-                # score/ns replicate the min_by key: own community sinks
-                # to +inf, ties on the score break to the SMALLER cand
-                score = wsum - deg[vg] * ay * const
-                ns = np.where(is_own, np.inf, -score)
-                order = np.lexsort((cand, ns, vg))
-                win = order[_first_group_starts(vg[order])]
-                w_own = np.zeros(len(vs), dtype=np.float64)
-                own_rows = np.flatnonzero(is_own)
-                w_own[vg[own_rows]] = wsum[own_rows]
-                wv = vg[win]
-                keep = cand[win] != comm[wv]
-                win = win[keep]
-                wv = wv[keep]
-                eix = w_own[wv] - selfloop[wv]
-                ax = cdeg[inv[wv]] - deg[wv]
-                gain = (
-                    2.0 * (wsum[win] - eix)
-                    - 2.0 * deg[wv] * (ay[win] - ax) * const
-                )
-                blocked = (
-                    (csize[ci[win]] == 1)
-                    & (csize[inv[wv]] == 1)
-                    & (cand[win] > comm[wv])
-                )
-                apply_m = (gain > 0) & ~blocked
-                comm[wv[apply_m]] = cand[win][apply_m]
-                continue
             mask = color == cls
             if not mask.any():
                 continue
             cu, inv = np.unique(comm, return_inverse=True)
             cdeg = np.bincount(inv, weights=deg)
             csize = np.bincount(inv).astype(np.int64)
-            # TWO broadcast LocalRelations per class (was four: movers /
-            # a_dst / state0 / cinfo_cand). The mover state doubles as the
-            # src filter (inner join on src == mover v), and the dst side
-            # carries its community's (ay, csize_cand) inline, so the
-            # per-(v, cand) aggregation below can lift every per-v and
-            # per-cand constant via first() — no post-aggregation joins,
-            # roughly half the plan nodes per sequential class job (the
-            # class-job cost at small |V| is driver plan-compile, not data).
+            # TWO broadcast LocalRelations per class: the mover state
+            # doubles as the src filter, and the dst side carries its
+            # community's (ay, csize_cand) inline (the class-job cost at
+            # small |V| is driver plan-compile, not data)
             state_src = spark.createDataFrame(
                 pd.DataFrame(
                     {
@@ -667,22 +782,7 @@ def _colored_small_state(
                 ),
                 "dst long, cand long, ay double, csize_cand long",
             )
-            counter = (
-                edges.join(F.broadcast(state_src), "src")
-                .join(F.broadcast(dst_enr), "dst")
-                .groupBy(F.col("src").alias("v"), F.col("cand"))
-                .agg(
-                    F.sum("weight").alias("wsum"),
-                    F.first("ay").alias("ay"),
-                    F.first("csize_cand").alias("csize_cand"),
-                    F.first("comm").alias("comm"),
-                    F.first("deg").alias("deg"),
-                    F.first("selfloop").alias("selfloop"),
-                    F.first("cdeg_cur").alias("cdeg_cur"),
-                    F.first("csize_cur").alias("csize_cur"),
-                )
-            )
-            best = _class_best_moves(counter, None, None, const)
+            best = _class_moves(edges, state_src, dst_enr, const)
             for r in best.collect():
                 if not r["blocked"]:
                     comm[pos[r["v"]]] = r["cand"]
@@ -690,11 +790,11 @@ def _colored_small_state(
         # full-scan modularity after the sweep: e_xx from the edge table
         # (same expression as the distributed loop), a2_x in numpy
         # (integer-exact sum of squared community degrees). With a
-        # driver-held edge copy (si/di set) the e_xx reduction is one numpy
-        # mask-sum — exact for integer-valued weights, the same argument
-        # that puts a2_x in numpy — instead of a Spark job per iteration.
-        if si is not None:
-            e_xx = float(ew[comm[si] == comm[di]].sum()) if len(ew) else 0.0
+        # driver-held edge copy the e_xx reduction is one numpy mask-sum
+        # instead of a Spark job per iteration.
+        if pos_e is not None:
+            si, di = pos_e
+            e_xx = float(ew[comm[si] == comm[di]].sum())
         else:
             a_src = spark.createDataFrame(
                 pd.DataFrame({"src": vs, "cs": comm}), "src long, cs long"
@@ -722,14 +822,8 @@ def _colored_small_state(
         pd.DataFrame({"v": vs, "comm": prev_comm}), "v long, comm long"
     )
     return LouvainPhaseResult(
-        assignment=out,
-        modularity=prev_mod,
-        iterations=num_itrs,
-        tier=Tier.LOCAL if np_sweep else Tier.DRIVER_STATE,
-        # exact driver mirror (only when the whole sweep ran in numpy over
-        # a complete driver edge copy): lets the multiphase driver finish
-        # renumber/coarsen/tail/fold without another Spark job
-        local_np=(vs, prev_comm, si, di, ew) if np_sweep else None,
+        assignment=out, modularity=prev_mod, iterations=num_itrs,
+        tier=Tier.DRIVER_STATE,
     )
 
 
@@ -753,8 +847,14 @@ def louvain_one_phase_colored(
     The tier (:mod:`grappolo_spark.plans.tiers`) picks the sweep:
 
     - **local** (<= 4M edge rows, |V| <= 100k, integer-valued weights):
-      coloring and class sweeps replayed in numpy over the probe's driver
-      edge copy — exact, so bit-identical to the Spark class jobs.
+      the coloring (multihash or distance-one, :func:`_colors_np`) and the
+      class sweeps (:func:`_colored_kernel_np`) replayed in numpy over the
+      probe's driver edge copy — exact, so bit-identical to the Spark
+      colorings and class jobs. With explicit vertices or an injected
+      ``colors`` the coloring and the state come from Spark and only the
+      sweeps run in numpy. A multiphase run whose phase meets this gate
+      runs every remaining phase in its numpy loop instead
+      (``louvain.louvain_local_tail``).
     - **driver_state** (|V| <= 100k): community state in numpy, one Spark
       class job per color class over the src-partitioned edge cache.
     - **broadcast** (|V| <= 5M): the distributed loop with both O(V) sides
@@ -849,63 +949,33 @@ def louvain_one_phase_colored(
         return LouvainPhaseResult(empty, 0.0, 0, tier=tier)
     const = 1.0 / two_m
 
-    colors_np = None  # (ids array, int32 colors) when colored in numpy
-    if colors is None and driver_tier and facts.arrays is not None and g.vertices is None:
-        # numpy coloring path: zero Spark jobs for the whole palette —
-        # the multihash hash is the bit-exact Spark xxhash64 replay
-        # (pinned by test_multihash_numpy_matches_spark), so the colors,
-        # the class list and every later move are identical
-        import numpy as np
+    import numpy as np
+    import pandas as pd
 
-        es, ed, _, ids = facts.arrays
+    colors_np = None  # int colors over the probe's ids, when colored in numpy
+    if colors is None and driver_tier and facts.arrays is not None and g.vertices is None:
+        # numpy coloring: zero Spark jobs for the whole palette — both
+        # colorings are bit-exact replays of the Spark ones (pinned by
+        # test_multihash_numpy_matches_spark and
+        # test_distance_one_numpy_matches_spark), so the colors, the class
+        # list and every later move are identical
+        es, ed, ew, ids = facts.arrays
         s_idx = np.searchsorted(ids, es)
         d_idx = np.searchsorted(ids, ed)
-        nonself = s_idx != d_idx
-        if coloring_algo == "auto":
-            # select_coloring_algo's max NON-SELF out-degree, in numpy
-            maxdeg = (
-                int(np.bincount(s_idx[nonself], minlength=len(ids)).max())
-                if nonself.any()
-                else 0
-            )
-            coloring_algo = (
-                "multihash" if maxdeg + 1 > num_colors_cap else "distance_one"
-            )
-        if coloring_algo == "multihash":
-            colors_np = (
-                ids,
-                _multihash_colors_np(ids, s_idx[nonself], d_idx[nonself]),
-            )
-    if colors is None and colors_np is None:
-        if coloring_algo == "auto":
-            coloring_algo = select_coloring_algo(g, num_colors_cap)
-        if coloring_algo == "multihash":
-            colors = multihash_coloring(g)
-        else:
-            colors = distance_one_coloring(g)
-
-    if colors_np is not None:
-        import numpy as np
-
-        all_colors = [int(c) for c in np.unique(colors_np[1])]
+        colors_np, classes = _colors_np(
+            coloring_algo, ids, s_idx, d_idx, num_colors_cap
+        )
     else:
-        all_colors = [
-            r.color
-            for r in colors.select("color").distinct().orderBy("color").collect()
-        ]
-    if len(all_colors) > num_colors_cap:
-        # hub graphs can exceed the palette cap (reference bounds colors by
-        # MaxDegree, `runMultiPhaseColoring.cpp:68-87`); rather than freeze
-        # the overflow vertices, merge all colors past the cap into ONE
-        # final class — within it vertices may be adjacent, so that
-        # sub-sweep is Jacobi (simultaneous moves vs the current state,
-        # exactly the plain kernel's semantics); every vertex stays eligible
-        overflow_from = all_colors[num_colors_cap - 1]
-        if colors_np is not None:
-            cvals = colors_np[1].copy()
-            cvals[cvals >= overflow_from] = overflow_from
-            colors_np = (colors_np[0], cvals)
-        else:
+        if colors is None:
+            if coloring_algo == "auto":
+                coloring_algo = select_coloring_algo(g, num_colors_cap)
+            if coloring_algo == "multihash":
+                colors = multihash_coloring(g)
+            else:
+                colors = distance_one_coloring(g)
+        palette = colors.select("color").distinct().orderBy("color").collect()
+        classes, overflow_from = _palette([r.color for r in palette], num_colors_cap)
+        if overflow_from is not None:
             colors = colors.select(
                 "v",
                 F.when(F.col("color") >= overflow_from, F.lit(overflow_from))
@@ -913,69 +983,69 @@ def louvain_one_phase_colored(
                 .cast("int")
                 .alias("color"),
             )
-        classes = all_colors[: num_colors_cap - 1] + [overflow_from]
-    else:
-        classes = all_colors
-
-    selfw = (
-        edges.filter(F.col("src") == F.col("dst"))
-        .groupBy(F.col("src").alias("v"))
-        .agg(F.sum("weight").alias("selfloop"))
-    )
-
-    eidx = None
-    if colors_np is not None:
-        # state built driver-side from the probe's edge copy: degrees and
-        # self-loop weights via bincount (exact for integer-valued
-        # weights; real weights may differ from the Spark sum order in
-        # the last ulp — the documented small-path caveat), colors
-        # attached positionally. No state join jobs.
-        import numpy as np
-        import pandas as pd
-
-        es, ed, ew, ids = facts.arrays
-        cvals = colors_np[1]
-        # s_idx/d_idx survive from the coloring block above (same ids)
-        deg_np = np.bincount(s_idx, weights=ew, minlength=len(ids))
-        sl_mask = es == ed
-        self_np = np.bincount(
-            s_idx[sl_mask], weights=ew[sl_mask], minlength=len(ids)
+        selfw = (
+            edges.filter(F.col("src") == F.col("dst"))
+            .groupBy(F.col("src").alias("v"))
+            .agg(F.sum("weight").alias("selfloop"))
         )
-        probe = pd.DataFrame(
-            {
-                "v": ids,
-                "comm": ids,
-                "deg": deg_np,
-                "selfloop": self_np,
-                "color": cvals,
-            }
+        # one combined per-vertex state table: (v, comm, deg, selfloop, color)
+        state = (
+            vdeg.join(selfw, "v", "left")
+            .join(colors, "v")
+            .select(
+                "v",
+                F.col("v").alias("comm"),
+                "deg",
+                F.coalesce("selfloop", F.lit(0.0)).alias("selfloop"),
+                "color",
+            )
         )
-        eidx = (s_idx, d_idx)
-
-    # one combined per-vertex state table: (v, comm, deg, selfloop, color)
-    state = (
-        vdeg.join(selfw, "v", "left")
-        .join(colors, "v")
-        .select(
-            "v",
-            F.col("v").alias("comm"),
-            "deg",
-            F.coalesce("selfloop", F.lit(0.0)).alias("selfloop"),
-            "color",
-        )
-        if colors_np is None
-        else None
-    )
     if driver_tier:
+        probe = pos = None
+        if colors_np is not None:
+            pos = s_idx, d_idx
+        else:
+            probe = state.toPandas()
+            if tier is Tier.LOCAL:
+                probe = probe.sort_values("v", ignore_index=True)
+                ids = probe["v"].to_numpy(np.int64)
+                colors_np = probe["color"].to_numpy()
+                es, ed, ew = facts.arrays[:3]
+                pos = _edge_positions(ids, es, ed)
+        vdeg.unpersist()
+        if tier is Tier.LOCAL and pos is not None:
+            # the whole sweep in numpy over the probe's edge copy, in the
+            # index space of the sorted vertex ids (community ids keep
+            # their order, so every tie-break is unchanged)
+            edges.unpersist()
+            comm, q, iters = _colored_kernel_np(
+                *pos, ew, len(ids), colors_np, classes, thresh, lower, max_iters
+            )
+            out = spark.createDataFrame(
+                pd.DataFrame({"v": ids, "comm": ids[comm]}), "v long, comm long"
+            )
+            return LouvainPhaseResult(out, q, iters, tier=Tier.LOCAL)
+        if probe is None:
+            # state from the probe's edge copy (real weights may differ
+            # from the Spark sum order in the last ulp)
+            sl = s_idx == d_idx
+            probe = pd.DataFrame(
+                {
+                    "v": ids,
+                    "comm": ids,
+                    "deg": np.bincount(s_idx, weights=ew, minlength=len(ids)),
+                    "selfloop": np.bincount(
+                        s_idx[sl], weights=ew[sl], minlength=len(ids)
+                    ),
+                    "color": colors_np,
+                }
+            )
         # driver-held state: per-class parquet cuts replaced by lean
         # winner collects (see _colored_small_state)
-        if colors_np is None:
-            probe = state.toPandas()
-        vdeg.unpersist()
         with aqe_off(spark, tier is Tier.DRIVER_STATE):
             res = _colored_small_state(
-                spark, edges, probe, classes, const, facts.arrays, thresh, lower,
-                max_iters, np_sweep=tier is Tier.LOCAL, eidx=eidx,
+                spark, edges, probe, classes, const, facts.arrays, thresh,
+                lower, max_iters,
             )
         edges.unpersist()
         return res
@@ -998,13 +1068,9 @@ def louvain_one_phase_colored(
             )
             movers = state.filter(F.col("color") == cls)
             if tier is Tier.BROADCAST:
-                # src-keyed broadcast gather: both O(V) sides
-                # broadcast pre-enriched — the SAME counter/agg shape as
-                # the small-state class job (whose bit parity vs this
-                # loop's shuffle shape is already pinned), so the
-                # per-class aggregation runs in place over the
-                # src-partitioned cache with zero exchanges and
-                # _class_best_moves needs no post-aggregation joins.
+                # src-keyed broadcast gather: both O(V) sides broadcast
+                # pre-enriched into the driver_state tier's class job
+                # (_class_moves), zero exchanges per class.
                 # Measured at 11.7M edges / 160k vertices (adjacent warm
                 # pairs): 85.4/87.6 vs 92.7/89.6 shuffle — a consistent
                 # but modest win; the per-class floor there is the
@@ -1031,22 +1097,7 @@ def louvain_one_phase_colored(
                     F.col("cdeg").alias("ay"),
                     F.col("csize").alias("csize_cand"),
                 )
-                counter = (
-                    edges.join(F.broadcast(state_src), "src")
-                    .join(F.broadcast(dst_enr), "dst")
-                    .groupBy(F.col("src").alias("v"), F.col("cand"))
-                    .agg(
-                        F.sum("weight").alias("wsum"),
-                        F.first("ay").alias("ay"),
-                        F.first("csize_cand").alias("csize_cand"),
-                        F.first("comm").alias("comm"),
-                        F.first("deg").alias("deg"),
-                        F.first("selfloop").alias("selfloop"),
-                        F.first("cdeg_cur").alias("cdeg_cur"),
-                        F.first("csize_cur").alias("csize_cur"),
-                    )
-                )
-                best = _class_best_moves(counter, None, None, const)
+                best = _class_moves(edges, state_src, dst_enr, const)
             else:
                 a_dst = state.select(
                     F.col("v").alias("dst"), F.col("comm").alias("comm_dst")

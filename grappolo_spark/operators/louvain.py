@@ -60,7 +60,6 @@ from grappolo_spark.plans.tiers import (
     aqe_off,
     driver_holds,
     exact_sums,
-    from_arrays,
     graph_facts,
     plan,
     remember,
@@ -153,11 +152,6 @@ class LouvainPhaseResult:
     modularity: float  # prevMod, as returned by the reference kernel
     iterations: int
     tier: Tier | None = None  # the tier the phase ran in
-    # driver-held mirror of the phase, set ONLY by exact driver-side
-    # kernels over a complete driver edge copy: (ids sorted, comm over
-    # ids, src_pos, dst_pos, weight). Lets the multiphase driver continue
-    # renumber/coarsen/tail/fold in numpy with zero further Spark jobs.
-    local_np: tuple | None = None
 
 
 def _singleton_sweep_best(edges: DataFrame, vdeg: DataFrame, const: float) -> DataFrame:
@@ -220,60 +214,6 @@ def smart_init_assignment(g: Graph) -> DataFrame:
         .join(best, "v", "left")
         .select("v", F.coalesce("cand", F.col("v")).cast("long").alias("comm"))
     )
-
-
-def louvain_one_phase_local(
-    g: Graph,
-    thresh: float = 1e-6,
-    lower: float = -1.0,
-    max_iters: int = 1000,
-    smart_init: bool = False,
-) -> LouvainPhaseResult:
-    """The SAME Jacobi kernel, executed driver-locally in numpy.
-
-    Multi-phase coarsening shrinks the graph geometrically; past phase 1-2
-    the coarse graph is a few thousand rows and every distributed superstep
-    is pure fixed overhead (2 Spark jobs for microseconds of math). This
-    kernel collects the edge table once and replays the identical
-    iteration: same gather, same gain ``2*(eiy−eix) − 2*deg*(ay−ax)/2m``,
-    same (gain desc, cand asc) tie-break, same community-id swap
-    protection, same pre-move modularity and termination — the counterpart
-    of the reference keeping later phases hot in cache
-    (`runMultiPhaseBasic.cpp:52-170`). With integer-valued weights (all
-    coarse graphs built from count weights) the arithmetic is exact, so
-    results are bit-identical to the distributed kernel; with real weights
-    partial-sum order may differ in the last ulp (documented).
-    Plain kernel only — callers fall back to the distributed path for
-    sampling / early-termination / FTR / coloring variants.
-    """
-    import numpy as np
-
-    # one Arrow transfer (collect() walks py4j row objects — ~10x slower)
-    pdf = g.edges.select("src", "dst", "weight").toPandas()
-    src, dst, w, ids = from_arrays(
-        g, *(pdf[c].to_numpy() for c in ("src", "dst", "weight"))
-    ).arrays
-    spark = g.edges.sparkSession
-    if len(src) == 0:
-        return LouvainPhaseResult(
-            spark.createDataFrame([], "v long, comm long"), 0.0, 0
-        )
-    s = np.searchsorted(ids, src)
-    d = np.searchsorted(ids, dst)
-    prev_comm, prev_mod, num_itrs = _local_kernel(
-        s, d, w, len(ids), g.directed, thresh, lower, max_iters,
-        smart_init=smart_init,
-    )
-    if prev_comm is None:
-        return LouvainPhaseResult(
-            spark.createDataFrame([], "v long, comm long"), 0.0, 0
-        )
-    import pandas as pd
-
-    out = spark.createDataFrame(
-        pd.DataFrame({"v": ids, "comm": ids[prev_comm]}), "v long, comm long"
-    )
-    return LouvainPhaseResult(out, prev_mod, num_itrs)
 
 
 def _first_group_starts(sorted_arr):
@@ -420,50 +360,6 @@ def _local_kernel(s, d, w, nv, directed, thresh, lower, max_iters,
     return prev_comm, prev_mod, num_itrs
 
 
-def louvain_local_tail(
-    g: Graph,
-    arrays: tuple,
-    threshold: float = 1e-6,
-    curr_mod: float = -1.0,
-    phase_start: int = 1,
-    tot_itr_start: int = 0,
-    max_phases: int = 200,
-    max_total_iters: int = 100_000,
-    smart_init: bool = False,
-):
-    """Run ALL remaining multiphase phases driver-locally over the probe's
-    collected ``(src, dst, weight, ids)`` arrays: one createDataFrame,
-    zero intermediate Spark jobs — the multiphase driver's local tier.
-
-    Exact mirror of the distributed multiphase loop (kernel → min-member
-    renumber → C_orig fold → coarsen with zero-weight self-loop
-    placeholders → gain check, `runMultiPhaseBasic.cpp:52-170`), in numpy
-    index space. Returns (assignment DF over g's vertex ids with dense
-    community labels, prev_mod, num_clusters, phase, tot_itr, history).
-    """
-    import numpy as np
-    import pandas as pd
-
-    spark = g.edges.sparkSession
-    src, dst, ww, ids = arrays
-    s = np.searchsorted(ids, src)
-    d = np.searchsorted(ids, dst)
-    nv0 = len(ids)
-
-    c_orig, prev_mod, num_clusters, phase, tot_itr, history = _local_tail_np(
-        s, d, ww, nv0, g.directed, threshold, curr_mod, phase_start,
-        tot_itr_start, max_phases, max_total_iters, smart_init,
-    )
-
-    if nv0:
-        out = spark.createDataFrame(
-            pd.DataFrame({"v": ids, "comm": c_orig}), "v long, comm long"
-        )
-    else:
-        out = spark.createDataFrame([], "v long, comm long")
-    return out, prev_mod, num_clusters, phase, tot_itr, history
-
-
 def _coarsen_np(assign, s, d, w, k):
     """Numpy mirror of ``multiphase.coarsen``: fold edges through
     ``assign`` (k clusters) summing weights, and guarantee a self-loop row
@@ -483,32 +379,66 @@ def _coarsen_np(assign, s, d, w, k):
     )
 
 
-def _local_tail_np(
-    s, d, ww, nv0, directed, threshold, curr_mod, phase_start,
-    tot_itr_start, max_phases, max_total_iters, smart_init,
+def louvain_local_tail(
+    g: Graph,
+    arrays: tuple,
+    threshold: float = 1e-6,
+    curr_mod: float = -1.0,
+    phase_start: int = 1,
+    tot_itr_start: int = 0,
+    max_phases: int = 200,
+    max_total_iters: int = 100_000,
+    smart_init: bool = False,
+    coloring: tuple | None = None,
 ):
-    """Index-space core of :func:`louvain_local_tail` (ids 0..nv0-1).
-    Returns (c_orig over 0..nv0-1, prev_mod, num_clusters, phase, tot_itr,
-    history) — the multiphase driver's numpy continuation calls this
-    directly on a driver-coarsened graph, skipping the collect."""
-    import numpy as np
+    """Run ALL remaining multiphase phases driver-locally over the probe's
+    collected ``(src, dst, weight, ids)`` arrays: one createDataFrame,
+    zero intermediate Spark jobs — the multiphase driver's local tier.
 
+    Exact mirror of the distributed multiphase loop (kernel → min-member
+    renumber → C_orig fold → coarsen with zero-weight self-loop
+    placeholders → gain check, `runMultiPhaseBasic.cpp:52-170`), in numpy
+    index space. ``coloring`` is the run's ``(c_threshold, min_graph_size,
+    coloring_algo, num_colors_cap)``: a phase over more than
+    ``min_graph_size`` vertices runs the colored kernel at ``c_threshold``
+    (`runMultiPhaseColoring.cpp:51-238`). Returns (assignment DF over g's
+    vertex ids with dense community labels, prev_mod, num_clusters, phase,
+    tot_itr, history).
+    """
+    import numpy as np
+    import pandas as pd
+
+    from grappolo_spark.operators.coloring import _colored_kernel_np, _colors_np
+
+    spark = g.edges.sparkSession
+    c_threshold, min_graph_size, algo, num_colors_cap = coloring or (None,) * 4
+    src, dst, ww, ids = arrays
+    nv0 = len(ids)
     c_orig = np.arange(nv0, dtype=np.int64)
     prev_mod = -1.0
     phase = phase_start
     tot_itr = tot_itr_start
     num_clusters = 0
     history = []
-    cur_s, cur_d, cur_w, cur_n = s, d, ww, nv0
+    cur_s, cur_d, cur_w = np.searchsorted(ids, src), np.searchsorted(ids, dst), ww
+    cur_ids, cur_n = ids, nv0
 
     while True:
         prev_mod = curr_mod
-        # smart_init applies per phase, mirroring the distributed driver
-        # passing the flag into every plain phase's kernel
-        comm, q, iters = _local_kernel(
-            cur_s, cur_d, cur_w, cur_n, directed, threshold, curr_mod, 1000,
-            smart_init=smart_init,
-        )
+        colored = coloring is not None and cur_n > min_graph_size
+        if colored:
+            colors, classes = _colors_np(algo, cur_ids, cur_s, cur_d, num_colors_cap)
+            comm, q, iters = _colored_kernel_np(
+                cur_s, cur_d, cur_w, cur_n, colors, classes, c_threshold,
+                curr_mod, 100,
+            )
+        else:
+            # smart_init applies per plain phase, mirroring the distributed
+            # driver passing the flag into every plain phase's kernel
+            comm, q, iters = _local_kernel(
+                cur_s, cur_d, cur_w, cur_n, g.directed, threshold, curr_mod,
+                1000, smart_init=smart_init,
+            )
         if comm is None:
             break
         curr_mod = q
@@ -532,7 +462,7 @@ def _local_tail_np(
                 "clusters": num_clusters,
                 "iterations": iters,
                 "vertices": cur_n,
-                "colored": False,
+                "colored": colored,
                 "tier": Tier.LOCAL.value,
             }
         )
@@ -544,11 +474,18 @@ def _local_tail_np(
                 assign, cur_s, cur_d, cur_w, num_clusters
             )
             cur_n = num_clusters
+            cur_ids = np.arange(cur_n, dtype=np.int64)
             phase += 1
         else:
             break
 
-    return c_orig, prev_mod, num_clusters, phase, tot_itr, history
+    if nv0:
+        out = spark.createDataFrame(
+            pd.DataFrame({"v": ids, "comm": c_orig}), "v long, comm long"
+        )
+    else:
+        out = spark.createDataFrame([], "v long, comm long")
+    return out, prev_mod, num_clusters, phase, tot_itr, history
 
 
 def _small_state_phase(

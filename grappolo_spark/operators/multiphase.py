@@ -21,9 +21,11 @@ and the coloring variant `Coloring/runMultiPhaseColoring.cpp:51-238`:
 - loop while the phase's modularity gain exceeds ``threshold`` with caps of
   200 phases / 100000 total iterations (`runMultiPhaseBasic.cpp:116`).
 
-Coarsened graphs shrink fast, so later phases' per-vertex tables drop under
-the broadcast threshold and AQE switches the gather join to broadcast —
-the Spark analogue of the reference keeping later phases cheap in cache.
+Coarsened graphs shrink fast, so later phases plan cheaper tiers from the
+coarse graph's facts (:mod:`grappolo_spark.plans.tiers`): once a phase's
+edge table fits the driver, every remaining phase, colored or plain, runs
+in one numpy loop (``louvain.louvain_local_tail``) — the Spark analogue of
+the reference keeping later phases cheap in cache.
 """
 
 from __future__ import annotations
@@ -41,35 +43,14 @@ from grappolo_spark.plans.ranking import dense_rank_ids
 from grappolo_spark.plans.tiers import (
     DRIVER_EDGE_ROWS,
     LOCAL_EDGE_ROWS,
-    Facts,
     Tier,
     aqe_off,
     driver_holds,
-    facts_for,
     graph_facts,
+    local_tail_facts,
     local_tier_allowed,
-    plan,
     remember,
-    wants_probe,
 )
-
-
-def _renumber_np(vs, cs):
-    """Array core of the driver-side renumber: rank communities by their
-    minimum member vertex id (= the reference's first-appearance order of
-    a serial 0..NV-1 scan); sentinel -1 (and any negative id) stays -1."""
-    import numpy as np
-
-    pos = cs >= 0
-    # min member vertex id per community, ranked ascending = the
-    # reference's first-appearance order of a serial 0..NV-1 scan
-    order_idx = np.lexsort((vs[pos], cs[pos]))
-    cu, firstpos = np.unique(cs[pos][order_idx], return_index=True)
-    rank = np.argsort(np.argsort(vs[pos][order_idx][firstpos]))
-    remap = dict(zip(cu.tolist(), rank.tolist()))
-    new_c = np.array([remap[c] if c >= 0 else -1 for c in cs.tolist()],
-                     dtype=np.int64)
-    return new_c, len(cu)
 
 
 def renumber_contiguously(
@@ -104,11 +85,19 @@ def renumber_contiguously(
         pdf = assign.select("v", "comm").toPandas()
         vs = pdf["v"].to_numpy(dtype=np.int64)
         cs = pdf["comm"].to_numpy(dtype=np.int64)
-        new_c, k = _renumber_np(vs, cs)
+        pos = cs >= 0
+        # min member vertex id per community, ranked ascending = the
+        # reference's first-appearance order of a serial 0..NV-1 scan
+        order_idx = np.lexsort((vs[pos], cs[pos]))
+        cu, firstpos = np.unique(cs[pos][order_idx], return_index=True)
+        rank = np.argsort(np.argsort(vs[pos][order_idx][firstpos]))
+        remap = dict(zip(cu.tolist(), rank.tolist()))
+        new_c = np.array([remap[c] if c >= 0 else -1 for c in cs.tolist()],
+                         dtype=np.int64)
         out = spark.createDataFrame(
             pd.DataFrame({"v": vs, "comm": new_c}), "v long, comm long"
         )
-        return out, k
+        return out, len(cu)
     firsts = (
         assign.filter(F.col("comm") >= 0)
         .groupBy("comm")
@@ -236,25 +225,23 @@ def louvain(
     `Utility/utilityClusteringFunctions.cpp:108-169`).
 
     Tiers (:mod:`grappolo_spark.plans.tiers`): once a plain phase's graph
-    has at most 2M edge rows, the **local** tier runs ALL remaining phases
-    driver-locally in numpy (:func:`louvain_local_tail`) over the one
-    probe collect — distributed supersteps over a small coarse graph are
-    pure fixed job overhead, the Spark analogue of the reference keeping
-    later phases in cache. Sampling, early-terminate, FTR, ``run_dir``,
-    explicit isolated vertices and ``local_threshold=0`` exclude it; every
-    other phase plans its own tier from its graph's facts (a coarse graph
-    carries them from :func:`coarsen_cut`).
+    has at most 2M edge rows, or a colored phase's graph meets the colored
+    local gate (at most 4M edge rows, |V| <= 100k, integer weights), the
+    **local** tier runs ALL remaining phases, colored and plain,
+    driver-locally in one numpy loop (:func:`louvain_local_tail`) over the
+    one probe collect — distributed supersteps over a small coarse graph
+    are pure fixed job overhead, the Spark analogue of the reference
+    keeping later phases in cache. Sampling, early-terminate, FTR,
+    ``run_dir``, explicit isolated vertices and ``local_threshold=0``
+    exclude it; every other phase plans its own tier from its graph's
+    facts (a coarse graph carries them from :func:`coarsen_cut`).
     ``tier`` forces one tier for every phase. Directed graphs
     (``Graph(directed=True)``) run the directed kernel (constant 2/m) and
     coarsen without symmetrizing — the
     `runDirectedMultiPhaseBasic.cpp:52-170` driver.
     """
     from grappolo_spark.operators.coloring import louvain_one_phase_colored
-    from grappolo_spark.operators.louvain import (
-        _coarsen_np,
-        _local_tail_np,
-        louvain_local_tail,
-    )
+    from grappolo_spark.operators.louvain import louvain_local_tail
     from grappolo_spark.operators.vertex_following import (
         apply_vertex_following,
         vertex_following_map,
@@ -311,13 +298,10 @@ def louvain(
                 remember(cur_g, nv=cur_g.num_vertices())
         nv = graph_facts(cur_g).nv
         use_coloring = coloring and nv is not None and nv > min_graph_size
-        use_local = False
-        if not use_coloring:
-            facts = facts_for(cur_g, "louvain", run_dir, variant, tier)
-            use_local = plan(facts, "louvain", run_dir, variant, tier) is Tier.LOCAL
-        if use_local:
-            # all remaining phases in one driver-local numpy loop: one
-            # collect in, one DataFrame out
+        facts = local_tail_facts(cur_g, use_coloring, run_dir, variant, tier)
+        if facts is not None:
+            # all remaining phases, colored or plain, in one driver-local
+            # numpy loop: one collect in, one DataFrame out
             (
                 tail_assign, prev_mod, num_clusters, phase, tot_itr, tail_hist
             ) = louvain_local_tail(
@@ -330,6 +314,9 @@ def louvain(
                 max_phases=max_phases,
                 max_total_iters=max_total_iters,
                 smart_init=smart_init,
+                coloring=(
+                    c_threshold, min_graph_size, coloring_algo, num_colors_cap
+                ) if coloring else None,
             )
             history.extend(tail_hist)
             if not phase_maps and vf_map is None and g.vertices is None:
@@ -385,33 +372,11 @@ def louvain(
             if nv is None:
                 nv = graph_facts(cur_g).nv  # the kernel's stats action
 
-            # driver-side continuation: a phase that ran entirely in numpy
-            # over a complete driver edge copy hands back its arrays
-            # (res.local_np) — renumber/coarsen/tail/fold then finish on
-            # the driver with ZERO further Spark jobs (no coarse-edges
-            # parquet cut, no result cut). Values are identical: the
-            # renumber is the same array code renumber_contiguously runs
-            # after its collect, the coarsen produces the same aggregated
-            # multiset as coarsen() (integer-exact sums + zero-weight
-            # self-loop placeholders), and the tail is the same
-            # _local_tail_np the local tier runs. Gated to the shapes the
-            # fold below would reduce to exactly this composition.
-            np_cont = (
-                res.local_np is not None
-                and not phase_maps
-                and vf_map is None
-                and wants_probe(Facts.of(g), "louvain", run_dir, variant, tier)
+            # nv bounds the assignment's row count, selecting the
+            # driver-side renumber for small (coarse) phases
+            assign, num_clusters = renumber_contiguously(
+                res.assignment, size_hint=nv
             )
-            if np_cont:
-                ids_np, comm_raw, e_si, e_di, e_w = res.local_np
-                assign_np, num_clusters = _renumber_np(ids_np, comm_raw)
-                np_cont = bool((assign_np >= 0).all())
-            if not np_cont:
-                # nv bounds the assignment's row count, selecting the
-                # driver-side renumber for small (coarse) phases
-                assign, num_clusters = renumber_contiguously(
-                    res.assignment, size_hint=nv
-                )
         entry = {
             "phase": phase,
             "modularity": curr_mod,
@@ -422,61 +387,6 @@ def louvain(
             "tier": res.tier.value if res.tier else None,
             "seconds": round(time.time() - phase_t0, 3),
         }
-        if np_cont:
-            import pandas as pd
-
-            history.append(entry)
-            capped = phase >= max_phases or tot_itr > max_total_iters
-            if capped or (curr_mod - prev_mod) <= threshold:
-                # no further phase: the end-of-run fold reduces to the one
-                # renumbered phase map over the full vertex set
-                out = spark.createDataFrame(
-                    pd.DataFrame({"v": ids_np, "comm": assign_np}),
-                    "v long, comm long",
-                )
-                return LouvainResult(
-                    assignment=out,
-                    modularity=curr_mod if capped else prev_mod,
-                    num_clusters=num_clusters,
-                    phases=phase,
-                    total_iterations=tot_itr,
-                    phase_history=history,
-                )
-            k = num_clusters
-            ts, td, tw = _coarsen_np(assign_np, e_si, e_di, e_w, k)
-            next_colored = coloring and k > min_graph_size
-            tail_facts = Facts(edge_rows=len(ts), arrays=(ts, td, tw, None))
-            if not next_colored and (
-                plan(tail_facts, "louvain", run_dir, variant, tier) is Tier.LOCAL
-            ):
-                phase += 1
-                (
-                    tail_c, t_mod, t_k, t_phase, t_itr, t_hist
-                ) = _local_tail_np(
-                    ts, td, tw, k, g.directed, threshold, curr_mod,
-                    phase, tot_itr, max_phases, max_total_iters, smart_init,
-                )
-                history.extend(t_hist)
-                out = spark.createDataFrame(
-                    pd.DataFrame({"v": ids_np, "comm": tail_c[assign_np]}),
-                    "v long, comm long",
-                )
-                return LouvainResult(
-                    assignment=out,
-                    modularity=t_mod,
-                    num_clusters=t_k,
-                    phases=t_phase,
-                    total_iterations=t_itr,
-                    phase_history=history,
-                )
-            # remaining phases need the distributed machinery (next phase
-            # colored, or coarse edges above the local bound): hand the
-            # phase map back as a LocalRelation and rejoin the normal flow
-            history.pop()  # the normal flow re-appends this phase's entry
-            assign = spark.createDataFrame(
-                pd.DataFrame({"v": ids_np, "comm": assign_np}),
-                "v long, comm long",
-            )
         if not driver_holds(nv):
             # distributed renumber → parquet-cut the assignment. keep_last
             # must outlive the whole run: the end-of-run fold reads every

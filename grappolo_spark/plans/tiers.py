@@ -216,6 +216,27 @@ def facts_for(g, op, run_dir=None, variant=frozenset(), tier=None) -> Facts:
     return facts
 
 
+def local_tail_facts(
+    g, colored: bool, run_dir=None, variant=frozenset(), tier=None
+) -> Facts | None:
+    """``g``'s facts when ALL remaining multiphase Louvain phases run in
+    driver numpy, else ``None``: a plain phase needs the plain local tier;
+    a colored one the colored phase's (probed under its 4M bound) and the
+    plain one's exclusions. Coarse graphs only shrink and keep integer
+    weights, so a run that enters stays on the driver."""
+    if not colored:
+        facts = facts_for(g, "louvain", run_dir, variant, tier)
+        ok = plan(facts, "louvain", run_dir, variant, tier) is Tier.LOCAL
+        return facts if ok else None
+    facts = graph_facts(g)
+    if not wants_probe(facts, "louvain", run_dir, variant, tier):
+        return None
+    if driver_holds(facts.nv) or tier is not None:
+        facts = graph_facts(g, DRIVER_EDGE_ROWS)
+    ok = plan(facts, "louvain_colored", tier=tier) is Tier.LOCAL
+    return facts if ok else None
+
+
 def remember(g, **known) -> None:
     """Record in ``g``'s memo what an action learned (``None``: unknown)."""
     _memo(g).update((k, v) for k, v in known.items() if v is not None)

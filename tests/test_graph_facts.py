@@ -1,5 +1,5 @@
 """Facts live on the Graph: one bounded probe per graph, shared by every
-operator, and the numpy coarsen the multiphase continuation relies on.
+operator, and the numpy coarsen the multiphase numpy loop relies on.
 """
 
 from __future__ import annotations

@@ -46,19 +46,16 @@ def test_cc_star_matches_local_and_oracle_random(spark, seed):
 
 @pytest.mark.parametrize("seed", [11, 23])
 def test_louvain_phase_local_matches_distributed_random(spark, seed):
-    from grappolo_spark.operators.louvain import (
-        louvain_one_phase,
-        louvain_one_phase_local,
-    )
+    from grappolo_spark.operators.multiphase import louvain
 
     g, _ = _random_graph(spark, seed)
     for smart in (False, True):
-        dist = louvain_one_phase(g, smart_init=smart)
-        loc = louvain_one_phase_local(g, smart_init=smart)
+        dist = louvain(g, max_phases=1, smart_init=smart, tier="broadcast")
+        loc = louvain(g, max_phases=1, smart_init=smart, tier="local")
         a = {r.v: r.comm for r in dist.assignment.collect()}
         b = {r.v: r.comm for r in loc.assignment.collect()}
         assert a == b, f"seed={seed} smart={smart}"
-        assert dist.iterations == loc.iterations
+        assert dist.total_iterations == loc.total_iterations
         assert dist.modularity == pytest.approx(loc.modularity, abs=1e-12)
 
 

@@ -88,7 +88,7 @@ def test_capped_louvain_reports_the_returned_q(spark):
     """A run stopped by ``max_phases`` or ``max_total_iters`` reports the
     Q of the assignment it returns (not the phase before it), and a
     binding ``max_phases=k`` runs k phases — on the local tail, the
-    distributed loop and the colored numpy continuation."""
+    distributed loop and the colored phases of the numpy loop."""
     g = fixtures.karate(spark)
     edges = [(r.src, r.dst, r.weight) for r in g.edges.collect()]
     assert louvain(g).phases >= 3  # so max_phases=2 binds

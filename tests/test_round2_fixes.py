@@ -175,14 +175,12 @@ def test_salted_gather_identical_results(spark):
 
 
 def test_local_kernel_bit_parity_karate(spark):
-    from grappolo_spark.operators.louvain import louvain_one_phase_local
-
     g = fixtures.karate(spark)
-    dist = louvain_one_phase(g)
-    loc = louvain_one_phase_local(g)
+    dist = louvain(g, max_phases=1, tier="driver_state")
+    loc = louvain(g, max_phases=1, tier="local")
     # integer weights -> exact arithmetic -> bit-identical trajectory
     assert loc.modularity == dist.modularity
-    assert loc.iterations == dist.iterations
+    assert loc.total_iterations == dist.total_iterations
     a = {r.v: r.comm for r in dist.assignment.collect()}
     b = {r.v: r.comm for r in loc.assignment.collect()}
     assert a == b

@@ -54,30 +54,27 @@ def test_ann_guard_allows_small_side_and_exact_guard(spark):
 
 
 def test_smart_init_local_matches_distributed(spark):
-    from grappolo_spark.operators.louvain import (
-        louvain_one_phase,
-        louvain_one_phase_local,
-    )
+    from grappolo_spark.operators.multiphase import louvain
 
     g = fixtures.karate(spark)
-    loc = louvain_one_phase_local(g, smart_init=True)
-    dist = louvain_one_phase(g, smart_init=True)
+    loc = louvain(g, max_phases=1, smart_init=True, tier="local")
+    dist = louvain(g, max_phases=1, smart_init=True, tier="driver_state")
     a = {r.v: r.comm for r in loc.assignment.collect()}
     b = {r.v: r.comm for r in dist.assignment.collect()}
     assert a == b
-    assert loc.iterations == dist.iterations
+    assert loc.total_iterations == dist.total_iterations
     assert loc.modularity == pytest.approx(dist.modularity, abs=1e-12)
 
 
 def test_local_tail_honors_smart_init_trajectory(spark):
     # with the warm start the kernel must need FEWER iterations than the
     # singleton start on karate (the flag used to be silently dropped)
-    from grappolo_spark.operators.louvain import louvain_one_phase_local
+    from grappolo_spark.operators.multiphase import louvain
 
     g = fixtures.karate(spark)
-    cold = louvain_one_phase_local(g, smart_init=False)
-    warm = louvain_one_phase_local(g, smart_init=True)
-    assert warm.iterations < cold.iterations
+    cold = louvain(g, max_phases=1, smart_init=False, tier="local")
+    warm = louvain(g, max_phases=1, smart_init=True, tier="local")
+    assert warm.total_iterations < cold.total_iterations
 
 
 def test_multiphase_smart_init_local_vs_distributed(spark):
