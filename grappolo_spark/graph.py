@@ -121,11 +121,13 @@ class Graph:
     edge rows — the reference keeps them with community sentinel -1
     (`BasicCommunitiesDetection/parallelLouvainMethod.cpp:219-221`).
 
-    Operators memoize the planner's facts on the graph (``_facts``, see
-    ``plans.tiers.graph_facts``), so they share one bounded probe: rebuild
-    the Graph if its source changes. The memo keeps up to 4M rows of
-    read-only driver arrays for the graph's lifetime; :meth:`unpersist`
-    drops it.
+    Operators memoize the planner's facts on the graph (``_facts``), so
+    they share one bounded probe (``plans.tiers.graph_facts``) and one
+    stats action (``plans.tiers.graph_stats``: |V|, id bounds, 2m,
+    integer weights, max degree, dangling, symmetry), which the probe's
+    arrays (integer weights, no vertex table) or ``coarsen_cut`` supply
+    instead. Rebuild the Graph if its source changes. The memo keeps up to
+    4M rows of read-only driver arrays; :meth:`unpersist` drops it all.
     """
 
     edges: DataFrame

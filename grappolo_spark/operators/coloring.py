@@ -41,12 +41,11 @@ from grappolo_spark.plans.iteration import (
 from grappolo_spark.plans.tiers import (
     DRIVER_EDGE_ROWS,
     Tier,
-    aqe_off,
+    degree_table,
     driver_holds,
-    exact_sums,
     graph_facts,
+    graph_stats,
     plan,
-    remember,
 )
 
 _MEX = """
@@ -835,7 +834,6 @@ def louvain_one_phase_colored(
     num_colors_cap: int = 1024,
     coloring_algo: str = "auto",
     colors: DataFrame | None = None,
-    run_dir: str | None = None,
     tier: Tier | str | None = None,
 ) -> LouvainPhaseResult:
     """One Louvain level, sweeping color classes sequentially.
@@ -861,8 +859,9 @@ def louvain_one_phase_colored(
       broadcast into a src-keyed class gather (zero exchanges per class).
     - **shuffle**: the distributed loop co-partitioned on ``dst``.
 
-    ``tier`` forces one. It plans from the graph's facts (``graph_facts``:
-    the probe's driver edge copy, |V|, 2m) and memoizes what it counts.
+    ``tier`` forces one. It plans from the graph's stats (``graph_stats``:
+    |V|, 2m, integer weights) and the probe's driver edge copy. The phase
+    keeps no durable state (no ``run_dir``).
 
     ``coloring_algo="multihash"`` bounds the palette a priori (the
     Jones-Plassmann variant emits at most ``2*nhash*nrounds + 1`` colors
@@ -890,7 +889,7 @@ def louvain_one_phase_colored(
     forced = Tier(tier) if tier is not None else None
     # the bounded probe: a driver edge copy feeds the numpy coloring, the
     # state build, the numpy class sweep and the per-iteration e_xx
-    # reduction, and 2m comes from it — so the stats agg job disappears.
+    # reduction, and over integer weights the graph's stats come from it.
     # Skipped when the graph's |V| or edge-row bound rules it out.
     if (
         facts.arrays is None
@@ -898,12 +897,10 @@ def louvain_one_phase_colored(
         and (facts.nv is None or driver_holds(facts.nv) or forced is not None)
     ):
         facts = graph_facts(g, DRIVER_EDGE_ROWS)
-    vdeg = g.degrees().select("v", "deg").persist()
-    if facts.nv is None:
-        # explicit vertices or an edge table above the probe bound: |V|
-        # from the degree table the sweep persists anyway
-        facts = facts.update(nv=vdeg.count())
-        remember(g, nv=facts.nv)
+    # |V|, 2m and integer weights: from the probe's arrays or the memo, or
+    # one aggregation over the degree table the sweep persists anyway
+    vdeg = degree_table(g).persist()
+    facts = graph_stats(g, vdeg)
     tier = plan(facts, "louvain_colored", tier=tier)
     driver_tier = tier in (Tier.LOCAL, Tier.DRIVER_STATE)
     if driver_tier:
@@ -929,18 +926,6 @@ def louvain_one_phase_colored(
     # the gather cache stays LAZY: on the local tier (numpy coloring + exact
     # numpy class sweep) no action ever touches it, so the
     # repartition+persist never runs at all
-    if facts.arrays is None:
-        row0 = edges.agg(
-            F.sum("weight").alias("tw"),
-            F.sum(F.abs("weight")).alias("abs_w"),
-            F.min((F.col("weight") == F.rint("weight")).cast("int")).alias("int_w"),
-        ).collect()[0]
-        facts = facts.update(
-            two_m=row0["tw"] or 0.0,
-            integer_weights=facts.unweighted
-            or exact_sums(row0["abs_w"], row0["int_w"] != 0),
-        )
-        remember(g, two_m=facts.two_m, integer_weights=facts.integer_weights)
     two_m = facts.two_m
     if two_m == 0.0:
         edges.unpersist()
@@ -1042,11 +1027,10 @@ def louvain_one_phase_colored(
             )
         # driver-held state: per-class parquet cuts replaced by lean
         # winner collects (see _colored_small_state)
-        with aqe_off(spark, tier is Tier.DRIVER_STATE):
-            res = _colored_small_state(
-                spark, edges, probe, classes, const, facts.arrays, thresh,
-                lower, max_iters,
-            )
+        res = _colored_small_state(
+            spark, edges, probe, classes, const, facts.arrays, thresh,
+            lower, max_iters,
+        )
         edges.unpersist()
         return res
     # distributed tiers: bucket the per-class state

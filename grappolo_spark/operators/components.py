@@ -27,7 +27,9 @@ from grappolo_spark.plans.iteration import (
 from grappolo_spark.plans.tiers import (
     LOCAL_EDGE_ROWS,
     Tier,
-    facts_for,
+    graph_facts,
+    graph_stats,
+    local_facts,
     local_tier_allowed,
     plan,
 )
@@ -193,10 +195,9 @@ def connected_components(
         variant.add("no_local")
     # the bound is RAW edge rows (>= distinct pairs): graphs between the
     # two counts take the star path, whose labels are identical
-    facts = facts_for(g, "components", run_dir, variant, tier)
-    tier = plan(facts, "components", run_dir, variant, tier)
+    facts = local_facts(g, "components", run_dir, variant, tier)
     spark = g.edges.sparkSession
-    if tier is Tier.LOCAL:
+    if facts is not None:
         labels = _local_union_find(spark, facts.arrays)
         if g.vertices is None:
             # every vertex id is an edge endpoint (self-loop-only
@@ -207,6 +208,8 @@ def connected_components(
             "v", F.coalesce("component", F.col("v")).alias("component")
         )
         return cut_lineage(out, tag="result", keep_last=64)
+    # the star rounds need no size facts; plan() still vets a forced tier
+    plan(graph_facts(g), "components", run_dir, variant, tier)
 
     pairs = g.edges.filter(F.col("src") != F.col("dst")).select(
         F.col("src").alias("u"), F.col("dst").alias("v")
@@ -217,36 +220,18 @@ def connected_components(
         pairs = pairs.distinct()
     runner = SuperstepRunner(spark, run_dir)
     pairs_all = None  # star path's one-evaluation pair cut (see below)
-    ids32 = False
     if method == "star":
-        # ONE evaluation of the (possibly heavy, unpersisted) edge
-        # pipeline: the deduped pair table is cut FIRST — KEEPING self-loop
-        # rows so it doubles as the vertex universe — and every later
-        # consumer (the id-bound stats, the star rounds' non-self input,
-        # the final vertex attach) reads the small parquet. Durable runs
-        # keep the old shape (resume must not depend on a scratch-rotation
-        # table).
+        # the deduped pair table is cut once, KEEPING self-loop rows so it
+        # doubles as the vertex universe: the rounds' non-self input and
+        # the final vertex attach read the small parquet. Durable runs
+        # keep the old shape (resume must not read a scratch-rotation cut).
         if run_dir is None:
             pa = g.edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
             if not g.deduped:
                 pa = pa.distinct()
             pairs_all = cut_lineage(pa, tag="cc_pairs_all")
-            pstats_src = pairs_all.agg(
-                F.min(F.least("u", "v")).alias("min_id"),
-                F.max(F.greatest("u", "v")).alias("max_id"),
-            )
-        else:
-            pstats_src = g.edges.agg(
-                F.min(F.least("src", "dst")).alias("min_id"),
-                F.max(F.greatest("src", "dst")).alias("max_id"),
-            )
-        pstats = pstats_src.collect()[0]
-        facts = facts.update(id_lo=pstats["min_id"], id_hi=pstats["max_id"])
-        ids32 = facts.fits_int32()
-        if pairs_all is not None:
             pairs = pairs_all.filter(F.col("u") != F.col("v"))
-
-    if method == "star":
+        ids32 = graph_stats(g).fits_int32()
         start, resumed = runner.resume()
         # Early-freeze: a LEAF — a source with exactly one outgoing pair
         # that no pair targets — can be contracted out of the round input.
@@ -292,7 +277,7 @@ def connected_components(
         # pure extra write+read job
         prev = _checksum(pairs)  # once, against the cut parquet — cheap
         # NOTE (r6): an AQE-off gate for tiny round loops was tried here
-        # (the tiers.aqe_off pattern) and measured ~2x
+        # (as then around the driver_state sweeps) and measured ~2x
         # SLOWER (warm rounds 4.3-4.7s vs 2.2-2.7s at 7k pairs): unlike
         # the exchange-free louvain sweeps, a star round is all exchanges
         # over a shrinking input, and AQE's empty-relation propagation +

@@ -22,7 +22,9 @@ from grappolo_spark.plans.iteration import (
 from grappolo_spark.plans.tiers import (
     LOCAL_EDGE_ROWS,
     Tier,
-    facts_for,
+    degree_table,
+    graph_stats,
+    local_facts,
     local_tier_allowed,
     plan,
 )
@@ -95,8 +97,8 @@ def label_propagation(
     """
     spark = g.edges.sparkSession
     variant = set() if local_tier_allowed(local_threshold) else {"no_local"}
-    facts = facts_for(g, "labelprop", run_dir, variant, tier)
-    if plan(facts, "labelprop", run_dir, variant, tier) is Tier.LOCAL:
+    facts = local_facts(g, "labelprop", run_dir, variant, tier)
+    if facts is not None:
         labels = _local_lpa(spark, max_iters, stop_on_converge, facts.arrays)
         if g.vertices is None:
             # every vertex id is an edge endpoint (self-loop-only
@@ -108,24 +110,11 @@ def label_propagation(
         )
         return cut_lineage(out, tag="result", keep_last=64)
 
-    # ONE evaluation of the (possibly heavy, unpersisted) edge pipeline for
-    # the O(V) side: the vertex table is cut first, then the stats agg and
-    # the label init both read the small parquet. Durable runs keep the old
-    # shape (resume state must not depend on a scratch-rotation file).
-    ids_cut = None
-    if run_dir is None:
-        ids_cut = cut_lineage(g.vertex_ids(), tag="lpa_ids")
-        vstats_src = ids_cut
-    else:
-        vstats_src = g.vertex_ids()
-    vstats = vstats_src.agg(
-        F.count(F.lit(1)).alias("nv"),
-        F.min("v").alias("min_id"),
-        F.max("v").alias("max_id"),
-    ).collect()[0]
-    facts = facts.update(
-        nv=vstats["nv"] or 0, id_lo=vstats["min_id"], id_hi=vstats["max_id"]
-    )
+    # ONE evaluation of the edge pipeline for the O(V) side: the stats
+    # (|V|, id bounds) and the label init read the degree table's cut.
+    # Durable runs keep the uncut shape (resume must not read a scratch cut)
+    ids_cut = None if run_dir else cut_lineage(degree_table(g), tag="lpa_ids")
+    facts = graph_stats(g, ids_cut)
     tier = plan(facts, "labelprop", run_dir, variant, tier)
     broadcast_labels = tier is Tier.BROADCAST
     # strict lower bound: the tie-break negates the int32 label inside the

@@ -57,12 +57,10 @@ from grappolo_spark.plans.iteration import (
 )
 from grappolo_spark.plans.tiers import (
     Tier,
-    aqe_off,
+    degree_table,
     driver_holds,
-    exact_sums,
-    graph_facts,
+    graph_stats,
     plan,
-    remember,
 )
 
 
@@ -204,7 +202,7 @@ def smart_init_assignment(g: Graph) -> DataFrame:
     iteration, at a fraction of its cost.
     """
     vdeg = g.degrees().select("v", "deg")
-    two_m = g.edges.agg(F.sum("weight")).collect()[0][0] or 0.0
+    two_m = graph_stats(g).two_m
     if two_m == 0.0:
         return g.vertex_ids().select("v", F.col("v").alias("comm"))
     const = (2.0 if g.directed else 1.0) / two_m
@@ -214,6 +212,22 @@ def smart_init_assignment(g: Graph) -> DataFrame:
         .join(best, "v", "left")
         .select("v", F.coalesce("cand", F.col("v")).cast("long").alias("comm"))
     )
+
+
+def renumber_np(members, comm):
+    """``(labels, k)``: ``comm`` (one entry per vertex id in ``members``)
+    renumbered to ``0..k-1`` by each community's minimum member id — the
+    reference's first-appearance order (`buildNextPhase.cpp:48-79`); the
+    sentinel −1 stays −1."""
+    import numpy as np
+
+    held = comm >= 0
+    cu, inv = np.unique(comm[held], return_inverse=True)
+    first = np.full(len(cu), np.iinfo(np.int64).max)
+    np.minimum.at(first, inv, members[held])
+    labels = np.full(len(comm), -1, dtype=np.int64)
+    labels[held] = np.argsort(np.argsort(first))[inv]
+    return labels, len(cu)
 
 
 def _first_group_starts(sorted_arr):
@@ -444,15 +458,7 @@ def louvain_local_tail(
         curr_mod = q
         tot_itr += iters
 
-        # renumber contiguously: rank communities by their minimum member
-        firsts = np.full(cur_n, cur_n, dtype=np.int64)
-        np.minimum.at(firsts, comm, np.arange(cur_n, dtype=np.int64))
-        used = np.where(firsts < cur_n)[0]
-        order = used[np.argsort(firsts[used])]
-        remap = np.zeros(cur_n, dtype=np.int64)
-        remap[order] = np.arange(len(order), dtype=np.int64)
-        assign = remap[comm]
-        num_clusters = len(order)
+        assign, num_clusters = renumber_np(np.arange(cur_n), comm)
 
         c_orig = assign[c_orig]
         history.append(
@@ -707,9 +713,9 @@ def louvain_one_phase(
       broadcast): the plan co-partitioned on ``dst``, state commits
       bucketed by ``v``.
 
-    ``tier`` forces one. It plans from the graph's facts (``graph_facts``:
-    |V|, 2m, id bounds, integer weights); the phase's one stats action
-    memoizes them on the graph and is skipped when they are already there.
+    ``tier`` forces one. It plans from the graph's stats
+    (``graph_stats``: |V|, 2m, id bounds, integer weights, max degree),
+    learned once per graph.
 
     ``init_assign`` gives warm starts (reference
     `parallelLouvainMethodInitialized.cpp:106-112`). ``sample_fraction``
@@ -738,48 +744,14 @@ def louvain_one_phase(
     returned assignment stay ``long``.
     """
     spark = g.edges.sparkSession
-    facts = graph_facts(g)
-    # one action yields 2m AND the max degree (hub detection for salting)
-    # AND |V| and the id bounds AND the integer-weight check: sum of
-    # per-vertex degrees == total edge-row weight. It is skipped when the
-    # graph knows 2m and |V| (coarse graphs do) and its max degree is known
-    # or bounded: unique (src, dst) rows give max degree <= |V|. A probe's
-    # numpy 2m equals the Spark sum only over integer weights (exact).
-    known = facts.two_m is not None and facts.nv is not None and (
-        facts.integer_weights or facts.arrays is None
-    )
-    skip_stats = known and (
-        facts.max_degree is not None or (g.deduped and facts.nv <= salt_threshold)
-    )
-    # per-vertex sum(|w|) and integer-weight flag: the integer_weights
-    # fact rides the same stats action
-    weight_checks = {} if skip_stats else dict(
-        abs_w=F.sum(F.abs("weight")),
-        int_w=F.min((F.col("weight") == F.rint("weight")).cast("int")),
-    )
-    vdeg_full = g._degrees(**weight_checks).persist()
+    # the graph's stats: one aggregation over the degree table the phase
+    # persists anyway, none when the graph knows them (probe, coarse graph)
+    vdeg_full = degree_table(g).persist()
+    facts = graph_stats(g, vdeg_full)
     vdeg = vdeg_full.select("v", "deg")
-    if skip_stats:
-        use_salting = (facts.max_degree or 0) > salt_threshold
-    else:
-        stats0 = vdeg_full.agg(
-            F.sum("deg").alias("tw"),
-            F.max("out_degree").alias("maxdeg"),
-            F.count(F.lit(1)).alias("nv"),
-            F.min("v").alias("min_id"),
-            F.max("v").alias("max_id"),
-            F.sum("abs_w").alias("abs_w"),
-            F.min("int_w").alias("int_w"),
-        ).collect()[0]
-        remember(
-            g, two_m=stats0["tw"] or 0.0, nv=stats0["nv"] or 0,
-            id_lo=stats0["min_id"], id_hi=stats0["max_id"],
-            max_degree=stats0["maxdeg"] or 0,
-            integer_weights=facts.unweighted
-            or exact_sums(stats0["abs_w"], stats0["int_w"] != 0),
-        )
-        facts = graph_facts(g)
-        use_salting = facts.max_degree > salt_threshold
+    # a coarse graph's unique rows bound its max degree by |V|
+    max_degree = facts.nv if facts.max_degree is None else facts.max_degree
+    use_salting = max_degree > salt_threshold
     two_m = facts.two_m
     # hub skew (use_salting above): the gather routes through a two-stage
     # salted aggregation when any vertex's neighbor list exceeds the
@@ -846,12 +818,12 @@ def louvain_one_phase(
         if not unweighted:
             cols.append(F.col("weight"))
         e_base = e_base.select(*cols)
-    if known and driver_holds(facts.nv):
-        # follow the input's partitioning, bounded by the session's
-        # shuffle parallelism: small |V| does not imply small |E|, and a
-        # constant 4 starves the sequential superstep jobs of cores when
-        # the edge table is large; a tiny coarse parquet keeps its few
-        # splits
+    if facts.coarse and driver_holds(facts.nv):
+        # a coarse level's parquet cut: follow the input's partitioning,
+        # bounded by the session's shuffle parallelism: small |V| does not
+        # imply small |E|, and a constant 4 starves the sequential
+        # superstep jobs of cores when the edge table is large; a tiny
+        # coarse parquet keeps its few splits
         npart = max(
             4,
             min(
@@ -882,15 +854,11 @@ def louvain_one_phase(
     )
 
     if tier is Tier.DRIVER_STATE:
-        # the driver_state supersteps are exchange-free (src-partitioned
-        # cache + broadcast LocalRelations), so adaptive re-planning is
-        # pure per-job driver latency — aqe_off skips it for their jobs
-        with aqe_off(spark):
-            res = _small_state_phase(
-                spark, edges, e_cold, vdeg, selfw, const,
-                thresh, lower, max_iters, init_assign, smart_init, ids32,
-                unweighted,
-            )
+        res = _small_state_phase(
+            spark, edges, e_cold, vdeg, selfw, const,
+            thresh, lower, max_iters, init_assign, smart_init, ids32,
+            unweighted,
+        )
         edges.unpersist()
         vdeg_full.unpersist()
         return res
@@ -928,12 +896,12 @@ def louvain_one_phase(
         # kernel's iterations measured ~3x slower under it (198.6s vs
         # 72.2s whole-run A/B on an idle box) — the parquet round-trip's
         # fixed cost is the cheaper lineage truncation for multi-consumer
-        # state on this build. Coarse phases on the broadcast tier (facts
-        # already on the graph) skip the cut ACTION entirely: only iteration 1
+        # state on this build. Coarse phases on the broadcast tier skip
+        # the cut ACTION entirely: only iteration 1
         # consumes the init plan (4-6 subplan copies over an
         # already-parquet-backed coarse graph inside ONE job), which costs
         # less than a dedicated write+read job at that size.
-        if not (known and tier is Tier.BROADCAST):
+        if not (facts.coarse and tier is Tier.BROADCAST):
             assign = cut_lineage(
                 assign, tag="louvain_assign",
                 bucket_by=runner.bucket_by, n_buckets=runner.n_buckets,

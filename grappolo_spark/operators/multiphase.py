@@ -37,16 +37,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grappolo_spark.graph import Graph
-from grappolo_spark.operators.louvain import louvain_one_phase
+from grappolo_spark.operators.louvain import louvain_one_phase, renumber_np
 from grappolo_spark.plans.iteration import cut_lineage
 from grappolo_spark.plans.ranking import dense_rank_ids
 from grappolo_spark.plans.tiers import (
     DRIVER_EDGE_ROWS,
     LOCAL_EDGE_ROWS,
     Tier,
-    aqe_off,
     driver_holds,
     graph_facts,
+    graph_stats,
     local_tail_facts,
     local_tier_allowed,
     remember,
@@ -67,7 +67,7 @@ def renumber_contiguously(
     ``size_hint`` (an upper bound on the ROW count of ``assign`` —
     multiphase passes the phase's vertex count) selects a driver-side fast
     path when it fits the driver_state bound: collect the assignment, renumber in
-    Python, and return a **LocalRelation** (``createDataFrame``). One
+    numpy (``renumber_np``), and return a **LocalRelation** (``createDataFrame``). One
     simple-scan action, and — the real win for the coarse phases, where
     ~2s/job of plan-compile dominates — the result carries its data in
     the plan, so downstream consumers (coarsen's two joins, the end-of-run
@@ -84,20 +84,11 @@ def renumber_contiguously(
         # ~10x slower than toPandas/pandas at these row counts
         pdf = assign.select("v", "comm").toPandas()
         vs = pdf["v"].to_numpy(dtype=np.int64)
-        cs = pdf["comm"].to_numpy(dtype=np.int64)
-        pos = cs >= 0
-        # min member vertex id per community, ranked ascending = the
-        # reference's first-appearance order of a serial 0..NV-1 scan
-        order_idx = np.lexsort((vs[pos], cs[pos]))
-        cu, firstpos = np.unique(cs[pos][order_idx], return_index=True)
-        rank = np.argsort(np.argsort(vs[pos][order_idx][firstpos]))
-        remap = dict(zip(cu.tolist(), rank.tolist()))
-        new_c = np.array([remap[c] if c >= 0 else -1 for c in cs.tolist()],
-                         dtype=np.int64)
+        new_c, k = renumber_np(vs, pdf["comm"].to_numpy(dtype=np.int64))
         out = spark.createDataFrame(
             pd.DataFrame({"v": vs, "comm": new_c}), "v long, comm long"
         )
-        return out, len(cu)
+        return out, k
     firsts = (
         assign.filter(F.col("comm") >= 0)
         .groupBy("comm")
@@ -150,8 +141,9 @@ def coarsen_cut(g: Graph, assign: DataFrame, num_clusters: int) -> Graph:
     """:func:`coarsen` plus the lineage cut the multiphase loop reads the
     next phase from. The rebuilt graph keeps the coarse graph's flags
     (``deduped`` spares coarse colored phases the pair ``distinct``) and
-    its facts: ids ``0..k-1``, a self-loop row per cluster (an edge-row
-    lower bound), and ``g``'s 2m and integer weights (conserved)."""
+    its stats: ids ``0..k-1``, a self-loop row per cluster (an edge-row
+    lower bound), and ``g``'s 2m, integer weights, symmetry and dangling
+    flag, which the fold conserves."""
     coarse = coarsen(g, assign)
     edges = coarse.edges
     if driver_holds(num_clusters):
@@ -167,10 +159,10 @@ def coarsen_cut(g: Graph, assign: DataFrame, num_clusters: int) -> Graph:
         unweighted=coarse.unweighted,
         deduped=coarse.deduped,
     )
-    fine = graph_facts(g)
-    k = num_clusters
-    remember(out, nv=k, edge_rows=k, id_lo=0, id_hi=k - 1,
-             two_m=fine.two_m, integer_weights=fine.integer_weights)
+    fine, k = graph_facts(g), num_clusters
+    remember(out, nv=k, edge_rows=k, id_lo=0, id_hi=k - 1, two_m=fine.two_m,
+             integer_weights=fine.integer_weights, symmetric=fine.symmetric,
+             dangling=fine.dangling, coarse=True)
     return out
 
 
@@ -235,7 +227,9 @@ def louvain(
     ``run_dir``, explicit isolated vertices and ``local_threshold=0``
     exclude it; every other phase plans its own tier from its graph's
     facts (a coarse graph carries them from :func:`coarsen_cut`).
-    ``tier`` forces one tier for every phase. Directed graphs
+    ``tier`` forces one tier for every phase. ``run_dir`` keeps durable
+    superstep state for the plain Spark phases only: colored phases hold
+    no durable state yet. Directed graphs
     (``Graph(directed=True)``) run the directed kernel (constant 2/m) and
     coarsen without symmetrizing — the
     `runDirectedMultiPhaseBasic.cpp:52-170` driver.
@@ -246,8 +240,6 @@ def louvain(
         apply_vertex_following,
         vertex_following_map,
     )
-
-    spark = g.edges.sparkSession
 
     if g.directed and (coloring or vertex_following):
         raise ValueError(
@@ -291,12 +283,13 @@ def louvain(
         facts = graph_facts(cur_g)
         if coloring and facts.nv is None:
             # phase 1's |V| for the coloring gate rides the bounded probe
-            # (whose arrays the colored kernel reuses), else a count job
+            # (whose arrays the colored kernel reuses), else the graph's
+            # stats action (which the colored kernel then reads)
             if cur_g.vertices is None:
                 facts = graph_facts(cur_g, DRIVER_EDGE_ROWS)
             if facts.nv is None:
-                remember(cur_g, nv=cur_g.num_vertices())
-        nv = graph_facts(cur_g).nv
+                facts = graph_stats(cur_g)
+        nv = facts.nv
         use_coloring = coloring and nv is not None and nv > min_graph_size
         facts = local_tail_facts(cur_g, use_coloring, run_dir, variant, tier)
         if facts is not None:
@@ -342,41 +335,35 @@ def louvain(
 
         phase_thresh = c_threshold if use_coloring else threshold
         prev_mod = curr_mod
-        # coarse phases whose state fits the driver run their jobs without
-        # AQE (see tiers.aqe_off). Phase 1's input can be dense (small nv,
-        # huge edge table) and keeps AQE's skew handling.
-        small = phase > 1 and driver_holds(nv)
-        with aqe_off(spark, small):
-            if use_coloring:
-                res = louvain_one_phase_colored(
-                    cur_g, thresh=phase_thresh, lower=curr_mod,
-                    num_colors_cap=num_colors_cap,
-                    coloring_algo=coloring_algo,
-                    run_dir=f"{run_dir}/phase{phase}" if run_dir else None,
-                    tier=tier,
-                )
-            else:
-                res = louvain_one_phase(
-                    cur_g, thresh=phase_thresh, lower=curr_mod,
-                    smart_init=smart_init,
-                    sample_fraction=sample_fraction,
-                    seed=seed,
-                    sample_hash=sample_hash,
-                    early_terminate=early_terminate,
-                    ftr_phase=phase if fast_track_resistance else None,
-                    tier=tier,
-                    run_dir=f"{run_dir}/phase{phase}" if run_dir else None,
-                )
-            curr_mod = res.modularity
-            tot_itr += res.iterations
-            if nv is None:
-                nv = graph_facts(cur_g).nv  # the kernel's stats action
-
-            # nv bounds the assignment's row count, selecting the
-            # driver-side renumber for small (coarse) phases
-            assign, num_clusters = renumber_contiguously(
-                res.assignment, size_hint=nv
+        if use_coloring:
+            res = louvain_one_phase_colored(
+                cur_g, thresh=phase_thresh, lower=curr_mod,
+                num_colors_cap=num_colors_cap,
+                coloring_algo=coloring_algo,
+                tier=tier,
             )
+        else:
+            res = louvain_one_phase(
+                cur_g, thresh=phase_thresh, lower=curr_mod,
+                smart_init=smart_init,
+                sample_fraction=sample_fraction,
+                seed=seed,
+                sample_hash=sample_hash,
+                early_terminate=early_terminate,
+                ftr_phase=phase if fast_track_resistance else None,
+                tier=tier,
+                run_dir=f"{run_dir}/phase{phase}" if run_dir else None,
+            )
+        curr_mod = res.modularity
+        tot_itr += res.iterations
+        if nv is None:
+            nv = graph_facts(cur_g).nv  # the kernel's stats action
+
+        # nv bounds the assignment's row count, selecting the
+        # driver-side renumber for small (coarse) phases
+        assign, num_clusters = renumber_contiguously(
+            res.assignment, size_hint=nv
+        )
         entry = {
             "phase": phase,
             "modularity": curr_mod,
@@ -412,8 +399,7 @@ def louvain(
             prev_mod = curr_mod
             break
         if (curr_mod - prev_mod) > threshold:
-            with aqe_off(spark, small):
-                cur_g = coarsen_cut(cur_g, assign, num_clusters)
+            cur_g = coarsen_cut(cur_g, assign, num_clusters)
             phase += 1
         else:
             break

@@ -26,7 +26,9 @@ from grappolo_spark.plans.iteration import (
     cut_lineage,
     promote_result,
 )
-from grappolo_spark.plans.tiers import Tier, facts_for, plan
+from grappolo_spark.plans.tiers import (
+    Tier, degree_table, graph_stats, local_facts, plan,
+)
 
 
 def _slots(vs, ids):
@@ -44,6 +46,23 @@ def _slots(vs, ids):
             f"({len(stray)} ids) are not in the vertex table"
         )
     return idx
+
+
+def _check_symmetric(g, facts, cache=None) -> None:
+    """Every tier relies on ``Graph(directed=False)``'s symmetrized edge
+    table (the Spark tiers take the vertex set from ``src``): one that
+    fails the symmetry check raises (releasing ``cache``) before any tier
+    runs."""
+    if not g.directed and facts.symmetric is False:
+        if cache is not None:
+            cache.unpersist()
+        e = g.edges
+        stray = e.select("dst").subtract(e.select("src")).orderBy("dst").limit(10)
+        raise ValueError(
+            "pagerank: Graph(directed=False) needs a symmetrized edge table "
+            "(each (u, v) row with its (v, u) twin); edge endpoints "
+            f"{[r.dst for r in stray.collect()]} are never a source"
+        )
 
 
 def _local_pagerank(spark, arrays, alpha: float, max_iters: int, tol):
@@ -115,31 +134,21 @@ def pagerank(
     """
     spark = g.edges.sparkSession
     variant = {"tol"} if tol is not None else set()
-    facts = facts_for(g, "pagerank", run_dir, variant, tier)
-    if plan(facts, "pagerank", run_dir, variant, tier) is Tier.LOCAL:
+    facts = local_facts(g, "pagerank", run_dir, variant, tier)
+    if facts is not None:
+        _check_symmetric(g, facts)
         return _local_pagerank(spark, facts.arrays, alpha, max_iters, tol)
-    wout = g.edges.groupBy(F.col("src").alias("v")).agg(F.sum("weight").alias("wout"))
-    # a symmetrized table with no explicit vertices lists every vertex as
-    # src, so the wout aggregation's key set IS the vertex set: base = wout
-    # directly — removes the two-scan union + distinct + O(V) left join the
-    # generic path pays (guide §2.4: drop redundant exchanges)
-    if not g.directed and g.vertices is None:
-        base = wout.persist()
-    else:
-        base = g.vertex_ids().join(wout, "v", "left").select(
-            "v", F.coalesce("wout", F.lit(0.0)).alias("wout")
-        ).persist()
-    # the probe: one stats action that also materializes the base cache
-    vstats = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("wout") == 0.0).cast("long")).alias("dangling"),
-    ).collect()[0]
-    n = vstats["n"]
-    if n == 0:
-        base.unpersist()
-        return spark.createDataFrame([], "v long, rank double")
-    facts = facts.update(nv=n, dangling=bool(vstats["dangling"]))
+    # the degree table is the rank state's (v, wout) base; the graph's
+    # stats action, when it runs, also materializes the cache
+    degrees = degree_table(g).persist()
+    facts = graph_stats(g, degrees)
+    _check_symmetric(g, facts, degrees)
     tier = plan(facts, "pagerank", run_dir, variant, tier)
+    n = facts.nv
+    if n == 0:
+        degrees.unpersist()
+        return spark.createDataFrame([], "v long, rank double")
+    base = degrees.select("v", F.col("deg").alias("wout"))
     # weight ≡ 1.0 invariant (Graph.unweighted): the superstep cache keeps
     # only (src, dst) — one third less cached/scanned width per superstep —
     # and the contribution skips the weight multiply (x·1.0 ≡ x, so the
@@ -205,7 +214,7 @@ def pagerank(
         out = spark.createDataFrame(
             pd.DataFrame({"v": vs_np, "rank": rank_np}), "v long, rank double"
         )
-        base.unpersist()
+        degrees.unpersist()
         edges.unpersist()
         return out
 
@@ -229,8 +238,9 @@ def pagerank(
         bucket_by=runner.bucket_by, n_buckets=runner.n_buckets,
     )
 
-    # symmetrized graphs have no dangling vertices: the probe counted them
-    # once, so only dangling graphs pay the per-superstep mass reduction
+    # symmetrized graphs have no dangling vertices: the stats action
+    # counted them once, so only dangling graphs pay the per-superstep
+    # mass reduction
     has_dangling = facts.dangling
 
     for step in range(start, max_iters):
@@ -286,6 +296,6 @@ def pagerank(
     # init) hands a derived plan here, it degrades to an explicit result
     # cut instead of a rotation-lifetime FAILED_READ_FILE.
     out = promote_result(ranks, fallback_cut=True).select("v", "rank")
-    base.unpersist()
+    degrees.unpersist()
     edges.unpersist()
     return out

@@ -15,14 +15,13 @@ scale-safe:
 
 The operators read a :class:`Facts` record off the graph
 (:func:`graph_facts`: its flags plus a memo of the one bounded probe and of
-their own stats actions) and call :func:`plan`, which owns the four bounds.
-A ``tier=`` argument on each operator forces one regime; forcing a tier
-the facts cannot support raises ``ValueError``.
+the one stats action, :func:`graph_stats`) and call :func:`plan`, which
+owns the four bounds. A ``tier=`` argument on each operator forces one
+regime; forcing a tier the facts cannot support raises ``ValueError``.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from dataclasses import dataclass, replace
 from enum import Enum
 
@@ -87,11 +86,11 @@ class Facts:
     ``arrays`` is ``(src, dst, weight, ids)`` — read-only int64/float64
     numpy columns of the whole edge table plus its sorted endpoint ids —
     and is set only when the probe came back under its bound.
-    ``edge_rows`` is exact when ``arrays`` is set and otherwise a lower
-    bound: ``bound + 1`` after a probe came back over its bound, or a
-    coarse graph's cluster count (coarsening keeps a self-loop row per
-    cluster). :func:`collect_probe` reads it to skip a collect that must
-    fail."""
+    ``edge_rows`` is exact when ``arrays`` is set or a parquet footer gave
+    it, and otherwise a lower bound: ``bound + 1`` after a probe came back
+    over its bound, or a coarse graph's cluster count (coarsening keeps a
+    self-loop row per cluster). :func:`collect_probe` reads it to skip a
+    collect that must fail."""
 
     edge_rows: int | None = None
     nv: int | None = None
@@ -103,6 +102,8 @@ class Facts:
     two_m: float | None = None
     dangling: bool = False  # some vertex has zero out-weight (pagerank)
     max_degree: int | None = None  # most edge rows with one src (salting)
+    symmetric: bool | None = None  # each (u, v) row has its (v, u) twin
+    coarse: bool = False  # a coarsen_cut level: a small parquet edge cut
     unweighted: bool = False
     explicit_vertices: bool = False
     arrays: tuple | None = None
@@ -119,9 +120,6 @@ class Facts:
         flags.update(known)
         return cls(**flags)
 
-    def update(self, **known) -> "Facts":
-        return replace(self, **known)
-
     def fits_int32(self, strict_low: bool = False) -> bool:
         """Every vertex id fits a 32-bit int (``strict_low`` also excludes
         exactly -2^31, whose negation wraps)."""
@@ -131,27 +129,45 @@ class Facts:
         return lo_ok and self.id_hi < _INT32_MAX
 
 
+_UNKNOWN = Facts()
+
+
 def exact_sums(total_abs, all_integer) -> bool:
     """The ``integer_weights`` contract: integer-valued, Σ|w| < 2^53."""
     return bool(all_integer) and float(total_abs or 0.0) < float(2**53)
 
 
-def from_arrays(g, src, dst, w) -> Facts:
-    """Facts of a graph whose edge table was collected whole."""
+def _pair_hash_np(a, b):
+    """splitmix64's finalizer over ``a * golden ^ b``, per ordered pair."""
     import numpy as np
 
-    ids = np.unique(np.concatenate([src, dst]))
+    x = (a.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)) ^ b.astype(np.uint64)
+    for shift, mul in ((30, 0xBF58476D1CE4E5B9), (27, 0x94D049BB133111EB)):
+        x = (x ^ (x >> np.uint64(shift))) * np.uint64(mul)
+    return x ^ (x >> np.uint64(31))
+
+
+def from_arrays(g, src, dst, w) -> Facts:
+    """Facts of a graph whose edge table was collected whole, with the
+    stats of :func:`graph_stats` the arrays determine exactly."""
+    import numpy as np
+
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    s = inv[: len(src)]
+    # graph_stats' symmetry checksum, in numpy
+    sym = np.bitwise_xor.reduce(_pair_hash_np(src, dst) ^ _pair_hash_np(dst, src))
     known = dict(
-        edge_rows=len(src), arrays=(src, dst, w, ids), two_m=float(w.sum())
+        edge_rows=len(src), arrays=(src, dst, w, ids),
+        max_degree=int(np.bincount(s).max()) if len(s) else 0,
+        symmetric=not sym and int((src < dst).sum()) == int((src > dst).sum()),
     )
     if g.vertices is None:  # else the endpoints bound neither
-        known["nv"] = len(ids)
+        wout = np.bincount(s, weights=w, minlength=len(ids))
+        known.update(nv=len(ids), dangling=bool((wout == 0.0).any()))
         if len(ids):
             known.update(id_lo=int(ids[0]), id_hi=int(ids[-1]))
-    if not g.unweighted:
-        known["integer_weights"] = exact_sums(
-            np.abs(w).sum(), (w == np.rint(w)).all()
-        )
+    if g.unweighted or exact_sums(np.abs(w).sum(), (w == np.rint(w)).all()):
+        known.update(integer_weights=True, two_m=float(w.sum()))
     return Facts.of(g, **known)
 
 
@@ -167,23 +183,20 @@ def collect_probe(g, bound: int, facts: Facts) -> Facts:
         return facts
     pdf = g.edges.select("src", "dst", "weight").limit(bound + 1).toPandas()
     if len(pdf) > bound:
-        return facts.update(edge_rows=bound + 1)
-    probed = from_arrays(
-        g,
-        pdf["src"].to_numpy(np.int64),
-        pdf["dst"].to_numpy(np.int64),
-        pdf["weight"].to_numpy(np.float64),
-    )
+        return replace(facts, edge_rows=bound + 1)
+    src, dst = (pdf[c].to_numpy(np.int64) for c in ("src", "dst"))
+    probed = from_arrays(g, src, dst, pdf["weight"].to_numpy(np.float64))
     for a in probed.arrays:
         a.flags.writeable = False
     return probed
 
 
-# what a Graph memoizes: facts of its edge table, then |V| and the id
-# bounds, which cover its vertex table too and so hold only for the vertex
-# table they were learned with
-_EDGE_FACTS = ("edge_rows", "arrays", "two_m", "integer_weights", "max_degree")
-_MEMO = _EDGE_FACTS + ("nv", "id_lo", "id_hi")
+# what a Graph memoizes: facts of its edge table, then |V|, the id bounds
+# and the dangling flag, which cover its vertex table too and so hold only
+# for the vertex table they were learned with
+_EDGE_FACTS = ("edge_rows", "arrays", "two_m", "integer_weights",
+               "max_degree", "symmetric", "coarse")
+_MEMO = _EDGE_FACTS + ("nv", "id_lo", "id_hi", "dangling")
 
 
 def _memo(g) -> dict:
@@ -207,13 +220,71 @@ def graph_facts(g, bound: int | None = None) -> Facts:
     return facts
 
 
-def facts_for(g, op, run_dir=None, variant=frozenset(), tier=None) -> Facts:
-    """``g``'s facts for ``op``, probed under :data:`LOCAL_EDGE_ROWS` while
-    the local tier is in play: under the bound the probe IS its input."""
+def _stats_known(facts: Facts, g) -> bool:
+    """The stats without a conservative reading are known: |V|, 2m and
+    the max degree (unique rows bound it by |V|)."""
+    return None not in (facts.nv, facts.two_m) and (
+        facts.max_degree is not None or g.deduped
+    )
+
+
+def degree_table(g):
+    """``g._degrees()`` plus, while :func:`graph_stats` has to run its
+    aggregation, the per-vertex columns it reads."""
+    from pyspark.sql import functions as F
+
+    if _stats_known(graph_facts(g), g):
+        return g._degrees()
+    src, dst = F.col("src"), F.col("dst")
+    return g._degrees(
+        abs_w=F.sum(F.abs("weight")),
+        int_w=F.min((F.col("weight") == F.rint("weight")).cast("int")),
+        # symmetry: XOR of xxhash64(u, v) ^ xxhash64(v, u) over the rows
+        # is 0, and as many rows point up (src < dst) as down
+        sym=F.bit_xor(F.xxhash64(src, dst).bitwiseXOR(F.xxhash64(dst, src))),
+        skew=F.sum((src < dst).cast("long") - (src > dst).cast("long")),
+    )
+
+
+def graph_stats(g, degrees=None) -> Facts:
+    """``g``'s facts with its stats: |V|, id bounds, 2m, integer weights,
+    max out-degree, dangling and symmetry. From the memo when it holds them
+    (as the probe's integer-weight arrays and a coarse graph do); else ONE
+    aggregation over ``degrees`` (a :func:`degree_table` the caller
+    persists anyway, which it then materializes) or a fresh one."""
     facts = graph_facts(g)
-    if wants_probe(facts, op, run_dir, variant, tier):
-        facts = graph_facts(g, LOCAL_EDGE_ROWS)
+    if not _stats_known(facts, g):
+        _stats_action(g, degree_table(g) if degrees is None else degrees)
+        facts = graph_facts(g)
     return facts
+
+
+def _stats_action(g, degrees) -> None:
+    """The one stats aggregation over a :func:`degree_table`."""
+    from pyspark.sql import functions as F
+
+    nv, lo, hi, two_m, max_deg, dangling, abs_w, int_w, sym, skew = degrees.agg(
+        F.count(F.lit(1)), F.min("v"), F.max("v"), F.sum("deg"),
+        F.max("out_degree"), F.max((F.col("deg") == 0.0).cast("int")),
+        F.sum("abs_w"), F.min("int_w"), F.bit_xor("sym"), F.sum("skew"),
+    ).collect()[0]
+    remember(
+        g, nv=nv, id_lo=lo, id_hi=hi, two_m=two_m or 0.0,
+        max_degree=max_deg or 0, dangling=bool(dangling),
+        integer_weights=g.unweighted or exact_sums(abs_w, int_w != 0),
+        symmetric=not sym and not skew,
+    )
+
+
+def local_facts(g, op, run_dir=None, variant=frozenset(), tier=None):
+    """``g``'s facts when ``op``'s call runs in the local tier (probed
+    under :data:`LOCAL_EDGE_ROWS`: under the bound the probe IS its
+    input), else ``None``: the caller plans from :func:`graph_stats`."""
+    if not wants_probe(graph_facts(g), op, run_dir, variant, tier):
+        return None
+    facts = graph_facts(g, LOCAL_EDGE_ROWS)
+    local = facts.arrays is not None and plan(facts, op, run_dir, variant, tier)
+    return facts if local is Tier.LOCAL else None
 
 
 def local_tail_facts(
@@ -225,9 +296,7 @@ def local_tail_facts(
     plain one's exclusions. Coarse graphs only shrink and keep integer
     weights, so a run that enters stays on the driver."""
     if not colored:
-        facts = facts_for(g, "louvain", run_dir, variant, tier)
-        ok = plan(facts, "louvain", run_dir, variant, tier) is Tier.LOCAL
-        return facts if ok else None
+        return local_facts(g, "louvain", run_dir, variant, tier)
     facts = graph_facts(g)
     if not wants_probe(facts, "louvain", run_dir, variant, tier):
         return None
@@ -238,8 +307,9 @@ def local_tail_facts(
 
 
 def remember(g, **known) -> None:
-    """Record in ``g``'s memo what an action learned (``None``: unknown)."""
-    _memo(g).update((k, v) for k, v in known.items() if v is not None)
+    """Record in ``g``'s memo what an action learned. A value at its
+    unknown reading (``None``, a ``False`` flag) overwrites nothing."""
+    _memo(g).update((k, v) for k, v in known.items() if v != getattr(_UNKNOWN, k))
 
 
 def driver_holds(nv: int | None) -> bool:
@@ -340,24 +410,3 @@ def local_tier_allowed(local_threshold: int) -> bool:
         "local_threshold only accepts its default or 0 (exclude the local "
         "tier); use tier= to force a tier"
     )
-
-
-@contextmanager
-def aqe_off(spark, on: bool = True):
-    """Disable adaptive execution around a driver_state sweep's jobs when
-    ``on``: they are exchange-free, so AQE's per-stage re-planning is pure
-    latency (forced-distributed multiphase, warm, alternated: sf0.001
-    15.5-19.5s with AQE vs 13.4-14.3s without; neutral at sf0.1).
-    Exchange-heavy loops (CC star rounds) measured ~2x slower without AQE
-    and keep it; the local tier runs no Spark job and needs no toggle. The
-    conf is SESSION-GLOBAL, restored on error."""
-    if not on:
-        yield
-        return
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)

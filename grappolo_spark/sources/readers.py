@@ -240,8 +240,33 @@ def read_dimacs9(spark: SparkSession, path: str) -> Graph:
     return Graph.from_edgelist(pairs)
 
 
+def _footer_rows(path: str) -> int | None:
+    """Exact row count of a local parquet path from the footers of the
+    files Spark reads (no ``_``/``.`` prefix): no Spark job. ``None`` for
+    a non-local path or an unreadable footer."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    local = path.removeprefix("file:")
+    files = [local] if os.path.isfile(local) else []
+    for d, subdirs, names in os.walk(local):
+        subdirs[:] = [s for s in subdirs if s[:1] not in "_."]
+        files += [os.path.join(d, f) for f in names if f[:1] not in "_."]
+    try:
+        return sum(pq.read_metadata(f).num_rows for f in files) if files else None
+    except Exception:
+        return None
+
+
 def read_parquet_graph(spark: SparkSession, path: str) -> Graph:
     """Our binary format (replaces binary CSR / blosc-HDF5): a parquet edge
-    table already in canonical symmetrized form."""
+    table already in canonical symmetrized form. A local path's footers
+    give the exact edge-row count, so a graph above the probe bound never
+    runs the probe's collect."""
+    from grappolo_spark.plans.tiers import remember
+
     # written from a canonical Graph (write_parquet_graph contract)
-    return Graph(edges=spark.read.parquet(path), deduped=True)
+    g = Graph(edges=spark.read.parquet(path), deduped=True)
+    remember(g, edge_rows=_footer_rows(path))
+    return g

@@ -160,3 +160,51 @@ def test_coarsen_np_matches_spark_coarsen(spark):
     assert got == want
     assert (2, 2, 0.0) in got and (3, 3, 0.0) in got
     assert (0, 0, 8.0) in got and (1, 1, 13.0) in got
+
+
+def test_one_stats_action_per_graph(spark, monkeypatch):
+    """PageRank, LPA, CC, louvain_one_phase and louvain_one_phase_colored
+    with the local tier out of play run ONE stats aggregation between
+    them on one Graph, and each output equals the same call on a fresh
+    Graph. An integer-weight graph whose probe came back under the bound
+    runs none: the probe's arrays supply the stats."""
+    from grappolo_spark.operators import (
+        connected_components,
+        label_propagation,
+        pagerank,
+    )
+    from grappolo_spark.operators.coloring import louvain_one_phase_colored
+    from grappolo_spark.operators.louvain import louvain_one_phase
+    from grappolo_spark.sources.fixtures import karate
+
+    def phase(res):
+        return res.modularity, res.iterations, _rows(res.assignment, "v", "comm")
+
+    calls = [
+        lambda g: _rows(pagerank(g, max_iters=5, tier="broadcast"), "v", "rank"),
+        lambda g: _rows(
+            label_propagation(g, max_iters=3, local_threshold=0), "v", "label"
+        ),
+        lambda g: _rows(connected_components(g, local_threshold=0), "v", "component"),
+        lambda g: phase(louvain_one_phase(g)),
+        lambda g: phase(louvain_one_phase_colored(
+            g, tier="driver_state", num_colors_cap=8, coloring_algo="multihash"
+        )),
+    ]
+    fresh = [call(karate(spark)) for call in calls]
+    actions = []
+    action = T._stats_action
+
+    def counting_action(graph, degrees):
+        actions.append(graph)
+        return action(graph, degrees)
+
+    monkeypatch.setattr(T, "_stats_action", counting_action)
+    g = karate(spark)
+    assert [call(g) for call in calls] == fresh
+    assert len(actions) == 1 and actions[0] is g
+
+    probed = karate(spark)
+    assert T.graph_facts(probed, T.LOCAL_EDGE_ROWS).integer_weights
+    assert [call(probed) for call in calls] == fresh
+    assert len(actions) == 1

@@ -147,3 +147,23 @@ def test_pagerank_driver_state_rejects_stray_ids(spark):
     g = Graph(edges=df)
     with pytest.raises(ValueError, match=r"endpoints \[2\]"):
         pagerank(g, max_iters=2, tier="driver_state").collect()
+
+
+@pytest.mark.parametrize(
+    "tier", [None, "local", "driver_state", "broadcast", "shuffle"]
+)
+def test_pagerank_rejects_unsymmetrized_undirected_graph(spark, tier):
+    """Graph(directed=False) promises each (u, v) row with its (v, u)
+    twin. On a table that breaks it every tier raises the same error
+    instead of ranking a tier-dependent vertex set (local: 4 vertices,
+    sum 1; broadcast: the 3 sources, sum 0.555)."""
+    df = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 3, 1.0), (3, 0, 1.0), (1, 2, 1.0)],
+        "src long, dst long, weight double",
+    )
+    with pytest.raises(ValueError, match=r"symmetrized.*endpoints \[2\]"):
+        pagerank(Graph(edges=df), max_iters=2, tier=tier).collect()
+    # the same rows as arcs are a valid directed graph on every tier
+    if tier != "driver_state":  # vertex 2 dangles: driver_state excluded
+        ranks = pagerank(Graph(edges=df, directed=True), max_iters=2, tier=tier)
+        assert abs(sum(r.rank for r in ranks.collect()) - 1.0) < 1e-12

@@ -1,3 +1,5 @@
+import numpy as np
+
 from grappolo_spark.sources import fixtures, readers, writers
 from grappolo_spark.sources.fixtures import KARATE_EDGES
 
@@ -156,3 +158,40 @@ def test_metis_writer_header_excludes_self_loops(spark, tmp_path):
         header = f.readline().split()
     # body lists only non-self adjacency: 2 undirected edges
     assert header[:2] == ["3", "2"]
+
+
+def test_parquet_graph_knows_its_rows_from_footers(spark, tmp_path, monkeypatch):
+    """read_parquet_graph records the exact edge-row count from the parquet
+    footers (no Spark job), so a graph above the probe bound (here a
+    bound monkeypatched below karate's 156 rows) runs no probe collect;
+    its PageRank equals the same call on the in-memory graph."""
+    from grappolo_spark.operators.pagerank import pagerank
+    from grappolo_spark.plans import tiers as T
+
+    g = fixtures.karate(spark)
+    path = str(tmp_path / "karate.parquet")
+    writers.write_parquet_graph(g, path)
+    assert readers._footer_rows(path) == 156
+    assert readers._footer_rows("hdfs://nn/karate.parquet") is None
+    with open(tmp_path / "karate.parquet" / "part-junk", "w") as f:
+        f.write("not parquet")
+    assert readers._footer_rows(path) is None  # unreadable: unknown
+    (tmp_path / "karate.parquet" / "part-junk").unlink()
+
+    want = sorted(map(tuple, pagerank(g, max_iters=5).collect()))
+    collects = []
+    probe = T.collect_probe
+
+    def counting_probe(graph, bound, facts):
+        if not (facts.edge_rows or 0) > bound:
+            collects.append(bound)
+        return probe(graph, bound, facts)
+
+    monkeypatch.setattr(T, "LOCAL_EDGE_ROWS", 100)
+    monkeypatch.setattr(T, "collect_probe", counting_probe)
+    g2 = readers.read_parquet_graph(spark, path)
+    assert T.graph_facts(g2).edge_rows == 156
+    got = sorted(map(tuple, pagerank(g2, max_iters=5).collect()))
+    assert collects == []
+    assert [v for v, _ in got] == [v for v, _ in want]
+    assert np.allclose([r for _, r in got], [r for _, r in want], rtol=1e-12)

@@ -293,3 +293,123 @@ def test_no_probe_calls_in_operators():
         )
     }
     assert found == {}, found
+
+
+_ID_COLUMNS = {"v", "u", "src", "dst"}
+_TABLE_BUILDERS = {"vertex_ids", "degrees", "_degrees", "degree_table"}
+
+
+def _called(node) -> str | None:
+    """The name a call invokes: ``f(...)`` or ``x.f(...)``."""
+    if not isinstance(node, ast.Call):
+        return None
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _column(node) -> str | None:
+    """The column a ``"name"`` or ``F.col("name")`` argument names."""
+    if _called(node) == "col" and node.args:
+        node = node.args[0]
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value
+    return None
+
+
+def _aggregate(node) -> str | None:
+    """The aggregate function an ``.agg`` argument calls (``.alias``
+    unwrapped)."""
+    while _called(node) == "alias":
+        node = node.func.value
+    return _called(node)
+
+
+def _stats_violations(src: str) -> list[str]:
+    """Graph-wide |V|/2m/id-bound aggregations: a global ``.agg`` (not
+    after a ``groupBy``) over an id bound, a degree sum, a graph's edge
+    weights or an integer-weight check; a row count of a vertex or degree
+    table (a call to one of ``_TABLE_BUILDERS``, or a name the function
+    binds to one); ``num_vertices()``/``total_weight_2m()``."""
+    bad = {}  # line -> first reason
+    for fn in ast.walk(ast.parse(src)):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        tables = {
+            t.id
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Assign)
+            and any(_called(c) in _TABLE_BUILDERS for c in ast.walk(n.value))
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        for node in ast.walk(fn):
+            name = _called(node)
+            if not isinstance(getattr(node, "func", None), ast.Attribute):
+                continue
+            recv = node.func.value
+            table = (
+                _called(recv) in _TABLE_BUILDERS
+                or getattr(recv, "id", None) in tables
+            )
+            if name in ("num_vertices", "total_weight_2m"):
+                bad.setdefault(node.lineno, f"{name}()")
+            elif name == "count" and table:
+                bad.setdefault(node.lineno, "counts the vertex table")
+            elif name == "agg" and _called(recv) not in ("groupBy", "groupby"):
+                if table and "count" in map(_aggregate, node.args):
+                    bad.setdefault(node.lineno, "counts the vertex table")
+                for sub in (s for a in node.args for s in ast.walk(a)):
+                    f, arg = _called(sub), (getattr(sub, "args", None) or [None])[0]
+                    if f in ("min", "max") and (
+                        _column(arg) in _ID_COLUMNS
+                        or _called(arg) in ("least", "greatest")
+                    ):
+                        bad.setdefault(node.lineno, "an id bound")
+                    elif f == "sum" and (
+                        _column(arg) == "deg"
+                        or _column(arg) == "weight"
+                        and getattr(recv, "attr", None) == "edges"
+                    ):
+                        bad.setdefault(node.lineno, "a 2m sum")
+                    elif f == "rint":
+                        bad.setdefault(node.lineno, "an integer-weight check")
+    return [f"line {n}: {why}" for n, why in sorted(bad.items())]
+
+
+def test_guard_detects_stats_actions():
+    sample = (
+        "def f(g, ids, vdeg, base, tris, sizes):\n"
+        "    base = g.vertex_ids().join(wout, 'v', 'left').persist()\n"
+        "    ids.agg(F.count(F.lit(1)), F.min('v'), F.max('v'))\n"
+        "    g.edges.agg(F.min(F.least('src', 'dst')))\n"
+        "    vdeg.agg(F.sum('deg'))\n"
+        "    g.edges.agg(F.sum('weight'))\n"
+        "    base.agg(F.count(F.lit(1)).alias('n'), F.sum(F.col('wout') == 0))\n"
+        "    g.degrees().count()\n"
+        "    g.num_vertices()\n"
+        "    vd = g.degrees().select('v', 'deg').persist()\n"
+        "    vd.count()\n"
+        "    e.agg(F.min((F.col('weight') == F.rint('weight')).cast('int')))\n"
+        "    ok = vdeg.groupBy('comm').agg(F.sum('deg'), F.min('v'))\n"
+        "    ok = tris.agg(F.count(F.lit(1)))\n"
+        "    ok = sizes.agg(F.sum('s'), F.count(F.lit(1)))\n"
+    )
+    assert len(_stats_violations(sample)) == 9
+
+
+def test_no_stats_actions_in_operators():
+    """Operators read |V|, 2m and the id bounds from ``tiers.graph_stats``
+    (one aggregation per graph); none runs its own."""
+    found = {
+        path.name: v
+        for path in sorted(_OPERATORS.glob("*.py"))
+        if (v := _stats_violations(path.read_text()))
+    }
+    assert found == {}, found
+
+
+@pytest.mark.parametrize("module", ["pagerank.py", "labelprop.py"])
+def test_operator_plans_once(module):
+    tree = ast.parse((_OPERATORS / module).read_text())
+    calls = [n for n in ast.walk(tree) if _called(n) == "plan"]
+    assert len(calls) == 1
