@@ -32,7 +32,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from grappolo_spark.graph import Graph
-from grappolo_spark.operators.louvain import LouvainPhaseResult
+from grappolo_spark.operators.louvain import (
+    LouvainPhaseResult,
+    _gauss_seidel_sweeps,
+    _np_gather,
+    _spark_gather,
+)
 from grappolo_spark.plans.iteration import (
     cut_lineage,
     promote_result,
@@ -286,14 +291,13 @@ def select_coloring_algo(g: Graph, num_colors_cap: int = 1024) -> str:
 
 
 def _class_best_moves(counter, state0, cinfo_cand, const: float):
-    """Winner + gain/swap-protection filter for ONE color class.
-
-    Shared by the distributed and small-state paths — identical column
-    expressions keep the two paths bit-identical on integer-weight graphs
-    (all sums are exact, so aggregation order cannot split them).
-    Single-pass best candidate + own-community weight, same shape as the
-    plain kernel: the argmax orders by the reduced score
-    ``wsum − deg·a_y·const`` (eix/ax shift every candidate's gain
+    """Winner + gain/swap-protection filter for ONE color class of the
+    distributed (broadcast/shuffle) loop — the Spark-column form of
+    ``louvain._decide_moves``, which the driver-held tiers call; on
+    integer-weight graphs all sums are exact, so the routes are
+    bit-identical. Single-pass best candidate + own-community weight,
+    same shape as the plain kernel: the argmax orders by the reduced
+    score ``wsum − deg·a_y·const`` (eix/ax shift every candidate's gain
     equally), so ONE groupBy(v) yields the winner AND w_own; the gain
     formula and the swap protection (vs the CURRENT COMMUNITY id,
     maxIndex > sc, `utilityClusteringFunctions.cpp:254-256`) run only on
@@ -301,11 +305,10 @@ def _class_best_moves(counter, state0, cinfo_cand, const: float):
 
     ``state0=None``/``cinfo_cand=None`` means the caller PRE-ENRICHED the
     counter (it already carries comm/deg/selfloop/cdeg_cur/csize_cur and
-    ay/csize_cand — the small-state path attaches them in the gather so a
-    class job broadcasts TWO LocalRelations instead of four and skips the
-    post-aggregation joins entirely); all expressions from ``is_own`` on
-    are char-identical on both shapes, and the forced-distributed
-    equivalence test pins the bit parity.
+    ay/csize_cand — the broadcast tier attaches them in the gather, so
+    a class job skips the post-aggregation joins entirely); all
+    expressions from ``is_own`` on are char-identical on both shapes, and
+    test_colored_distributed_broadcast_layout_matches pins the bit parity.
     """
     enriched = counter
     if state0 is not None:
@@ -567,16 +570,14 @@ def _colors_np(coloring_algo, ids, s_idx, d_idx, num_colors_cap):
 
 
 def _colored_kernel_np(s, d, w, nv, colors, classes, thresh, lower, max_iters):
-    """Colored twin of ``louvain._local_kernel`` (ids 0..nv-1, in the
-    order of the vertex ids they stand for); same return. Each class step
-    replays the Spark class job (edges ⋈ class state ⋈ dst state →
-    groupBy(v, cand) → :func:`_class_best_moves`) with identical
-    expressions; under integer weights (the local tier's gate) every sum
-    is exact, so it is bit-identical to the Spark plan (pinned by
-    test_colored_class_sweep_numpy_matches_spark)."""
+    """The colored phase's local tier (ids 0..nv-1, in the order of the
+    vertex ids they stand for): the Gauss-Seidel sweeps
+    (``louvain._gauss_seidel_sweeps``) with one numpy gather per color
+    class. Returns (prev_comm array | None when 2m==0, prev_mod,
+    iterations). Under integer weights (the local tier's gate) every sum is
+    exact, so it is bit-identical to the driver_state route's Spark class
+    jobs (pinned by test_colored_class_sweep_numpy_matches_spark)."""
     import numpy as np
-
-    from grappolo_spark.operators.louvain import _first_group_starts
 
     two_m = float(w.sum())
     if two_m == 0.0:
@@ -585,86 +586,24 @@ def _colored_kernel_np(s, d, w, nv, colors, classes, thresh, lower, max_iters):
     deg = np.bincount(s, weights=w, minlength=nv)
     sl = s == d
     selfloop = np.bincount(s[sl], weights=w[sl], minlength=nv)
-    comm = np.arange(nv, dtype=np.int64)
 
-    # pre-partition the edge arrays by the src's color ONCE (colors are
-    # static through the sweep): each class gather then touches only its
-    # own slice instead of paying four full-width masked gathers per
-    # class per iteration
+    # partition the edge arrays by the src's color ONCE (colors are static
+    # through the sweep): each class gather touches only its own slice; a
+    # class with no out-edges gathers nothing and is skipped outright
     csrc = colors[s]
     csort = np.argsort(csrc, kind="stable")
     csrc_sorted = csrc[csort]
-    class_edges = {}
+    gathers = []
     for cls in classes:
         lo = np.searchsorted(csrc_sorted, cls, side="left")
         hi = np.searchsorted(csrc_sorted, cls, side="right")
         idx = csort[lo:hi]
-        class_edges[int(cls)] = (s[idx], d[idx], w[idx])
-
-    prev_mod = -1.0
-    prev_comm = comm.copy()
-    num_itrs = 0
-    for it in range(max_iters):
-        num_itrs = it + 1
-        for cls in classes:
-            # a class with no out-edges gathers nothing (the Spark inner
-            # join would be empty) and is skipped outright
-            vg_e, di_c, ew_c = class_edges[int(cls)]
-            if not len(vg_e):
-                continue
-            cu, inv = np.unique(comm, return_inverse=True)
-            cdeg = np.bincount(inv, weights=deg)
-            csize = np.bincount(inv).astype(np.int64)
-            ci_e = inv[di_c]
-            key = vg_e * np.int64(len(cu)) + ci_e
-            uk, uinv = np.unique(key, return_inverse=True)
-            wsum = np.bincount(uinv, weights=ew_c)
-            vg = uk // len(cu)
-            ci = uk % len(cu)
-            cand = cu[ci]
-            ay = cdeg[ci]
-            comm_v = comm[vg]
-            is_own = cand == comm_v
-            # score/ns replicate the min_by key: own community sinks
-            # to +inf, ties on the score break to the SMALLER cand
-            score = wsum - deg[vg] * ay * const
-            ns = np.where(is_own, np.inf, -score)
-            order = np.lexsort((cand, ns, vg))
-            win = order[_first_group_starts(vg[order])]
-            w_own = np.zeros(nv, dtype=np.float64)
-            own_rows = np.flatnonzero(is_own)
-            w_own[vg[own_rows]] = wsum[own_rows]
-            wv = vg[win]
-            keep = cand[win] != comm[wv]
-            win = win[keep]
-            wv = wv[keep]
-            eix = w_own[wv] - selfloop[wv]
-            ax = cdeg[inv[wv]] - deg[wv]
-            gain = (
-                2.0 * (wsum[win] - eix)
-                - 2.0 * deg[wv] * (ay[win] - ax) * const
-            )
-            blocked = (
-                (csize[ci[win]] == 1)
-                & (csize[inv[wv]] == 1)
-                & (cand[win] > comm[wv])
-            )
-            apply_m = (gain > 0) & ~blocked
-            comm[wv[apply_m]] = cand[win][apply_m]
-
-        # full-scan modularity after the sweep
-        # (`parallelLouvainWithColoring.cpp:230-246`): e_xx as one mask-sum
-        # and a2_x over the community degrees, both exact
-        e_xx = float(w[comm[s] == comm[d]].sum())
-        cu, inv = np.unique(comm, return_inverse=True)
-        cdeg = np.bincount(inv, weights=deg)
-        a2_x = float((cdeg * cdeg).sum())
-        curr_mod = e_xx * const - a2_x * const * const
-        if (curr_mod - prev_mod) < thresh:
-            break
-        prev_mod = curr_mod if curr_mod > lower else lower
-        prev_comm = comm.copy()
-    return prev_comm, prev_mod, num_itrs
+        if len(idx):
+            gathers.append(_np_gather(s[idx], d[idx], w[idx], nv, deg, const))
+    return _gauss_seidel_sweeps(
+        gathers, lambda comm: float(w[comm[s] == comm[d]].sum()), deg,
+        selfloop, const, thresh, lower, max_iters,
+    )
 
 
 def _edge_positions(vs, es, ed):
@@ -684,10 +623,10 @@ def _edge_positions(vs, es, ed):
 
 
 def _class_moves(edges, state_src, dst_enr, const: float):
-    """One color class's moves (driver_state and broadcast tiers): the
-    pre-enriched class state and dst info join the src-partitioned edge
-    cache as broadcasts, so the per-(v, cand) aggregation runs in place
-    and lifts every per-v and per-cand constant via first()."""
+    """One color class's moves (broadcast tier): the pre-enriched class
+    state and dst info join the src-partitioned edge cache as broadcasts,
+    so the per-(v, cand) aggregation runs in place and lifts every per-v
+    and per-cand constant via first()."""
     counter = (
         edges.join(F.broadcast(state_src), "src")
         .join(F.broadcast(dst_enr), "dst")
@@ -706,124 +645,33 @@ def _class_moves(edges, state_src, dst_enr, const: float):
     return _class_best_moves(counter, None, None, const)
 
 
-def _colored_small_state(
-    spark, edges, pdf, classes, const, arrays, thresh, lower, max_iters,
-):
-    """Colored Gauss-Seidel sweeps with driver-held community state (the
-    driver_state tier).
-
-    Same per-class semantics as the distributed loop below — the gather
-    (edges ⋈ movers ⋈ assignment → groupBy(v, cand)) and the winner/gain
-    logic (:func:`_class_best_moves`) run IN SPARK over the persisted edge
-    table, so the heavy side never moves; only O(V) LocalRelations (movers,
-    assignment, per-community info computed in numpy — integer-exact, so
-    bit-equal to the distributed aggregation) are broadcast in, and only
-    the class's winner set (≤ movers rows) is collected out. This replaces
-    the per-class parquet cut of the full state — the dominant fixed cost
-    of a colored sweep at small |V| — with one lean collect per class;
-    empty classes are skipped outright (the driver knows the histogram).
-    The distributed path below is unchanged for large |V|: a billion-row
-    state must never collect.
-    """
-    import numpy as np
+def _exx(spark, edges, ids, pos, arrays):
+    """``exx(comm)``: the weight inside communities, over the probe's edge
+    copy ``arrays`` when ``pos`` (its endpoints' indices in ``ids``) is
+    known, else one Spark scan of the edge cache."""
     import pandas as pd
 
-    vs = pdf["v"].to_numpy(np.int64)
-    comm = pdf["comm"].to_numpy(np.int64).copy()
-    deg = pdf["deg"].to_numpy(np.float64)
-    selfloop = pdf["selfloop"].to_numpy(np.float64)
-    color = pdf["color"].to_numpy()
-    pos = {int(v): i for i, v in enumerate(vs)}
+    if pos is not None:
+        si, di = pos
+        ew = arrays[2]
+        return lambda comm: float(ew[comm[si] == comm[di]].sum())
 
-    # driver-held e_xx: map edge endpoints to state positions once; any
-    # endpoint outside the state falls back to the Spark scan
-    ew = arrays[2] if arrays is not None else None
-    pos_e = _edge_positions(vs, *arrays[:2]) if arrays is not None else None
+    def scan(comm):
+        a_src = spark.createDataFrame(
+            pd.DataFrame({"src": ids, "cs": comm}), "src long, cs long"
+        )
+        a_dst = spark.createDataFrame(
+            pd.DataFrame({"dst": ids, "cd": comm}), "dst long, cd long"
+        )
+        return (
+            edges.join(F.broadcast(a_src), "src")
+            .join(F.broadcast(a_dst), "dst")
+            .filter(F.col("cs") == F.col("cd"))
+            .agg(F.coalesce(F.sum("weight"), F.lit(0.0)).alias("e_xx"))
+            .collect()[0]["e_xx"]
+        )
 
-    prev_mod = -1.0
-    prev_comm = comm.copy()
-    num_itrs = 0
-    for it in range(max_iters):
-        num_itrs = it + 1
-        for cls in classes:
-            mask = color == cls
-            if not mask.any():
-                continue
-            cu, inv = np.unique(comm, return_inverse=True)
-            cdeg = np.bincount(inv, weights=deg)
-            csize = np.bincount(inv).astype(np.int64)
-            # TWO broadcast LocalRelations per class: the mover state
-            # doubles as the src filter, and the dst side carries its
-            # community's (ay, csize_cand) inline (the class-job cost at
-            # small |V| is driver plan-compile, not data)
-            state_src = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "src": vs[mask],
-                        "comm": comm[mask],
-                        "deg": deg[mask],
-                        "selfloop": selfloop[mask],
-                        "cdeg_cur": cdeg[inv[mask]],
-                        "csize_cur": csize[inv[mask]],
-                    }
-                ),
-                "src long, comm long, deg double, selfloop double, "
-                "cdeg_cur double, csize_cur long",
-            )
-            dst_enr = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "dst": vs,
-                        "cand": comm,
-                        "ay": cdeg[inv],
-                        "csize_cand": csize[inv],
-                    }
-                ),
-                "dst long, cand long, ay double, csize_cand long",
-            )
-            best = _class_moves(edges, state_src, dst_enr, const)
-            for r in best.collect():
-                if not r["blocked"]:
-                    comm[pos[r["v"]]] = r["cand"]
-
-        # full-scan modularity after the sweep: e_xx from the edge table
-        # (same expression as the distributed loop), a2_x in numpy
-        # (integer-exact sum of squared community degrees). With a
-        # driver-held edge copy the e_xx reduction is one numpy mask-sum
-        # instead of a Spark job per iteration.
-        if pos_e is not None:
-            si, di = pos_e
-            e_xx = float(ew[comm[si] == comm[di]].sum())
-        else:
-            a_src = spark.createDataFrame(
-                pd.DataFrame({"src": vs, "cs": comm}), "src long, cs long"
-            )
-            a_dst2 = spark.createDataFrame(
-                pd.DataFrame({"dst": vs, "cd": comm}), "dst long, cd long"
-            )
-            e_xx = (
-                edges.join(F.broadcast(a_src), "src")
-                .join(F.broadcast(a_dst2), "dst")
-                .filter(F.col("cs") == F.col("cd"))
-                .agg(F.coalesce(F.sum("weight"), F.lit(0.0)).alias("e_xx"))
-                .collect()[0]["e_xx"]
-            )
-        cu, inv = np.unique(comm, return_inverse=True)
-        cdeg = np.bincount(inv, weights=deg)
-        a2_x = float((cdeg * cdeg).sum())
-        curr_mod = e_xx * const - a2_x * const * const
-        if (curr_mod - prev_mod) < thresh:
-            break
-        prev_mod = curr_mod if curr_mod > lower else lower
-        prev_comm = comm.copy()
-
-    out = spark.createDataFrame(
-        pd.DataFrame({"v": vs, "comm": prev_comm}), "v long, comm long"
-    )
-    return LouvainPhaseResult(
-        assignment=out, modularity=prev_mod, iterations=num_itrs,
-        tier=Tier.DRIVER_STATE,
-    )
+    return scan
 
 
 def louvain_one_phase_colored(
@@ -846,15 +694,17 @@ def louvain_one_phase_colored(
 
     - **local** (<= 4M edge rows, |V| <= 100k, integer-valued weights):
       the coloring (multihash or distance-one, :func:`_colors_np`) and the
-      class sweeps (:func:`_colored_kernel_np`) replayed in numpy over the
+      Gauss-Seidel class sweeps (:func:`_colored_kernel_np`) in numpy over the
       probe's driver edge copy — exact, so bit-identical to the Spark
       colorings and class jobs. With explicit vertices or an injected
       ``colors`` the coloring and the state come from Spark and only the
       sweeps run in numpy. A multiphase run whose phase meets this gate
       runs every remaining phase in its numpy loop instead
       (``louvain.louvain_local_tail``).
-    - **driver_state** (|V| <= 100k): community state in numpy, one Spark
-      class job per color class over the src-partitioned edge cache.
+    - **driver_state** (|V| <= 100k): the local tier's sweeps with each
+      class's gather in Spark (``louvain._spark_gather``): community state
+      in numpy, one class job per color class over the src-partitioned
+      edge cache.
     - **broadcast** (|V| <= 5M): the distributed loop with both O(V) sides
       broadcast into a src-keyed class gather (zero exchanges per class).
     - **shuffle**: the distributed loop co-partitioned on ``dst``.
@@ -877,6 +727,17 @@ def louvain_one_phase_colored(
     WITHOUT the caller having to know — the cap stops being merely a
     post-hoc merge and becomes the plan choice.
     """
+    return _colored_phase(
+        g, thresh, lower, max_iters, num_colors_cap, coloring_algo, colors, tier
+    )
+
+
+def _colored_phase(
+    g, thresh, lower, max_iters, num_colors_cap, coloring_algo, colors, tier,
+    variant=frozenset(),
+):
+    """:func:`louvain_one_phase_colored` under a multiphase run's variant
+    flags (``no_local``: the run's ``local_threshold=0``)."""
     spark = g.edges.sparkSession
     # ``colors`` injects a precomputed (v, color) partition — e.g. the
     # natural 2-coloring of a bipartite graph, or an externally balanced
@@ -901,7 +762,7 @@ def louvain_one_phase_colored(
     # one aggregation over the degree table the sweep persists anyway
     vdeg = degree_table(g).persist()
     facts = graph_stats(g, vdeg)
-    tier = plan(facts, "louvain_colored", tier=tier)
+    tier = plan(facts, "louvain_colored", variant=variant, tier=tier)
     driver_tier = tier in (Tier.LOCAL, Tier.DRIVER_STATE)
     if driver_tier:
         # the class jobs broadcast both O(V) sides, so the layout that
@@ -986,53 +847,51 @@ def louvain_one_phase_colored(
             )
         )
     if driver_tier:
-        probe = pos = None
+        # (ids, colors, deg, selfloop) over the sorted vertex ids, whose
+        # indices stand for the vertex and community ids (same order, so
+        # every tie-break is unchanged), plus the edge endpoints' indices
+        # when the probe's edge copy covers them
+        pos = deg = None
         if colors_np is not None:
             pos = s_idx, d_idx
         else:
-            probe = state.toPandas()
-            if tier is Tier.LOCAL:
-                probe = probe.sort_values("v", ignore_index=True)
-                ids = probe["v"].to_numpy(np.int64)
-                colors_np = probe["color"].to_numpy()
+            st = state.toPandas().sort_values("v", ignore_index=True)
+            ids = st["v"].to_numpy(np.int64)
+            colors_np = st["color"].to_numpy()
+            deg = st["deg"].to_numpy(np.float64)
+            selfloop = st["selfloop"].to_numpy(np.float64)
+            if facts.arrays is not None:
                 es, ed, ew = facts.arrays[:3]
                 pos = _edge_positions(ids, es, ed)
         vdeg.unpersist()
         if tier is Tier.LOCAL and pos is not None:
-            # the whole sweep in numpy over the probe's edge copy, in the
-            # index space of the sorted vertex ids (community ids keep
-            # their order, so every tie-break is unchanged)
-            edges.unpersist()
+            # the whole sweep in numpy over the probe's edge copy
             comm, q, iters = _colored_kernel_np(
                 *pos, ew, len(ids), colors_np, classes, thresh, lower, max_iters
             )
-            out = spark.createDataFrame(
-                pd.DataFrame({"v": ids, "comm": ids[comm]}), "v long, comm long"
+        else:
+            # the same sweeps with each class's gather in Spark: one class
+            # job per non-empty class, O(V) winners collected
+            tier = Tier.DRIVER_STATE
+            if deg is None:
+                # real weights may differ from the Spark sum in the last ulp
+                sl = s_idx == d_idx
+                deg = np.bincount(s_idx, weights=ew, minlength=len(ids))
+                selfloop = np.bincount(s_idx[sl], weights=ew[sl], minlength=len(ids))
+            gathers = [
+                _spark_gather(spark, edges, ids, deg, const, movers=colors_np == cls)
+                for cls in classes
+                if (colors_np == cls).any()
+            ]
+            comm, q, iters = _gauss_seidel_sweeps(
+                gathers, _exx(spark, edges, ids, pos, facts.arrays),
+                deg, selfloop, const, thresh, lower, max_iters,
             )
-            return LouvainPhaseResult(out, q, iters, tier=Tier.LOCAL)
-        if probe is None:
-            # state from the probe's edge copy (real weights may differ
-            # from the Spark sum order in the last ulp)
-            sl = s_idx == d_idx
-            probe = pd.DataFrame(
-                {
-                    "v": ids,
-                    "comm": ids,
-                    "deg": np.bincount(s_idx, weights=ew, minlength=len(ids)),
-                    "selfloop": np.bincount(
-                        s_idx[sl], weights=ew[sl], minlength=len(ids)
-                    ),
-                    "color": colors_np,
-                }
-            )
-        # driver-held state: per-class parquet cuts replaced by lean
-        # winner collects (see _colored_small_state)
-        res = _colored_small_state(
-            spark, edges, probe, classes, const, facts.arrays, thresh,
-            lower, max_iters,
-        )
         edges.unpersist()
-        return res
+        out = spark.createDataFrame(
+            pd.DataFrame({"v": ids, "comm": ids[comm]}), "v long, comm long"
+        )
+        return LouvainPhaseResult(out, q, iters, tier=tier)
     # distributed tiers: bucket the per-class state
     # cuts by v, so the gather's a_dst join and the winner-application
     # join read the O(V) state pre-partitioned each sub-sweep (same trade

@@ -27,8 +27,8 @@ from grappolo_spark.plans.iteration import (
 from grappolo_spark.plans.tiers import (
     LOCAL_EDGE_ROWS,
     Tier,
+    endpoints_fit_int32,
     graph_facts,
-    graph_stats,
     local_facts,
     local_tier_allowed,
     plan,
@@ -225,13 +225,15 @@ def connected_components(
         # doubles as the vertex universe: the rounds' non-self input and
         # the final vertex attach read the small parquet. Durable runs
         # keep the old shape (resume must not read a scratch-rotation cut).
+        pa = g.edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         if run_dir is None:
-            pa = g.edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
             if not g.deduped:
                 pa = pa.distinct()
-            pairs_all = cut_lineage(pa, tag="cc_pairs_all")
+            pa = pairs_all = cut_lineage(pa, tag="cc_pairs_all")
             pairs = pairs_all.filter(F.col("u") != F.col("v"))
-        ids32 = graph_stats(g).fits_int32()
+        # the id bound from the cut (one min/max over its parquet), not a
+        # second evaluation of the edge pipeline
+        ids32 = endpoints_fit_int32(g, pa)
         start, resumed = runner.resume()
         # Early-freeze: a LEAF — a source with exactly one outgoing pair
         # that no pair targets — can be contracted out of the round input.

@@ -281,6 +281,215 @@ def _smart_init_np(s, d, w, vdeg, const, nv):
     return comm
 
 
+def _decide_moves(picks, comm, deg, selfloop, cdeg, csize, const):
+    """The ONE move decision of every driver-held sweep: ``(v, c)`` of the
+    winners that move. ``picks`` is a gather's ``(pick_v, pick_c, pick_w,
+    w_own)``: each vertex's best candidate community other than its own,
+    the weight it sends there, and every vertex's weight into its own
+    community. The gain ``2*(eiy − eix) − 2*deg_v*(ay − ax)*const``
+    (`utilityClusteringFunctions.cpp:226-259`) runs only on the winners,
+    which must gain strictly; singleton-swap protection compares the
+    target with the CURRENT COMMUNITY id (maxIndex > sc, `:254-256`).
+    ``cdeg``/``csize`` are indexed by community label."""
+    pick_v, pick_c, pick_w, w_own = picks
+    cur = comm[pick_v]
+    eix = w_own[pick_v] - selfloop[pick_v]
+    ax = cdeg[cur] - deg[pick_v]
+    ay = cdeg[pick_c]
+    gain = 2.0 * (pick_w - eix) - 2.0 * deg[pick_v] * (ay - ax) * const
+    blocked = (csize[pick_c] == 1) & (csize[cur] == 1) & (pick_c > cur)
+    keep = (gain > 0) & ~blocked
+    return pick_v[keep], pick_c[keep]
+
+
+def _np_gather(s, d, w, nv, deg, const):
+    """``gather(comm, cdeg) -> (pick_v, pick_c, pick_w, w_own)`` over the
+    edge rows ``(s, d, w)`` in numpy (vertex ids and community labels are
+    indices ``0..nv-1``, in the order of the ids they stand for): the sum
+    of weight per (src, comm[dst]) (``buildLocalMapCounter``,
+    `utilityClusteringFunctions.cpp:172-194`), then each vertex's best
+    candidate other than its own community."""
+    import numpy as np
+
+    # when nv^2 fits int32 the packed key sorts at half the memory-bus
+    # width — the per-iteration np.unique sort is this kernel's dominant
+    # cost on a bandwidth-bound box. Same keys, same sort order, same
+    # inverse: bit-identical results either way. s is loop-invariant:
+    # its key contribution is computed once, at the key's width.
+    key32 = nv * nv < (1 << 31)
+    s_base = (s * nv).astype(np.int32) if key32 else s * nv
+
+    def gather(comm, cdeg):
+        key = s_base + (comm.astype(np.int32) if key32 else comm)[d]
+        uk, inv = np.unique(key, return_inverse=True)
+        wsum = np.bincount(inv, weights=w)
+        gv = uk // nv
+        gc = uk % nv
+        own = gc == comm[gv]
+        w_own = np.zeros(nv)
+        w_own[gv[own]] = wsum[own]
+        # reduced-score argmax (same trick as the distributed kernel):
+        # eix/ax shift every candidate's gain by the same per-vertex
+        # constant, so ordering by ``cw − deg·a_y·const`` picks the same
+        # winner with the same (score desc, cand asc) tie-break, and the
+        # full gain formula runs only on the O(V) winners
+        cand = ~own
+        cv, cc, cw = gv[cand], gc[cand], wsum[cand]
+        if len(cv):
+            score = cw - deg[cv] * cdeg[cc] * const
+            order = np.lexsort((cc, -score, cv))
+            win = order[_first_group_starts(cv[order])]
+            cv, cc, cw = cv[win], cc[win], cw[win]
+        return cv, cc, cw, w_own
+
+    return gather
+
+
+def _spark_gather(spark, edges, vs, deg, const, ids32=False, unweighted=False,
+                  movers=None):
+    """:func:`_np_gather`'s ``gather`` as ONE Spark job over the persisted
+    src-partitioned edge cache ``edges`` (the driver_state tier): the O(E)
+    side never moves, the O(V) state goes in as two broadcast
+    LocalRelations typed to the cache's id columns (``ids32`` keeps the
+    exchange-free chain) and the O(V) winners come out. ``vs`` are the
+    sorted vertex ids the indices stand for; ``unweighted`` counts rows
+    instead of summing weights; ``movers`` (a mask over ``vs``) restricts
+    the sources to one color class."""
+    import numpy as np
+    import pandas as pd
+
+    id_t, id_sql = (np.int32, "int") if ids32 else (np.int64, "long")
+    sel = slice(None) if movers is None else movers
+    src, src_deg, dst = vs[sel].astype(id_t), deg[sel], vs.astype(id_t)
+    wsum_agg = (
+        F.count(F.lit(1)).cast("double") if unweighted else F.sum("weight")
+    ).alias("wsum")
+
+    def gather(comm, cdeg):
+        state_src = spark.createDataFrame(
+            pd.DataFrame(
+                {"src": src, "comm": comm[sel].astype(id_t), "deg": src_deg}
+            ),
+            f"src {id_sql}, comm {id_sql}, deg double",
+        )
+        dst_enr = spark.createDataFrame(
+            pd.DataFrame({"dst": dst, "cand": comm.astype(id_t), "ay": cdeg[comm]}),
+            f"dst {id_sql}, cand {id_sql}, ay double",
+        )
+        counter = (
+            edges.join(F.broadcast(state_src), "src")
+            .join(F.broadcast(dst_enr), "dst")
+            .groupBy(F.col("src").alias("v"), F.col("cand"))
+            .agg(
+                wsum_agg,
+                F.first("ay").alias("ay"),
+                F.first("deg").alias("deg"),
+                F.first("comm").alias("comm"),
+            )
+        )
+        is_own = F.col("cand") == F.col("comm")
+        score = F.col("wsum") - F.col("deg") * F.col("ay") * F.lit(const)
+        rows = (
+            counter.groupBy("v")
+            .agg(
+                F.min_by(
+                    F.struct("cand", "wsum"),
+                    F.struct(
+                        F.when(is_own, F.lit(float("inf")))
+                        .otherwise(-score)
+                        .alias("ns"),
+                        F.col("cand"),
+                    ),
+                ).alias("b"),
+                F.sum(F.when(is_own, F.col("wsum")).otherwise(F.lit(0.0))).alias(
+                    "w_own"
+                ),
+            )
+            .select(
+                "v", F.col("b.cand").alias("cand"), F.col("b.wsum").alias("wsum"),
+                "w_own",
+            )
+            .toPandas()
+        )
+        rv = np.searchsorted(vs, rows["v"].to_numpy(np.int64))
+        w_own = np.zeros(len(vs))
+        w_own[rv] = rows["w_own"].to_numpy(np.float64)
+        rc = rows["cand"].to_numpy(np.int64)
+        moves = rc != comm[rv]
+        return rv[moves], rc[moves], rows["wsum"].to_numpy(np.float64)[moves], w_own
+
+    return gather
+
+
+def _jacobi_sweeps(gather, comm, deg, selfloop, const, thresh, lower,
+                   max_iters):
+    """The driver-held Jacobi loop of one plain phase (the local and
+    driver_state tiers): every vertex moves against the previous
+    iteration's assignment, with the community aggregates, the pre-move
+    modularity and the move decision (:func:`_decide_moves`) in numpy and
+    the O(E) gather wherever ``gather`` runs it. ``comm`` holds community
+    labels ``0..nv-1``. Returns (prev_comm, prev_mod, iterations) with
+    the distributed loop's lag structure."""
+    import numpy as np
+
+    nv = len(deg)
+    prev_comm = comm
+    prev_mod = -1.0
+    num_itrs = 0
+    for _ in range(max_iters):
+        num_itrs += 1
+        cdeg = np.bincount(comm, weights=deg, minlength=nv)
+        csize = np.bincount(comm, minlength=nv)
+        picks = gather(comm, cdeg)
+        e_xx = float(picks[3].sum())
+        a2_x = float((cdeg * cdeg).sum())
+        curr_mod = e_xx * const - a2_x * const * const
+        if (curr_mod - prev_mod) < thresh:
+            break
+        mv, mc = _decide_moves(picks, comm, deg, selfloop, cdeg, csize, const)
+        prev_mod = curr_mod if curr_mod > lower else lower
+        prev_comm = comm
+        comm = comm.copy()
+        comm[mv] = mc
+    return prev_comm, prev_mod, num_itrs
+
+
+def _gauss_seidel_sweeps(gathers, exx, deg, selfloop, const, thresh, lower,
+                         max_iters):
+    """The driver-held Gauss-Seidel loop of one colored phase (the local
+    and driver_state tiers): one ``gathers`` entry per color class in
+    sweep order, each a ``gather`` restricted to its class's sources; the
+    community aggregates are refreshed before each class and the moves
+    applied after it (:func:`_decide_moves`). ``exx(comm)`` is the
+    post-sweep e_xx scan (`parallelLouvainWithColoring.cpp:230-246`).
+    Starts from singletons; same return as :func:`_jacobi_sweeps`."""
+    import numpy as np
+
+    nv = len(deg)
+    comm = np.arange(nv, dtype=np.int64)
+    prev_mod = -1.0
+    prev_comm = comm.copy()
+    num_itrs = 0
+    for it in range(max_iters):
+        num_itrs = it + 1
+        for gather in gathers:
+            cdeg = np.bincount(comm, weights=deg, minlength=nv)
+            csize = np.bincount(comm, minlength=nv)
+            picks = gather(comm, cdeg)
+            mv, mc = _decide_moves(picks, comm, deg, selfloop, cdeg, csize, const)
+            comm[mv] = mc
+        e_xx = exx(comm)
+        _, inv = np.unique(comm, return_inverse=True)
+        cdeg = np.bincount(inv, weights=deg)
+        a2_x = float((cdeg * cdeg).sum())
+        curr_mod = e_xx * const - a2_x * const * const
+        if (curr_mod - prev_mod) < thresh:
+            break
+        prev_mod = curr_mod if curr_mod > lower else lower
+        prev_comm = comm.copy()
+    return prev_comm, prev_mod, num_itrs
+
+
 def _local_kernel(s, d, w, nv, directed, thresh, lower, max_iters,
                   smart_init=False):
     """Index-space core of the local kernel (ids must be 0..nv-1).
@@ -296,82 +505,13 @@ def _local_kernel(s, d, w, nv, directed, thresh, lower, max_iters,
     if two_m == 0.0:
         return None, 0.0, 0
     const = (2.0 if directed else 1.0) / two_m
-
     if smart_init:
         comm = _smart_init_np(s, d, w, vdeg, const, nv)
     else:
         comm = np.arange(nv, dtype=np.int64)
-    # when nv^2 fits int32 the packed key sorts at half the memory-bus
-    # width — the per-iteration np.unique sort is this kernel's dominant
-    # cost on a bandwidth-bound box. Same keys, same sort order, same
-    # inverse: bit-identical results either way.
-    key32 = nv * nv < (1 << 31)
-    # s is loop-invariant: precompute its key contribution once, at the
-    # key's width (int32 when it fits — see note above)
-    s_base = (s * nv).astype(np.int32) if key32 else s * nv
-    prev_comm = comm
-    prev_mod = -1.0
-    num_itrs = 0
-    for _ in range(max_iters):
-        num_itrs += 1
-        cdeg = np.bincount(comm, weights=vdeg, minlength=nv)
-        csize = np.bincount(comm, minlength=nv)
-        # gather: sum weight per (src, comm[dst]) via a packed int key
-        if key32:
-            key = s_base + comm.astype(np.int32)[d]
-        else:
-            key = s_base + comm[d]
-        uk, inv = np.unique(key, return_inverse=True)
-        wsum = np.bincount(inv, weights=w)
-        gv = uk // nv
-        gc = uk % nv
-        own = gc == comm[gv]
-        w_own = np.zeros(nv)
-        w_own[gv[own]] = wsum[own]
-
-        e_xx = float(w_own.sum())
-        a2_x = float((cdeg * cdeg).sum())
-        curr_mod = e_xx * const - a2_x * const * const
-        if (curr_mod - prev_mod) < thresh:
-            break
-
-        # reduced-score argmax (same trick as the distributed kernel):
-        # eix/ax shift every candidate's gain by the same per-vertex
-        # constant, so ordering by ``cw − deg·a_y·const`` picks the same
-        # winner with the same (score desc, cand asc) tie-break, and the
-        # full gain formula runs only on the O(V) winners — fewer full-
-        # width passes over the candidate arrays (this box's throttled
-        # memory bus makes each pass the dominant cost)
-        cand_mask = ~own
-        cv, cc, cw = gv[cand_mask], gc[cand_mask], wsum[cand_mask]
-        best = np.full(nv, -1, dtype=np.int64)
-        if len(cv):
-            score = cw - vdeg[cv] * cdeg[cc] * const
-            order = np.lexsort((cc, -score, cv))
-            first = _first_group_starts(cv[order])
-            pick_v = cv[order][first]
-            pick_c = cc[order][first]
-            pick_w = cw[order][first]
-            eix = w_own[pick_v] - selfw[pick_v]
-            ax = cdeg[comm[pick_v]] - vdeg[pick_v]
-            ay = cdeg[pick_c]
-            gain = (
-                2.0 * (pick_w - eix)
-                - 2.0 * vdeg[pick_v] * (ay - ax) * const
-            )
-            keep = gain > 0
-            pick_v, pick_c = pick_v[keep], pick_c[keep]
-            blocked = (
-                (csize[pick_c] == 1)
-                & (csize[comm[pick_v]] == 1)
-                & (pick_c > comm[pick_v])
-            )
-            best[pick_v[~blocked]] = pick_c[~blocked]
-
-        prev_mod = curr_mod if curr_mod > lower else lower
-        prev_comm = comm
-        comm = np.where(best >= 0, best, comm)
-    return prev_comm, prev_mod, num_itrs
+    gather = _np_gather(s, d, w, nv, vdeg, const)
+    return _jacobi_sweeps(gather, comm, vdeg, selfw, const, thresh, lower,
+                          max_iters)
 
 
 def _coarsen_np(assign, s, d, w, k):
@@ -494,194 +634,6 @@ def louvain_local_tail(
     return out, prev_mod, num_clusters, phase, tot_itr, history
 
 
-def _small_state_phase(
-    spark,
-    edges,
-    e_cold,
-    vdeg,
-    selfw,
-    const: float,
-    thresh: float,
-    lower: float,
-    max_iters: int,
-    init_assign,
-    smart_init: bool,
-    ids32: bool,
-    unweighted: bool,
-):
-    """Driver-held-state Jacobi kernel (the driver_state tier).
-
-    The gather/argmax stays in Spark over the persisted edge cache (the
-    O(E) side never moves), but the O(V) state crosses the boundary as
-    broadcast LocalRelations in and one O(V) winner collect out —
-    replacing the per-iteration parquet commit, the cinfo/state Spark
-    joins and the observation machinery, which at small |V| are pure
-    driver plan-compile and job-latency floor. One Spark action per
-    iteration: the fused gather→argmax job over the
-    persisted edge cache, collecting O(V) winner rows. Community
-    aggregates (cdeg/csize), the gain formula and the move/termination
-    logic run in numpy with the exact expressions and lag structure of
-    the distributed loop (and of ``_local_kernel``). The planner admits
-    this tier only on the ``integer_weights`` fact: every aggregate is then
-    exact, so results are bit-identical to the distributed loop.
-    """
-    import numpy as np
-    import pandas as pd
-
-    # one O(V) collect: per-vertex degree + self-loop weight
-    st = (
-        vdeg.join(selfw, "v", "left")
-        .select("v", "deg", F.coalesce("selfloop", F.lit(0.0)).alias("selfloop"))
-        .toPandas()
-        .sort_values("v", kind="mergesort", ignore_index=True)
-    )
-    vs = st["v"].to_numpy(np.int64)
-    deg = st["deg"].to_numpy(np.float64)
-    selfloop = st["selfloop"].to_numpy(np.float64)
-    nv = len(vs)
-    if nv == 0:
-        return LouvainPhaseResult(
-            spark.createDataFrame([], "v long, comm long"), 0.0, 0,
-            tier=Tier.DRIVER_STATE,
-        )
-
-    if init_assign is not None:
-        ip = init_assign.select("v", "comm").toPandas()
-        imap = dict(zip(ip["v"].tolist(), ip["comm"].tolist()))
-        comm = np.array([imap.get(int(v), int(v)) for v in vs], dtype=np.int64)
-    elif smart_init:
-        # the SHARED one-pass initCommAssOpt sweep, one extra Spark job
-        # per phase (collected O(V) winners; cand < v already applied)
-        bp = _singleton_sweep_best(e_cold, vdeg, const).toPandas()
-        comm = vs.copy()
-        if len(bp):
-            idx = np.searchsorted(vs, bp["v"].to_numpy(np.int64))
-            comm[idx] = bp["cand"].to_numpy(np.int64)
-    else:
-        comm = vs.copy()
-
-    id_t = np.int32 if ids32 else np.int64
-    id_sql = "int" if ids32 else "long"
-    wsum_agg = (
-        F.count(F.lit(1)).cast("double").alias("wsum")
-        if unweighted
-        else F.sum("weight").alias("wsum")
-    )
-
-    prev_comm = comm
-    prev_mod = -1.0
-    num_itrs = 0
-    for _ in range(max_iters):
-        num_itrs += 1
-        cu, inv = np.unique(comm, return_inverse=True)
-        cdeg = np.bincount(inv, weights=deg)
-        csize = np.bincount(inv).astype(np.int64)
-
-        # the one distributed job: gather + single-pass argmax/w_own over
-        # the src-partitioned cache, both O(V) sides broadcast in as
-        # LocalRelations typed to the cache's id attributes (ids32 keeps
-        # the exchange-free chain), winners collected out
-        state_src = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "src": vs.astype(id_t),
-                    "comm": comm.astype(id_t),
-                    "deg": deg,
-                }
-            ),
-            f"src {id_sql}, comm {id_sql}, deg double",
-        )
-        dst_enr = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "dst": vs.astype(id_t),
-                    "cand": comm.astype(id_t),
-                    "ay": cdeg[inv],
-                }
-            ),
-            f"dst {id_sql}, cand {id_sql}, ay double",
-        )
-        counter = (
-            edges.join(F.broadcast(state_src), "src")
-            .join(F.broadcast(dst_enr), "dst")
-            .groupBy(F.col("src").alias("v"), F.col("cand"))
-            .agg(
-                wsum_agg,
-                F.first("ay").alias("ay"),
-                F.first("deg").alias("deg"),
-                F.first("comm").alias("comm"),
-            )
-        )
-        bestinfo = (
-            counter.withColumn("is_own", F.col("cand") == F.col("comm"))
-            .withColumn(
-                "score",
-                F.col("wsum") - F.col("deg") * F.col("ay") * F.lit(const),
-            )
-            .groupBy("v")
-            .agg(
-                F.min_by(
-                    F.struct("cand", "wsum"),
-                    F.struct(
-                        F.when(F.col("is_own"), F.lit(float("inf")))
-                        .otherwise(-F.col("score"))
-                        .alias("ns"),
-                        F.col("cand"),
-                    ),
-                ).alias("b"),
-                F.sum(
-                    F.when(F.col("is_own"), F.col("wsum")).otherwise(F.lit(0.0))
-                ).alias("w_own"),
-            )
-        )
-        rows = bestinfo.select(
-            "v", F.col("b.cand").alias("cand"), F.col("b.wsum").alias("wsum"),
-            "w_own",
-        ).toPandas()
-
-        # pre-move modularity (same accounting as the fused observations)
-        e_xx = float(rows["w_own"].to_numpy(np.float64).sum()) if len(rows) else 0.0
-        a2_x = float((cdeg * cdeg).sum())
-        curr_mod = e_xx * const - a2_x * const * const
-        if (curr_mod - prev_mod) < thresh:
-            break
-
-        # gain of the single best candidate + move decision, numpy mirror
-        # of the distributed `moved`/`move_ok` expressions
-        best = np.full(nv, -1, dtype=np.int64)
-        if len(rows):
-            rv = np.searchsorted(vs, rows["v"].to_numpy(np.int64))
-            rcand = rows["cand"].to_numpy(np.int64)
-            rwsum = rows["wsum"].to_numpy(np.float64)
-            rwown = rows["w_own"].to_numpy(np.float64)
-            rcomm = comm[rv]
-            has_cand = rcand != rcomm
-            ay = cdeg[np.searchsorted(cu, rcand)]
-            eix = rwown - selfloop[rv]
-            ax = cdeg[inv[rv]] - deg[rv]
-            gain = 2.0 * (rwsum - eix) - 2.0 * deg[rv] * (ay - ax) * const
-            cand_csize = csize[np.searchsorted(cu, rcand)]
-            blocked = (
-                (cand_csize == 1) & (csize[inv[rv]] == 1) & (rcand > rcomm)
-            )
-            keep = has_cand & (gain > 0) & ~blocked
-            best[rv[keep]] = rcand[keep]
-
-        prev_mod = curr_mod if curr_mod > lower else lower
-        prev_comm = comm
-        comm = np.where(best >= 0, best, comm)
-
-    out = spark.createDataFrame(
-        pd.DataFrame({"v": vs, "comm": prev_comm}), "v long, comm long"
-    )
-    return LouvainPhaseResult(
-        assignment=out,
-        modularity=prev_mod,
-        iterations=num_itrs,
-        tier=Tier.DRIVER_STATE,
-    )
-
-
 def louvain_one_phase(
     g: Graph,
     thresh: float = 1e-6,
@@ -700,11 +652,15 @@ def louvain_one_phase(
 ) -> LouvainPhaseResult:
     """Run one modularity-optimization level to its convergence threshold.
 
-    The tier (:mod:`grappolo_spark.plans.tiers`) picks the physical plan:
+    The tier (:mod:`grappolo_spark.plans.tiers`) picks the physical plan
+    (a phase has no local tier of its own: the multiphase driver runs the
+    same Jacobi sweeps with a numpy gather, :func:`louvain_local_tail`):
 
     - **driver_state** (|V| <= 100k, integer-valued weights, plain
-      variant, no ``run_dir``): community state held in numpy, one fused
-      gather→argmax Spark job per iteration (:func:`_small_state_phase`).
+      variant, no ``run_dir``): the local kernel's Jacobi sweeps
+      (:func:`_jacobi_sweeps`) with the gather in Spark — community state
+      in numpy, one fused gather→argmax job per iteration over the
+      persisted edge cache (:func:`_spark_gather`).
     - **broadcast** (|V| <= 5M): the assignment broadcasts into the
       ``edges JOIN assign(dst)`` gather, so the src-partitioned edge cache
       is only SCANNED per superstep — no exchange and no per-superstep
@@ -854,14 +810,46 @@ def louvain_one_phase(
     )
 
     if tier is Tier.DRIVER_STATE:
-        res = _small_state_phase(
-            spark, edges, e_cold, vdeg, selfw, const,
-            thresh, lower, max_iters, init_assign, smart_init, ids32,
-            unweighted,
+        # the local kernel's Jacobi sweeps with the gather in Spark: one
+        # O(V) collect of (v, deg, selfloop) and of the warm start, then
+        # one gather job per iteration; community labels are the ranks
+        # of the starting community ids, so every tie-break is unchanged
+        import numpy as np
+        import pandas as pd
+
+        st = (
+            vdeg.join(selfw, "v", "left")
+            .select("v", "deg", F.coalesce("selfloop", F.lit(0.0)).alias("selfloop"))
+            .toPandas()
+            .sort_values("v", kind="mergesort", ignore_index=True)
+        )
+        vs = st["v"].to_numpy(np.int64)
+        deg = st["deg"].to_numpy(np.float64)
+        comm = vs.copy()
+        init = None
+        if init_assign is not None:
+            init = init_assign.select("v", "comm").toPandas()
+        elif smart_init:
+            # the SHARED one-pass initCommAssOpt sweep (cand < v applied)
+            init = _singleton_sweep_best(e_cold, vdeg, const).toPandas()
+            init.columns = ["v", "comm"]
+        if init is not None and len(init) and len(vs):
+            iv = init["v"].to_numpy(np.int64)
+            at = np.searchsorted(vs, iv).clip(max=len(vs) - 1)
+            held = vs[at] == iv
+            comm[at[held]] = init["comm"].to_numpy(np.int64)[held]
+        labels, comm = np.unique(comm, return_inverse=True)
+        gather = _spark_gather(spark, edges, vs, deg, const, ids32, unweighted)
+        comm, q, iters = _jacobi_sweeps(
+            gather, comm, deg, st["selfloop"].to_numpy(np.float64), const,
+            thresh, lower, max_iters,
         )
         edges.unpersist()
         vdeg_full.unpersist()
-        return res
+        out = spark.createDataFrame(
+            pd.DataFrame({"v": vs, "comm": labels[comm]}), "v long, comm long"
+        )
+        return LouvainPhaseResult(out, q, iters, tier=Tier.DRIVER_STATE)
 
     # with the broadcast gather OFF (billion-vertex assignments) the state
     # table is consumed by several v-keyed joins/aggs per superstep: commit

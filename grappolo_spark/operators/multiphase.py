@@ -234,7 +234,7 @@ def louvain(
     coarsen without symmetrizing — the
     `runDirectedMultiPhaseBasic.cpp:52-170` driver.
     """
-    from grappolo_spark.operators.coloring import louvain_one_phase_colored
+    from grappolo_spark.operators.coloring import _colored_phase
     from grappolo_spark.operators.louvain import louvain_local_tail
     from grappolo_spark.operators.vertex_following import (
         apply_vertex_following,
@@ -336,11 +336,11 @@ def louvain(
         phase_thresh = c_threshold if use_coloring else threshold
         prev_mod = curr_mod
         if use_coloring:
-            res = louvain_one_phase_colored(
-                cur_g, thresh=phase_thresh, lower=curr_mod,
-                num_colors_cap=num_colors_cap,
-                coloring_algo=coloring_algo,
-                tier=tier,
+            # the run's variant flags: local_threshold=0 keeps the colored
+            # phase off its local tier too
+            res = _colored_phase(
+                cur_g, phase_thresh, curr_mod, 100, num_colors_cap,
+                coloring_algo, None, tier, variant,
             )
         else:
             res = louvain_one_phase(

@@ -119,9 +119,6 @@ def pagerank(
       power iteration, dangling mass and ``tol`` test included, runs in
       driver numpy in one canonical summation order — one Spark action
       per call, ranks independent of row order and partitioning.
-    - **driver_state** (|V| <= 100k, no ``tol``, no ``run_dir``, no
-      dangling vertex): the gather runs in Spark over the dst-partitioned
-      edge cache, the rank vector lives in numpy.
     - **broadcast** (|V| <= 5M): the rank table broadcasts, the edge table
       is hash-partitioned by ``dst`` once, and the contribution
       groupBy(dst) reuses that layout — the superstep moves ZERO edge rows.
@@ -133,8 +130,7 @@ def pagerank(
     every third superstep (every superstep with ``run_dir`` or ``tol``).
     """
     spark = g.edges.sparkSession
-    variant = {"tol"} if tol is not None else set()
-    facts = local_facts(g, "pagerank", run_dir, variant, tier)
+    facts = local_facts(g, "pagerank", run_dir, tier=tier)
     if facts is not None:
         _check_symmetric(g, facts)
         return _local_pagerank(spark, facts.arrays, alpha, max_iters, tol)
@@ -143,7 +139,7 @@ def pagerank(
     degrees = degree_table(g).persist()
     facts = graph_stats(g, degrees)
     _check_symmetric(g, facts, degrees)
-    tier = plan(facts, "pagerank", run_dir, variant, tier)
+    tier = plan(facts, "pagerank", run_dir, tier=tier)
     n = facts.nv
     if n == 0:
         degrees.unpersist()
@@ -169,54 +165,6 @@ def pagerank(
         # partition on the AGGREGATION key: with the join side broadcast,
         # groupBy(dst) then needs no exchange at all
         edges = e_loop.repartition("dst").persist()
-
-    if tier is Tier.DRIVER_STATE:
-        # driver-held-rank loop (same structure as the louvain driver_state
-        # kernel): the per-superstep gather — edges ⋈ broadcast(ranks) →
-        # groupBy(dst) → sum — runs IN SPARK over the dst-partitioned cache
-        # exactly as below (single-stage agg, no exchange, so the per-dst
-        # sums are the same deterministic per-partition reductions), but
-        # the O(V) rank state lives in numpy: one LocalRelation in and one
-        # O(V) collect out per superstep replaces the O(V) base⋈contribs
-        # join and the every-3rd-superstep parquet commit. The rank update
-        # is the identical scalar expression, so ranks are bit-identical
-        # (pinned by test_pagerank_driver_ranks_matches). The planner
-        # excludes dangling graphs (their rank-mass reduction would move a
-        # float sum across the boundary), tol (delta is a distributed agg)
-        # and run_dir (resume state must stay durable).
-        import numpy as np
-        import pandas as pd
-
-        bp = base.select("v", "wout").toPandas()
-        vs_np = bp["v"].to_numpy(np.int64)
-        wout_np = bp["wout"].to_numpy(np.float64)
-        order = np.argsort(vs_np, kind="stable")
-        vs_np, wout_np = vs_np[order], wout_np[order]
-        rank_np = np.full(n, 1.0 / n, dtype=np.float64)
-        dangling = 0.0
-        for _ in range(max_iters):
-            rank_lr = spark.createDataFrame(
-                pd.DataFrame({"v": vs_np, "rank": rank_np, "wout": wout_np}),
-                "v long, rank double, wout double",
-            )
-            cp = (
-                edges.join(F.broadcast(rank_lr), edges.src == rank_lr.v)
-                .select(F.col("dst").alias("v"), contrib_c.alias("c"))
-                .groupBy("v")
-                .agg(F.sum("c").alias("in_contrib"))
-                .toPandas()
-            )
-            in_c = np.zeros(n, dtype=np.float64)
-            if len(cp):
-                idx = _slots(vs_np, cp["v"].to_numpy(np.int64))
-                in_c[idx] = cp["in_contrib"].to_numpy(np.float64)
-            rank_np = (1.0 - alpha) / n + alpha * (in_c + dangling / n)
-        out = spark.createDataFrame(
-            pd.DataFrame({"v": vs_np, "rank": rank_np}), "v long, rank double"
-        )
-        degrees.unpersist()
-        edges.unpersist()
-        return out
 
     # shuffle config (rank table too big to broadcast): commit the rank
     # state BUCKETED by v so the per-superstep edges(src)⋈ranks(v) join

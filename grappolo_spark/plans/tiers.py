@@ -6,9 +6,10 @@ scale-safe:
 
 - ``local``        the whole computation in driver numpy over a collected
                    copy of the edge table (no Spark job per superstep)
-- ``driver_state`` the O(E) gather stays in Spark over a persisted edge
-                   cache; the O(V) state lives in numpy and crosses the
-                   boundary as broadcast LocalRelations in, one collect out
+- ``driver_state`` the local kernel's numpy sweeps with their O(E) gather
+                   in Spark over a persisted edge cache; the O(V) state
+                   crosses the boundary as broadcast LocalRelations in, one
+                   collect out (Louvain's plain and colored phases)
 - ``broadcast``    the O(V) state stays a DataFrame and is broadcast into
                    the gather join (the edge cache is only scanned)
 - ``shuffle``      the O(V) state is shuffled; nothing is broadcast
@@ -48,7 +49,7 @@ class Tier(str, Enum):
 # the tiers each operator implements, cheapest first; "louvain" is the
 # multiphase driver (its local tier is the numpy tail over all phases)
 OP_TIERS = {
-    "pagerank": tuple(Tier),
+    "pagerank": (Tier.LOCAL, Tier.BROADCAST, Tier.SHUFFLE),
     "components": (Tier.LOCAL, Tier.SHUFFLE),
     "labelprop": (Tier.LOCAL, Tier.BROADCAST, Tier.SHUFFLE),
     "louvain": tuple(Tier),
@@ -62,14 +63,12 @@ VARIANTS = frozenset({
     "early_terminate",  # louvain: active-set gather
     "ftr",              # louvain: Fast-Track-Resistance exit
     "salting",          # louvain: hub gather routed through salted sums
-    "tol",              # pagerank: L1 convergence test
     "min_label",        # components: method="label_prop"
     "no_local",         # local_threshold=0: the caller excludes the local tier
 })
 
 # variant flags that exclude each tier, per operator
 _EXCLUDES = {
-    ("pagerank", Tier.DRIVER_STATE): {"tol"},
     ("components", Tier.LOCAL): {"min_label"},
     ("louvain", Tier.LOCAL): {"sampling", "early_terminate", "ftr"},
     ("louvain_phase", Tier.DRIVER_STATE): {
@@ -276,6 +275,24 @@ def _stats_action(g, degrees) -> None:
     )
 
 
+def endpoints_fit_int32(g, pairs) -> bool:
+    """Every id of ``g``'s edge endpoints, listed by the ``(u, v)`` table
+    ``pairs``, fits int32: from the memo's id bounds, else ONE min/max
+    over ``pairs`` (a cut the caller reads anyway), remembered as ``g``'s
+    id bounds when its endpoints are its vertex set."""
+    from pyspark.sql import functions as F
+
+    facts = graph_facts(g)
+    if facts.id_lo is None or facts.id_hi is None:
+        lo, hi = pairs.agg(
+            F.least(F.min("u"), F.min("v")), F.greatest(F.max("u"), F.max("v"))
+        ).collect()[0]
+        facts = replace(facts, id_lo=lo, id_hi=hi)
+        if g.vertices is None:
+            remember(g, id_lo=lo, id_hi=hi)
+    return facts.fits_int32()
+
+
 def local_facts(g, op, run_dir=None, variant=frozenset(), tier=None):
     """``g``'s facts when ``op``'s call runs in the local tier (probed
     under :data:`LOCAL_EDGE_ROWS`: under the bound the probe IS its
@@ -331,11 +348,8 @@ def _eligible(t: Tier, facts: Facts, op: str, run_dir, variant) -> bool:
         if op == "louvain_colored":
             return facts.integer_weights
         return True
-    if t is Tier.DRIVER_STATE:
-        if op == "pagerank":
-            return run_dir is None and not facts.dangling
-        if op == "louvain_phase":
-            return run_dir is None and facts.integer_weights and facts.nv != 0
+    if t is Tier.DRIVER_STATE and op == "louvain_phase":
+        return run_dir is None and facts.integer_weights and facts.nv != 0
     return True
 
 

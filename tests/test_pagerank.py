@@ -134,21 +134,6 @@ def test_pagerank_local_tier_ignores_row_order(spark):
     assert ranks(rows, parts=7) == base
 
 
-def test_pagerank_driver_state_rejects_stray_ids(spark):
-    """A gathered destination id outside the vertex table must raise, not
-    land on a neighbour's rank slot. The explicit vertex table cannot
-    drop an endpoint (``vertex_ids()`` unions the edge endpoints in), so
-    the stray comes from an edge table flagged undirected that is not
-    symmetrized: id 2 is only a destination, and ``base`` keys on src."""
-    df = spark.createDataFrame(
-        [(0, 1, 1.0), (1, 3, 1.0), (3, 0, 1.0), (1, 2, 1.0)],
-        "src long, dst long, weight double",
-    )
-    g = Graph(edges=df)
-    with pytest.raises(ValueError, match=r"endpoints \[2\]"):
-        pagerank(g, max_iters=2, tier="driver_state").collect()
-
-
 @pytest.mark.parametrize(
     "tier", [None, "local", "driver_state", "broadcast", "shuffle"]
 )
@@ -164,6 +149,6 @@ def test_pagerank_rejects_unsymmetrized_undirected_graph(spark, tier):
     with pytest.raises(ValueError, match=r"symmetrized.*endpoints \[2\]"):
         pagerank(Graph(edges=df), max_iters=2, tier=tier).collect()
     # the same rows as arcs are a valid directed graph on every tier
-    if tier != "driver_state":  # vertex 2 dangles: driver_state excluded
+    if tier != "driver_state":  # pagerank has no driver_state tier
         ranks = pagerank(Graph(edges=df, directed=True), max_iters=2, tier=tier)
         assert abs(sum(r.rank for r in ranks.collect()) - 1.0) < 1e-12

@@ -183,25 +183,6 @@ def test_bipartite_mtx_sink_guard(spark, tmp_path):
     assert body[1] == "2 2 2" and body[2] == "1 1 1"
 
 
-def test_colored_small_state_matches_distributed(spark):
-    # the small-state colored sweep (driver-held comm, per-class winner
-    # collects) must be bit-identical to the distributed per-class loop:
-    # same gather/argmax expressions, integer-exact community aggregates
-    from grappolo_spark.operators import coloring as C
-    from grappolo_spark.sources import fixtures
-
-    g = fixtures.karate(spark)
-    res_small = C.louvain_one_phase_colored(g, thresh=1e-6, max_iters=5)
-    res_dist = C.louvain_one_phase_colored(
-        g, thresh=1e-6, max_iters=5, tier="shuffle"
-    )
-    assert res_small.modularity == res_dist.modularity
-    assert res_small.iterations == res_dist.iterations
-    a = {r["v"]: r["comm"] for r in res_small.assignment.collect()}
-    b = {r["v"]: r["comm"] for r in res_dist.assignment.collect()}
-    assert a == b
-
-
 def test_kernel_result_survives_later_runs(spark):
     # the kernel returns its last commit WITHOUT a final re-cut; that file
     # must leave the rotating commit window (promote_result rename) or any

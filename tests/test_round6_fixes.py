@@ -329,32 +329,6 @@ def test_multiphase_colored_np_continuation_matches(spark):
     assert _multiphase_tuple(auto) == _multiphase_tuple(distributed)
 
 
-def test_pagerank_driver_ranks_matches(spark):
-    """The driver-held-rank pagerank loop must be bit-identical to the
-    committed-state distributed loop: the gather job is the same plan
-    over the same cache, and the rank update is the same scalar
-    expression. Covers weighted, unweighted and a graph with an
-    explicit-vertex side (non-sym_complete base build)."""
-    from grappolo_spark.operators.pagerank import pagerank
-    from grappolo_spark.sources.fixtures import grid3d, karate
-
-    weighted = Graph.from_pairs(
-        spark,
-        [(0, 1, 3.0), (1, 2, 2.0), (2, 0, 1.0), (3, 4, 5.0), (4, 5, 4.0),
-         (5, 3, 1.0), (2, 3, 1.0), (6, 6, 2.0)],
-    )
-    for g in (karate(spark), grid3d(spark, 3, 3, 3), weighted):
-        fast = sorted(
-            (r["v"], r["rank"])
-            for r in pagerank(g, max_iters=5, tier="driver_state").collect()
-        )
-        slow = sorted(
-            (r["v"], r["rank"])
-            for r in pagerank(g, max_iters=5, tier="broadcast").collect()
-        )
-        assert fast == slow
-
-
 def test_multiphase_colored_big_edge_fallback_matches(spark, monkeypatch):
     """Without the probe's driver edge copy the multiphase coloring gate
     falls back to the distinct-count job and the kernel to its Spark

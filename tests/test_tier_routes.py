@@ -31,6 +31,13 @@ def test_local_threshold_zero_excludes_local_tier(spark):
     )
     r0 = louvain(g, max_phases=3, local_threshold=0)
     assert {h["tier"] for h in r0.phase_history} == {"driver_state"}
+    colored = dict(
+        max_phases=3, coloring=True, min_graph_size=5, num_colors_cap=8,
+        coloring_algo="multihash",
+    )
+    r0 = louvain(g, local_threshold=0, **colored)
+    assert "local" not in {h["tier"] for h in r0.phase_history}
+    assert r0.modularity == louvain(g, tier="driver_state", **colored).modularity
     for call in (
         lambda: connected_components(g, local_threshold=10),
         lambda: label_propagation(g, local_threshold=10**9),
@@ -73,3 +80,19 @@ def test_coarse_rebuild_keeps_graph_flags(spark):
     assert got.directed == want.directed
     assert got.edges.count() == got.edges.select("src", "dst").distinct().count()
     assert _rows(got.edges) == _rows(want.edges)
+
+
+def test_cold_star_run_takes_its_id_bound_from_the_cut(spark, monkeypatch):
+    """The star path on a cold memo reads the id bound off its pair cut:
+    no stats aggregation (a second evaluation of the edge pipeline), the
+    bound is remembered, and the labels are unchanged."""
+    from grappolo_spark.plans import tiers as T
+
+    want = _rows(connected_components(karate(spark), local_threshold=0))
+    actions = []
+    monkeypatch.setattr(T, "_stats_action", lambda *a: actions.append(a))
+    g = karate(spark)
+    assert _rows(connected_components(g, local_threshold=0)) == want
+    assert actions == []
+    facts = T.graph_facts(g)
+    assert (facts.id_lo, facts.id_hi) == (0, 33)

@@ -35,15 +35,15 @@ _INT = dict(integer_weights=True)
 
 # (op, facts, run_dir, variant, expected tier)
 CASES = [
-    # pagerank: driver_state <= 100k < broadcast <= 5M < shuffle
-    ("pagerank", Facts(nv=DS), None, (), D),
+    # pagerank: broadcast <= 5M < shuffle
+    ("pagerank", Facts(nv=DS), None, (), B),
     ("pagerank", Facts(nv=DS + 1), None, (), B),
     ("pagerank", Facts(nv=BR), None, (), B),
     ("pagerank", Facts(nv=BR + 1), None, (), S),
     ("pagerank", Facts(nv=DS, dangling=True), None, (), B),
-    ("pagerank", Facts(nv=DS), None, {"tol"}, B),
+    ("pagerank", Facts(nv=DS, explicit_vertices=True), None, (), B),
     ("pagerank", Facts(nv=DS), "rd", (), B),
-    ("pagerank", Facts(nv=BR + 1), "rd", {"tol"}, S),
+    ("pagerank", Facts(nv=BR + 1), "rd", (), S),
     # components: local <= 2M raw edge rows, else the star rounds
     ("components", _probed(ER), None, (), L),
     ("components", _probed(ER + 1), None, (), S),
@@ -99,14 +99,14 @@ CASES = [
     ("louvain", _probed(ER, nv=BR + 1), None, {"early_terminate"}, S),
     ("louvain", _probed(ER, nv=BR + 1), None, {"ftr"}, S),
     ("louvain", _probed(ER, nv=BR + 1), None, {"no_local"}, S),
-    # pagerank's local tier: <= 2M edge rows, dangling and tol included
+    # pagerank's local tier: <= 2M edge rows, dangling included
     ("pagerank", _probed(ER), None, (), L),
-    ("pagerank", _probed(ER + 1, nv=DS), None, (), D),
-    ("pagerank", Facts(edge_rows=ER + 1, nv=DS), None, (), D),
+    ("pagerank", _probed(ER + 1, nv=DS), None, (), B),
+    ("pagerank", Facts(edge_rows=ER + 1, nv=DS), None, (), B),
     ("pagerank", _probed(ER), "rd", (), B),
-    ("pagerank", _probed(ER, explicit_vertices=True), None, (), D),
+    ("pagerank", _probed(ER, explicit_vertices=True), None, (), B),
     ("pagerank", _probed(ER, dangling=True), None, (), L),
-    ("pagerank", _probed(ER), None, {"tol"}, L),
+    ("pagerank", _probed(ER, nv=DS + 1), None, (), L),
 ]
 
 
@@ -141,12 +141,13 @@ def test_forced_tier_must_be_supported():
         plan(small, "pagerank", variant={"typo"})
     with pytest.raises(ValueError):
         plan(small, "pagerank", tier="fast")
+    with pytest.raises(ValueError, match="has no 'driver_state' tier"):
+        plan(small, "pagerank", tier="driver_state")
 
 
 def test_pagerank_probes_only_when_local_is_possible():
     # run_dir (the durable route) and explicit vertices run no probe
     assert T.wants_probe(Facts(), "pagerank")
-    assert T.wants_probe(Facts(), "pagerank", variant={"tol"})
     assert not T.wants_probe(Facts(), "pagerank", run_dir="rd")
     assert not T.wants_probe(Facts(explicit_vertices=True), "pagerank")
     assert not T.wants_probe(Facts(), "pagerank", tier="driver_state")
