@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grappolo_spark.graph import Graph
+from grappolo_spark.operators.pagerank import _slots
 from grappolo_spark.plans.iteration import (
     SuperstepRunner,
     cut_lineage,
@@ -30,7 +31,10 @@ from grappolo_spark.plans.tiers import (
 )
 
 
-def _local_lpa(spark, max_iters: int, stop_on_converge: bool, arrays) -> DataFrame:
+def _local_lpa(
+    spark, max_iters: int, stop_on_converge: bool, arrays,
+    runner: SuperstepRunner,
+) -> DataFrame:
     """Local tier: driver-local replay of the identical iteration — same
     gather (sum weight per neighbor label), same (weight desc, label asc)
     argmax, same Jacobi update and convergence stop. Exact for
@@ -41,7 +45,11 @@ def _local_lpa(spark, max_iters: int, stop_on_converge: bool, arrays) -> DataFra
     ids)``, UNFILTERED: self-loop rows are dropped here, but their
     endpoints are in ``ids`` (a vertex with only self-loops has no gather
     rows and keeps its own label) — so the output covers every edge
-    endpoint and the caller needs no separate vertex_ids() pass."""
+    endpoint and the caller needs no separate vertex_ids() pass.
+
+    ``runner`` resumes the labels from its last commit, whichever tier
+    wrote it, and commits every superstep, the converged one included,
+    in the distributed loop's ``(v, label)`` layout."""
     import numpy as np
     import pandas as pd
 
@@ -53,10 +61,14 @@ def _local_lpa(spark, max_iters: int, stop_on_converge: bool, arrays) -> DataFra
     d = np.searchsorted(ids, dst[m])
     w = w[m]
     nv = len(ids)
-    labels = np.arange(nv, dtype=np.int64)
+    start, labels = runner.resume_array(ids, "label")
+    if labels is None:
+        labels = np.arange(nv, dtype=np.int64)
+    else:
+        labels = _slots(ids, labels, f"run_dir {runner.run_dir!r}: labels")
     from grappolo_spark.operators.louvain import _first_group_starts
 
-    for _ in range(max_iters):
+    for step in range(start, max_iters):
         key = s * nv + labels[d]
         uk, inv = np.unique(key, return_inverse=True)
         wsum = np.bincount(inv, weights=w)
@@ -68,6 +80,7 @@ def _local_lpa(spark, max_iters: int, stop_on_converge: bool, arrays) -> DataFra
         new[gv[order][first]] = gl[order][first]
         changed = bool((new != labels).any())
         labels = new
+        runner.commit_arrays(step, {"v": ids, "label": ids[labels]}, {"op": "lpa"})
         if stop_on_converge and not changed:
             break
     return spark.createDataFrame(
@@ -87,19 +100,29 @@ def label_propagation(
 
     Tiers (:mod:`grappolo_spark.plans.tiers`): **local** — up to 2M edge
     rows the identical iteration replays driver-locally over the probe's
-    one Arrow collect (excluded by ``run_dir`` and ``local_threshold=0``);
+    one Arrow collect (excluded by ``local_threshold=0``, and by an
+    explicit vertex table when ``run_dir`` is set);
     **broadcast** (|V| <= 5M) — pairs are hash-partitioned ONCE on ``src``
     (the aggregation key), the O(V) label table broadcasts into the join,
     and the freq→argmax chain runs with zero per-superstep exchanges, with
     32-bit ids through the hot chain when the id bound fits (labels are
     vertex ids, so the label column narrows too; winners are identical);
     **shuffle** — the dst-co-partitioned plan. ``tier`` forces one.
+
+    With ``run_dir`` (a local or mounted path) every tier commits each
+    superstep's ``(v, label)`` state in one layout — the local tier
+    through pyarrow, with no Spark job — and resumes from the last commit
+    of any tier; in the local tier a run_dir that holds another vertex
+    set raises ``ValueError``.
     """
     spark = g.edges.sparkSession
     variant = set() if local_tier_allowed(local_threshold) else {"no_local"}
     facts = local_facts(g, "labelprop", run_dir, variant, tier)
     if facts is not None:
-        labels = _local_lpa(spark, max_iters, stop_on_converge, facts.arrays)
+        labels = _local_lpa(
+            spark, max_iters, stop_on_converge, facts.arrays,
+            SuperstepRunner(spark, run_dir),
+        )
         if g.vertices is None:
             # every vertex id is an edge endpoint (self-loop-only
             # vertices included — see _local_lpa): the LocalRelation

@@ -31,10 +31,11 @@ from grappolo_spark.plans.tiers import (
 )
 
 
-def _slots(vs, ids):
+def _slots(vs, ids, what="pagerank: edge endpoints"):
     """Positions of ``ids`` in the sorted vertex array ``vs``. An id that
-    ``vs`` does not hold raises ``ValueError`` (``searchsorted`` alone
-    would land it silently on a neighbour's slot)."""
+    ``vs`` does not hold raises ``ValueError`` naming ``what``
+    (``searchsorted`` alone would land it silently on a neighbour's
+    slot)."""
     import numpy as np
 
     idx = np.searchsorted(vs, ids)
@@ -42,7 +43,7 @@ def _slots(vs, ids):
     if not held.all():
         stray = np.unique(ids[~held])
         raise ValueError(
-            f"pagerank: edge endpoints {stray[:10].tolist()} "
+            f"{what} {stray[:10].tolist()} "
             f"({len(stray)} ids) are not in the vertex table"
         )
     return idx
@@ -65,7 +66,9 @@ def _check_symmetric(g, facts, cache=None) -> None:
         )
 
 
-def _local_pagerank(spark, arrays, alpha: float, max_iters: int, tol):
+def _local_pagerank(
+    spark, arrays, alpha: float, max_iters: int, tol, runner: SuperstepRunner
+):
     """Local tier: the whole power iteration in driver numpy over the
     probe's ``(src, dst, weight, ids)`` arrays, one LocalRelation out.
 
@@ -75,7 +78,11 @@ def _local_pagerank(spark, arrays, alpha: float, max_iters: int, tol):
     delta are computed from that order and the sorted ids. The ranks
     therefore do not depend on the input's row order or partitioning.
     The update is the distributed loop's expression, so they match the
-    broadcast/shuffle tiers up to summation order."""
+    broadcast/shuffle tiers up to summation order.
+
+    ``runner`` resumes the ranks from its last commit, whichever tier
+    wrote it, and commits every superstep in the distributed loop's
+    ``(v, rank, wout)`` layout; ``wout`` is recomputed, never resumed."""
     import numpy as np
     import pandas as pd
 
@@ -87,13 +94,19 @@ def _local_pagerank(spark, arrays, alpha: float, max_iters: int, tol):
     s, d, w = _slots(ids, src[order]), _slots(ids, dst[order]), w[order]
     wout = np.bincount(s, weights=w, minlength=n)
     dangling_v = wout == 0.0
-    rank = np.full(n, 1.0 / n, dtype=np.float64)
-    for _ in range(max_iters):
+    start, rank = runner.resume_array(ids, "rank")
+    if rank is None:
+        rank = np.full(n, 1.0 / n, dtype=np.float64)
+    for step in range(start, max_iters):
         dangling = rank[dangling_v].sum()
         in_c = np.bincount(d, weights=rank[s] * w / wout[s], minlength=n)
         new = (1.0 - alpha) / n + alpha * (in_c + dangling / n)
         done = tol is not None and np.abs(new - rank).sum() < tol
         rank = new
+        runner.commit_arrays(
+            step, {"v": ids, "rank": rank, "wout": wout},
+            {"op": "pagerank", "alpha": alpha},
+        )
         if done:
             break
     return spark.createDataFrame(
@@ -114,11 +127,12 @@ def pagerank(
     The tier (see :mod:`grappolo_spark.plans.tiers`) picks the physical
     strategy:
 
-    - **local** (<= 2M edge rows, no ``run_dir``, no explicit vertex
-      table): the bounded probe collects the edge table and the whole
-      power iteration, dangling mass and ``tol`` test included, runs in
-      driver numpy in one canonical summation order — one Spark action
-      per call, ranks independent of row order and partitioning.
+    - **local** (<= 2M edge rows, no explicit vertex table): the bounded
+      probe collects the edge table and the whole power iteration,
+      dangling mass and ``tol`` test included, runs in driver numpy in
+      one canonical summation order — one Spark action per call, ranks
+      independent of row order and partitioning. With ``run_dir`` each
+      superstep commits through pyarrow, with no Spark job.
     - **broadcast** (|V| <= 5M): the rank table broadcasts, the edge table
       is hash-partitioned by ``dst`` once, and the contribution
       groupBy(dst) reuses that layout — the superstep moves ZERO edge rows.
@@ -128,12 +142,19 @@ def pagerank(
 
     ``tier`` forces one of these. Distributed loops commit the rank state
     every third superstep (every superstep with ``run_dir`` or ``tol``).
+    Every tier commits the same ``(v, rank, wout)`` layout under
+    ``run_dir`` (a local or mounted path) and resumes from the last commit
+    of any tier; in the local tier a run_dir that holds another vertex
+    set raises ``ValueError``.
     """
     spark = g.edges.sparkSession
     facts = local_facts(g, "pagerank", run_dir, tier=tier)
     if facts is not None:
         _check_symmetric(g, facts)
-        return _local_pagerank(spark, facts.arrays, alpha, max_iters, tol)
+        return _local_pagerank(
+            spark, facts.arrays, alpha, max_iters, tol,
+            SuperstepRunner(spark, run_dir),
+        )
     # the degree table is the rank state's (v, wout) base; the graph's
     # stats action, when it runs, also materializes the cache
     degrees = degree_table(g).persist()

@@ -29,7 +29,6 @@ import tempfile
 from collections import deque
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def read_observation(obs, timeout: float = 60.0) -> dict | None:
@@ -206,16 +205,63 @@ def promote_result(
     return out
 
 
+_MARKER = "_METRICS.json"
+
+
+def footer_rows(path: str) -> list[int]:
+    """Rows per parquet file that Spark reads under a local ``path`` (no
+    ``_``/``.`` prefix), in file-name order, from the footers: no Spark
+    job; ``[]`` when there are no such files. An unreadable footer
+    raises."""
+    import pyarrow.parquet as pq
+
+    local = path.removeprefix("file:")
+    files = [local] if os.path.isfile(local) else []
+    for d, subdirs, names in os.walk(local):
+        subdirs[:] = [s for s in subdirs if s[:1] not in "_."]
+        files += [os.path.join(d, f) for f in names if f[:1] not in "_."]
+    return [pq.read_metadata(f).num_rows for f in sorted(files)]
+
+
+def _local_dir(run_dir: str) -> str:
+    """``run_dir`` as a local path. Steps are listed and markers written
+    through ``os``, so a URI scheme other than ``file:`` raises: Spark
+    would write the state there while the markers land in a local
+    directory of the same name."""
+    from urllib.parse import urlsplit
+
+    url = urlsplit(run_dir)
+    if url.scheme == "file":
+        return url.path
+    if url.scheme:
+        raise ValueError(
+            f"run_dir {run_dir!r} is not a local path: use a local or "
+            "mounted directory"
+        )
+    return run_dir
+
+
 class SuperstepRunner:
     """Checkpointed superstep state store.
 
     Usage::
 
         runner = SuperstepRunner(spark, run_dir, every=5)
-        start, state = runner.resume(schema_loader)   # (0, None) fresh
+        start, state = runner.resume()   # (0, None) fresh
         for step in range(start, max_iters):
             state, metrics = advance(state)
             state = runner.commit(step, state, metrics)
+
+    With a ``run_dir`` (a local or mounted path; other URI schemes raise)
+    each committed superstep is ``step=NNNNNN/state`` parquet plus a
+    ``_METRICS.json`` marker written last, through a ``.tmp`` file and
+    ``os.replace``, so a killed commit leaves no marker and is redone.
+    Two writers share that layout: :meth:`commit` writes a DataFrame with
+    Spark, :meth:`commit_arrays` writes driver numpy columns as ONE
+    pyarrow file with no Spark job. :meth:`resume` and
+    :meth:`resume_array` read the last marked step whichever wrote it.
+    The marker's ``partitions`` list the rows per written state file, read
+    from the parquet footers (one entry for a numpy commit).
     """
 
     def __init__(
@@ -228,7 +274,7 @@ class SuperstepRunner:
         n_buckets: int = 32,
     ):
         self.spark = spark
-        self.run_dir = run_dir
+        self.run_dir = _local_dir(run_dir) if run_dir else None
         self.every = max(1, every)
         self.reliable = reliable
         # bucketed scratch commits (see cut_lineage): the big-graph kernels
@@ -237,56 +283,111 @@ class SuperstepRunner:
         self.bucket_by = bucket_by
         self.n_buckets = n_buckets
         self.history: list[dict] = []
-        if run_dir:
-            os.makedirs(run_dir, exist_ok=True)
+        if self.run_dir:
+            os.makedirs(self.run_dir, exist_ok=True)
 
     # -- persistence ---------------------------------------------------
     def _step_dir(self, step: int) -> str:
         return os.path.join(self.run_dir, f"step={step:06d}")
 
-    def resume(self) -> tuple[int, DataFrame | None]:
-        """Return (next_step, last committed state DF or None)."""
+    def _last_step(self) -> int | None:
+        """The last step with a marker, its history loaded; ``None`` when
+        nothing is committed."""
         if not self.run_dir or not os.path.isdir(self.run_dir):
-            return 0, None
-        done = sorted(
+            return None
+        done = [
             int(d.split("=")[1])
             for d in os.listdir(self.run_dir)
             if d.startswith("step=")
-            and os.path.exists(os.path.join(self.run_dir, d, "_METRICS.json"))
-        )
+            and os.path.exists(os.path.join(self.run_dir, d, _MARKER))
+        ]
         if not done:
-            return 0, None
-        last = done[-1]
-        state = self.spark.read.parquet(os.path.join(self._step_dir(last), "state"))
-        with open(os.path.join(self._step_dir(last), "_METRICS.json")) as f:
+            return None
+        last = max(done)
+        with open(os.path.join(self._step_dir(last), _MARKER)) as f:
             self.history = json.load(f).get("history", [])
+        return last
+
+    def resume(self) -> tuple[int, DataFrame | None]:
+        """Return (next_step, last committed state DF or None)."""
+        last = self._last_step()
+        if last is None:
+            return 0, None
+        state = self.spark.read.parquet(os.path.join(self._step_dir(last), "state"))
         return last + 1, state
 
-    def commit(self, step: int, state: DataFrame, metrics: dict) -> DataFrame:
-        """Record a completed superstep; returns the (lineage-cut) state."""
+    def resume_array(self, ids, col: str) -> tuple[int, object]:
+        """Return (next_step, the last commit's ``col`` as a numpy array
+        aligned to the sorted vertex ids ``ids``, or None). A commit whose
+        ``v`` column is not exactly ``ids`` raises ``ValueError``."""
+        import numpy as np
+        import pyarrow.parquet as pq
+
+        last = self._last_step()
+        if last is None:
+            return 0, None
+        state = pq.read_table(
+            os.path.join(self._step_dir(last), "state"), columns=["v", col]
+        )
+        v = state.column("v").to_numpy()
+        order = np.argsort(v, kind="stable")
+        if not np.array_equal(v[order], ids):
+            raise ValueError(
+                f"run_dir {self.run_dir!r} holds the state of {len(v)} "
+                f"vertices, not of this graph's {len(ids)}"
+            )
+        return last + 1, state.column(col).to_numpy()[order]
+
+    def _record(self, step: int, metrics: dict) -> str | None:
+        """Append ``metrics`` to the history; the step's directory when
+        this step is durable."""
         metrics = dict(metrics, step=step, ts=time.time())
         self.history.append(metrics)
         if self.run_dir and step % self.every == 0:
-            sd = self._step_dir(step)
+            return self._step_dir(step)
+        return None
+
+    def _mark(self, sd: str) -> None:
+        """Write the step's marker last and atomically."""
+        payload = {
+            "metrics": self.history[-1],
+            "partitions": [
+                {"partition": i, "rows": n}
+                for i, n in enumerate(footer_rows(os.path.join(sd, "state")))
+            ],
+            "history": self.history,
+        }
+        tmp = os.path.join(sd, _MARKER + ".tmp")
+        with open(tmp, "w") as f:
+            json.dump(payload, f)
+        os.replace(tmp, os.path.join(sd, _MARKER))
+
+    def commit(self, step: int, state: DataFrame, metrics: dict) -> DataFrame:
+        """Record a completed superstep; returns the (lineage-cut) state."""
+        sd = self._record(step, metrics)
+        if sd is not None:
             schema = state.schema
             state.write.mode("overwrite").parquet(os.path.join(sd, "state"))
-            state = self.spark.read.schema(schema).parquet(
-                os.path.join(sd, "state")
-            )
-            # per-partition lineage: rows per partition of the committed state
-            part_rows = [
-                r.asDict()
-                for r in state.groupBy(F.spark_partition_id().alias("partition"))
-                .agg(F.count(F.lit(1)).alias("rows"))
-                .collect()
-            ]
-            with open(os.path.join(sd, "_METRICS.json"), "w") as f:
-                json.dump(
-                    {"metrics": metrics, "partitions": part_rows, "history": self.history},
-                    f,
-                )
-            return state
+            self._mark(sd)
+            return self.spark.read.schema(schema).parquet(os.path.join(sd, "state"))
         return cut_lineage(
             state, tag="commit",
             bucket_by=self.bucket_by, n_buckets=self.n_buckets,
         )
+
+    def commit_arrays(self, step: int, columns: dict, metrics: dict) -> None:
+        """Record a completed superstep of driver state: ``columns`` maps
+        the Spark state's column names, in its order, to numpy arrays of
+        its types. No Spark job."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        sd = self._record(step, metrics)
+        if sd is not None:
+            # a killed commit's part files must not mix into this one
+            shutil.rmtree(sd, ignore_errors=True)
+            os.makedirs(os.path.join(sd, "state"))
+            pq.write_table(
+                pa.table(columns), os.path.join(sd, "state", "part-00000.parquet")
+            )
+            self._mark(sd)

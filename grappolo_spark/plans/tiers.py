@@ -339,11 +339,14 @@ def _eligible(t: Tier, facts: Facts, op: str, run_dir, variant) -> bool:
     if variant & _EXCLUDES.get((op, t), set()):
         return False
     if t is Tier.LOCAL:
-        if facts.arrays is None or run_dir is not None or "no_local" in variant:
+        if facts.arrays is None or "no_local" in variant:
             return False
-        if op in ("louvain", "pagerank"):
+        if run_dir is not None and op not in ("pagerank", "labelprop"):
+            return False  # no driver-side durable state yet
+        if op in ("louvain", "pagerank") or run_dir is not None:
             # explicit isolated vertices are not in the arrays (louvain's
-            # degrees()-based init, pagerank's |V|)
+            # degrees()-based init, pagerank's |V|, the vertex set a
+            # durable LPA commits)
             return not facts.explicit_vertices
         if op == "louvain_colored":
             return facts.integer_weights

@@ -241,22 +241,15 @@ def read_dimacs9(spark: SparkSession, path: str) -> Graph:
 
 
 def _footer_rows(path: str) -> int | None:
-    """Exact row count of a local parquet path from the footers of the
-    files Spark reads (no ``_``/``.`` prefix): no Spark job. ``None`` for
-    a non-local path or an unreadable footer."""
-    import os
+    """Exact row count of a local parquet path from its footers: no Spark
+    job. ``None`` for a non-local path or an unreadable footer."""
+    from grappolo_spark.plans.iteration import footer_rows
 
-    import pyarrow.parquet as pq
-
-    local = path.removeprefix("file:")
-    files = [local] if os.path.isfile(local) else []
-    for d, subdirs, names in os.walk(local):
-        subdirs[:] = [s for s in subdirs if s[:1] not in "_."]
-        files += [os.path.join(d, f) for f in names if f[:1] not in "_."]
     try:
-        return sum(pq.read_metadata(f).num_rows for f in files) if files else None
+        rows = footer_rows(path)
     except Exception:
         return None
+    return sum(rows) if rows else None
 
 
 def read_parquet_graph(spark: SparkSession, path: str) -> Graph:

@@ -31,7 +31,11 @@ def main() -> int:
     ap.add_argument("--input", help="parquet edge table (src,dst,weight)")
     ap.add_argument("--corpus", help="parquet corpus table (repo,path,commit,lang,content)")
     ap.add_argument("--output", required=True)
-    ap.add_argument("--run-dir", default=None, help="checkpoint/resume directory")
+    ap.add_argument(
+        "--run-dir", default=None,
+        help="checkpoint/resume directory: a local or mounted path "
+        "(a URI scheme other than file: is rejected)",
+    )
     ap.add_argument("--threshold", type=float, default=1e-6)
     ap.add_argument("--c-threshold", type=float, default=0.01)
     ap.add_argument("--min-graph-size", type=int, default=100_000)

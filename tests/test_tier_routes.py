@@ -49,12 +49,18 @@ def test_local_threshold_zero_excludes_local_tier(spark):
 
 
 def test_forced_tier_the_facts_cannot_support_raises(spark, tmp_path):
+    from grappolo_spark.graph import Graph
     from grappolo_spark.operators.louvain import louvain_one_phase
     from grappolo_spark.operators.pagerank import pagerank
 
     g = karate(spark)
+    with_vertices = Graph(
+        edges=g.edges, vertices=g.vertex_ids(), unweighted=g.unweighted
+    )
     with pytest.raises(ValueError):
-        label_propagation(g, tier="local", run_dir=str(tmp_path / "lpa"))
+        label_propagation(
+            with_vertices, tier="local", run_dir=str(tmp_path / "lpa")
+        )
     with pytest.raises(ValueError):
         connected_components(g, method="label_prop", tier="local")
     with pytest.raises(ValueError):

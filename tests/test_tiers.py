@@ -57,7 +57,7 @@ CASES = [
     ("labelprop", _probed(ER + 1, nv=BR), None, (), B),
     ("labelprop", Facts(nv=BR), None, (), B),
     ("labelprop", Facts(nv=BR + 1), None, (), S),
-    ("labelprop", _probed(ER, nv=BR), "rd", (), B),
+    ("labelprop", _probed(ER, nv=BR), "rd", (), L),
     ("labelprop", _probed(ER, nv=BR + 1), None, {"no_local"}, S),
     ("labelprop", _probed(ER, explicit_vertices=True), None, (), L),
     # one Louvain phase: driver_state needs integer weights
@@ -103,10 +103,16 @@ CASES = [
     ("pagerank", _probed(ER), None, (), L),
     ("pagerank", _probed(ER + 1, nv=DS), None, (), B),
     ("pagerank", Facts(edge_rows=ER + 1, nv=DS), None, (), B),
-    ("pagerank", _probed(ER), "rd", (), B),
+    ("pagerank", _probed(ER), "rd", (), L),
     ("pagerank", _probed(ER, explicit_vertices=True), None, (), B),
     ("pagerank", _probed(ER, dangling=True), None, (), L),
     ("pagerank", _probed(ER, nv=DS + 1), None, (), L),
+    # run_dir keeps PageRank's and LPA's local tier, whose commits cover
+    # the edge endpoints only; CC and louvain keep the distributed path
+    ("labelprop", _probed(ER, explicit_vertices=True), "rd", (), B),
+    ("pagerank", _probed(ER, explicit_vertices=True), "rd", (), B),
+    ("components", _probed(ER, explicit_vertices=True), "rd", (), S),
+    ("louvain", _probed(ER, nv=BR + 1, **_INT), "rd", (), S),
 ]
 
 
@@ -123,8 +129,12 @@ def test_forced_tier_must_be_supported():
     assert plan(small, "pagerank", tier="shuffle") is S
     # forcing skips the size bounds, not the semantics
     assert plan(Facts(nv=BR + 1), "labelprop", tier="broadcast") is B
+    assert plan(small, "labelprop", run_dir="rd", tier="local") is L
     with pytest.raises(ValueError):
-        plan(small, "labelprop", run_dir="rd", tier="local")
+        plan(
+            Facts(nv=10, edge_rows=10, arrays=(), explicit_vertices=True),
+            "labelprop", run_dir="rd", tier="local",
+        )
     with pytest.raises(ValueError):
         plan(small, "louvain_phase", tier="local")  # a phase has no local tier
     with pytest.raises(ValueError):
@@ -146,9 +156,9 @@ def test_forced_tier_must_be_supported():
 
 
 def test_pagerank_probes_only_when_local_is_possible():
-    # run_dir (the durable route) and explicit vertices run no probe
+    # explicit vertices run no probe; run_dir (the durable route) does
     assert T.wants_probe(Facts(), "pagerank")
-    assert not T.wants_probe(Facts(), "pagerank", run_dir="rd")
+    assert T.wants_probe(Facts(), "pagerank", run_dir="rd")
     assert not T.wants_probe(Facts(explicit_vertices=True), "pagerank")
     assert not T.wants_probe(Facts(), "pagerank", tier="driver_state")
 
