@@ -158,7 +158,6 @@ def _local_union_find(spark, arrays) -> DataFrame:
 
 def connected_components(
     g: Graph,
-    method: str = "star",
     max_iters: int = 50,
     local_threshold: int = LOCAL_EDGE_ROWS,
     freeze: bool = True,
@@ -170,29 +169,24 @@ def connected_components(
     Tiers (:mod:`grappolo_spark.plans.tiers`): **local** — up to 2M edge
     rows the labels come from a driver-local union-find over the probe's
     collected arrays (identical min-id labels; the star supersteps on a
-    small graph are pure fixed job overhead); **shuffle** — the star (or
-    ``method="label_prop"``) supersteps, one lineage cut / convergence
-    checksum per round. ``run_dir`` (durable superstep state) and
-    ``method="label_prop"`` exclude the local tier, as does
+    small graph are pure fixed job overhead); **shuffle** — the star
+    supersteps, one lineage cut / convergence checksum per round.
+    ``run_dir`` (durable superstep state) excludes the local tier, as does
     ``local_threshold=0``; ``tier`` forces one.
 
     ``freeze`` contracts converged leaves out of each round's input (the
     geometric work reduction — see the in-code note); works on scratch
     AND durable runs: the committed per-step state stays pre-split, and a
     resume rederives every frozen batch deterministically from the step
-    parquets the runner already keeps.
+    parquets the runner already keeps. The durable star state is a pair
+    table with no vertex count, so unlike PageRank's and LPA's, its
+    resume cannot check that a run_dir belongs to the graph.
 
     The star rounds carry 32-bit ids whenever the id-bound fact fits int32
     — component ids are min vertex ids, so BOTH columns of every per-round
     pair shuffle narrow; the returned ``(v, component)`` stays long.
     """
-    if method not in ("star", "label_prop"):
-        raise ValueError(f"unknown method {method!r}")
-    variant = set()
-    if method == "label_prop":
-        variant.add("min_label")
-    if not local_tier_allowed(local_threshold):
-        variant.add("no_local")
+    variant = set() if local_tier_allowed(local_threshold) else {"no_local"}
     # the bound is RAW edge rows (>= distinct pairs): graphs between the
     # two counts take the star path, whose labels are identical
     facts = local_facts(g, "components", run_dir, variant, tier)
@@ -219,166 +213,136 @@ def connected_components(
         # canonical graphs skip this exchange (rows unique by construction)
         pairs = pairs.distinct()
     runner = SuperstepRunner(spark, run_dir)
-    pairs_all = None  # star path's one-evaluation pair cut (see below)
-    if method == "star":
-        # the deduped pair table is cut once, KEEPING self-loop rows so it
-        # doubles as the vertex universe: the rounds' non-self input and
-        # the final vertex attach read the small parquet. Durable runs
-        # keep the old shape (resume must not read a scratch-rotation cut).
-        pa = g.edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        if run_dir is None:
-            if not g.deduped:
-                pa = pa.distinct()
-            pa = pairs_all = cut_lineage(pa, tag="cc_pairs_all")
-            pairs = pairs_all.filter(F.col("u") != F.col("v"))
-        # the id bound from the cut (one min/max over its parquet), not a
-        # second evaluation of the edge pipeline
-        ids32 = endpoints_fit_int32(g, pa)
-        start, resumed = runner.resume()
-        # Early-freeze: a LEAF — a source with exactly one outgoing pair
-        # that no pair targets — can be contracted out of the round input.
-        # Pairs always point downward (src > dst after small-star), so a
-        # leaf is never its component's min, and with degree 1 in the pair
-        # graph its removal can't disconnect anyone else; its label is
-        # resolved at the end by one join per freeze batch (latest first,
-        # so chains u→m→m' compose). Star outputs are mostly leaves after
-        # round 1, so the round input collapses — the shrinkage that makes
-        # O(log n) rounds affordable at 100 TB.
-        frozen_batches: list[DataFrame] = []
-        if resumed is not None:
-            pairs = resumed
-            if freeze:
-                # Durable resume: each frozen batch is a DETERMINISTIC
-                # function of its step's committed state (the split runs
-                # AFTER the commit), so instead of persisting batches
-                # separately — with their own crash windows — rederive
-                # them lazily from the per-step state parquets the runner
-                # already keeps, and re-split the resumed state itself.
-                for s in range(start):
-                    st_path = os.path.join(run_dir, f"step={s:06d}", "state")
-                    if os.path.isdir(st_path):
-                        frozen_batches.append(
-                            _leaf_singles(spark.read.parquet(st_path))
-                        )
-                if frozen_batches:
-                    pairs = pairs.join(
-                        frozen_batches[-1].select("u"), "u", "left_anti"
+    pairs_all = None  # the one-evaluation pair cut (see below)
+    # the deduped pair table is cut once, KEEPING self-loop rows so it
+    # doubles as the vertex universe: the rounds' non-self input and
+    # the final vertex attach read the small parquet. Durable runs
+    # keep the old shape (resume must not read a scratch-rotation cut).
+    pa = g.edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    if run_dir is None:
+        if not g.deduped:
+            pa = pa.distinct()
+        pa = pairs_all = cut_lineage(pa, tag="cc_pairs_all")
+        pairs = pairs_all.filter(F.col("u") != F.col("v"))
+    # the id bound from the cut (one min/max over its parquet), not a
+    # second evaluation of the edge pipeline
+    ids32 = endpoints_fit_int32(g, pa)
+    start, resumed = runner.resume()
+    # Early-freeze: a LEAF — a source with exactly one outgoing pair
+    # that no pair targets — can be contracted out of the round input.
+    # Pairs always point downward (src > dst after small-star), so a
+    # leaf is never its component's min, and with degree 1 in the pair
+    # graph its removal can't disconnect anyone else; its label is
+    # resolved at the end by one join per freeze batch (latest first,
+    # so chains u→m→m' compose). Star outputs are mostly leaves after
+    # round 1, so the round input collapses — the shrinkage that makes
+    # O(log n) rounds affordable at 100 TB.
+    frozen_batches: list[DataFrame] = []
+    if resumed is not None:
+        pairs = resumed
+        if freeze:
+            # Durable resume: each frozen batch is a DETERMINISTIC
+            # function of its step's committed state (the split runs
+            # AFTER the commit), so instead of persisting batches
+            # separately — with their own crash windows — rederive
+            # them lazily from the per-step state parquets the runner
+            # already keeps, and re-split the resumed state itself.
+            for s in range(start):
+                st_path = os.path.join(run_dir, f"step={s:06d}", "state")
+                if os.path.isdir(st_path):
+                    frozen_batches.append(
+                        _leaf_singles(spark.read.parquet(st_path))
                     )
-        if ids32:
-            # one cast at the top of the rounds (covers fresh AND resumed
-            # state, which an older run may have written as long); every
-            # per-round shuffle then moves 8-byte pairs instead of 16
-            pairs = pairs.select(
-                F.col("u").cast("int").alias("u"),
-                F.col("v").cast("int").alias("v"),
-            )
-        if pairs_all is None:
-            pairs = cut_lineage(pairs, tag="cc_pairs")
-        # else: pairs is already a cheap filter+cast projection over the
-        # cc_pairs_all cut parquet — a second materializing cut would be a
-        # pure extra write+read job
-        prev = _checksum(pairs)  # once, against the cut parquet — cheap
-        # NOTE (r6): an AQE-off gate for tiny round loops was tried here
-        # (as then around the driver_state sweeps) and measured ~2x
-        # SLOWER (warm rounds 4.3-4.7s vs 2.2-2.7s at 7k pairs): unlike
-        # the exchange-free louvain sweeps, a star round is all exchanges
-        # over a shrinking input, and AQE's empty-relation propagation +
-        # partition coalescing pay for their re-planning. AQE stays ON.
-        for step in range(start, max_iters):
-            pairs = _small_star(_large_star(pairs, dedup=False))
-            # convergence checksum rides the round's single
-            # materializing action as observed metrics (CollectMetrics
-            # on the state plan). Scratch rounds localCheckpoint —
-            # materialize + plan truncation with no parquet round-trip
-            # (a star round references its input several times, so
-            # truncation is required either way); durable runs commit
-            # through the runner so every superstep is resumable.
-            obs = Observation()
-            observed = pairs.observe(obs, *_checksum_aggs())
-            if run_dir is not None:
-                pairs = runner.commit(step, observed, {"op": "cc_star"})
-            else:
-                pairs = observed.localCheckpoint(eager=True)
-                runner.history.append({"op": "cc_star", "step": step})
-            m = read_observation(obs)
-            if m is not None:
-                cur = (m["n"], m["h"])
-            else:
-                # AQE empty-relation propagation can prune
-                # CollectMetrics when the plan goes runtime-empty;
-                # re-derive from the committed parquet (one cheap scan)
-                cur = _checksum(pairs)
-            if cur == prev or cur[0] == 0:
-                break
-            prev = cur
-            if freeze:
-                # split off this round's leaves — lazy plans over the
-                # MATERIALIZED round output (checkpoint or committed
-                # parquet leaf), so the split folds into the next
-                # round's single action and each frozen batch re-reads
-                # only the leaf at resolution time. The split runs
-                # AFTER the commit, so durable state stays pre-split
-                # and resume can rederive every batch (see the resume
-                # branch above).
-                singles = _leaf_singles(pairs)
-                frozen_batches.append(singles)
-                pairs = pairs.join(singles.select("u"), "u", "left_anti")
-        # final pairs form star(s): v -> component root (min id)
-        labels = pairs.select(F.col("u").alias("v"), F.col("v").alias("component"))
-        roots = pairs.select(F.col("v").alias("v")).distinct().select(
-            "v", F.col("v").alias("component")
-        )
-        labels = labels.union(roots).groupBy("v").agg(
-            F.min("component").alias("component")
-        )
-        # resolve frozen leaves, latest batch first: a leaf's target either
-        # already has a final label (later batches resolved before earlier
-        # ones) or is itself a root (coalesce to the target id)
-        for batch in reversed(frozen_batches):
-            b = batch.select(F.col("u").alias("bv"), F.col("v").alias("m"))
-            resolved = (
-                b.join(labels, b.m == labels.v, "left")
-                .select(
-                    F.col("bv").alias("v"),
-                    F.coalesce("component", F.col("m")).alias("component"),
+            if frozen_batches:
+                pairs = pairs.join(
+                    frozen_batches[-1].select("u"), "u", "left_anti"
                 )
+    if ids32:
+        # one cast at the top of the rounds (covers fresh AND resumed
+        # state, which an older run may have written as long); every
+        # per-round shuffle then moves 8-byte pairs instead of 16
+        pairs = pairs.select(
+            F.col("u").cast("int").alias("u"),
+            F.col("v").cast("int").alias("v"),
+        )
+    if pairs_all is None:
+        pairs = cut_lineage(pairs, tag="cc_pairs")
+    # else: pairs is already a cheap filter+cast projection over the
+    # cc_pairs_all cut parquet — a second materializing cut would be a
+    # pure extra write+read job
+    prev = _checksum(pairs)  # once, against the cut parquet — cheap
+    # NOTE (r6): an AQE-off gate for tiny round loops was tried here
+    # (as then around the driver_state sweeps) and measured ~2x
+    # SLOWER (warm rounds 4.3-4.7s vs 2.2-2.7s at 7k pairs): unlike
+    # the exchange-free louvain sweeps, a star round is all exchanges
+    # over a shrinking input, and AQE's empty-relation propagation +
+    # partition coalescing pay for their re-planning. AQE stays ON.
+    for step in range(start, max_iters):
+        pairs = _small_star(_large_star(pairs, dedup=False))
+        # convergence checksum rides the round's single
+        # materializing action as observed metrics (CollectMetrics
+        # on the state plan). Scratch rounds localCheckpoint —
+        # materialize + plan truncation with no parquet round-trip
+        # (a star round references its input several times, so
+        # truncation is required either way); durable runs commit
+        # through the runner so every superstep is resumable.
+        obs = Observation()
+        observed = pairs.observe(obs, *_checksum_aggs())
+        if run_dir is not None:
+            pairs = runner.commit(step, observed, {"op": "cc_star"})
+        else:
+            pairs = observed.localCheckpoint(eager=True)
+            runner.history.append({"op": "cc_star", "step": step})
+        m = read_observation(obs)
+        if m is not None:
+            cur = (m["n"], m["h"])
+        else:
+            # AQE empty-relation propagation can prune
+            # CollectMetrics when the plan goes runtime-empty;
+            # re-derive from the committed parquet (one cheap scan)
+            cur = _checksum(pairs)
+        if cur == prev or cur[0] == 0:
+            break
+        prev = cur
+        if freeze:
+            # split off this round's leaves — lazy plans over the
+            # MATERIALIZED round output (checkpoint or committed
+            # parquet leaf), so the split folds into the next
+            # round's single action and each frozen batch re-reads
+            # only the leaf at resolution time. The split runs
+            # AFTER the commit, so durable state stays pre-split
+            # and resume can rederive every batch (see the resume
+            # branch above).
+            singles = _leaf_singles(pairs)
+            frozen_batches.append(singles)
+            pairs = pairs.join(singles.select("u"), "u", "left_anti")
+    # final pairs form star(s): v -> component root (min id)
+    labels = pairs.select(F.col("u").alias("v"), F.col("v").alias("component"))
+    roots = pairs.select(F.col("v").alias("v")).distinct().select(
+        "v", F.col("v").alias("component")
+    )
+    labels = labels.union(roots).groupBy("v").agg(
+        F.min("component").alias("component")
+    )
+    # resolve frozen leaves, latest batch first: a leaf's target either
+    # already has a final label (later batches resolved before earlier
+    # ones) or is itself a root (coalesce to the target id)
+    for batch in reversed(frozen_batches):
+        b = batch.select(F.col("u").alias("bv"), F.col("v").alias("m"))
+        resolved = (
+            b.join(labels, b.m == labels.v, "left")
+            .select(
+                F.col("bv").alias("v"),
+                F.coalesce("component", F.col("m")).alias("component"),
             )
-            labels = labels.unionByName(resolved)
-        if ids32:
-            # chain boundary: canonical long schema for the final join
-            labels = labels.select(
-                F.col("v").cast("long").alias("v"),
-                F.col("component").cast("long").alias("component"),
-            )
-    elif method == "label_prop":
-        labels = g.vertex_ids().select("v", F.col("v").alias("component"))
-        labels = cut_lineage(labels, tag="cc_labels")
-        for step in range(max_iters):
-            nbr_min = (
-                pairs.join(labels, pairs.v == labels.v)
-                .select(F.col("u").alias("vv"), "component")
-                .groupBy("vv")
-                .agg(F.min("component").alias("nbr_min"))
-            )
-            new = (
-                labels.join(nbr_min, labels.v == nbr_min.vv, "left")
-                .select(
-                    "v",
-                    F.least(
-                        "component", F.coalesce("nbr_min", F.col("component"))
-                    ).alias("component"),
-                )
-            )
-            new = cut_lineage(new, tag="cc_labels")
-            changed = (
-                new.alias("n")
-                .join(labels.alias("o"), "v")
-                .filter(F.col("n.component") != F.col("o.component"))
-                .count()
-            )
-            labels = new
-            if changed == 0:
-                break
+        )
+        labels = labels.unionByName(resolved)
+    if ids32:
+        # chain boundary: canonical long schema for the final join
+        labels = labels.select(
+            F.col("v").cast("long").alias("v"),
+            F.col("component").cast("long").alias("component"),
+        )
 
     # attach isolated vertices (their own component)
     if pairs_all is not None:

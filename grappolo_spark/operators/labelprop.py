@@ -112,8 +112,8 @@ def label_propagation(
     With ``run_dir`` (a local or mounted path) every tier commits each
     superstep's ``(v, label)`` state in one layout — the local tier
     through pyarrow, with no Spark job — and resumes from the last commit
-    of any tier; in the local tier a run_dir that holds another vertex
-    set raises ``ValueError``.
+    of any tier; a run_dir that holds another vertex count (in the
+    local tier: another vertex set) raises ``ValueError``.
     """
     spark = g.edges.sparkSession
     variant = set() if local_tier_allowed(local_threshold) else {"no_local"}
@@ -165,7 +165,7 @@ def label_propagation(
     pairs = pairs.repartition("src" if broadcast_labels else "dst").persist()
 
     runner = SuperstepRunner(spark, run_dir)
-    start, resumed = runner.resume()
+    start, resumed = runner.resume(facts.nv)
     if resumed is not None:
         labels = cut_lineage(resumed, tag="lpa")
     elif ids_cut is not None:

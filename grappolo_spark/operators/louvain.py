@@ -861,24 +861,24 @@ def louvain_one_phase(
         bucket_by=None if broadcast_assign else "v",
         n_buckets=int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
-    start, resumed = runner.resume()
-    if resumed is not None:
-        assign = resumed
-        prev_assign = assign
-        prev_mod = runner.history[-1].get("prev_mod", -1.0) if runner.history else -1.0
+    start, assign = runner.resume(facts.nv)
+    if start > 1:
+        # a stop at the first resumed step returns the state BEFORE the
+        # last commit, as the uninterrupted run would
+        prev_assign = runner.state(start - 2)
     else:
         if init_assign is not None:
-            assign = init_assign.select("v", "comm")
+            prev_assign = init_assign.select("v", "comm")
         elif smart_init:
             # fused initCommAssOpt: the SHARED one-pass sweep builder, fed
             # the partitioned edges and the vdeg/const already computed
             # here (two fewer jobs per phase than smart_init_assignment)
             best0 = _singleton_sweep_best(e_cold, vdeg, const)
-            assign = vdeg.join(best0, "v", "left").select(
+            prev_assign = vdeg.join(best0, "v", "left").select(
                 "v", F.coalesce("cand", F.col("v")).cast("long").alias("comm")
             )
         else:
-            assign = vdeg.select("v", F.col("v").alias("comm"))
+            prev_assign = vdeg.select("v", F.col("v").alias("comm"))
         # parquet cut, NOT localCheckpoint: a localCheckpoint materializes
         # through the non-adaptive df.rdd compile path, and at sf0.1 the
         # kernel's iterations measured ~3x slower under it (198.6s vs
@@ -890,12 +890,15 @@ def louvain_one_phase(
         # already-parquet-backed coarse graph inside ONE job), which costs
         # less than a dedicated write+read job at that size.
         if not (facts.coarse and tier is Tier.BROADCAST):
-            assign = cut_lineage(
-                assign, tag="louvain_assign",
+            prev_assign = cut_lineage(
+                prev_assign, tag="louvain_assign",
                 bucket_by=runner.bucket_by, n_buckets=runner.n_buckets,
             )
-        prev_assign = assign
-        prev_mod = -1.0
+    prev_mod = -1.0
+    if assign is None:
+        assign = prev_assign
+    elif runner.history:
+        prev_mod = runner.history[-1].get("prev_mod", -1.0)
 
     hist1 = hist2 = None  # last two assignments (early-termination filter)
     num_itrs = start

@@ -144,8 +144,8 @@ def pagerank(
     every third superstep (every superstep with ``run_dir`` or ``tol``).
     Every tier commits the same ``(v, rank, wout)`` layout under
     ``run_dir`` (a local or mounted path) and resumes from the last commit
-    of any tier; in the local tier a run_dir that holds another vertex
-    set raises ``ValueError``.
+    of any tier; a run_dir that holds another vertex count (in the
+    local tier: another vertex set) raises ``ValueError``.
     """
     spark = g.edges.sparkSession
     facts = local_facts(g, "pagerank", run_dir, tier=tier)
@@ -196,7 +196,7 @@ def pagerank(
         bucket_by="v" if tier is Tier.SHUFFLE else None,
         n_buckets=int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
-    start, resumed = runner.resume()
+    start, resumed = runner.resume(n)
     if resumed is not None:
         ranks = resumed
     else:

@@ -290,11 +290,11 @@ class SuperstepRunner:
     def _step_dir(self, step: int) -> str:
         return os.path.join(self.run_dir, f"step={step:06d}")
 
-    def _last_step(self) -> int | None:
-        """The last step with a marker, its history loaded; ``None`` when
-        nothing is committed."""
+    def _last_step(self) -> tuple[int | None, int]:
+        """The last step with a marker, its history loaded, and the rows of
+        its state; ``(None, 0)`` when nothing is committed."""
         if not self.run_dir or not os.path.isdir(self.run_dir):
-            return None
+            return None, 0
         done = [
             int(d.split("=")[1])
             for d in os.listdir(self.run_dir)
@@ -302,19 +302,34 @@ class SuperstepRunner:
             and os.path.exists(os.path.join(self.run_dir, d, _MARKER))
         ]
         if not done:
-            return None
+            return None, 0
         last = max(done)
         with open(os.path.join(self._step_dir(last), _MARKER)) as f:
-            self.history = json.load(f).get("history", [])
-        return last
+            marker = json.load(f)
+        self.history = marker.get("history", [])
+        return last, sum(p["rows"] for p in marker.get("partitions", []))
 
-    def resume(self) -> tuple[int, DataFrame | None]:
-        """Return (next_step, last committed state DF or None)."""
-        last = self._last_step()
+    def _mismatch(self, rows: int, nv: int) -> ValueError:
+        return ValueError(
+            f"run_dir {self.run_dir!r} holds the state of {rows} "
+            f"vertices, not of this graph's {nv}"
+        )
+
+    def state(self, step: int) -> DataFrame:
+        """The committed state of ``step``."""
+        return self.spark.read.parquet(os.path.join(self._step_dir(step), "state"))
+
+    def resume(self, nv: int | None = None) -> tuple[int, DataFrame | None]:
+        """Return (next_step, last committed state DF or None). ``nv``, the
+        caller's |V| for a state of one row per vertex, must equal the
+        last commit's rows (from its marker, no Spark job), else
+        ``ValueError``."""
+        last, rows = self._last_step()
         if last is None:
             return 0, None
-        state = self.spark.read.parquet(os.path.join(self._step_dir(last), "state"))
-        return last + 1, state
+        if nv is not None and rows != nv:
+            raise self._mismatch(rows, nv)
+        return last + 1, self.state(last)
 
     def resume_array(self, ids, col: str) -> tuple[int, object]:
         """Return (next_step, the last commit's ``col`` as a numpy array
@@ -323,7 +338,7 @@ class SuperstepRunner:
         import numpy as np
         import pyarrow.parquet as pq
 
-        last = self._last_step()
+        last, _ = self._last_step()
         if last is None:
             return 0, None
         state = pq.read_table(
@@ -332,10 +347,7 @@ class SuperstepRunner:
         v = state.column("v").to_numpy()
         order = np.argsort(v, kind="stable")
         if not np.array_equal(v[order], ids):
-            raise ValueError(
-                f"run_dir {self.run_dir!r} holds the state of {len(v)} "
-                f"vertices, not of this graph's {len(ids)}"
-            )
+            raise self._mismatch(len(v), len(ids))
         return last + 1, state.column(col).to_numpy()[order]
 
     def _record(self, step: int, metrics: dict) -> str | None:

@@ -63,13 +63,11 @@ VARIANTS = frozenset({
     "early_terminate",  # louvain: active-set gather
     "ftr",              # louvain: Fast-Track-Resistance exit
     "salting",          # louvain: hub gather routed through salted sums
-    "min_label",        # components: method="label_prop"
     "no_local",         # local_threshold=0: the caller excludes the local tier
 })
 
 # variant flags that exclude each tier, per operator
 _EXCLUDES = {
-    ("components", Tier.LOCAL): {"min_label"},
     ("louvain", Tier.LOCAL): {"sampling", "early_terminate", "ftr"},
     ("louvain_phase", Tier.DRIVER_STATE): {
         "sampling", "early_terminate", "ftr", "salting",

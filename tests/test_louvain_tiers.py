@@ -1,12 +1,22 @@
-"""Louvain's driver-held tiers: the Jacobi (plain) and Gauss-Seidel
-(colored) sweeps run in driver numpy with their O(E) gather either in
-numpy (``local``) or in Spark (``driver_state``), and every route makes
-its moves through the one decision function, ``louvain._decide_moves``."""
+"""Louvain's tiers. The driver-held ones run the Jacobi (plain) and
+Gauss-Seidel (colored) sweeps in driver numpy with their O(E) gather
+either in numpy (``local``) or in Spark (``driver_state``), and every
+route makes its moves through the one decision function,
+``louvain._decide_moves``; the Spark-state ones (``broadcast``,
+``shuffle``) must match them and each other."""
 
 from __future__ import annotations
 
 from grappolo_spark.graph import Graph
 from grappolo_spark.sources.fixtures import KARATE_EDGES
+
+
+def _phase_tuple(res):
+    return (
+        res.modularity,
+        res.iterations,
+        sorted((r["v"], r["comm"]) for r in res.assignment.collect()),
+    )
 
 
 def test_colored_small_state_matches_distributed(spark):
@@ -91,3 +101,36 @@ def test_colored_driver_state_pinned_on_non_dyadic_weights(spark):
         assert res.iterations == 3
         got = sorted((r["v"], r["comm"]) for r in res.assignment.collect())
         assert got == list(enumerate(comm))
+
+
+def test_colored_distributed_broadcast_layout_matches(spark):
+    """The broadcast tier's src-keyed class gather (state broadcast
+    pre-enriched, zero per-class exchanges) must match the shuffle tier's
+    dst layout of the distributed colored loop exactly."""
+    from grappolo_spark.operators import coloring as C
+    from grappolo_spark.sources.fixtures import grid3d, karate
+
+    for g in (karate(spark), grid3d(spark, 3, 3, 3)):
+        kw = dict(
+            thresh=1e-6, max_iters=3, num_colors_cap=8,
+            coloring_algo="multihash",
+        )
+        res_b = C.louvain_one_phase_colored(g, tier="broadcast", **kw)
+        res_s = C.louvain_one_phase_colored(g, tier="shuffle", **kw)
+        assert _phase_tuple(res_b) == _phase_tuple(res_s)
+
+
+def test_louvain_bucketed_shuffle_path_matches_broadcast(spark):
+    """The shuffle tier (bucketed state commits) must be bit-identical to
+    the broadcast tier."""
+    from grappolo_spark.operators.louvain import louvain_one_phase
+    from grappolo_spark.sources.fixtures import karate
+
+    g = karate(spark)
+    a = louvain_one_phase(g, tier="broadcast")
+    b = louvain_one_phase(g, tier="shuffle")
+    assert a.modularity == b.modularity
+    assert a.iterations == b.iterations
+    ra = {(r.v, r.comm) for r in a.assignment.collect()}
+    rb = {(r.v, r.comm) for r in b.assignment.collect()}
+    assert ra == rb

@@ -321,3 +321,69 @@ def test_marker_write_killed_midway_leaves_no_marker(spark, tmp_path, monkeypatc
     assert not os.path.exists(os.path.join(run_dir, "step=000002", "_METRICS.json"))
     got = pagerank(fixtures.karate(spark), max_iters=4, run_dir=run_dir)
     assert _ranks(got) == full
+
+
+# -- Spark-state tiers: the Louvain phase's resume, the vertex-count check
+
+
+def _phase(res):
+    return (
+        sorted((r.v, r.comm) for r in res.assignment.collect()),
+        res.modularity,
+        res.iterations,
+    )
+
+
+@pytest.mark.parametrize("tier", ["broadcast", "shuffle"])
+def test_louvain_phase_resume_returns_the_uninterrupted_step(spark, tmp_path, tier):
+    """A re-run of a finished durable phase, and a phase stopped after two
+    iterations then resumed, return what an uninterrupted run returns:
+    the state before the last move, with its Q and iteration count."""
+    from grappolo_spark.operators.louvain import louvain_one_phase
+
+    g = fixtures.karate(spark)
+    full = _phase(louvain_one_phase(g, tier=tier))
+    assert full[2] > 2
+    done = str(tmp_path / "done")
+    assert _phase(louvain_one_phase(g, tier=tier, run_dir=done)) == full
+    assert _phase(louvain_one_phase(g, tier=tier, run_dir=done)) == full
+    cut = str(tmp_path / "cut")
+    louvain_one_phase(g, tier=tier, run_dir=cut, max_iters=2)
+    assert _phase(louvain_one_phase(g, tier=tier, run_dir=cut)) == full
+
+
+def test_durable_louvain_rerun_is_unchanged(spark, tmp_path):
+    from grappolo_spark.operators.multiphase import louvain
+
+    run_dir = str(tmp_path / "lv")
+    runs = [
+        louvain(fixtures.karate(spark), tier="broadcast", run_dir=run_dir)
+        for _ in range(2)
+    ]
+    a, b = (
+        (
+            sorted((r.v, r.comm) for r in res.assignment.collect()),
+            res.modularity,
+            [(p["tier"], p["iterations"]) for p in res.phase_history],
+        )
+        for res in runs
+    )
+    assert a == b
+
+
+def test_spark_tier_resume_checks_the_vertex_count(spark, tmp_path):
+    """A run_dir committed for karate's 34 vertices raises ``ValueError``
+    naming it when a triangle's run resumes from it, in every Spark tier
+    of PageRank, LPA and the Louvain phase."""
+    from grappolo_spark.graph import Graph
+    from grappolo_spark.operators.labelprop import label_propagation
+    from grappolo_spark.operators.louvain import louvain_one_phase
+
+    ops = {"pr": pagerank, "lpa": label_propagation, "louvain": louvain_one_phase}
+    for op, call in ops.items():
+        for tier in ("broadcast", "shuffle"):
+            run_dir = str(tmp_path / f"{op}-{tier}")
+            call(fixtures.karate(spark), max_iters=2, tier=tier, run_dir=run_dir)
+            triangle = Graph.from_pairs(spark, [(100, 101), (101, 102), (100, 102)])
+            with pytest.raises(ValueError, match=re.escape(repr(run_dir))):
+                call(triangle, max_iters=4, tier=tier, run_dir=run_dir)

@@ -178,19 +178,3 @@ def test_bucketed_state_rotation_drops_tables(spark):
         )
     live = [t.name for t in spark.catalog.listTables() if "t5rot" in t.name]
     assert len(live) == 2, live  # keep_last=2
-
-
-def test_louvain_bucketed_shuffle_path_matches_broadcast(spark):
-    """The shuffle tier (bucketed state commits) must be bit-identical to
-    the broadcast tier."""
-    from grappolo_spark.operators.louvain import louvain_one_phase
-    from grappolo_spark.sources.fixtures import karate
-
-    g = karate(spark)
-    a = louvain_one_phase(g, tier="broadcast")
-    b = louvain_one_phase(g, tier="shuffle")
-    assert a.modularity == b.modularity
-    assert a.iterations == b.iterations
-    ra = {(r.v, r.comm) for r in a.assignment.collect()}
-    rb = {(r.v, r.comm) for r in b.assignment.collect()}
-    assert ra == rb

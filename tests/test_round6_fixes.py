@@ -373,23 +373,6 @@ def test_multiphase_colored_big_edge_fallback_matches(spark, monkeypatch):
     assert got == want
 
 
-def test_colored_distributed_broadcast_layout_matches(spark):
-    """The broadcast tier's src-keyed class gather (state broadcast
-    pre-enriched, zero per-class exchanges) must match the shuffle tier's
-    dst layout of the distributed colored loop exactly."""
-    from grappolo_spark.operators import coloring as C
-    from grappolo_spark.sources.fixtures import grid3d, karate
-
-    for g in (karate(spark), grid3d(spark, 3, 3, 3)):
-        kw = dict(
-            thresh=1e-6, max_iters=3, num_colors_cap=8,
-            coloring_algo="multihash",
-        )
-        res_b = C.louvain_one_phase_colored(g, tier="broadcast", **kw)
-        res_s = C.louvain_one_phase_colored(g, tier="shuffle", **kw)
-        assert _phase_tuple(res_b) == _phase_tuple(res_s)
-
-
 def test_deduped_graph_skips_pair_distinct(spark):
     """Canonical graphs carry deduped=True (edge rows unique by
     construction) and the pair-table re-dedup exchange is elided; a raw

@@ -62,8 +62,6 @@ def test_forced_tier_the_facts_cannot_support_raises(spark, tmp_path):
             with_vertices, tier="local", run_dir=str(tmp_path / "lpa")
         )
     with pytest.raises(ValueError):
-        connected_components(g, method="label_prop", tier="local")
-    with pytest.raises(ValueError):
         pagerank(g, tier="driver_state", tol=1e-9)
     with pytest.raises(ValueError):
         louvain_one_phase(g, tier="driver_state", sample_fraction=0.5)

@@ -49,7 +49,7 @@ CASES = [
     ("components", _probed(ER + 1), None, (), S),
     ("components", Facts(), None, (), S),  # probe came back over the bound
     ("components", _probed(ER), "rd", (), S),
-    ("components", _probed(ER), None, {"min_label"}, S),
+    ("components", _probed(ER), None, {"no_local"}, S),
     ("components", _probed(ER), None, {"no_local"}, S),
     ("components", _probed(ER, explicit_vertices=True), None, (), L),
     # labelprop: local <= 2M rows; then broadcast <= 5M vertices
