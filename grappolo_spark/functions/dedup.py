@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grappolo_spark.functions.text import TOKEN_RE
+from grappolo_spark.plans.iteration import cut_releasing
 
 _NORM = "trim(regexp_replace(lower({c}), '\\\\s+', ' '))"
 
@@ -126,7 +127,7 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    return out
+    return cut_releasing(out, sh)
 
 
 def minhash_signatures(
@@ -211,7 +212,7 @@ def minhash_lsh_pairs(
             / F.lit(num_hashes)
         ).alias("est_jaccard"),
     )
-    return est.filter(F.col("est_jaccard") >= threshold)
+    return cut_releasing(est.filter(F.col("est_jaccard") >= threshold), sig)
 
 
 def simhash_buckets(

@@ -315,7 +315,9 @@ class Graph:
     def partition_by_src(self, num_partitions: int | None = None) -> "Graph":
         """Hash-partition + persist the edge table on ``src`` so iterative
         join/groupBy supersteps reuse one layout (replaces the reference's
-        CSR counting-sort, `loadEdgeList.cpp:225-249`)."""
+        CSR counting-sort, `loadEdgeList.cpp:225-249`). The rows and the
+        vertex table stay the same, so the new graph starts from a copy of
+        this one's facts memo (its :meth:`unpersist` clears the copy)."""
         e = (
             self.edges.repartition(num_partitions, "src")
             if num_partitions
@@ -328,6 +330,7 @@ class Graph:
             directed=self.directed,
             unweighted=self.unweighted,
             deduped=self.deduped,
+            _facts=dict(self._facts),
         )
         g._cached.append(e)
         return g

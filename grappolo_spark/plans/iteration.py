@@ -151,6 +151,18 @@ def cut_lineage(
     return out
 
 
+def cut_releasing(
+    df: DataFrame, *cached: DataFrame, tag: str = "result", keep_last: int = 64
+) -> DataFrame:
+    """:func:`cut_lineage` of ``df``, then unpersist the ``cached`` tables
+    it read: the cut no longer needs them, and a caller may hold the
+    result across many later jobs."""
+    out = cut_lineage(df, tag=tag, keep_last=keep_last)
+    for c in cached:
+        c.unpersist()
+    return out
+
+
 def promote_result(
     df: DataFrame, keep_last: int = 64, fallback_cut: bool = False
 ) -> DataFrame:
@@ -208,19 +220,39 @@ def promote_result(
 _MARKER = "_METRICS.json"
 
 
-def footer_rows(path: str) -> list[int]:
-    """Rows per parquet file that Spark reads under a local ``path`` (no
-    ``_``/``.`` prefix), in file-name order, from the footers: no Spark
-    job; ``[]`` when there are no such files. An unreadable footer
-    raises."""
-    import pyarrow.parquet as pq
-
+def _parquet_files(path: str) -> list[str]:
+    """The parquet files Spark reads under a local ``path`` (no ``_``/``.``
+    prefix), in file-name order."""
     local = path.removeprefix("file:")
     files = [local] if os.path.isfile(local) else []
     for d, subdirs, names in os.walk(local):
         subdirs[:] = [s for s in subdirs if s[:1] not in "_."]
         files += [os.path.join(d, f) for f in names if f[:1] not in "_."]
-    return [pq.read_metadata(f).num_rows for f in sorted(files)]
+    return sorted(files)
+
+
+def footer_rows(path: str) -> list[int]:
+    """Rows per parquet file that Spark reads under a local ``path``, in
+    file-name order, from the footers: no Spark job; ``[]`` when there
+    are no such files. An unreadable footer raises."""
+    import pyarrow.parquet as pq
+
+    return [pq.read_metadata(f).num_rows for f in _parquet_files(path)]
+
+
+def read_cut(df: DataFrame, columns: list[str]):
+    """``columns`` of a (not bucketed) :func:`cut_lineage` output as one
+    pandas frame, read from its parquet files by pyarrow on the driver:
+    no Spark job."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    _, _, path = df._grappolo_scratch
+    tables = [pq.read_table(f, columns=columns) for f in _parquet_files(path)]
+    if not tables:
+        return pd.DataFrame({c: pd.Series(dtype=object) for c in columns})
+    return pa.concat_tables(tables).to_pandas()
 
 
 def _local_dir(run_dir: str) -> str:

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from grappolo_spark.plans.iteration import cut_releasing
+
 _PID = "_rr_pid"
 _OFF = "_rr_off"
 
@@ -75,15 +77,5 @@ def dense_rank_ids(
         *df.columns,
         (F.row_number().over(w) - 1 + F.col(_OFF)).cast("long").alias(out),
     )
-    return _materialized(ranked, d), total
-
-
-def _materialized(ranked: DataFrame, cached: DataFrame) -> DataFrame:
-    """Cut the ranked plan loose from the persisted stamp table so the cache
-    can be released immediately (callers may hold the result across many
-    later jobs)."""
-    from grappolo_spark.plans.iteration import cut_lineage
-
-    out = cut_lineage(ranked, tag="rank")
-    cached.unpersist()
-    return out
+    # cut the ranked plan loose from the persisted stamp table
+    return cut_releasing(ranked, d, tag="rank", keep_last=6), total

@@ -1,8 +1,8 @@
 """Execution-tier planner: one place picks how an iterative operator runs.
 
-Every iterative operator (PageRank, CC, LPA, Louvain and colored Louvain)
-can run in up to four regimes, ordered from cheapest-at-small-size to
-scale-safe:
+Every iterative operator (PageRank, CC, LPA, Louvain and colored Louvain),
+triangle counting and the corpus front door can run in up to four
+regimes, ordered from cheapest-at-small-size to scale-safe:
 
 - ``local``        the whole computation in driver numpy over a collected
                    copy of the edge table (no Spark job per superstep)
@@ -55,6 +55,9 @@ OP_TIERS = {
     "louvain": tuple(Tier),
     "louvain_phase": (Tier.DRIVER_STATE, Tier.BROADCAST, Tier.SHUFFLE),
     "louvain_colored": tuple(Tier),
+    "triangles": (Tier.LOCAL, Tier.SHUFFLE),
+    # the corpus front door: resolve and number on the driver, or in Spark
+    "corpus": (Tier.LOCAL, Tier.SHUFFLE),
 }
 
 # variant flags: options whose semantics live outside the fast tiers
@@ -146,11 +149,24 @@ def _pair_hash_np(a, b):
 
 def from_arrays(g, src, dst, w) -> Facts:
     """Facts of a graph whose edge table was collected whole, with the
-    stats of :func:`graph_stats` the arrays determine exactly."""
+    stats of :func:`graph_stats` the arrays determine exactly. The arrays
+    become read-only. A ``g.deduped`` graph must have unique ``(src,
+    dst)`` rows, else ``ValueError``: this is the only check of that flag,
+    so a graph above the probe bound keeps it unchecked."""
     import numpy as np
 
     ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
     s = inv[: len(src)]
+    if g.deduped:
+        keys = np.sort(s * len(ids) + inv[len(src):])
+        repeats = int((keys[1:] == keys[:-1]).sum())
+        if repeats:
+            raise ValueError(
+                "Graph(deduped=True) needs unique (src, dst) edge rows; "
+                f"{repeats} rows repeat one"
+            )
+    for a in (src, dst, w, ids):
+        a.flags.writeable = False
     # graph_stats' symmetry checksum, in numpy
     sym = np.bitwise_xor.reduce(_pair_hash_np(src, dst) ^ _pair_hash_np(dst, src))
     known = dict(
@@ -182,10 +198,7 @@ def collect_probe(g, bound: int, facts: Facts) -> Facts:
     if len(pdf) > bound:
         return replace(facts, edge_rows=bound + 1)
     src, dst = (pdf[c].to_numpy(np.int64) for c in ("src", "dst"))
-    probed = from_arrays(g, src, dst, pdf["weight"].to_numpy(np.float64))
-    for a in probed.arrays:
-        a.flags.writeable = False
-    return probed
+    return from_arrays(g, src, dst, pdf["weight"].to_numpy(np.float64))
 
 
 # what a Graph memoizes: facts of its edge table, then |V|, the id bounds
@@ -211,10 +224,16 @@ def graph_facts(g, bound: int | None = None) -> Facts:
     exceeds ``bound``. The memo's lifetime: see ``Graph``."""
     facts = Facts.of(g, **{k: v for k, v in _memo(g).items() if k in _MEMO})
     if bound is not None and facts.arrays is None:
-        probed = collect_probe(g, bound, facts)
-        remember(g, **{k: getattr(probed, k) for k in _MEMO})
+        remember_facts(g, collect_probe(g, bound, facts))
         facts = graph_facts(g)
     return facts
+
+
+def remember_facts(g, facts: Facts) -> None:
+    """Memoize ``facts`` of ``g``, as a probe's outcome is (a builder that
+    holds the whole edge table passes :func:`from_arrays`' facts, so no
+    operator probes it)."""
+    remember(g, **{k: getattr(facts, k) for k in _MEMO})
 
 
 def _stats_known(facts: Facts, g) -> bool:
@@ -337,14 +356,16 @@ def _eligible(t: Tier, facts: Facts, op: str, run_dir, variant) -> bool:
     if variant & _EXCLUDES.get((op, t), set()):
         return False
     if t is Tier.LOCAL:
+        if op == "corpus":
+            return True  # the extraction's cut is read on the driver
         if facts.arrays is None or "no_local" in variant:
             return False
         if run_dir is not None and op not in ("pagerank", "labelprop"):
             return False  # no driver-side durable state yet
-        if op in ("louvain", "pagerank") or run_dir is not None:
+        if op in ("louvain", "pagerank", "triangles") or run_dir is not None:
             # explicit isolated vertices are not in the arrays (louvain's
             # degrees()-based init, pagerank's |V|, the vertex set a
-            # durable LPA commits)
+            # durable LPA commits, per-vertex triangle rows)
             return not facts.explicit_vertices
         if op == "louvain_colored":
             return facts.integer_weights

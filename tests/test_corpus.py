@@ -12,7 +12,7 @@ def test_corpus_to_graph_end_to_end(spark):
     links = extract_links(corpus)
     assert links.count() > 0
     # per-row sha256 invariant: pandas-UDF hash == JVM sha2
-    assert verify_sha256(corpus, links) == 0
+    assert verify_sha256(corpus) == 0
     vmap, g = build_graph_from_corpus(corpus)
     nv = g.num_vertices()
     assert 0 < nv <= 36

@@ -113,6 +113,13 @@ CASES = [
     ("pagerank", _probed(ER, explicit_vertices=True), "rd", (), B),
     ("components", _probed(ER, explicit_vertices=True), "rd", (), S),
     ("louvain", _probed(ER, nv=BR + 1, **_INT), "rd", (), S),
+    # triangles: local <= 2M edge rows without an explicit vertex table
+    ("triangles", _probed(ER), None, (), L),
+    ("triangles", _probed(ER + 1), None, (), S),
+    ("triangles", _probed(ER, explicit_vertices=True), None, (), S),
+    # the corpus front door: local <= 2M extracted link rows
+    ("corpus", Facts(edge_rows=ER), None, (), L),
+    ("corpus", Facts(edge_rows=ER + 1), None, (), S),
 ]
 
 
@@ -207,6 +214,7 @@ class _StubEdges:
 class _StubGraph:
     vertices = None
     unweighted = False
+    deduped = False
 
     def __init__(self, rows):
         import pandas as pd
