@@ -1,6 +1,6 @@
 """Deduplication operators over a documents table.
 
-Four tiers, from exact to fuzzy — each a different cost/recall point for a
+Four methods, from exact to fuzzy — each a different cost/recall point for a
 100 TB corpus:
 
 - ``exact_dedup``      : hash-groupBy on normalized text. One shuffle.
@@ -19,11 +19,13 @@ oracles against the exact Jaccard result.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from grappolo_spark.functions.text import TOKEN_RE
-from grappolo_spark.plans.iteration import cut_releasing
+from grappolo_spark.plans.iteration import cut_releasing, read_observation
+from grappolo_spark.plans.tiers import Facts, Tier, plan
 
 _NORM = "trim(regexp_replace(lower({c}), '\\\\s+', ' '))"
 
@@ -153,6 +155,97 @@ def minhash_signatures(
     return agg.select("id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"))
 
 
+def _shingle_rows_bound(df: DataFrame, text_col: str) -> int:
+    """An upper bound on the shingle rows of ``df``: a token takes at least
+    one byte and is followed by at least one separator byte or the end of
+    its text, so a text of L bytes has at most (L + 1) // 2 tokens, and at
+    least as many tokens as shingles. (``lower`` keeps the bound: the one
+    character it grows, U+0130 İ, takes 2 bytes and yields one token
+    character and a separator.) One aggregation, observed on a ``noop``
+    write: one job, no shuffle."""
+    size = [F.sum(F.octet_length(text_col)).alias("bytes"), F.count(F.lit(1)).alias("rows")]
+    obs = Observation()
+    df.select(text_col).observe(obs, *size).write.format("noop").mode("overwrite").save()
+    # None when the metrics are unavailable: aggregate instead
+    m = read_observation(obs) or df.agg(*size).collect()[0].asDict()
+    return ((m["bytes"] or 0) + m["rows"]) // 2
+
+
+def _local_lsh_pairs(
+    df: DataFrame, id_col: str, text_col: str, n: int, num_hashes: int,
+    bands: int, threshold: float, seed: int,
+) -> DataFrame:
+    """The local tier of :func:`minhash_lsh_pairs`: the same rows from
+    driver numpy over one Arrow collect of ``(id, text)``. Each distinct
+    shingle is hashed once (:func:`xxh64_strings`, then the ``seed + i``
+    literal folded in), signatures are per-id minima and the band keys are
+    ``xxhash64`` of the same decimal strings, so candidates and
+    ``est_jaccard`` equal the Spark tier's bit for bit. Rows that share an
+    id merge their shingles; null ids never pair."""
+    import re
+
+    import numpy as np
+    import pandas as pd
+    import pyarrow.compute as pc
+
+    from grappolo_spark.functions.xxh64 import xxh64_lit, xxh64_strings
+    from grappolo_spark.operators.louvain import _first_group_starts
+
+    id_type = df.schema[id_col].dataType
+    schema = StructType([
+        StructField("id_a", id_type), StructField("id_b", id_type),
+        StructField("est_jaccard", DoubleType()),
+    ])
+    spark = df.sparkSession
+    tab = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")).toArrow()
+    tab = tab.filter(pc.is_valid(tab["id"]))
+    keys, doc = np.unique(tab["id"].to_numpy(), return_inverse=True)
+    token = re.compile(TOKEN_RE)
+    index: dict[str, int] = {}  # distinct shingle -> its row in ``base``
+    rows, shingle = [], []
+    for d, text in zip(doc.tolist(), tab["text"].to_pylist()):
+        if text is None:
+            continue
+        toks = token.findall(text.lower())
+        grams = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+        rows += [d] * len(grams)
+        shingle += [index.setdefault(g, len(index)) for g in grams]
+    if not rows:
+        return spark.createDataFrame([], schema)
+    order = np.argsort(np.asarray(rows), kind="stable")
+    rows, shingle = np.asarray(rows)[order], np.asarray(shingle)[order]
+    starts = _first_group_starts(rows)
+    base = xxh64_strings(list(index))
+    sig = np.empty((len(starts), num_hashes), np.int64)
+    for i in range(num_hashes):
+        h = xxh64_lit(seed + i, base).view(np.int64)
+        sig[:, i] = np.minimum.reduceat(h[shingle], starts)
+    nd, rpb = len(starts), num_hashes // bands
+    bh = [
+        xxh64_strings([",".join(map(str, r)) for r in sig[:, b * rpb : (b + 1) * rpb].tolist()])
+        for b in range(bands)
+    ]
+    keyed = pd.DataFrame({
+        "band": np.repeat(np.arange(bands), nd),
+        "bh": np.concatenate(bh),
+        "d": np.tile(np.arange(nd), bands),
+    })
+    keyed = keyed.loc[keyed.duplicated(["band", "bh"], keep=False)]
+    cand = keyed.merge(keyed, on=["band", "bh"])
+    cand = cand.loc[cand["d_x"] < cand["d_y"], ["d_x", "d_y"]].drop_duplicates()
+    cand = cand.sort_values(["d_x", "d_y"])
+    a, b = cand["d_x"].to_numpy(np.int64), cand["d_y"].to_numpy(np.int64)
+    est = (sig[a] == sig[b]).sum(axis=1) / num_hashes
+    keep = est >= threshold
+    ids = keys[rows[starts]]
+    return spark.createDataFrame(
+        pd.DataFrame({
+            "id_a": ids[a[keep]], "id_b": ids[b[keep]], "est_jaccard": est[keep],
+        }),
+        schema,
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -162,13 +255,25 @@ def minhash_lsh_pairs(
     bands: int = 8,
     threshold: float = 0.8,
     seed: int = 7,
+    tier: Tier | str | None = None,
 ) -> DataFrame:
     """(id_a, id_b, est_jaccard) for LSH-candidate pairs above threshold.
 
     Signatures are split into ``bands`` bands of ``num_hashes/bands`` rows;
     docs colliding in ≥1 band become candidates (join on band hash — never
     all-pairs), then the full-signature agreement fraction estimates Jaccard.
+
+    Tiers (:mod:`grappolo_spark.plans.tiers`): **local** — while one
+    aggregation bounds the shingle rows at ``LOCAL_EDGE_ROWS``, the
+    sketch runs in driver numpy over one Arrow collect of ``(id, text)``
+    and returns the same rows; **shuffle** — the Spark plan below.
+    ``tier`` forces one and skips the aggregation.
     """
+    facts = Facts() if tier is not None else Facts(edge_rows=_shingle_rows_bound(df, text_col))
+    if plan(facts, "minhash", tier=tier) is Tier.LOCAL:
+        return _local_lsh_pairs(
+            df, id_col, text_col, n, num_hashes, bands, threshold, seed
+        )
     rows_per_band = num_hashes // bands
     sig = minhash_signatures(df, id_col, text_col, n, num_hashes, seed).persist()
     banded = sig.select(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from grappolo_spark.functions.xxh64 import xxh64_lit, xxh64_long
 from grappolo_spark.graph import Graph
 from grappolo_spark.operators.louvain import (
     LouvainPhaseResult,
@@ -368,73 +369,6 @@ def _class_best_moves(counter, state0, cinfo_cand, const: float):
     )
 
 
-def _xxh64_long_np(x, seed: int):
-    """Vectorized XXH64 of an 8-byte little-endian value (Spark's
-    ``xxhash64`` over one LongType column) — bit-exact mirror of
-    ``tests/xxh64_oracle.py``'s n=8 path, in uint64 numpy (all arithmetic
-    wraps mod 2^64 exactly like the reference implementation)."""
-    import numpy as np
-
-    P1 = np.uint64(0x9E3779B185EBCA87)
-    P2 = np.uint64(0xC2B2AE3D27D4EB4F)
-    P3 = np.uint64(0x165667B19E3779F9)
-    P4 = np.uint64(0x85EBCA77C2B2AE63)
-    P5 = np.uint64(0x27D4EB2F165667C5)
-
-    def rotl(v, r):
-        r = np.uint64(r)
-        return (v << r) | (v >> (np.uint64(64) - r))
-
-    def fmix(h):
-        h ^= h >> np.uint64(33)
-        h *= P2
-        h ^= h >> np.uint64(29)
-        h *= P3
-        h ^= h >> np.uint64(32)
-        return h
-
-    x = x.astype(np.uint64)
-    h = np.uint64(seed & ((1 << 64) - 1)) + P5 + np.uint64(8)
-    k = rotl(x * P2, 31) * P1
-    h = np.broadcast_to(h, x.shape).copy()
-    h ^= k
-    h = rotl(h, 27) * P1 + P4
-    return fmix(h)
-
-
-def _xxh64_int_lit_np(lit: int, seed_arr):
-    """Fold a 4-byte IntegerType literal into per-element running hashes —
-    the second step of ``F.xxhash64(long_col, F.lit(small_int))``."""
-    import numpy as np
-
-    P1 = np.uint64(0x9E3779B185EBCA87)
-    P2 = np.uint64(0xC2B2AE3D27D4EB4F)
-    P3 = np.uint64(0x165667B19E3779F9)
-    P5 = np.uint64(0x27D4EB2F165667C5)
-
-    def rotl(v, r):
-        r = np.uint64(r)
-        return (v << r) | (v >> (np.uint64(64) - r))
-
-    def fmix(h):
-        h ^= h >> np.uint64(33)
-        h *= P2
-        h ^= h >> np.uint64(29)
-        h *= P3
-        h ^= h >> np.uint64(32)
-        return h
-
-    h = seed_arr + P5 + np.uint64(4)
-    # the literal's P1 multiple is computed in python ints (numpy SCALAR
-    # uint64 arithmetic warns on overflow; array ops wrap silently)
-    lit_p1 = np.uint64(
-        ((lit & 0xFFFFFFFF) * 0x9E3779B185EBCA87) & ((1 << 64) - 1)
-    )
-    h = h ^ lit_p1
-    h = rotl(h, 23) * P2 + P3
-    return fmix(h)
-
-
 def _multihash_colors_np(ids, s_idx, d_idx, nhash=2, nrounds=4, seed=999):
     """Numpy replay of :func:`multihash_coloring` for driver-held graphs:
     identical colors (the hash is the bit-exact Spark ``xxhash64`` of the
@@ -450,12 +384,9 @@ def _multihash_colors_np(ids, s_idx, d_idx, nhash=2, nrounds=4, seed=999):
 
     from grappolo_spark.operators.louvain import _first_group_starts
 
-    assert 0 <= seed and seed + nhash < (1 << 31), "numpy path needs int lits"
     n = len(ids)
-    base = _xxh64_long_np(ids, 42)
-    hashes = [
-        _xxh64_int_lit_np(seed + ih, base).view(np.int64) for ih in range(nhash)
-    ]
+    base = xxh64_long(ids)
+    hashes = [xxh64_lit(seed + ih, base).view(np.int64) for ih in range(nhash)]
     # sort the edge lists by source ONCE so each sub-round's neighbor
     # max/min reduce with ``reduceat`` over contiguous runs (a masked
     # subset of a sorted array stays sorted) — the unbuffered
@@ -508,9 +439,8 @@ def _distance_one_colors_np(ids, s_idx, d_idx, seed=12345, max_rounds=100):
 
     from grappolo_spark.operators.louvain import _first_group_starts
 
-    assert 0 <= seed < (1 << 31), "numpy path needs an int literal"
     n = len(ids)
-    h = _xxh64_int_lit_np(seed, _xxh64_long_np(ids, 42)).view(np.int64)
+    h = xxh64_lit(seed, xxh64_long(ids)).view(np.int64)
     color = np.full(n, -1, dtype=np.int64)
     for _ in range(max_rounds):
         pending = color < 0

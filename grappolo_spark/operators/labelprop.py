@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grappolo_spark.graph import Graph
-from grappolo_spark.operators.pagerank import _slots
+from grappolo_spark.operators.pagerank import _check_symmetric, _slots
 from grappolo_spark.plans.iteration import (
     SuperstepRunner,
     cut_lineage,
@@ -119,6 +119,7 @@ def label_propagation(
     variant = set() if local_tier_allowed(local_threshold) else {"no_local"}
     facts = local_facts(g, "labelprop", run_dir, variant, tier)
     if facts is not None:
+        _check_symmetric(g, facts, "label_propagation")
         labels = _local_lpa(
             spark, max_iters, stop_on_converge, facts.arrays,
             SuperstepRunner(spark, run_dir),
@@ -138,6 +139,7 @@ def label_propagation(
     # Durable runs keep the uncut shape (resume must not read a scratch cut)
     ids_cut = None if run_dir else cut_lineage(degree_table(g), tag="lpa_ids")
     facts = graph_stats(g, ids_cut)
+    _check_symmetric(g, facts, "label_propagation")
     tier = plan(facts, "labelprop", run_dir, variant, tier)
     broadcast_labels = tier is Tier.BROADCAST
     # strict lower bound: the tie-break negates the int32 label inside the

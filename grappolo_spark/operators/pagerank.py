@@ -49,18 +49,18 @@ def _slots(vs, ids, what="pagerank: edge endpoints"):
     return idx
 
 
-def _check_symmetric(g, facts, cache=None) -> None:
-    """Every tier relies on ``Graph(directed=False)``'s symmetrized edge
-    table (the Spark tiers take the vertex set from ``src``): one that
-    fails the symmetry check raises (releasing ``cache``) before any tier
-    runs."""
+def _check_symmetric(g, facts, op: str, cache=None) -> None:
+    """Every tier of ``op`` (PageRank, LPA) relies on
+    ``Graph(directed=False)``'s symmetrized edge table (the Spark tiers
+    take the vertex set from ``src``): one that fails the symmetry check
+    raises (releasing ``cache``) before any tier runs."""
     if not g.directed and facts.symmetric is False:
         if cache is not None:
             cache.unpersist()
         e = g.edges
         stray = e.select("dst").subtract(e.select("src")).orderBy("dst").limit(10)
         raise ValueError(
-            "pagerank: Graph(directed=False) needs a symmetrized edge table "
+            f"{op}: Graph(directed=False) needs a symmetrized edge table "
             "(each (u, v) row with its (v, u) twin); edge endpoints "
             f"{[r.dst for r in stray.collect()]} are never a source"
         )
@@ -150,7 +150,7 @@ def pagerank(
     spark = g.edges.sparkSession
     facts = local_facts(g, "pagerank", run_dir, tier=tier)
     if facts is not None:
-        _check_symmetric(g, facts)
+        _check_symmetric(g, facts, "pagerank")
         return _local_pagerank(
             spark, facts.arrays, alpha, max_iters, tol,
             SuperstepRunner(spark, run_dir),
@@ -159,7 +159,7 @@ def pagerank(
     # stats action, when it runs, also materializes the cache
     degrees = degree_table(g).persist()
     facts = graph_stats(g, degrees)
-    _check_symmetric(g, facts, degrees)
+    _check_symmetric(g, facts, "pagerank", degrees)
     tier = plan(facts, "pagerank", run_dir, tier=tier)
     n = facts.nv
     if n == 0:

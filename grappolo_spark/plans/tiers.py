@@ -1,8 +1,8 @@
 """Execution-tier planner: one place picks how an iterative operator runs.
 
 Every iterative operator (PageRank, CC, LPA, Louvain and colored Louvain),
-triangle counting and the corpus front door can run in up to four
-regimes, ordered from cheapest-at-small-size to scale-safe:
+triangle counting, the corpus front door and MinHash-LSH dedup can run in
+up to four regimes, ordered from cheapest-at-small-size to scale-safe:
 
 - ``local``        the whole computation in driver numpy over a collected
                    copy of the edge table (no Spark job per superstep)
@@ -58,6 +58,9 @@ OP_TIERS = {
     "triangles": (Tier.LOCAL, Tier.SHUFFLE),
     # the corpus front door: resolve and number on the driver, or in Spark
     "corpus": (Tier.LOCAL, Tier.SHUFFLE),
+    # MinHash-LSH dedup: sketch on the driver, or in Spark; its edge_rows
+    # fact is an upper bound on the shingle rows
+    "minhash": (Tier.LOCAL, Tier.SHUFFLE),
 }
 
 # variant flags: options whose semantics live outside the fast tiers
@@ -356,8 +359,8 @@ def _eligible(t: Tier, facts: Facts, op: str, run_dir, variant) -> bool:
     if variant & _EXCLUDES.get((op, t), set()):
         return False
     if t is Tier.LOCAL:
-        if op == "corpus":
-            return True  # the extraction's cut is read on the driver
+        if op in ("corpus", "minhash"):
+            return True  # their input is collected on the driver
         if facts.arrays is None or "no_local" in variant:
             return False
         if run_dir is not None and op not in ("pagerank", "labelprop"):

@@ -235,9 +235,10 @@ def test_calls_leave_nothing_persisted(spark):
             before = _persisted(spark)
             triangle_count(g, per_vertex=per_vertex, tier=tier).collect()
             assert _persisted(spark) == before, (tier, per_vertex)
-    for _ in range(2):  # a second call computes afresh, from no cache
+    for tier in ("local", "shuffle", "local", "shuffle"):
+        # a second call computes afresh, from no cache
         before = _persisted(spark)
-        est = minhash_lsh_pairs(docs, num_hashes=32, bands=8, threshold=0.9)
+        est = minhash_lsh_pairs(docs, num_hashes=32, bands=8, threshold=0.9, tier=tier)
         assert {(r.id_a, r.id_b) for r in est.collect()} == {(0, 1)}
         exact = ngram_jaccard_pairs(docs, threshold=0.3)
         assert {(r.id_a, r.id_b) for r in exact.collect()} >= {(0, 1), (0, 2)}

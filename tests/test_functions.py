@@ -56,18 +56,23 @@ def test_ngram_jaccard_finds_near_dup(spark):
     assert all(j <= 1.0 for j in pairs.values())
 
 
+# minhash_lsh_pairs' tiers: each test below runs both
+TIERS = ("local", "shuffle")
+
+
 def test_minhash_agrees_with_exact_jaccard(spark):
     exact = {
         (r.id_a, r.id_b)
         for r in ngram_jaccard_pairs(_docs(spark), threshold=0.9).collect()
     }
-    est = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(
-            _docs(spark), num_hashes=32, bands=8, threshold=0.9
-        ).collect()
-    }
-    assert exact == est == {(0, 1)}
+    for tier in TIERS:
+        est = {
+            (r.id_a, r.id_b)
+            for r in minhash_lsh_pairs(
+                _docs(spark), num_hashes=32, bands=8, threshold=0.9, tier=tier
+            ).collect()
+        }
+        assert exact == est == {(0, 1)}, tier
 
 
 def test_simhash_identical_docs_same_hash(spark):
@@ -223,7 +228,8 @@ def test_shingles_short_and_repeated_texts(spark):
     # docs 4 and 5 each have shingles; the short ones pair with nobody
     jac = {(r.id_a, r.id_b) for r in ngram_jaccard_pairs(df, threshold=0.0).collect()}
     assert all(a >= 3 and b >= 3 for a, b in jac)
-    assert minhash_lsh_pairs(df, threshold=1.0).collect() == []
+    for tier in TIERS:
+        assert minhash_lsh_pairs(df, threshold=1.0, tier=tier).collect() == []
 
 
 def test_minhash_signatures_value_oracle(spark):
@@ -280,10 +286,14 @@ def test_minhash_lsh_pairs_value_oracle(spark):
     )
     num_hashes, bands, seed, threshold = 16, 4, 7, 0.25
     got = {
-        (r.id_a, r.id_b): r.est_jaccard
-        for r in minhash_lsh_pairs(
-            docs, num_hashes=num_hashes, bands=bands, threshold=threshold, seed=seed
-        ).collect()
+        tier: {
+            (r.id_a, r.id_b): r.est_jaccard
+            for r in minhash_lsh_pairs(
+                docs, num_hashes=num_hashes, bands=bands, threshold=threshold,
+                seed=seed, tier=tier,
+            ).collect()
+        }
+        for tier in TIERS
     }
     rows = docs.select("doc_id", "text").collect()
     sigs = {}
@@ -309,4 +319,56 @@ def test_minhash_lsh_pairs_value_oracle(spark):
         est = sum(x == y for x, y in zip(sigs[a], sigs[b])) / num_hashes
         if est >= threshold:
             expect[(a, b)] = est
-    assert got == expect
+    assert got == {tier: expect for tier in TIERS}
+
+
+def _lsh_rows(df, tier, **kw):
+    return sorted(tuple(r) for r in minhash_lsh_pairs(df, tier=tier, **kw).collect())
+
+
+def test_minhash_tiers_agree_on_adversarial_docs(spark):
+    """Both tiers return the same (id_a, id_b, est_jaccard) rows, and the
+    same column types, on: null texts and ids, texts under n tokens,
+    rows that share an id (their shingles merge), string ids, U+0130 and
+    the Kelvin sign (which ``lower`` turns into ASCII token characters),
+    num_hashes not divisible by bands (and fewer hashes than bands: every
+    signature pair is a candidate), an empty table and no candidates."""
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    texts = [
+        base, base + " today", base.upper(), "x y", None, "",
+        "\u0130stanbul is \u212aelvin \u212a k K", "istanbul is kelvin k k k",
+        "the quick brown fox", "jumps over the lazy dog again",
+    ]
+    long_rows = [(i, t) for i, t in enumerate(texts)]
+    long_rows += [(3, base), (None, base), (1, "completely other words here")]
+    for schema, rows in (
+        ("doc_id long, text string", long_rows),
+        ("doc_id int, text string", long_rows),
+        ("doc_id string, text string", [
+            (None if i is None else f"d{i:02d}\u00e9", t) for i, t in long_rows
+        ]),
+    ):
+        df = spark.createDataFrame(rows, schema)
+        for kw in (
+            dict(threshold=0.0), dict(num_hashes=10, bands=4, threshold=0.1),
+            dict(num_hashes=3, bands=8, threshold=0.0, n=2),
+            dict(num_hashes=7, bands=3, threshold=0.5, n=1, seed=-9),
+        ):
+            local, spark_rows = _lsh_rows(df, "local", **kw), _lsh_rows(df, "shuffle", **kw)
+            assert local == spark_rows and local, (schema, kw)
+            assert _lsh_rows(df, None, **kw) == local  # planned: local
+            assert all(a is not None and b is not None for a, b, _ in local)
+        types = {
+            t: minhash_lsh_pairs(df, tier=t).schema.fields for t in TIERS
+        }
+        assert [f.dataType for f in types["local"]] == [
+            f.dataType for f in types["shuffle"]
+        ]
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    none = spark.createDataFrame(
+        [(0, "alpha beta gamma"), (1, "delta epsilon zeta"), (2, None)],
+        "doc_id long, text string",
+    )
+    for df in (empty, none):
+        for tier in TIERS + (None,):
+            assert _lsh_rows(df, tier) == []

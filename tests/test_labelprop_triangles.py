@@ -1,3 +1,5 @@
+import pytest
+
 from grappolo_spark.graph import Graph
 from grappolo_spark.operators.labelprop import label_propagation
 from grappolo_spark.operators.triangles import triangle_count
@@ -19,6 +21,22 @@ def test_lpa_min_label_tiebreak(spark):
     g = Graph.from_pairs(spark, [(0, 1), (1, 2)])
     out = {r.v: r.label for r in label_propagation(g, max_iters=1).collect()}
     assert out[1] == 0
+
+
+@pytest.mark.parametrize("tier", [None, "local", "broadcast", "shuffle"])
+def test_lpa_rejects_unsymmetrized_undirected_graph(spark, tier):
+    """Graph(directed=False) promises each (u, v) row with its (v, u)
+    twin; every LPA tier raises on a table that breaks it, as PageRank's
+    do, instead of labelling a tier-dependent vertex set."""
+    df = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 3, 1.0), (3, 0, 1.0), (1, 2, 1.0)],
+        "src long, dst long, weight double",
+    )
+    with pytest.raises(ValueError, match=r"label_propagation: .*symmetrized.*endpoints \[2\]"):
+        label_propagation(Graph(edges=df), max_iters=2, tier=tier).collect()
+    # the same rows as arcs are a valid directed graph on every tier
+    labels = label_propagation(Graph(edges=df, directed=True), max_iters=2, tier=tier)
+    assert {r.v for r in labels.collect()} == {0, 1, 2, 3}
 
 
 def test_triangles_karate(spark):

@@ -8,6 +8,8 @@ route makes its moves through the one decision function,
 from __future__ import annotations
 
 from grappolo_spark.graph import Graph
+from grappolo_spark.operators.multiphase import louvain
+from grappolo_spark.sources import fixtures
 from grappolo_spark.sources.fixtures import KARATE_EDGES
 
 
@@ -134,3 +136,47 @@ def test_louvain_bucketed_shuffle_path_matches_broadcast(spark):
     ra = {(r.v, r.comm) for r in a.assignment.collect()}
     rb = {(r.v, r.comm) for r in b.assignment.collect()}
     assert ra == rb
+
+
+def test_local_kernel_bit_parity_karate(spark):
+    g = fixtures.karate(spark)
+    dist = louvain(g, max_phases=1, tier="driver_state")
+    loc = louvain(g, max_phases=1, tier="local")
+    # integer weights -> exact arithmetic -> bit-identical trajectory
+    assert loc.modularity == dist.modularity
+    assert loc.total_iterations == dist.total_iterations
+    a = {r.v: r.comm for r in dist.assignment.collect()}
+    b = {r.v: r.comm for r in loc.assignment.collect()}
+    assert a == b
+
+
+def test_multiphase_local_tail_equivalent(spark):
+    for gfn in (
+        lambda: fixtures.karate(spark),
+        lambda: fixtures.planted_partition(spark, blocks=4, block_size=12)[0],
+    ):
+        g = gfn()
+        dist = louvain(g, tier="driver_state")  # per-phase kernel
+        loc = louvain(g, tier="local")           # numpy tail
+        assert loc.modularity == dist.modularity
+        assert loc.num_clusters == dist.num_clusters
+        a = {r.v: r.comm for r in dist.assignment.collect()}
+        b = {r.v: r.comm for r in loc.assignment.collect()}
+        assert a == b
+
+
+def test_multiphase_local_tail_directed(spark):
+    group_a, group_b = [0, 1, 2], [3, 4, 5]
+    pairs = [(u, v) for u in group_a for v in group_a if u != v]
+    pairs += [(u, v) for u in group_b for v in group_b if u != v]
+    pairs += [(2, 3)]
+    e = spark.createDataFrame(
+        [(u, v, 1.0) for u, v in pairs], "src long, dst long, weight double"
+    )
+    g = Graph.from_edgelist(e, directed=True)
+    dist = louvain(g, threshold=1e-9, tier="driver_state")
+    loc = louvain(g, threshold=1e-9, tier="local")
+    assert loc.modularity == dist.modularity
+    a = {r.v: r.comm for r in dist.assignment.collect()}
+    b = {r.v: r.comm for r in loc.assignment.collect()}
+    assert a == b

@@ -120,6 +120,9 @@ CASES = [
     # the corpus front door: local <= 2M extracted link rows
     ("corpus", Facts(edge_rows=ER), None, (), L),
     ("corpus", Facts(edge_rows=ER + 1), None, (), S),
+    # MinHash-LSH dedup: local <= 2M shingle rows (an upper bound)
+    ("minhash", Facts(edge_rows=ER), None, (), L),
+    ("minhash", Facts(edge_rows=ER + 1), None, (), S),
 ]
 
 
