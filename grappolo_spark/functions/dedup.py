@@ -19,12 +19,13 @@ oracles against the exact Jaccard result.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from grappolo_spark.functions.text import TOKEN_RE
-from grappolo_spark.plans.iteration import cut_releasing, read_observation
+from grappolo_spark.plans import tiers
+from grappolo_spark.plans.iteration import cut_releasing
 from grappolo_spark.plans.tiers import Facts, Tier, plan
 
 _NORM = "trim(regexp_replace(lower({c}), '\\\\s+', ' '))"
@@ -156,32 +157,44 @@ def minhash_signatures(
 
 
 def _shingle_rows_bound(df: DataFrame, text_col: str) -> int:
-    """An upper bound on the shingle rows of ``df``: a token takes at least
-    one byte and is followed by at least one separator byte or the end of
-    its text, so a text of L bytes has at most (L + 1) // 2 tokens, and at
-    least as many tokens as shingles. (``lower`` keeps the bound: the one
-    character it grows, U+0130 İ, takes 2 bytes and yields one token
-    character and a separator.) One aggregation, observed on a ``noop``
-    write: one job, no shuffle."""
-    size = [F.sum(F.octet_length(text_col)).alias("bytes"), F.count(F.lit(1)).alias("rows")]
-    obs = Observation()
-    df.select(text_col).observe(obs, *size).write.format("noop").mode("overwrite").save()
-    # None when the metrics are unavailable: aggregate instead
-    m = read_observation(obs) or df.agg(*size).collect()[0].asDict()
-    return ((m["bytes"] or 0) + m["rows"]) // 2
+    """An upper bound on the shingle rows of ``df``, (Σ bytes + rows) // 2:
+    a token takes at least one byte and is followed by at least one
+    separator byte or the end of its text, so a text of L bytes has at
+    most (L + 1) // 2 tokens, and at least as many tokens as shingles.
+    (``lower`` keeps the bound: the one character it grows, U+0130 İ,
+    takes 2 bytes and yields one token character and a separator.)
+
+    Read from a prefix of the text lengths: takes of growing length (a
+    take scans only the partitions it needs) stop once the table ends or
+    the prefix alone passes ``LOCAL_EDGE_ROWS``. Each row adds at least
+    1/2, so at most 2 * ``LOCAL_EDGE_ROWS`` + 2 rows are ever read: above
+    the bound the probe never scans the whole table."""
+    lengths = df.select(F.octet_length(text_col))
+    limit, cap = 1 << 16, 2 * tiers.LOCAL_EDGE_ROWS + 2
+    while True:
+        got = [r[0] or 0 for r in lengths.take(min(limit, cap))]
+        bound = (sum(got) + len(got)) // 2
+        if len(got) < min(limit, cap) or bound > tiers.LOCAL_EDGE_ROWS:
+            return bound
+        limit *= 8
 
 
 def _local_lsh_pairs(
     df: DataFrame, id_col: str, text_col: str, n: int, num_hashes: int,
     bands: int, threshold: float, seed: int,
-) -> DataFrame:
+) -> DataFrame | None:
     """The local tier of :func:`minhash_lsh_pairs`: the same rows from
     driver numpy over one Arrow collect of ``(id, text)``. Each distinct
     shingle is hashed once (:func:`xxh64_strings`, then the ``seed + i``
     literal folded in), signatures are per-id minima and the band keys are
     ``xxhash64`` of the same decimal strings, so candidates and
     ``est_jaccard`` equal the Spark tier's bit for bit. Rows that share an
-    id merge their shingles; null ids never pair."""
+    id merge their shingles; null ids never pair.
+
+    ``None`` when the candidate join would build more than
+    ``LOCAL_EDGE_ROWS`` rows (Σ bucket size² over the bands: k documents
+    that share every band key give bands·k²), for the Spark plan's join
+    to run instead."""
     import re
 
     import numpy as np
@@ -189,7 +202,6 @@ def _local_lsh_pairs(
     import pyarrow.compute as pc
 
     from grappolo_spark.functions.xxh64 import xxh64_lit, xxh64_strings
-    from grappolo_spark.operators.louvain import _first_group_starts
 
     id_type = df.schema[id_col].dataType
     schema = StructType([
@@ -214,7 +226,7 @@ def _local_lsh_pairs(
         return spark.createDataFrame([], schema)
     order = np.argsort(np.asarray(rows), kind="stable")
     rows, shingle = np.asarray(rows)[order], np.asarray(shingle)[order]
-    starts = _first_group_starts(rows)
+    starts = np.flatnonzero(np.r_[True, rows[1:] != rows[:-1]])
     base = xxh64_strings(list(index))
     sig = np.empty((len(starts), num_hashes), np.int64)
     for i in range(num_hashes):
@@ -231,6 +243,8 @@ def _local_lsh_pairs(
         "d": np.tile(np.arange(nd), bands),
     })
     keyed = keyed.loc[keyed.duplicated(["band", "bh"], keep=False)]
+    if (keyed.groupby(["band", "bh"]).size() ** 2).sum() > tiers.LOCAL_EDGE_ROWS:
+        return None
     cand = keyed.merge(keyed, on=["band", "bh"])
     cand = cand.loc[cand["d_x"] < cand["d_y"], ["d_x", "d_y"]].drop_duplicates()
     cand = cand.sort_values(["d_x", "d_y"])
@@ -263,17 +277,21 @@ def minhash_lsh_pairs(
     docs colliding in ≥1 band become candidates (join on band hash — never
     all-pairs), then the full-signature agreement fraction estimates Jaccard.
 
-    Tiers (:mod:`grappolo_spark.plans.tiers`): **local** — while one
-    aggregation bounds the shingle rows at ``LOCAL_EDGE_ROWS``, the
-    sketch runs in driver numpy over one Arrow collect of ``(id, text)``
-    and returns the same rows; **shuffle** — the Spark plan below.
-    ``tier`` forces one and skips the aggregation.
+    Tiers (:mod:`grappolo_spark.plans.tiers`): **local** — while a probe
+    of the text lengths bounds the shingle rows at ``LOCAL_EDGE_ROWS``,
+    the sketch runs in driver numpy over one Arrow collect of
+    ``(id, text)`` and returns the same rows; **shuffle** — the Spark plan
+    below, after a probe that reads a bounded prefix of the table.
+    ``tier`` forces one and skips the probe. The local tier hands over to
+    the Spark plan when its candidate join would pass the same bound.
     """
     facts = Facts() if tier is not None else Facts(edge_rows=_shingle_rows_bound(df, text_col))
     if plan(facts, "minhash", tier=tier) is Tier.LOCAL:
-        return _local_lsh_pairs(
+        out = _local_lsh_pairs(
             df, id_col, text_col, n, num_hashes, bands, threshold, seed
         )
+        if out is not None:
+            return out
     rows_per_band = num_hashes // bands
     sig = minhash_signatures(df, id_col, text_col, n, num_hashes, seed).persist()
     banded = sig.select(

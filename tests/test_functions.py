@@ -372,3 +372,44 @@ def test_minhash_tiers_agree_on_adversarial_docs(spark):
     for df in (empty, none):
         for tier in TIERS + (None,):
             assert _lsh_rows(df, tier) == []
+
+
+def test_minhash_probe_reads_a_prefix_and_bounds_exactly_below(spark, monkeypatch):
+    """The shingle-row probe is exact when the table fits, and stops at
+    2 * LOCAL_EDGE_ROWS + 2 rows when it does not, never reading the rest."""
+    from grappolo_spark.functions import dedup as D
+    from grappolo_spark.plans import tiers as T
+
+    monkeypatch.setattr(T, "LOCAL_EDGE_ROWS", 100)
+    big = spark.range(10_000).select(F.col("id").alias("doc_id"), F.lit("a b").alias("text"))
+    # 202 rows of 3 bytes: (606 + 202) // 2, not the table's 20000
+    assert D._shingle_rows_bound(big, "text") == 404
+    small = spark.createDataFrame(
+        [(0, "a b"), (1, None), (2, ""), (3, "İx y")], "doc_id long, text string"
+    )
+    assert D._shingle_rows_bound(small, "text") == (3 + 0 + 0 + 5 + 4) // 2
+
+
+def test_minhash_local_tier_hands_over_past_the_candidate_bound(spark, monkeypatch):
+    """Fewer hashes than bands make every document a candidate of every
+    other in every band: past LOCAL_EDGE_ROWS join rows the local tier
+    runs the Spark plan instead, with the same rows."""
+    from grappolo_spark.functions import dedup as D
+    from grappolo_spark.plans import tiers as T
+
+    df = spark.createDataFrame(
+        [(i, f"w{i} w{i + 1} w{i + 2} w{i + 3}") for i in range(10)],
+        "doc_id long, text string",
+    )
+    kw = dict(num_hashes=3, bands=8, threshold=0.0)
+    expect = _lsh_rows(df, "shuffle", **kw)
+    calls = []
+    spy = D.minhash_signatures
+    monkeypatch.setattr(
+        D, "minhash_signatures", lambda *a, **k: calls.append(1) or spy(*a, **k)
+    )
+    # 8 bands, one bucket of 10 documents each: 8 * 10 ** 2 join rows
+    monkeypatch.setattr(T, "LOCAL_EDGE_ROWS", 800)
+    assert _lsh_rows(df, "local", **kw) == expect and calls == []
+    monkeypatch.setattr(T, "LOCAL_EDGE_ROWS", 799)
+    assert _lsh_rows(df, "local", **kw) == expect and calls == [1]
